@@ -4,8 +4,9 @@
     python3 perfbench/run.py --workload dashboard --seed 1 --seconds 10 --trace 0
 
 Run from the repository root. The first run builds graft plus the harness
-in perfbench/scala with sbt (offline), caching the classpath under
-$CARGO_TARGET_DIR (default .bench_build); later runs start the JVM directly.
+in perfbench/scala with sbt (offline), copying the classes to
+$CARGO_TARGET_DIR (default .bench_build) and caching the classpath there;
+later runs start the JVM directly.
 
 One run: the harness (perfbench.Harness) builds a session with graft.Bench's
 conf at local[nproc], warms it up three times (set-up), then sends the
@@ -46,7 +47,8 @@ def fail(msg):
 
 
 def source_stamp(root):
-    h = hashlib.sha256()
+    """Hash of the checkout's root path and every source file the build reads."""
+    h = hashlib.sha256(os.path.abspath(root).encode())
     for top in SOURCES:
         path = os.path.join(root, top)
         files = [path] if os.path.isfile(path) else sorted(
@@ -58,15 +60,33 @@ def source_stamp(root):
     return h.hexdigest()
 
 
+def cached_build(cache, stamp, classes):
+    """The cached (classpath, jvm opts) if it was built from this source state
+    and every classpath entry, the harness included, is still there."""
+    if not os.path.exists(cache):
+        return None
+    with open(cache) as f:
+        cached = json.load(f)
+    if cached["stamp"] != stamp or not os.path.exists(os.path.join(classes, "perfbench", "Harness.class")):
+        return None
+    if not all(os.path.exists(e) for e in cached["classpath"].split(os.pathsep)):
+        return None
+    return cached["classpath"], cached["java_options"]
+
+
 def build(root, build_dir):
-    """Compile graft + harness once per source state; return (classpath, jvm opts)."""
+    """Compile graft + harness once per source state; return (classpath, jvm opts).
+
+    sbt compiles into the checkout's target/; the classes are then copied to
+    $CARGO_TARGET_DIR/classes and the classpath points there, so a later sbt
+    command in the checkout (which drops the harness's classes, as its
+    sources are not in the build) cannot break the cached classpath."""
     stamp = source_stamp(root)
     cache = os.path.join(build_dir, "classpath.json")
-    if os.path.exists(cache):
-        with open(cache) as f:
-            cached = json.load(f)
-        if cached["stamp"] == stamp:
-            return cached["classpath"], cached["java_options"]
+    classes = os.path.join(build_dir, "classes")
+    hit = cached_build(cache, stamp, classes)
+    if hit:
+        return hit
     opts = ["-Dsbt.override.build.repos=true", "-Dsbt.offline=true", "-Xmx2g"]
     repos = os.path.expanduser("~/.sbt/repositories")
     if os.path.exists(repos):
@@ -83,12 +103,19 @@ def build(root, build_dir):
     cp = [l for l in lines if "target/scala-" in l and not l.startswith("[")]
     if code != 0 or len(cp) != 1:
         fail("build failed:\n" + "\n".join(l[:300] for l in lines[-40:]))
+    entries = cp[0].split(os.pathsep)
+    target = [e for e in entries if os.path.abspath(e).startswith(os.path.abspath(root) + os.sep)]
+    if len(target) != 1 or not os.path.exists(os.path.join(target[0], "perfbench", "Harness.class")):
+        fail(f"build left no harness classes in the checkout: {target}")
+    shutil.rmtree(classes, ignore_errors=True)
+    shutil.copytree(target[0], classes)
+    classpath = os.pathsep.join(classes if e == target[0] else e for e in entries)
     # the benchmark sets its own heap; every other option is the repo's run conf
     java_options = [l[len("[info] * "):] for l in lines if l.startswith("[info] * ")]
     java_options = [o for o in java_options if not o.startswith("-Xmx")]
     with open(cache, "w") as f:
-        json.dump({"stamp": stamp, "classpath": cp[0], "java_options": java_options}, f)
-    return cp[0], java_options
+        json.dump({"stamp": stamp, "classpath": classpath, "java_options": java_options}, f)
+    return classpath, java_options
 
 
 def run_child(cmd, log, timeout, **kw):

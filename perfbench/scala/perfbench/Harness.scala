@@ -54,14 +54,21 @@ object Harness {
     "q_common_users_matrix_approx", "q_engagement_approx", "q_forecast_hours_adaptive",
     "q_leiden_communities", "q_sketch_rollup_incremental", "s_sketch_maintain")
 
+  /** Session set-ups timed per run, after the first (JVM start) one. */
+  val SetupRuns = 3
+
   /** The registry keys each workload requests.
     *
-    * A run must fit three set-ups, a cold correctness pass and three warm
-    * timed passes into well under a minute on a busy host, so each workload
+    * A run must fit four set-ups, a cold correctness pass and three warm
+    * timed passes into about a minute on a busy host, so each workload
     * is a fixed slice of its key family, one key per operator family.
     *  - dashboard: the reference's API surface over events/orders (overlap,
-    *    leaderboard, similarity, forecast). Per-request execution is small,
-    *    so schema inference, construction and planning weigh on latency.
+    *    leaderboard, similarity, the seasonal-naive hourly forecast).
+    *    Per-request execution is small, so schema inference, construction
+    *    and planning weigh on latency. The `ml` forecast kernel
+    *    (`q_forecast_hours_adaptive`) is left out: at sf0.01 one request
+    *    takes 5-6 s and about 18 s of task CPU, which the run time has no
+    *    room for.
     *  - incremental: maintenance keys over documents/embeddings. They are
     *    heavy on construction (eager cache barriers, driver collects), write
     *    warehouse tables (`_wh`), and run the `functions` kernels (shingle,
@@ -139,19 +146,31 @@ object Harness {
     val cores = Runtime.getRuntime.availableProcessors()
     val keys = workloadKeys(workload)
 
-    // set-up is measured three times and reported as a list; the first
-    // includes JVM start and class loading, the others a rebuilt session
+    // Set-up: the first session pays JVM start, Spark context start and
+    // class loading; it is reported apart. Then a new session is built on
+    // the running context and warmed up, SetupRuns times, each timed in wall
+    // clock and in CPU of the whole process (client, task, JIT and GC
+    // threads). Set-up CPU moves far less with the host's load than set-up
+    // wall time does. graft code runs in the warm-up only, so
+    // restarting the context would time Spark, not graft.
     val jvmStart = java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
     var spark = session(cores, work)
     warmup(spark, sfDir)
-    val setups = mutable.ArrayBuffer((System.currentTimeMillis() - jvmStart) / 1e3)
-    for (_ <- 1 until 3) {
-      spark.stop()
+    val firstSetupS = (System.currentTimeMillis() - jvmStart) / 1e3
+    val processCpu = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    val setupWalls, setupCpus = mutable.ArrayBuffer.empty[Double]
+    for (_ <- 0 until SetupRuns) {
       val t0 = System.nanoTime()
-      spark = session(cores, work)
+      val cpu0 = processCpu.getProcessCpuTime
+      spark = spark.newSession()
       warmup(spark, sfDir)
-      setups += secs(t0)
+      setupWalls += secs(t0)
+      setupCpus += (processCpu.getProcessCpuTime - cpu0) / 1e9
     }
+    // a new session takes its SQL conf from the context, i.e. Bench's conf
+    for ((k, v) <- conf(cores, work) if k.startsWith("spark.sql.") && k != "spark.sql.warehouse.dir")
+      require(spark.conf.get(k) == v, s"session conf $k is ${spark.conf.get(k)}, not $v")
     val sc = spark.sparkContext
 
     val cpuNs = new AtomicLong
@@ -212,7 +231,8 @@ object Harness {
       "sf_dir" -> sfDir, "nproc" -> cores,
       "heap_mb" -> Runtime.getRuntime.maxMemory / (1024 * 1024),
       "conf" -> conf(cores, work).toMap, "spark_version" -> spark.version,
-      "keys" -> keys, "setup_s" -> setups.toSeq, "passes" -> passes.toSeq,
+      "keys" -> keys, "first_setup_s" -> firstSetupS, "setup_wall_s" -> setupWalls.toSeq,
+      "setup_cpu_s" -> setupCpus.toSeq, "passes" -> passes.toSeq,
       "peak_rss_mb" -> rss,
       "requests" -> requests.toSeq, "check_dir" -> checkDir.getPath, "check" -> dumped,
       "spans" -> spansFile.orNull)
@@ -260,13 +280,17 @@ object Harness {
 
   /** Drop the warehouse tables a request wrote, so the next `_wh` request
     * bootstraps again and every request does the same work whatever ran
-    * before it. Harness hygiene: runs after the request span closes.
+    * before it. Harness hygiene: runs after the request span closes, and
+    * drains the listener bus so the drops' query executions are not
+    * attributed to the next request.
     */
   private def dropWarehouse(spark: SparkSession): Unit =
     if (Option(new File(new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath).list())
-        .exists(_.nonEmpty))
+        .exists(_.nonEmpty)) {
       spark.catalog.listTables().collect().filterNot(_.isTemporary)
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${t.name}`"))
+      ListenerBridge.waitUntilEmpty(spark.sparkContext)
+    }
 
   /** Write each key's result as parquet beside its oracle SQL. Returns key ->
     * null, or the error that stopped the key from being written.

@@ -1,7 +1,6 @@
 """Tests of the benchmark's own arithmetic, plus an sf0.001 smoke run per workload.
 
     python3 -m pytest perfbench/tests              # from the repository root
-    PERFBENCH_SMOKE=0 python3 -m pytest perfbench/tests   # arithmetic only
 
 The smoke runs build graft like a benchmark run does and take a few minutes.
 """
@@ -9,6 +8,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 import unittest
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -17,6 +17,7 @@ ROOT = os.path.dirname(BENCH)
 sys.path.insert(0, BENCH)
 
 import compare  # noqa: E402
+import run  # noqa: E402
 import stats  # noqa: E402
 import summarize  # noqa: E402
 
@@ -91,6 +92,35 @@ class CompareTest(unittest.TestCase):
         self.assertEqual(compare.verdict(base, noisy, "lower", 0.1)["verdict"], "unresolved")
 
 
+class BuildCacheTest(unittest.TestCase):
+    def test_cached_classpath_needs_every_entry_and_the_harness(self):
+        with tempfile.TemporaryDirectory() as d:
+            classes, jar = os.path.join(d, "classes"), os.path.join(d, "lib.jar")
+            os.makedirs(os.path.join(classes, "perfbench"))
+            open(jar, "w").close()
+            cache = os.path.join(d, "classpath.json")
+            with open(cache, "w") as f:
+                json.dump({"stamp": "s1", "classpath": classes + os.pathsep + jar, "java_options": []}, f)
+            self.assertIsNone(run.cached_build(cache, "s1", classes))  # no harness class
+            open(os.path.join(classes, "perfbench", "Harness.class"), "w").close()
+            self.assertEqual(run.cached_build(cache, "s1", classes), (classes + os.pathsep + jar, []))
+            self.assertIsNone(run.cached_build(cache, "s2", classes))  # sources changed
+            os.remove(jar)
+            self.assertIsNone(run.cached_build(cache, "s1", classes))
+
+    def test_stamp_names_the_checkout(self):
+        with tempfile.TemporaryDirectory() as d:
+            a, b = os.path.join(d, "a"), os.path.join(d, "b")
+            for root in (a, b):
+                os.makedirs(os.path.join(root, "src", "main"))
+                os.makedirs(os.path.join(root, "perfbench", "scala"))
+                os.makedirs(os.path.join(root, "project"))
+                for f in ("build.sbt", "project/build.properties"):
+                    with open(os.path.join(root, f), "w") as fh:
+                        fh.write("x")
+            self.assertNotEqual(run.source_stamp(a), run.source_stamp(b))
+
+
 def run_bench(workload, seed, trace):
     p = subprocess.run(
         [sys.executable, os.path.join(BENCH, "run.py"), "--workload", workload, "--seed", str(seed),
@@ -102,7 +132,6 @@ def run_bench(workload, seed, trace):
     return json.loads(lines[-2]), json.loads(lines[-1])
 
 
-@unittest.skipIf(os.environ.get("PERFBENCH_SMOKE") == "0", "smoke runs disabled")
 class SmokeTest(unittest.TestCase):
     """An sf0.001 run of each workload prints every declared metric by name."""
 
