@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at the given scale factor
   * and prints ONE JSON line. A warmup action first absorbs session
   * initialization (parquet footer reads, codegen compilation, JIT) so the
@@ -10,100 +8,18 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 50 * 1024 * 1024)
-      // The whole-stage-codegen compile cache (STATIC conf) holds 100
-      // generated classes by default; this suite's multi-job operators
-      // cycle far more distinct codegen units than that, so tasks were
-      // re-Janino-compiling mid-query while every sibling task queued on
-      // the compile KeyLock (stack-dump attribution; measured over 16
-      // heavy queries: 859 compiles / 45.0 s at the default vs 507 /
-      // 14.3 s at 2000). Scale-neutral: long-lived executors run the
-      // same generated classes repeatedly at any corpus size, and the
-      // cache is bounded (~2000 classes, tens of MB).
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // Let AQE re-plan the output partitioning of shuffles INSIDE cached
-      // plans (default false for legacy compatibility only): without it
-      // every sharedCache'd rollup materializes at raw
-      // spark.sql.shuffle.partitions forever and every downstream stage
-      // inherits that task count — at sf0.1 that was 32 near-empty tasks
-      // per stage whose per-task overhead dominated (q_attrition isolated:
-      // 134 -> 10 tasks, rep-2 cpu 5.4 s -> 0.3 s, wall 5.2 -> 1.1 s; the
-      // whole q_ rollup family collapses the same way). Scale-neutral by
-      // construction: AQE coalesces cached-plan shuffles to the SAME
-      // advisory partition size it already targets for uncached ones, so
-      // at real volume partitions stay advisory-sized and parallelism
-      // returns; CPU-dense relations that must keep their fan-out
-      // (shingleArrays, forecast training) use explicit
-      // repartition(N, col), which AQE never coalesces.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warmup: touch every table once and run one small aggregate.
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count() catch { case _: Throwable => }
-    }
-    try Tables.events(spark, sfDir).count() catch { case _: Throwable => }
-    // Absorb first-execution machinery costs (broadcast thread pools, AQE,
-    // window/cache/codegen paths, JIT of shuffle internals) on a tiny slice
-    // so the FIRST timed query measures its plan, not session init — the
-    // alphabetically-first queries were paying ~3s of one-time overhead.
-    try {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val e = Tables.events(spark, sfDir).limit(2000).cache()
-      e.count()
-      e.groupBy("event_type").agg(countDistinct("user_id").as("u")).count()
-      e.join(broadcast(e.select(col("user_id")).distinct()), "user_id").count()
-      e.select(row_number().over(
-        Window.partitionBy("event_type").orderBy("ts")).as("rn")).count()
-      e.select(size(array_distinct(transform(
-        split(lit("a b c d e"), " "), x => upper(x)))).as("n")).count()
-      spark.catalog.clearCache()
-    } catch { case _: Throwable => }
-    // SPARK_GRAFT_SIZED_CONF=1 (opt-in; VERDICT r10 item 7): apply the
-    // session conf Sizing.forCorpus emits for THIS corpus before the
-    // timed suite — all four keys are runtime-settable SQL confs — so the
-    // deploy recipe's effect is measurable against the pinned local conf
-    // (the sizing passes run OUTSIDE the timed region, the documented
-    // once-per-corpus cost). The applied conf is recorded in
-    // bench_detail.json as "sized_conf".
-    val sizedConf: Map[String, String] =
-      if (sys.env.contains("SPARK_GRAFT_SIZED_CONF")) {
-        val sized = graft.operators.Sizing.forCorpus(
-          Tables.documents(spark, sfDir), Tables.embeddings(spark, sfDir))
-        sized.conf.foreach { case (k, v) => spark.conf.set(k, v) }
-        System.err.println(s"[bench] sized conf applied: ${sized.conf.toSeq.sorted.mkString(", ")}")
-        sized.conf
-      } else Map.empty
-    // best-of-2 per query; caches cleared between queries so one query's
-    // pinned relations never skew the next one's memory budget
+    val cpus = Actions.cpus()
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run (iteration aid; the driver
     // never sets it, so the recorded bench always covers the full suite)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    // a misspelled name silently filtering to nothing would make an
-    // all-miss run read as a clean (vacuous) pass — fail loudly instead
-    only.foreach { ks =>
-      val unknown = ks.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not registered in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val selected = only.fold(SparkEntry.queries)(ks => SparkEntry.queries.filter(kv => ks(kv._1)))
+    val selected = Actions.selected(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = Actions.session(cpus)
+    Actions.warmup(spark, sfDir)
     // SEEDED-shuffled run order: three rounds of alphabetical ordering let
     // environmental spikes land on adjacent family blocks and read as
     // family regressions (r5 k-means block, r6 q_-block). A deterministic
     // shuffle decorrelates position from family while keeping runs
-    // reproducible; SPARK_GRAFT_BENCH_SEED overrides for order-invariance
-    // checks (totals across two seeds agree within noise).
-    val seed = sys.env.getOrElse("SPARK_GRAFT_BENCH_SEED", "1").toLong
-    val ordered = new scala.util.Random(seed).shuffle(selected.toSeq.sortBy(_._1))
+    // reproducible.
+    val ordered = new scala.util.Random(1L).shuffle(selected.toSeq.sortBy(_._1))
     // best-of-2 per query with the reps BACK-TO-BACK: rep 2 reuses rep 1's
     // generated classes (the codegen cache holds ~100 plans — separate full
     // passes would evict them between reps and re-measure compilation, which
@@ -111,10 +27,8 @@ object Bench {
     // so one query's pinned relations never skew the next one's memory budget.
     val counter = new JobCounter(spark.sparkContext)
     val results = ordered.map { case (name, fn) =>
-      if (sys.env.contains("SPARK_GRAFT_TRACE")) System.err.println(s"[bench-trace] $name")
       val reps = (1 to 2).map { _ =>
-        Caches.release()
-        spark.catalog.clearCache()
+        Actions.reset(spark)
         val before = counter.snapshot()
         val t0 = System.nanoTime()
         // a crashed query records -1, never its elapsed-to-crash time — a
@@ -159,10 +73,8 @@ object Bench {
     // crash as a speedup. value is null in that case; the partial sum stays
     // available as partial_total for triage.
     val totalJson = if (failed.isEmpty) f3(total) else "null"
-    val scJson = sizedConf.toSeq.sorted
-      .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
     val detail =
-      s"""{"metric":"total","value":$totalJson,"partial_total":${f3(total)},"unit":"sec","queries":$qs,"jobs":$js,"stages":$ss,"run_ms":$rs,"cpu_ms":$cs,"failed":$fs,"sf":"$sfDir","cpus":"$cpus","sized_conf":$scJson}"""
+      s"""{"metric":"total","value":$totalJson,"partial_total":${f3(total)},"unit":"sec","queries":$qs,"jobs":$js,"stages":$ss,"run_ms":$rs,"cpu_ms":$cs,"failed":$fs,"sf":"$sfDir","cpus":"$cpus"}"""
     // a failed write must be LOUD: the stdout line points at this file and
     // a stale detail map from a previous run would silently mis-triage.
     // The detail is ALSO written cpus-suffixed: the driver benches the suite

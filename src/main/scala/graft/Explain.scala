@@ -1,43 +1,32 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: print the executed (post-AQE-initial) physical plan of the
-  * named SparkEntry queries (args = query names; no args = all), using the
-  * same session config as Bench. Pass SPARK_GRAFT_RUN=1 to also execute
-  * each query first so AQE's final plan (with runtime reuse/coalesce
-  * decisions) is shown instead of the initial one.
+/** Dev tool: print the executed physical plan of the named SparkEntry
+  * queries (args = the tables' directory, then query names; no names =
+  * all) on the session Bench and Verify run. Each query is materialized
+  * first, so the printed plan is AQE's final one (with its runtime
+  * reuse/coalesce decisions) — the plan Bench times and Verify checks.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val run = sys.env.get("SPARK_GRAFT_RUN").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 50 * 1024 * 1024)
-      // mirror Bench's session (see Bench.scala for the measurements)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    require(args.nonEmpty, "usage: Explain <sfDir> [query ...]")
+    val sfDir = args.head
+    val spark = Actions.session(Actions.cpus())
+    val names = if (args.length > 1) args.toSeq.tail else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      // full materialization, not count(): a count()-driven "final" plan
-      // is the COLUMN-PRUNED one (map-only projections stripped), not the
-      // plan Bench/Verify execute
-      if (run) Actions.materialize(df)
+      // Run this DataFrame's OWN plan over every row and column, so its
+      // AdaptiveSparkPlanExec reaches the final plan. Actions.materialize
+      // would execute a separate write QueryExecution and leave this one
+      // at the initial plan; a count() would run the column-pruned plan
+      // (map-only projections stripped), not the one Bench/Verify execute.
+      df.queryExecution.toRdd.foreach(_ => ())
       println(s"===== $name =====")
       println(df.queryExecution.executedPlan.toString)
-      // without a per-query drain, RUN mode over the full registry
+      // without a per-query reset, a run over the full registry
       // accumulates every operator's pinned relations and later queries'
       // AQE decisions (and thus printed plans) reflect a distorted memory
       // budget rather than what Bench/Verify actually run
-      if (run) { Caches.release(); spark.catalog.clearCache() }
+      Actions.reset(spark)
     }
     spark.stop()
   }

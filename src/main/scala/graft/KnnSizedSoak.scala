@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.operators.Vectors
@@ -65,25 +65,16 @@ object KnnSizedSoak {
       val Array(f, dir) = a.split("=", 2)
       (f.toDouble, dir)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 50 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Actions.session(Actions.cpus())
     val counter = new JobCounter(spark.sparkContext)
 
     // per query -> per corpus (wall s, cpu ms)
     val walls = collection.mutable.Map.empty[String, Vector[Double]].withDefaultValue(Vector())
-    val cpus2 = collection.mutable.Map.empty[String, Vector[Double]].withDefaultValue(Vector())
+    val cpuMs = collection.mutable.Map.empty[String, Vector[Double]].withDefaultValue(Vector())
     corpora.foreach { case (factor, dir) =>
       val emb = Tables.embeddings(spark, dir)
       // warmup: absorb footer reads + codegen for this corpus so the first
-      // variant doesn't pay session-init (Bench.scala's rationale)
+      // variant doesn't pay session-init (Actions.warmup's rationale)
       Actions.materialize(emb.limit(64))
       // Per-corpus setup OUTSIDE the timed region (the scaladoc contract):
       // the one-count geo sizing, and the STORED graph the incremental
@@ -97,8 +88,7 @@ object KnnSizedSoak {
       val oldGraph = Vectors.knnGraph(old).localCheckpoint()
       variants(emb, cells, oldGraph, old, delta).foreach { case (name, build) =>
         val reps = (1 to 2).map { _ =>
-          Caches.release()
-          spark.catalog.clearCache()
+          Actions.reset(spark)
           val before = counter.snapshot()
           val t0 = System.nanoTime()
           Actions.materialize(build())
@@ -106,7 +96,7 @@ object KnnSizedSoak {
         }
         val best = reps.minBy(_._1)
         walls(name) = walls(name) :+ best._1
-        cpus2(name) = cpus2(name) :+ best._2
+        cpuMs(name) = cpuMs(name) :+ best._2
         println(f"[sized] x$factor%.0f $name%-24s wall ${best._1}%.2fs cpu ${best._2 / 1000}%.1fs")
       }
     }
@@ -123,7 +113,7 @@ object KnnSizedSoak {
     def f(v: Double, d: Int) = Actions.fmt(v, d)
     val qjson = walls.keys.toSeq.sorted.map { k =>
       val w = walls(k)
-      val c = cpus2(k).map(_ / 1000)
+      val c = cpuMs(k).map(_ / 1000)
       s""""$k":{"wall_s":[${w.map(f(_, 3)).mkString(",")}],"wall_slope":${f(slope(w), 2)},""" +
         s""""cpu_s":[${c.map(f(_, 1)).mkString(",")}],"cpu_slope":${f(slope(c), 2)}}"""
     }.mkString(",")

@@ -52,13 +52,7 @@ object SoakGen {
     val out = if (args.length > 1) args(1) else "target/soak/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
     val scaleLabels = args.length > 3 && args(3) == "scaleLabels"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Actions.session(Actions.cpus())
     generate(spark, src, out, factor, scaleLabels)
     spark.stop()
   }

@@ -150,8 +150,8 @@ object SparkEntry {
     // FIXED (not Dedup.autoJaccardCap, the r7 provably-zero-loss auto-sizer
     // deploys use) because the DuckDB twin inlines the same literal cap and
     // the gate must compare identical constants across SFs; the spec suite
-    // pins autoJaccardCap's zero-loss guarantee and JaccardHotSoak measures
-    // it winning wall+CPU on a genuinely stopword-hot corpus (SCALING.md)
+    // pins autoJaccardCap's zero-loss guarantee and jaccard_hot_soak.json
+    // records it winning wall+CPU on a genuinely stopword-hot corpus (SCALING.md)
     "d_ngram_jaccard_capped" -> ((s, d) =>
       Dedup.ngramJaccard(Fixtures.plantedDocs(docs(s, d)), maxDf = Some(16L))),
     "d_embed_neardup" -> ((s, d) => Dedup.embedNearDup(emb(s, d))),

@@ -1,41 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // match Bench: the 129-query dump cycles >>100 codegen units, and
-      // the default 100-entry compile cache re-Janino-compiles evicted
-      // classes with sibling tasks queued on the compile KeyLock (see
-      // Bench.scala for the measurement)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      // match Bench: AQE may re-plan cached-plan output partitioning
-      // (results are unaffected — the gate compares sorted rows)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q1,q2 restricts the dump AND the oracle json
     // (iteration aid — check.py then compares just those; the driver never
     // sets it, so the recorded gate always covers the full suite)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    // a misspelled name silently filtering to nothing would dump an empty
-    // oracle_sql.json and check.py would print a vacuous "0/0 pass" —
-    // fail loudly instead
-    only.foreach { ks =>
-      val unknown = ks.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not registered in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val queries = only.fold(SparkEntry.queries)(ks => SparkEntry.queries.filter(kv => ks(kv._1)))
+    val queries = Actions.selected(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = Actions.session(Actions.cpus())
+    new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ListBuffer.empty[String]
     queries.foreach { case (name, fn) =>
       try {
@@ -51,13 +26,12 @@ object Verify {
         failed += name
         System.err.println(s"[verify] $name FAILED: ${e.getMessage}")
       }
-      Caches.release()
-      spark.catalog.clearCache()
+      Actions.reset(spark)
     }
     // oracleSql must be materialized AFTER the loop: the trained-model
     // oracles (Vectors.stashedSql) only exist once their query has run in
     // this JVM — binding before the loop dumps an empty stash.
-    val oracles = only.fold(SparkEntry.oracleSql)(ks => SparkEntry.oracleSql.filter(kv => ks(kv._1)))
+    val oracles = SparkEntry.oracleSql.filter(kv => queries.contains(kv._1))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

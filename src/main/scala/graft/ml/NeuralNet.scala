@@ -18,8 +18,7 @@ package graft.ml
   * spec (and an incremental re-run diff) possible at all.
   *
   * r12 kernel shape (bit-identical to the r11 code — pinned by the
-  * ForecastKernelProbe golden hash and the NeuralForecastSpec gradient
-  * checks): the matrix kernels write into CALLER-OWNED buffers
+  * NeuralForecastSpec golden hash and gradient checks): the matrix kernels write into CALLER-OWNED buffers
   * ([[NeuralNet.linearInto]]/[[NeuralNet.linearBackInto]]) so a training
   * run allocates its workspaces once per model instead of ~100 KB of
   * fresh arrays per forward/backward sample, and the dot-product rows are

@@ -930,10 +930,11 @@ object Dedup {
     * cardinality (copies inflate every shared shingle's df by the cluster
     * size); planted stopword shingles (df ≈ corpus size) do NOT drag it
     * up as long as each doc keeps a (1−t) fraction of rarer shingles —
-    * exactly the regime where capping matters (JaccardHotSoak measures
-    * it). Conservative by design: the guarantee covers the worst pair, so
-    * on corpora with heavy NATURAL phrase sharing the returned cap can
-    * approach the df ceiling and prune little — zero-loss costs that.
+    * exactly the regime where capping matters (jaccard_hot_soak.json
+    * measures it). Conservative by design: the guarantee covers the worst
+    * pair, so on corpora with heavy NATURAL phrase sharing the returned
+    * cap can approach the df ceiling and prune little — zero-loss costs
+    * that.
     */
   def autoJaccardCap(documents: DataFrame, k: Int = 3, minJaccard: Double = 0.3): Long = {
     val arr = shingleArrays(canon(documents), k)

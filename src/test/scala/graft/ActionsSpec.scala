@@ -2,12 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Pins the harness-action contracts behind Bench/Profile/Explain:
+/** Pins the harness-action contracts behind Bench/Verify/Explain:
   * Actions.materialize must execute the FULL projection (a count() lets
   * ColumnPruning strip deterministic map expressions, so a map-only
   * operator would be "timed" as a bare scan — the r8 bench-integrity
-  * finding), and Actions.fmt must be locale-independent (a comma-decimal
-  * default locale would corrupt every JSON artifact).
+  * finding), Actions.fmt must be locale-independent (a comma-decimal
+  * default locale would corrupt every JSON artifact), and Actions.selected
+  * must fail loudly on a name it does not know (a vacuous all-miss run
+  * would read as a clean pass).
   */
 class ActionsSpec extends SparkSpec {
 
@@ -38,5 +40,16 @@ class ActionsSpec extends SparkSpec {
       // the pre-fix formatting really does break under this locale
       assert("%.3f".format(56.779) === "56,779")
     } finally java.util.Locale.setDefault(prev)
+  }
+
+  test("selected returns exactly the named subset, trims names, fails on an unknown one") {
+    assert(Actions.selected(None).keySet === SparkEntry.queries.keySet)
+    assert(Actions.selected(Some("q_hours_total")).keySet === Set("q_hours_total"))
+    assert(Actions.selected(Some(" q_hours_total , q_hours_avg,q_hours_max ")).keySet ===
+      Set("q_hours_total", "q_hours_avg", "q_hours_max"))
+    val e = intercept[IllegalArgumentException](
+      Actions.selected(Some("q_hours_total, q_no_such_key")))
+    assert(e.getMessage.contains("q_no_such_key"))
+    assert(!e.getMessage.contains("q_hours_total"))
   }
 }

@@ -20,7 +20,9 @@ import graft.functions.{CentroidIndex, ProbeKernel, VectorFunctions}
   *  - on separated clusters the two-level result EQUALS the flat scan
   *    (the approximation only bites on super-boundary straddlers);
   *  - the probe kernel delegates to the SAME topProbesHier kernel as the
-  *    explicit #121 operator — one hierarchy semantics engine-wide.
+  *    explicit #121 operator — one hierarchy semantics engine-wide;
+  *  - the trained matrix ships as a broadcast, so the plan (and with it
+  *    every task binary) stays small at the old 2^14-cell cap.
   */
 class HierIndexSpec extends SparkSpec {
 
@@ -224,5 +226,25 @@ class HierIndexSpec extends SparkSpec {
       assert(ixD.cellSup.toSeq == ix.cellSup.toSeq,
         "distributed and driver folds disagree beyond quantization")
     } finally CentroidIndex.distMin = saved
+  }
+
+  test("2^14 cells x dim 64: the matrix rides a broadcast, not the task binary") {
+    val dim = 64
+    val k = 1 << 14 // the old cell cap: an 8 MiB centroid matrix
+    val rng = new scala.util.Random(0x6E0C311L)
+    val cent = Array.fill(k * dim)(rng.nextGaussian())
+    val vecs = (0 until 16).map(i => cent.slice(i * dim, (i + 1) * dim))
+    val schema = StructType(Seq(StructField("v", ArrayType(DoubleType, containsNull = false))))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(vecs.map(v => Row(v.toSeq)), 2), schema)
+      .select(VectorFunctions.nearestCentroid(col("v"), dim, cent).as("nc"))
+    assert(df.collect().forall(r => !r.isNullAt(0)))
+    val plan = df.queryExecution.executedPlan
+    assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[graft.functions.NearestCentroid]))))
+    // Spark warns "Broadcasting large task binary" past 1 MiB; the plan a
+    // task closure carries must stay under it, which fails if the matrix
+    // rode the expression as a literal or a reference object
+    val bytes = org.apache.spark.SparkEnv.get.closureSerializer.newInstance().serialize(plan).limit()
+    assert(bytes < (1 << 20), s"serialized plan is $bytes bytes")
   }
 }

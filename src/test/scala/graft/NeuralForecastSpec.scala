@@ -97,6 +97,29 @@ class NeuralForecastSpec extends AnyFunSuite {
     // consecutive first-of-month dates after the last observed month
     // last observed month index 17 = year 1, July (m/12, m%12+1)
     assert(a.map(_.forecast_month.toString) === Seq("0001-07-01", "0001-08-01", "0001-09-01"))
+
+    // Golden FNV-1a fold over every field of every row, one fixed series
+    // per model type, at the bench entry's hidden size: a kernel rewrite
+    // must reproduce these bits exactly. Months fold as epoch days, so the
+    // value does not depend on the JVM's default time zone.
+    var hash = 0xcbf29ce484222325L
+    def mix(x: Long): Unit = { hash ^= x; hash *= 0x100000001b3L }
+    def mixDouble(x: Double): Unit = mix(java.lang.Double.doubleToLongBits(x))
+    Seq(
+      "lstm" -> (0 until 20).map(i => (i, 40.0 + 15 * math.sin(i / 2.0) + i)),
+      "simple" -> (0 until 8).map(i => (i, 10.0 + 3 * i - (i % 3))),
+      "statistical" -> Seq((0, 5.0), (1, 7.5), (2, 6.0))
+    ).foreach { case (kind, pts) =>
+      val rows = NeuralForecaster.forecastChannel(kind, pts, hidden = 32, epochs = 5)
+      assert(rows.map(_.model_type) === Seq(kind, kind, kind))
+      rows.foreach { r =>
+        r.channel.foreach(c => mix(c.toLong))
+        mix(r.forecast_month.toLocalDate.toEpochDay); mix(r.horizon.toLong)
+        Seq(r.forecasted_hours, r.lower, r.p25, r.p75, r.upper).foreach(mixDouble)
+        r.model_type.foreach(c => mix(c.toLong))
+      }
+    }
+    assert(f"$hash%016x" === "198dd5d4fc4265ba")
   }
 
   test("Spark operator trains per-channel inside tasks: 3 rows per channel, deterministic") {
