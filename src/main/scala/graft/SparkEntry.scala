@@ -225,7 +225,8 @@ object SparkEntry {
     // -> graph end-to-end through the unrolled-Lloyd CTE chain, no stash
     "v_knn_join_geo" -> ((s, d) => Vectors.knnJoinGeo(emb(s, d))),
     // graph-MV maintenance: stored graph + delta vectors, untouched blocks
-    // pass through verbatim (broadcast anti-join), touched blocks rejoin;
+    // pass through verbatim (an in-row `isin` filter on the collected
+    // touched-label set, no join), touched blocks rejoin;
     // the oracle is the MONOLITHIC full-corpus graph, so hash equality is
     // itself the proof the maintenance is exact (v_kmeans_incremental shape)
     "v_knn_join_incremental" -> ((s, d) => {

@@ -116,18 +116,6 @@ object Dedup {
        | WHERE length(sh) > 0""".stripMargin.replace("\n", "")
 
   // ---- #39 MinHash + LSH ---------------------------------------------------
-  /** 3-gram shingles → k=32 minhash (universal affine hashes
-    * h_i = (a_i·x + b_i) mod 2^31-1 over md5-derived 31-bit shingle ids,
-    * with a_i/b_i themselves md5-derived per perm — constants linear in i
-    * make h_i linear in i and let one shingle stay argmin across all
-    * perms, collapsing the signature) → 8 bands × 4 rows → bucket
-    * self-join → exact-Jaccard verify of the candidates only.
-    *
-    * Scale shape: signature build is fully map-side (in-row shingle set +
-    * array_min); the only shuffles are the LSH band bucket join (keyed by
-    * (band, sig)) and the candidate verify joins (keyed by doc_id, with the
-    * tiny candidate side broadcast).
-    */
   /** Perm constants for [[dedupMinhash]], md5-derived exactly like the oracle SQL computes them
     * (`conv(substr(md5('a'||i), 1, 7), 16, 10)`), evaluated once on the
     * driver so each hash is a plain literal-affine column.
@@ -213,6 +201,18 @@ object Dedup {
       .filter(col("jaccard") >= minJaccard)
       .select("doc_a", "doc_b", "jaccard")
 
+  /** 3-gram shingles → k=32 minhash (universal affine hashes
+    * h_i = (a_i·x + b_i) mod 2^31-1 over md5-derived 31-bit shingle ids,
+    * with a_i/b_i themselves md5-derived per perm — constants linear in i
+    * make h_i linear in i and let one shingle stay argmin across all
+    * perms, collapsing the signature) → 8 bands × 4 rows → bucket
+    * self-join → exact-Jaccard verify of the candidates only.
+    *
+    * Scale shape: signature build is fully map-side (in-row shingle set +
+    * array_min); the only shuffles are the LSH band bucket join (keyed by
+    * (band, sig)) and the candidate verify joins (keyed by doc_id, with the
+    * tiny candidate side broadcast).
+    */
   def dedupMinhash(documents: DataFrame, k: Int = 3, minJaccard: Double = 0.7): DataFrame = {
     // the per-doc shingle-set relation (cached inside shingleArrays) feeds
     // the signature build and both sides of the candidate verify
@@ -367,8 +367,8 @@ object Dedup {
     * near-cliques by construction (a group of copies all pair with each
     * other at J >= threshold), so the diameter is tiny and a fixed iteration
     * count converges; each round is one join + one partial-agg shuffle.
-    */
-  /** `smallGraphEdges`: when the verified pair list is at most this many
+    *
+    * `smallGraphEdges`: when the verified pair list is at most this many
     * edges, components are solved exactly by union-find on the driver and
     * the labels broadcast back — the dup GRAPH (not the corpus) is usually
     * tiny even at 100 TB, and the distributed loop's per-superstep jobs
@@ -1021,22 +1021,11 @@ object Dedup {
 
   // ---- #42 embedding cosine near-dup ---------------------------------------
   /** Same-label block join (the label is the blocking key — at 100 TB this
-    * is the IVF cell / LSH bucket), sequential-fold dot products so both
-    * engines produce identical doubles.
+    * is the IVF cell / LSH bucket) over the valid vectors: the unordered
+    * pairs of [[graft.operators.Vectors.blockPairs]] at cosine >= `minCos`.
     */
-  def embedNearDup(embeddings: DataFrame, minCos: Double = 0.3): DataFrame = {
-    import graft.functions.VectorFunctions.{vecDot, vecNorm2}
-    val withNorm = embeddings.select(col("vec_id"), col("label"), col("embedding").as("v"),
-      vecNorm2(col("embedding")).as("n2"))
-    // spread the streamed side when the other will broadcast — see
-    // Vectors.spreadIfBroadcastJoin (a 1-row-group small corpus would
-    // otherwise run the whole pair enumeration at scan parallelism)
-    Vectors.spreadIfBroadcastJoin(withNorm, withNorm).as("a")
-      .join(withNorm.as("b"), col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        fl(vecDot(col("a.v"), col("b.v")) / (sqrt(col("a.n2")) * sqrt(col("b.n2"))), 6).as("cosine"))
-      .filter(col("cosine") >= minCos)
-  }
+  def embedNearDup(embeddings: DataFrame, minCos: Double = 0.3): DataFrame =
+    Vectors.blockPairs(embeddings, _ < _).filter(col("cosine") >= minCos)
 
   // ---- #86 line-level (segment) dedup ---------------------------------------
   /** CCNet-style duplicated-segment removal (reference workload: cleaning
@@ -1103,14 +1092,8 @@ object Dedup {
        | FROM flagged GROUP BY 1""".stripMargin.replace("\n", "")
 
   def embedNearDupSql(minCos: Double = 0.3, src: String = "embeddings"): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 65), i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE))), (acc, x) -> acc + x)"
-    def n2(a: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 65), i -> CAST($a.embedding[i] AS DOUBLE) * CAST($a.embedding[i] AS DOUBLE))), (acc, x) -> acc + x)"
-    s"""SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |  ${flSql(s"${dot("a", "b")} / (sqrt(${n2("a")}) * sqrt(${n2("b")}))", 6)} AS cosine
-       | FROM $src a JOIN $src b
-       |  ON a.label = b.label AND a.vec_id < b.vec_id
-       | WHERE ${flSql(s"${dot("a", "b")} / (sqrt(${n2("a")}) * sqrt(${n2("b")}))", 6)} >= $minCos""".stripMargin.replace("\n", "")
+    val (rel, valid) = Vectors.validSrcSql(src)
+    s"${valid.map(c => s"WITH $c ").mkString}SELECT vec_a, vec_b, cosine" +
+      s" FROM (${Vectors.blockPairsSql(rel, "<")}) WHERE cosine >= $minCos"
   }
 }

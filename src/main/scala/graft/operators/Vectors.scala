@@ -43,23 +43,35 @@ object Vectors {
   private def cosToSql(v: String, q: String) =
     s"${dotSql(v, q)} / (sqrt(${dotSql(v, v)}) * sqrt(${dotSql(q, q)}))"
 
-  /** #43 brute-force cosine top-k against the vector of `qId`. */
-  def annTopK(embeddings: DataFrame, qId: Long = 0L, k: Int = 10): DataFrame = {
-    val q = queryVec(embeddings, qId)
-    embeddings.filter(col("vec_id") =!= qId)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("label"),
-        fl(cosTo(col("embedding"), col("qv")), 6).as("cosine"))
+  /** Exact-cosine top-k of `cands` (vec_id, label, embedding) against the
+    * query vector of `qId`: the broadcast 1-row query, the 6-floored
+    * cosine and the (cosine DESC, vec_id ASC) TakeOrdered that every
+    * single-query ANN path ends in. `extra` columns ride between label and
+    * cosine.
+    */
+  private def rankToQuery(cands: DataFrame, embeddings: DataFrame, qId: Long, k: Int,
+                          extra: Column*): DataFrame =
+    cands.crossJoin(broadcast(queryVec(embeddings, qId)))
+      .select(Seq(col("vec_id"), col("label")) ++ extra :+
+        fl(cosTo(col("embedding"), col("qv")), 6).as("cosine"): _*)
       .orderBy(col("cosine").desc, col("vec_id").asc)
       .limit(k)
-  }
 
-  def annTopKSql(qId: Long = 0L, k: Int = 10): String =
+  /** DuckDB twin of [[rankToQuery]] over a scan of `embeddings`; `where`
+    * adds conjuncts to the query-row exclusion.
+    */
+  private def scanTopKSql(qId: Long, k: Int, where: String = ""): String =
     s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = $qId)
        | SELECT e.vec_id, e.label,
        |  ${flSql(cosToSql("e.embedding", "q.qv"), 6)} AS cosine
-       | FROM embeddings e CROSS JOIN q WHERE e.vec_id <> $qId
+       | FROM embeddings e CROSS JOIN q WHERE e.vec_id <> $qId$where
        | ORDER BY cosine DESC, e.vec_id ASC LIMIT $k""".stripMargin.replace("\n", "")
+
+  /** #43 brute-force cosine top-k against the vector of `qId`. */
+  def annTopK(embeddings: DataFrame, qId: Long = 0L, k: Int = 10): DataFrame =
+    rankToQuery(embeddings.filter(col("vec_id") =!= qId), embeddings, qId, k)
+
+  def annTopKSql(qId: Long = 0L, k: Int = 10): String = scanTopKSql(qId, k)
 
   /** #36 structured-filter ANN (search_highlights): same top-k but only
     * over rows passing the metadata predicate (label whitelist here; the
@@ -67,61 +79,67 @@ object Vectors {
     * distance ranking, so the filter pushes down to the scan).
     */
   def searchHighlights(embeddings: DataFrame, qId: Long = 0L, k: Int = 10,
-                       labels: Seq[Int] = Seq(2, 5, 7)): DataFrame = {
-    val q = queryVec(embeddings, qId)
-    embeddings.filter(col("vec_id") =!= qId && col("label").isin(labels.map(Integer.valueOf): _*))
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("label"),
-        fl(cosTo(col("embedding"), col("qv")), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
-  }
+                       labels: Seq[Int] = Seq(2, 5, 7)): DataFrame =
+    rankToQuery(
+      embeddings.filter(col("vec_id") =!= qId && col("label").isin(labels.map(Integer.valueOf): _*)),
+      embeddings, qId, k)
 
   def searchHighlightsSql(qId: Long = 0L, k: Int = 10, labels: Seq[Int] = Seq(2, 5, 7)): String =
-    s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = $qId)
-       | SELECT e.vec_id, e.label,
-       |  ${flSql(cosToSql("e.embedding", "q.qv"), 6)} AS cosine
-       | FROM embeddings e CROSS JOIN q
-       | WHERE e.vec_id <> $qId AND e.label IN (${labels.mkString(", ")})
-       | ORDER BY cosine DESC, e.vec_id ASC LIMIT $k""".stripMargin.replace("\n", "")
+    scanTopKSql(qId, k, s" AND e.label IN (${labels.mkString(", ")})")
+
+  /** Per-label mean vectors (label, cvec) of `e` — the coarse quantizer
+    * of the IVF paths and the probe centroids of the multi-probe graph.
+    * The custom vec_sum aggregate ([[graft.functions.VectorSumAgg]]) keeps
+    * one double[dim] per (cell, partition) through the merge path, instead
+    * of a dim-fold posexplode + groupBy(cell, pos) + collect_list
+    * reassembly.
+    */
+  private def labelCentroids(e: DataFrame): DataFrame =
+    e.groupBy("label")
+      .agg(graft.functions.VectorFunctions.vecSum(col("embedding"), DIM).as("sv"),
+        count(lit(1)).as("nv"))
+      .select(col("label"), transform(col("sv"), x => x / col("nv").cast("double")).as("cvec"))
+
+  /** [[labelCentroids]] of the valid, labeled vectors, collected in label
+    * order — ONE driver collect bounded by the label/cell cardinality. An
+    * invalid row would hard-throw in vec_sum (wrong dim) or skew the mean
+    * (vec_sum's per-slot null skip over the FULL row count vs DuckDB AVG's
+    * non-null denominator); a null label must not become a centroid group.
+    */
+  private def centroidTable(embeddings: DataFrame): Array[(Int, Array[Double])] =
+    labelCentroids(embeddings.filter(kmValid && col("label").isNotNull))
+      .collect()
+      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1)
+
+  /** DuckDB twin of [[labelCentroids]] over `src` (`where` filters the
+    * input rows): per-dim means in CTE `cent`, reassembled as
+    * `cvecs(label, cvec)`.
+    */
+  private def centroidCtesSql(src: String, where: String = ""): String =
+    s"""cent AS (
+       |  SELECT label, i AS pos, AVG(CAST(embedding[i] AS DOUBLE)) AS cv
+       |  FROM $src, (SELECT unnest(range(1, ${DIM + 1})) AS i)$where
+       |  GROUP BY 1, 2),
+       | cvecs AS (SELECT label, list(cv ORDER BY pos) AS cvec FROM cent GROUP BY 1)""".stripMargin
 
   /** #44 IVF-style ANN: per-label centroids as the coarse quantizer, rank
     * cells by centroid-to-query cosine, probe the top `nProbe` cells, then
     * exact top-k inside the probed cells only.
     */
   def annIvf(embeddings: DataFrame, qId: Long = 0L, k: Int = 10, nProbe: Int = 3): DataFrame = {
-    val q = queryVec(embeddings, qId)
-    // centroids via the custom vec_sum aggregate (graft.functions.VectorSumAgg):
-    // one double[dim] per (cell, partition) through the merge path, instead of
-    // a dim-fold posexplode + groupBy(cell, pos) + collect_list reassembly
-    val centVec = embeddings
-      .groupBy("label")
-      .agg(graft.functions.VectorFunctions.vecSum(col("embedding"), DIM).as("sv"),
-        count(lit(1)).as("nv"))
-      .select(col("label"),
-        transform(col("sv"), x => x / col("nv").cast("double")).as("cvec"))
-    val probed = centVec.crossJoin(broadcast(q))
+    val probed = labelCentroids(embeddings).crossJoin(broadcast(queryVec(embeddings, qId)))
       .select(col("label"), cosTo(col("cvec"), col("qv")).as("cscore"))
       .orderBy(col("cscore").desc, col("label").asc)
       .limit(nProbe)
       .select("label")
-    embeddings.filter(col("vec_id") =!= qId)
-      .join(broadcast(probed), "label")
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("label"),
-        fl(cosTo(col("embedding"), col("qv")), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
+    rankToQuery(embeddings.filter(col("vec_id") =!= qId).join(broadcast(probed), "label"),
+      embeddings, qId, k)
   }
 
   def annIvfSql(qId: Long = 0L, k: Int = 10, nProbe: Int = 3): String =
     s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = $qId),
-       | cent AS (
-       |  SELECT label, i AS pos, AVG(CAST(embedding[i] AS DOUBLE)) AS cv
-       |  FROM embeddings, (SELECT unnest(range(1, ${DIM + 1})) AS i)
-       |  GROUP BY 1, 2),
-       | cvecs AS (
-       |  SELECT label, list(cv ORDER BY pos) AS cvec FROM cent GROUP BY 1),
+       | ${centroidCtesSql("embeddings")},
        | probed AS (
        |  SELECT c.label FROM cvecs c CROSS JOIN q
        |  ORDER BY ${cosToSql("c.cvec", "q.qv")} DESC, c.label ASC LIMIT $nProbe)
@@ -177,15 +195,11 @@ object Vectors {
       .select(col("vec_id"), col("label"), col("embedding"),
         posexplode(array((0 until LSH_TABLES).map(bucket): _*)).as(Seq("t", "bucket")))
     val qBuckets = sig.filter(col("vec_id") === qId).select("t", "bucket")
-    val q = queryVec(embeddings, qId)
-    sig.filter(col("vec_id") =!= qId)
-      .join(broadcast(qBuckets), Seq("t", "bucket"))
-      .select("vec_id", "label", "embedding").distinct()
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("label"),
-        fl(cosTo(col("embedding"), col("qv")), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
+    rankToQuery(
+      sig.filter(col("vec_id") =!= qId)
+        .join(broadcast(qBuckets), Seq("t", "bucket"))
+        .select("vec_id", "label", "embedding").distinct(),
+      embeddings, qId, k)
   }
 
   def annLshSql(qId: Long = 0L, k: Int = 10): String = {
@@ -221,18 +235,6 @@ object Vectors {
   }
 
   // ---- #94 blocked kNN join --------------------------------------------------
-  /** k-nearest-neighbor JOIN: for EVERY vector, its k most similar
-    * neighbors inside its blocking cell — the kNN-graph build that
-    * semantic-dedup (SemDeDup-style) and embedding-clustering pipelines
-    * run corpus-wide, as opposed to the single-query ANN paths (#43/44/83/89).
-    *
-    * Scale: the self-join is keyed by the blocking label (at 100 TB the
-    * IVF cell / LSH bucket — the same blocking [[graft.operators.Dedup.embedNearDup]]
-    * uses), so each task only scores within its block; the per-vector
-    * top-k is a window PARTITIONED BY the source vector (group size =
-    * block size, never the corpus), and WindowGroupLimit pushes the
-    * rank <= k filter below the exchange. No global sort anywhere.
-    */
   /** Spread the STREAMED side of a block pair join when the planner is
     * about to BROADCAST the other side. In that regime the join inserts
     * no exchange, so the CPU-quadratic pair enumeration inherits the
@@ -278,20 +280,67 @@ object Vectors {
     else aSide
   }
 
-  def knnJoin(embeddings: DataFrame, k: Int = 5): DataFrame = {
+  /** The block pair join under the whole kNN-graph and near-dup family
+    * (knnJoin, knnGraph, the multi-probe joins, Dedup.embedNearDup). Only
+    * valid vectors ([[kmValid]], applied once here — the oracles' `vsrc`
+    * CTE) enter; each pairs with the vectors of its block, scored by the
+    * 6-floored strict-fold cosine. A vector's block is its `label`; with
+    * `probes` (extra labels per vector — the multi-probe stage) it is
+    * exploded into its own label plus those, and the b side still moves
+    * keyed by its home label, so cost is nProbe × block size. `idPred` on
+    * the two vec_ids keeps ordered (`=!=`, the kNN graph) or unordered
+    * (`<`, near-dup) pairs; `withLabel` carries the a-side block label
+    * (the graph MV's partition column).
+    *
+    * The b side is the normed relation the planner decides whether to
+    * broadcast, so its size estimate is the one the a-side spread reads.
+    */
+  private[operators] def blockPairs(embeddings: DataFrame,
+                                    idPred: (Column, Column) => Column = _ =!= _,
+                                    probes: Option[Column] = None,
+                                    withLabel: Boolean = false): DataFrame = {
     import graft.functions.VectorFunctions.{vecDot, vecNorm2}
-    val withNorm = embeddings.filter(kmValid).select(col("vec_id"), col("label"),
+    val valid = embeddings.filter(kmValid)
+    val b = valid.select(col("vec_id"), col("label"),
       col("embedding").as("v"), vecNorm2(col("embedding")).as("n2"))
+    val (a, block) = probes.fold((b, "label")) { p =>
+      (valid.select(col("vec_id"),
+        col("embedding").as("v"), vecNorm2(col("embedding")).as("n2"),
+        explode(array_distinct(concat(array(col("label")), p))).as("probe_label")),
+        "probe_label")
+    }
+    val pair = Seq(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
+      fl(vecDot(col("a.v"), col("b.v")) / (sqrt(col("a.n2")) * sqrt(col("b.n2"))),
+        OKEY_COS_SCALE).as("cosine"))
+    spreadIfBroadcastJoin(a, b).as("a")
+      .join(b.as("b"),
+        col(s"a.$block") === col("b.label") && idPred(col("a.vec_id"), col("b.vec_id")))
+      .select((if (withLabel) col("a.label").as("label") +: pair else pair): _*)
+  }
+
+  /** Per-vector top-k of a [[blockPairs]] relation: a window PARTITIONED
+    * BY the source vector (group size = block size × probes, never the
+    * corpus) over (cosine DESC, vec_b ASC) — a total order — and
+    * WindowGroupLimit pushes the rank <= k filter below the exchange. No
+    * global sort anywhere.
+    */
+  private def topK(pairs: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("vec_a").orderBy(col("cosine").desc, col("vec_b").asc)
-    spreadIfBroadcastJoin(withNorm, withNorm).as("a")
-      .join(withNorm.as("b"),
-        col("a.label") === col("b.label") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        fl(vecDot(col("a.v"), col("b.v")) / (sqrt(col("a.n2")) * sqrt(col("b.n2"))), 6).as("cosine"))
-      .withColumn("nn_rank", row_number().over(w).cast("long"))
-      .filter(col("nn_rank") <= k)
+    pairs.withColumn("nn_rank", row_number().over(w).cast("long")).filter(col("nn_rank") <= k)
   }
+
+  /** k-nearest-neighbor JOIN: for EVERY vector, its k most similar
+    * neighbors inside its blocking cell — the kNN-graph build that
+    * semantic-dedup (SemDeDup-style) and embedding-clustering pipelines
+    * run corpus-wide, as opposed to the single-query ANN paths (#43/44/83/89).
+    *
+    * Scale: the self-join is keyed by the blocking label (at 100 TB the
+    * IVF cell / LSH bucket — the same blocking [[graft.operators.Dedup.embedNearDup]]
+    * uses), so each task only scores within its block ([[blockPairs]]),
+    * then [[topK]].
+    */
+  def knnJoin(embeddings: DataFrame, k: Int = 5): DataFrame = topK(blockPairs(embeddings), k)
 
   /** #97 multi-probe kNN join: each vector scores against its `nProbe`
     * nearest blocks by centroid cosine (its own block always included),
@@ -306,24 +355,9 @@ object Vectors {
     * moves keyed by its home label exactly as the single-block join), so
     * cost scales by nProbe × block size, never the corpus.
     */
-  def knnJoinMultiProbe(embeddings0: DataFrame, k: Int = 5, nProbe: Int = 2,
+  def knnJoinMultiProbe(embeddings: DataFrame, k: Int = 5, nProbe: Int = 2,
                         unrolled: Boolean = false): DataFrame = {
-    import graft.functions.VectorFunctions.{vecDot, vecNorm2, vecSum}
-    // Valid vectors only, matching the oracles' vsrc CTE: an invalid row
-    // would hard-throw in vec_sum (wrong dim) or skew the centroid mean
-    // (vec_sum's per-slot null skip over the FULL row count vs DuckDB
-    // AVG's non-null denominator) — the graph family's input contract is
-    // the warehouse's valid-vector relation, same as the geo/kmeans path.
-    val embeddings = embeddings0.filter(kmValid)
-    // null-label vectors can't join any block (SQL null-equality already
-    // drops them from the b-side); they must not become a null centroid
-    // group either
-    val cents = embeddings.filter(col("label").isNotNull).groupBy("label")
-      .agg(vecSum(col("embedding"), DIM).as("sv"), count(lit(1)).as("nv"))
-      .select(col("label"), transform(col("sv"), x => x / col("nv").cast("double")).as("cvec"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1))
-      .sortBy(_._1)
+    val cents = centroidTable(embeddings)
     // no blocks at all (empty corpus): the probe array would be a
     // zero-width VOID literal that analysis rejects — and with no rows
     // the multi-probe graph IS the single-block graph (empty)
@@ -344,7 +378,7 @@ object Vectors {
     // interpreted per-row HOF eval — a scale-killer at FAISS cell counts).
     val topLabels = if (unrolled) {
       val scoredCents = cents.map { case (l, cv) =>
-        struct((-fl(cosTo(typedLit(cv), col("embedding")), 6)).as("neg"), lit(l).as("lbl"))
+        struct((-fl(cosTo(typedLit(cv.toSeq), col("embedding")), 6)).as("neg"), lit(l).as("lbl"))
       }
       transform(
         slice(array_sort(array(scoredCents.toIndexedSeq: _*)), 1, nProbe),
@@ -359,36 +393,31 @@ object Vectors {
           col("embedding"), DIM, labelArr, centFlat, nProbe),
         typedLit(labelArr.take(math.min(nProbe, labelArr.length)).toSeq))
     }
-    val probeLabels = array_distinct(concat(array(col("label")), topLabels))
-    val withNorm = embeddings.select(col("vec_id"), col("label"),
-      col("embedding").as("v"), vecNorm2(col("embedding")).as("n2"))
-    val aSide = embeddings.select(col("vec_id"),
-      col("embedding").as("v"), vecNorm2(col("embedding")).as("n2"),
-      explode(probeLabels).as("probe_label"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_a").orderBy(col("cosine").desc, col("vec_b").asc)
-    spreadIfBroadcastJoin(aSide, embeddings).as("a")
-      .join(withNorm.as("b"),
-        col("a.probe_label") === col("b.label") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        fl(vecDot(col("a.v"), col("b.v")) / (sqrt(col("a.n2")) * sqrt(col("b.n2"))), 6).as("cosine"))
-      .withColumn("nn_rank", row_number().over(w).cast("long"))
-      .filter(col("nn_rank") <= k)
+    topK(blockPairs(embeddings, probes = Some(topLabels)), k)
   }
 
-  /** `src` / `prefixCtes` parameterize the replay over a derived source
-    * relation (the geo variant feeds the k-means-relabeled corpus through
-    * the identical probe/pair/top-k chain).
-    */
-  /** Validity predicate for the graph-family oracles' `vsrc` CTE — the
-    * DuckDB twin of the Spark sides' [[kmValid]] entry filter.
+  /** Validity predicate of the oracles' scored relations — the DuckDB twin
+    * of the Spark sides' [[kmValid]] entry filter.
     */
   private def vecValidSql: String =
     s"vec_id IS NOT NULL AND embedding IS NOT NULL AND len(embedding) = $DIM" +
       " AND len(list_filter(embedding, x -> x IS NULL)) = 0"
 
+  /** The graph-family oracles' `vsrc` CTE: the valid vectors of raw
+    * `embeddings`, as [[blockPairs]] admits them.
+    */
+  private def vsrcCte: String =
+    s"vsrc AS (SELECT vec_id, label, embedding FROM embeddings WHERE $vecValidSql)"
+
+  /** The relation a family oracle scores for `src`, and the CTEs that
+    * define it: raw `embeddings` is read through [[vsrcCte]]; a derived
+    * relation (the geo relabel) is valid by construction.
+    */
+  private[operators] def validSrcSql(src: String): (String, Seq[String]) =
+    if (src == "embeddings") ("vsrc", Seq(vsrcCte)) else (src, Nil)
+
   /** Shared DuckDB tail of the probe-family oracles: bounded-state
-    * global top-k over a `pairs(vec_a, vec_b, probe_label, cosine)` CTE
+    * global top-k over a `pairs(vec_a, vec_b, cosine)` CTE
     * by ITERATED ARGMAX. Three formulations have now been measured at the
     * factor-10 soak corpus: the single ROW_NUMBER window externalizes one
     * sort over every candidate pair (>79 GB spill — VERDICT r09 item 5);
@@ -460,32 +489,47 @@ object Vectors {
   }
 
   /** The okey packing's contract constants: cosines are floored at
-    * scale 10^OKEY_COS_SCALE before the integer snap — this MUST equal
-    * the literal 6 every graph-family pairs CTE (`flSql(..., 6)`) and
-    * Spark twin (`fl(..., 6)`) uses, asserted here once rather than
-    * threaded through each call site — and vec_ids must fit below 2^40,
+    * scale 10^OKEY_COS_SCALE before the integer snap — the scale
+    * [[blockPairs]] and [[blockPairsSql]], the family's one pairs site per
+    * engine, floor at — and vec_ids must fit below 2^40,
     * guarded in `scored` (DuckDB `error()`) and on the Spark dump
     * ([[graft.operators.Checks.requireOkeyDomain]]).
     */
   private[graft] val OKEY_COS_SCALE: Int = 6
   private[graft] val OKEY_ID_BOUND: Long = 1L << 40
 
+  /** DuckDB twin of [[blockPairs]]: (vec_a, vec_b, cosine) over the valid
+    * relation `src`, pairing within a block by the id comparison `idOp`.
+    * `probed` reads the block from a `probes(vec_id, probe_label)` CTE
+    * (own label included) instead of the a-side label.
+    */
+  private[operators] def blockPairsSql(src: String, idOp: String = "<>",
+                                       probed: Boolean = false,
+                                       withLabel: Boolean = false): String = {
+    val from =
+      if (probed) s"probes p JOIN $src a ON a.vec_id = p.vec_id JOIN $src b ON b.label = p.probe_label"
+      else s"$src a JOIN $src b ON a.label = b.label"
+    s"SELECT ${if (withLabel) "a.label AS label, " else ""}a.vec_id AS vec_a, b.vec_id AS vec_b, " +
+      s"${flSql(cosToSql("a.embedding", "b.embedding"), OKEY_COS_SCALE)} AS cosine" +
+      s" FROM $from AND a.vec_id $idOp b.vec_id"
+  }
+
+  /** The kNN-graph oracle: `ctes` (each ending in ", "), the
+    * [[blockPairsSql]] `pairs` CTE over `src`, then the bounded top-k tail.
+    */
+  private def graphSql(k: Int, ctes: String, src: String, probed: Boolean = false,
+                       withLabel: Boolean = false): String =
+    s"WITH ${ctes}pairs AS (${blockPairsSql(src, probed = probed, withLabel = withLabel)}) " +
+      twoStageTopKSql(k, if (withLabel) Seq("label") else Nil)
+
+  /** `src0` / `prefixCtes` parameterize the replay over a derived source
+    * relation (the geo variant feeds the k-means-relabeled corpus through
+    * the identical probe/pair/top-k chain).
+    */
   def knnJoinMultiProbeSql(k: Int = 5, nProbe: Int = 2, src0: String = "embeddings",
                            prefixCtes: String = ""): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, ${DIM + 1}), i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE))), (acc, x) -> acc + x)"
-    // raw `embeddings` goes through the validity CTE (the geo caller's
-    // relabeled prefix relation is valid by construction)
-    val (src, validCte) =
-      if (src0 == "embeddings")
-        ("vsrc", s"vsrc AS (SELECT vec_id, label, embedding FROM embeddings WHERE $vecValidSql), ")
-      else (src0, "")
-    s"""WITH $validCte${prefixCtes}cent AS (
-       |  SELECT label, i AS pos, AVG(CAST(embedding[i] AS DOUBLE)) AS cv
-       |  FROM $src, (SELECT unnest(range(1, ${DIM + 1})) AS i)
-       |  WHERE label IS NOT NULL
-       |  GROUP BY 1, 2),
-       | cvecs AS (SELECT label, list(cv ORDER BY pos) AS cvec FROM cent GROUP BY 1),
+    val (src, valid) = validSrcSql(src0)
+    graphSql(k, s"""${valid.map(_ + ", ").mkString}$prefixCtes${centroidCtesSql(src, " WHERE label IS NOT NULL")},
        | ranked AS (
        |  SELECT e.vec_id, c.label AS probe_label,
        |   ROW_NUMBER() OVER (PARTITION BY e.vec_id
@@ -493,14 +537,8 @@ object Vectors {
        |  FROM $src e CROSS JOIN cvecs c),
        | probes AS (
        |  SELECT vec_id, probe_label FROM ranked WHERE pr <= $nProbe
-       |  UNION SELECT vec_id, label AS probe_label FROM $src),
-       | pairs AS (
-       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, p.probe_label AS probe_label,
-       |   ${flSql(s"${dot("a", "b")} / (sqrt(${dot("a", "a")}) * sqrt(${dot("b", "b")}))", 6)} AS cosine
-       |  FROM probes p
-       |  JOIN $src a ON a.vec_id = p.vec_id
-       |  JOIN $src b ON b.label = p.probe_label AND b.vec_id <> a.vec_id)
-       | ${twoStageTopKSql(k)}""".stripMargin.replace("\n", "")
+       |  UNION SELECT vec_id, label AS probe_label FROM $src), """.stripMargin.replace("\n", ""),
+      src, probed = true)
   }
 
   /** #122 geometry-blocked kNN join — the deploy reality of the blocked
@@ -623,18 +661,11 @@ object Vectors {
     * map + cell centroids) literal-inline into a stashed oracle that
     * replays the full hierarchy in DuckDB.
     */
-  def knnJoinMultiProbeHier(embeddings0: DataFrame, k: Int = 5, nProbe: Int = 2,
+  def knnJoinMultiProbeHier(embeddings: DataFrame, k: Int = 5, nProbe: Int = 2,
                             superProbe: Int = 2, stashOracle: Boolean = false,
                             unrolled: Boolean = false): DataFrame = {
-    import graft.functions.VectorFunctions.{vecDot, vecNorm2, vecSum}
-    import graft.OracleStash.{dl, dlist}
-    val embeddings = embeddings0.filter(kmValid) // see knnJoinMultiProbe
-    val cents = embeddings.filter(col("label").isNotNull).groupBy("label")
-      .agg(vecSum(col("embedding"), DIM).as("sv"), count(lit(1)).as("nv"))
-      .select(col("label"), transform(col("sv"), x => x / col("nv").cast("double")).as("cvec"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
+    import graft.OracleStash.dlist
+    val cents = centroidTable(embeddings)
     if (cents.isEmpty) return knnJoin(embeddings, k)
     val nSup = math.ceil(math.sqrt(cents.length.toDouble)).toInt
     // driver Lloyd on the C cell-centroid vectors = trainPqCodebook with
@@ -659,8 +690,6 @@ object Vectors {
         .map { case ((l, cv), ci) => s"(${cellSup(ci)}, $l, ${dlist(cv.toSeq)})" }.mkString(", ")
       graft.OracleStash.put("v_knn_join_mph", knnJoinMphOracleSql(supVals, cellVals, k, nProbe, superProbe))
     }
-    val withNorm = embeddings.select(col("vec_id"), col("label"),
-      col("embedding").as("v"), vecNorm2(col("embedding")).as("n2"))
     // Deploy path: BOTH ranking stages fused into the codegen'd
     // TopProbeLabelsHier expression — supers, cell→super map and cell
     // centroids are codegen reference objects, so plan size is O(1) in C
@@ -672,7 +701,7 @@ object Vectors {
     // super choice must be materialized once as a column because the
     // interpreted projection has no CSE — are retained in git history
     // and superseded by the fused expression.
-    val aSide = if (unrolled) {
+    if (unrolled) {
       val supScored = supCents.toIndexedSeq.zipWithIndex.map { case (sc, j) =>
         struct((-fl(cosTo(typedLit(sc.toSeq), col("embedding")), 6)).as("neg"), lit(j).as("sid"))
       }
@@ -684,14 +713,9 @@ object Vectors {
             struct((-fl(cosTo(typedLit(cv.toSeq), col("embedding")), 6)).as("neg"),
               lit(l).as("lbl")))
         }: _*), c => c.isNotNull)
-      def topLabels(sup: Column) = transform(
-        slice(array_sort(scoredCand(sup)), 1, nProbe), x => x.getField("lbl"))
-      def probeLabels(sup: Column) = array_distinct(concat(array(col("label")), topLabels(sup)))
-      embeddings
-        .select(col("vec_id"), col("label"), col("embedding"), topSupers.as("_sup"))
-        .select(col("vec_id"),
-          col("embedding").as("v"), vecNorm2(col("embedding")).as("n2"),
-          explode(probeLabels(col("_sup"))).as("probe_label"))
+      val topLabels = transform(
+        slice(array_sort(scoredCand(col("_sup"))), 1, nProbe), x => x.getField("lbl"))
+      topK(blockPairs(embeddings.withColumn("_sup", topSupers), probes = Some(topLabels)), k)
     } else {
       val labelArr = cents.map(_._1)
       val cellFlat = cents.flatMap(_._2)
@@ -705,20 +729,8 @@ object Vectors {
         graft.functions.VectorFunctions.topProbeLabelsHier(
           col("embedding"), DIM, supFlat, labelArr, cellSup, cellFlat, nProbe, superProbe),
         typedLit(nullFallback))
-      val probeLabels = array_distinct(concat(array(col("label")), topLabels))
-      embeddings.select(col("vec_id"),
-        col("embedding").as("v"), vecNorm2(col("embedding")).as("n2"),
-        explode(probeLabels).as("probe_label"))
+      topK(blockPairs(embeddings, probes = Some(topLabels)), k)
     }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_a").orderBy(col("cosine").desc, col("vec_b").asc)
-    spreadIfBroadcastJoin(aSide, embeddings).as("a")
-      .join(withNorm.as("b"),
-        col("a.probe_label") === col("b.label") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        fl(vecDot(col("a.v"), col("b.v")) / (sqrt(col("a.n2")) * sqrt(col("b.n2"))), 6).as("cosine"))
-      .withColumn("nn_rank", row_number().over(w).cast("long"))
-      .filter(col("nn_rank") <= k)
   }
 
   /** DuckDB twin of the hierarchy, from the literal-inlined trained
@@ -726,10 +738,8 @@ object Vectors {
     * ranking → member-cell ranking → probes → pairs → top-k.
     */
   private def knnJoinMphOracleSql(supVals: String, cellVals: String,
-                                  k: Int, nProbe: Int, superProbe: Int): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, ${DIM + 1}), i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE))), (acc, x) -> acc + x)"
-    s"""WITH vsrc AS (SELECT vec_id, label, embedding FROM embeddings WHERE $vecValidSql),
+                                  k: Int, nProbe: Int, superProbe: Int): String =
+    graphSql(k, s"""$vsrcCte,
        | sup AS (SELECT * FROM (VALUES $supVals) AS t(sid, svec)),
        | cells AS (SELECT * FROM (VALUES $cellVals) AS t(sid, lbl, cvec)),
        | sscore AS (
@@ -746,27 +756,10 @@ object Vectors {
        |  JOIN cells c ON c.sid = t.sid),
        | probes AS (
        |  SELECT vec_id, lbl AS probe_label FROM cscore WHERE cr <= $nProbe
-       |  UNION SELECT vec_id, label AS probe_label FROM vsrc),
-       | pairs AS (
-       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, p.probe_label AS probe_label,
-       |   ${flSql(s"${dot("a", "b")} / (sqrt(${dot("a", "a")}) * sqrt(${dot("b", "b")}))", 6)} AS cosine
-       |  FROM probes p
-       |  JOIN vsrc a ON a.vec_id = p.vec_id
-       |  JOIN vsrc b ON b.label = p.probe_label AND b.vec_id <> a.vec_id)
-       | ${twoStageTopKSql(k)}""".stripMargin.replace("\n", "")
-  }
+       |  UNION SELECT vec_id, label AS probe_label FROM vsrc), """.stripMargin.replace("\n", ""),
+      "vsrc", probed = true)
 
-  def knnJoinSql(k: Int = 5): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, ${DIM + 1}), i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE))), (acc, x) -> acc + x)"
-    s"""WITH vsrc AS (SELECT vec_id, label, embedding FROM embeddings WHERE $vecValidSql),
-       | pairs AS (
-       | SELECT a.label AS probe_label, a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |  ${flSql(s"${dot("a", "b")} / (sqrt(${dot("a", "a")}) * sqrt(${dot("b", "b")}))", 6)} AS cosine
-       | FROM vsrc a JOIN vsrc b
-       |  ON a.label = b.label AND a.vec_id <> b.vec_id)
-       | ${twoStageTopKSql(k)}""".stripMargin.replace("\n", "")
-  }
+  def knnJoinSql(k: Int = 5): String = graphSql(k, s"$vsrcCte, ", "vsrc")
 
   /** The blocked kNN graph WITH its block key — the stored-MV form of
     * [[knnJoin]] (at deploy the graph is partitioned by `label`, which is
@@ -774,33 +767,10 @@ object Vectors {
     * partition overwrite). Same join/rank contract as knnJoin; `label`
     * rides along from the a-side (functionally determined by vec_a).
     */
-  def knnGraph(embeddings: DataFrame, k: Int = 5): DataFrame = {
-    import graft.functions.VectorFunctions.{vecDot, vecNorm2}
-    val withNorm = embeddings.filter(kmValid).select(col("vec_id"), col("label"),
-      col("embedding").as("v"), vecNorm2(col("embedding")).as("n2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_a").orderBy(col("cosine").desc, col("vec_b").asc)
-    spreadIfBroadcastJoin(withNorm, withNorm).as("a")
-      .join(withNorm.as("b"),
-        col("a.label") === col("b.label") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.label").as("label"),
-        col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        fl(vecDot(col("a.v"), col("b.v")) / (sqrt(col("a.n2")) * sqrt(col("b.n2"))), 6).as("cosine"))
-      .withColumn("nn_rank", row_number().over(w).cast("long"))
-      .filter(col("nn_rank") <= k)
-  }
+  def knnGraph(embeddings: DataFrame, k: Int = 5): DataFrame =
+    topK(blockPairs(embeddings, withLabel = true), k)
 
-  def knnGraphSql(k: Int = 5): String = {
-    def dot(a: String, b: String) =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, ${DIM + 1}), i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE))), (acc, x) -> acc + x)"
-    s"""WITH vsrc AS (SELECT vec_id, label, embedding FROM embeddings WHERE $vecValidSql),
-       | pairs AS (
-       | SELECT a.label AS label, a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |  ${flSql(s"${dot("a", "b")} / (sqrt(${dot("a", "a")}) * sqrt(${dot("b", "b")}))", 6)} AS cosine
-       | FROM vsrc a JOIN vsrc b
-       |  ON a.label = b.label AND a.vec_id <> b.vec_id)
-       | ${twoStageTopKSql(k, extraCols = Seq("label"))}""".stripMargin.replace("\n", "")
-  }
+  def knnGraphSql(k: Int = 5): String = graphSql(k, s"$vsrcCte, ", "vsrc", withLabel = true)
 
   /** #123 incremental maintenance of the blocked kNN graph — the
     * incremental-MV discipline ([[mergeKmeansState]],
@@ -894,31 +864,6 @@ object Vectors {
     cb
   }
 
-  /** #89 product-quantization ANN — the third scale path next to IVF (#44)
-    * and LSH (#83): vectors are stored as m-byte PQ code words; a query
-    * scores the WHOLE corpus from two m×k lookup tables (asymmetric
-    * distance), takes the top `rerank` candidates, and re-ranks only those
-    * with exact cosine.
-    *
-    * Approximate cosine from codes alone:
-    * `Σ_s lutDot[s][code_s] / (sqrt(Σ_s lutN2[s][code_s]) · |q|)` — the
-    * reconstructed vector's dot and norm, no raw-vector access until the
-    * re-rank. Training collects a deterministic md5-ordered sample of
-    * `sampleN` vectors to the driver (how production PQ builds train:
-    * bounded sample, single node, broadcast codebook) and the query row;
-    * encode is the codegen'd in-row [[graft.functions.PqEncode]] over the
-    * scan — zero shuffles before the TakeOrdered.
-    *
-    * At 100 TB: the codes relation is 8 bytes/vector (64-byte floats →
-    * 8-byte codes, 32× smaller than the raw scan IVF/LSH still read for
-    * verification); the ADC scan is pure in-row lookups; only `rerank`
-    * rows ever touch raw vectors. Oracle: the trained codebook/LUTs are
-    * deterministic driver arrays, literal-inlined into a STASHED
-    * hash-exact DuckDB replay (see the trained-model-oracles block below)
-    * — changing the ADC formula must change [[annPqOracleSql]] in step;
-    * the spec additionally pins exact-path equality (rerank ≥ corpus
-    * reproduces brute-force top-k bit-for-bit) and determinism.
-    */
   // ---- shared PQ-family machinery (annPq / annPqResidual / annPqOpq) -----
   /** Deterministic bounded training sample (md5-shuffled order, vec_id
     * tiebreak), drawn from VALID vectors only — a NULL/wrong-dim row would
@@ -962,15 +907,8 @@ object Vectors {
     */
   private def adcTopK(scored: DataFrame, embeddings: DataFrame, qId: Long,
                       k: Int, rerank: Int): DataFrame =
-    scored
-      .orderBy(col("adc_cosine").desc, col("vec_id").asc)
-      .limit(rerank)
-      .crossJoin(broadcast(queryVec(embeddings, qId)))
-      .select(col("vec_id"), col("label"),
-        fl(col("adc_cosine"), 6).as("adc_cosine"),
-        fl(cosTo(col("embedding"), col("qv")), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
+    rankToQuery(scored.orderBy(col("adc_cosine").desc, col("vec_id").asc).limit(rerank),
+      embeddings, qId, k, fl(col("adc_cosine"), 6).as("adc_cosine"))
 
   /** The scorable corpus: everything but the query row, validity-filtered
     * exactly like [[pqSrcSql]]'s oracle CTE (an invalid row would
@@ -980,6 +918,31 @@ object Vectors {
   private def pqCorpus(embeddings: DataFrame, qId: Long): DataFrame =
     embeddings.filter(col("vec_id") =!= qId && kmValid)
 
+  /** #89 product-quantization ANN — the third scale path next to IVF (#44)
+    * and LSH (#83): vectors are stored as m-byte PQ code words; a query
+    * scores the WHOLE corpus from two m×k lookup tables (asymmetric
+    * distance), takes the top `rerank` candidates, and re-ranks only those
+    * with exact cosine.
+    *
+    * Approximate cosine from codes alone:
+    * `Σ_s lutDot[s][code_s] / (sqrt(Σ_s lutN2[s][code_s]) · |q|)` — the
+    * reconstructed vector's dot and norm, no raw-vector access until the
+    * re-rank. Training collects a deterministic md5-ordered sample of
+    * `sampleN` vectors to the driver (how production PQ builds train:
+    * bounded sample, single node, broadcast codebook) and the query row;
+    * encode is the codegen'd in-row [[graft.functions.PqEncode]] over the
+    * scan — zero shuffles before the TakeOrdered.
+    *
+    * At 100 TB: the codes relation is 8 bytes/vector (64-byte floats →
+    * 8-byte codes, 32× smaller than the raw scan IVF/LSH still read for
+    * verification); the ADC scan is pure in-row lookups; only `rerank`
+    * rows ever touch raw vectors. Oracle: the trained codebook/LUTs are
+    * deterministic driver arrays, literal-inlined into a STASHED
+    * hash-exact DuckDB replay (see the trained-model-oracles block below)
+    * — changing the ADC formula must change [[annPqOracleSql]] in step;
+    * the spec additionally pins exact-path equality (rerank ≥ corpus
+    * reproduces brute-force top-k bit-for-bit) and determinism.
+    */
   def annPq(embeddings: DataFrame, qId: Long = 0L, k: Int = 10,
             m: Int = 8, codebookK: Int = 16, rerank: Int = 100,
             sampleN: Int = 256, iters: Int = 5): DataFrame = {
@@ -1091,9 +1054,7 @@ object Vectors {
     * dropped (or NULL-ranked) by the other.
     */
   private def pqSrcSql(qId: Long): String =
-    s"src AS (SELECT vec_id, label, embedding FROM embeddings WHERE vec_id <> $qId" +
-      s" AND vec_id IS NOT NULL AND embedding IS NOT NULL AND len(embedding) = $DIM" +
-      " AND len(list_filter(embedding, x -> x IS NULL)) = 0)"
+    s"src AS (SELECT vec_id, label, embedding FROM embeddings WHERE vec_id <> $qId AND $vecValidSql)"
 
   /** Shared tail: ADC ranking → rerank cut → exact-cosine top-k, identical
     * to the Spark plans' orderBy/limit sequence (raw doubles rank, floored
@@ -1440,31 +1401,6 @@ object Vectors {
     */
   private val KM_QS = 1e6
 
-  /** Corpus-wide Lloyd k-means over the embedding column — the
-    * cluster-then-curate stage of SemDeDup/DSIR-style recipes (cluster the
-    * corpus, then dedup/sample within clusters), distinct from the bounded-
-    * sample codebook training the PQ family uses: here EVERY vector is
-    * assigned, and the centroid update aggregates the FULL corpus.
-    *
-    * Determinism (the reason this is oracle-exact, unusual for iterative
-    * k-means on doubles): centroid updates sum `floor(v*1e6)` per dimension
-    * — exact integer doubles, so the distributed sum is associative and
-    * independent of partitioning — and divide back only after the exact
-    * sum ([[KM_QS]]). Distances are the strict-fold [[graft.functions.DotProduct]]
-    * sequence (`|v|² - 2·v·c + |c|²`), bit-identical to the DuckDB oracle's
-    * `list_reduce` fold; argmin ties break to the lowest cluster index on
-    * both engines. Init = the k lowest-vec_id vectors (deterministic);
-    * empty clusters keep their previous centroid.
-    *
-    * Scale: per iteration, ONE partial-aggregated shuffle of k×(dim+1)
-    * doubles per map task (vec_sum combines map-side) plus a k-row collect;
-    * assignment is a pure in-row projection against centroid literals —
-    * zero joins, zero windows. iters+1 passes over the corpus total, the
-    * canonical distributed-k-means shape.
-    */
-  /** A valid member vector for the k-means family (mirrored in the e CTE
-    * of every oracle sharing [[kmeansCtes]]).
-    */
   /** Embedding-only validity — for relations that carry no vec_id (e.g.
     * a raw (ts, embedding) stream): non-null, right dimension, no null
     * elements.
@@ -1473,6 +1409,10 @@ object Vectors {
     col("embedding").isNotNull && size(col("embedding")) === DIM &&
       size(filter(col("embedding"), x => x.isNull)) === 0
 
+  /** A valid member vector for the k-means and kNN-graph families
+    * (mirrored in the e CTE of every oracle sharing [[kmeansCtes]] and in
+    * the graph oracles' `vsrc` via [[vecValidSql]]).
+    */
   private[graft] def kmValid: Column = col("vec_id").isNotNull && embValid
 
   /** Fused assignment struct(cluster, dist) against `cent` — the
@@ -1523,6 +1463,28 @@ object Vectors {
     cent
   }
 
+  /** Corpus-wide Lloyd k-means over the embedding column — the
+    * cluster-then-curate stage of SemDeDup/DSIR-style recipes (cluster the
+    * corpus, then dedup/sample within clusters), distinct from the bounded-
+    * sample codebook training the PQ family uses: here EVERY vector is
+    * assigned, and the centroid update aggregates the FULL corpus.
+    *
+    * Determinism (the reason this is oracle-exact, unusual for iterative
+    * k-means on doubles): centroid updates sum `floor(v*1e6)` per dimension
+    * — exact integer doubles, so the distributed sum is associative and
+    * independent of partitioning — and divide back only after the exact
+    * sum ([[KM_QS]]). Distances are the strict-fold [[graft.functions.DotProduct]]
+    * sequence (`|v|² - 2·v·c + |c|²`), bit-identical to the DuckDB oracle's
+    * `list_reduce` fold; argmin ties break to the lowest cluster index on
+    * both engines. Init = the k lowest-vec_id vectors (deterministic);
+    * empty clusters keep their previous centroid.
+    *
+    * Scale: per iteration, ONE partial-aggregated shuffle of k×(dim+1)
+    * doubles per map task (vec_sum combines map-side) plus a k-row collect;
+    * assignment is a pure in-row projection against centroid literals —
+    * zero joins, zero windows. iters+1 passes over the corpus total, the
+    * canonical distributed-k-means shape.
+    */
   def clusterKmeans(embeddings: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
     val e = embeddings.filter(kmValid).select(col("vec_id"), col("embedding"))
     val cent = trainCentroids(embeddings, k, iters)
@@ -1761,15 +1723,7 @@ object Vectors {
 
     // coarse quantizer: one centroid per label cell (bounded relation),
     // collected once — the knnJoinMultiProbe contract
-    val cells = embeddings.filter(col("label").isNotNull && kmValid)
-      .groupBy("label")
-      .agg(graft.functions.VectorFunctions.vecSum(col("embedding"), DIM).as("sv"),
-        count(lit(1)).as("nv"))
-      .select(col("label"),
-        transform(col("sv"), x => x / col("nv").cast("double")).as("cvec"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .toMap
+    val cells = centroidTable(embeddings).toMap
     // kmValid guards the query row too: a null / wrong-dim query vector
     // degrades to the empty result instead of crashing the driver collect
     val qRow = embeddings.filter(col("vec_id") === qId && kmValid)
@@ -1845,17 +1799,10 @@ object Vectors {
     val adcN2 = col("cn2") + (0 until m).map(s =>
       element_at(lit(n2Lut(s)), col("c2").getItem(s) + 1) +
         element_at(col("cross"), lit(s * codebookK) + col("c2").getItem(s) + 1)).reduce(_ + _)
-    codes
+    adcTopK(codes
       .select(col("vec_id"), col("label"), col("embedding"),
-        (adcDot / (sqrt(adcN2) * qNorm)).as("adc_cosine"))
-      .orderBy(col("adc_cosine").desc, col("vec_id").asc)
-      .limit(rerank)
-      .crossJoin(broadcast(queryVec(embeddings, qId)))
-      .select(col("vec_id"), col("label"),
-        fl(col("adc_cosine"), 6).as("adc_cosine"),
-        fl(cosTo(col("embedding"), col("qv")), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
+        (adcDot / (sqrt(adcN2) * qNorm)).as("adc_cosine")),
+      embeddings, qId, k, rerank)
   }
 
   // ---- #117 incremental clustering-MV maintenance --------------------------

@@ -686,9 +686,41 @@ class DedupVectorsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val empty = Seq.empty[(Long, Int, Array[Float])].toDF("vec_id", "label", "embedding")
-    assert(Vectors.knnJoinGeo(empty).count() == 0)
-    val invalid = Seq((1L, 0, Array.fill(3)(1.0f))).toDF("vec_id", "label", "embedding")
-    assert(Vectors.knnJoinGeo(invalid).count() == 0) // wrong dim -> kmValid drops it
+    // wrong dim -> kmValid drops both at the block pair join's entry
+    val invalid = Seq((1L, 0, Array.fill(3)(1.0f)), (2L, 0, Array.fill(3)(1.0f)))
+      .toDF("vec_id", "label", "embedding")
+    // every member of the graph family runs through the one block pair join
+    Seq("empty" -> empty, "all-invalid" -> invalid).foreach { case (name, df) =>
+      Seq[(String, org.apache.spark.sql.DataFrame)](
+        "knnJoin" -> Vectors.knnJoin(df),
+        "knnGraph" -> Vectors.knnGraph(df),
+        "knnJoinMultiProbe" -> Vectors.knnJoinMultiProbe(df),
+        "knnJoinMultiProbeHier" -> Vectors.knnJoinMultiProbeHier(df),
+        "knnJoinGeo" -> Vectors.knnJoinGeo(df),
+        "embedNearDup" -> Dedup.embedNearDup(df)).foreach { case (op, out) =>
+        assert(out.count() == 0, s"$op on the $name corpus")
+      }
+      // no pair: every vector is its own singleton cluster and survivor
+      val sem = Dedup.semDedup(df).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+      assert(sem == df.collect().map(r => r.getLong(0) -> (r.getLong(0), true)).toMap,
+        s"semDedup on the $name corpus: $sem")
+    }
+  }
+
+  test("embedNearDup/semDedup: vectors of the wrong dimension are never scored") {
+    val s = spark
+    import s.implicits._
+    // DotProduct folds over min(len) elements while the oracle's
+    // embedding[i] is NULL past the end, so an unfiltered wrong-dim vector
+    // scored ~0.98 against its own truncation here, on one engine only
+    val base = Array.tabulate(64)(i => (i % 7 + 1).toFloat)
+    val df = Seq((1L, 0, base), (2L, 0, base.take(63)), (3L, 0, base :+ 1.0f))
+      .toDF("vec_id", "label", "embedding")
+    assert(Dedup.embedNearDup(df).count() == 0)
+    val sem = Dedup.semDedup(df).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+    assert(sem == Map(1L -> (1L, true), 2L -> (2L, true), 3L -> (3L, true)), s"semDedup: $sem")
   }
 
   test("fused probe expressions ≡ unrolled formulations on the real corpus (flat + hier)") {
