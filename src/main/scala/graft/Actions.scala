@@ -53,7 +53,8 @@ object Actions {
     spark
   }
 
-  /** Touch every table once, then absorb first-execution machinery costs
+  /** Touch every table once (which also resolves it for the session, see
+    * [[Tables]]), then absorb first-execution machinery costs
     * (broadcast thread pools, AQE, window/cache/codegen paths, JIT of
     * shuffle internals) on a tiny slice, so the FIRST timed query
     * measures its plan, not session init — the alphabetically-first
@@ -64,9 +65,7 @@ object Actions {
   def warmup(spark: SparkSession, sfDir: String): Unit = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings").foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
-    Tables.events(spark, sfDir).count()
+    Tables.all.foreach { case (_, rd) => rd(spark, sfDir).count() }
     val e = Tables.events(spark, sfDir).limit(2000).cache()
     e.count()
     e.groupBy("event_type").agg(countDistinct("user_id").as("u")).count()

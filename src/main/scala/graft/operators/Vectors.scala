@@ -125,27 +125,31 @@ object Vectors {
 
   /** #44 IVF-style ANN: per-label centroids as the coarse quantizer, rank
     * cells by centroid-to-query cosine, probe the top `nProbe` cells, then
-    * exact top-k inside the probed cells only.
+    * exact top-k inside the probed cells only. Centroids and candidates are
+    * the [[kmValid]] vectors, as in [[blockPairs]]: one wrong-dimension
+    * row would otherwise abort vec_sum.
     */
   def annIvf(embeddings: DataFrame, qId: Long = 0L, k: Int = 10, nProbe: Int = 3): DataFrame = {
-    val probed = labelCentroids(embeddings).crossJoin(broadcast(queryVec(embeddings, qId)))
+    val valid = embeddings.filter(kmValid)
+    val probed = labelCentroids(valid).crossJoin(broadcast(queryVec(embeddings, qId)))
       .select(col("label"), cosTo(col("cvec"), col("qv")).as("cscore"))
       .orderBy(col("cscore").desc, col("label").asc)
       .limit(nProbe)
       .select("label")
-    rankToQuery(embeddings.filter(col("vec_id") =!= qId).join(broadcast(probed), "label"),
+    rankToQuery(valid.filter(col("vec_id") =!= qId).join(broadcast(probed), "label"),
       embeddings, qId, k)
   }
 
   def annIvfSql(qId: Long = 0L, k: Int = 10, nProbe: Int = 3): String =
     s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = $qId),
-       | ${centroidCtesSql("embeddings")},
+       | $vsrcCte,
+       | ${centroidCtesSql("vsrc")},
        | probed AS (
        |  SELECT c.label FROM cvecs c CROSS JOIN q
        |  ORDER BY ${cosToSql("c.cvec", "q.qv")} DESC, c.label ASC LIMIT $nProbe)
        | SELECT e.vec_id, e.label,
        |  ${flSql(cosToSql("e.embedding", "q.qv"), 6)} AS cosine
-       | FROM embeddings e JOIN probed p ON e.label = p.label CROSS JOIN q
+       | FROM vsrc e JOIN probed p ON e.label = p.label CROSS JOIN q
        | WHERE e.vec_id <> $qId
        | ORDER BY cosine DESC, e.vec_id ASC LIMIT $k""".stripMargin.replace("\n", "")
 

@@ -376,6 +376,24 @@ class DedupVectorsSpec extends SparkSpec {
     assert(brute == ivfAll)
   }
 
+  test("ann: ivf over a corpus with wrong-dimension vectors equals ivf over its valid rows") {
+    // copies of the query vector, cut to 63 and extended to 65 elements,
+    // in the query's own cell: vec_sum throws on either in the centroid
+    // aggregate, and unfiltered they would top the candidate ranking
+    val q = emb.filter(col("vec_id") === 0L).head()
+    val (label, qv) = (q.getAs[Int]("label"), q.getSeq[Float](q.fieldIndex("embedding")).toSeq)
+    val maxId = emb.agg(max("vec_id")).head().getLong(0)
+    val bad = spark.createDataFrame(java.util.List.of(
+      org.apache.spark.sql.Row(maxId + 1, label, qv.take(63)),
+      org.apache.spark.sql.Row(maxId + 2, label, qv :+ 1.0f)),
+      org.apache.spark.sql.types.StructType(Seq("vec_id", "label", "embedding").map(emb.schema(_))))
+    def ivf(df: org.apache.spark.sql.DataFrame) =
+      Vectors.annIvf(df, k = 5, nProbe = 3).collect().toSeq
+    val valid = ivf(emb)
+    assert(valid.nonEmpty)
+    assert(ivf(emb.unionByName(bad)) == valid)
+  }
+
   test("semDedup: clusters close the near-dup graph, exactly one survivor each") {
     val pairs = Dedup.embedNearDup(emb).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
