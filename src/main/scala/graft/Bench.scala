@@ -4,9 +4,15 @@ package graft
   * and prints ONE JSON line. A warmup action first absorbs session
   * initialization (parquet footer reads, codegen compilation, JIT) so the
   * per-query numbers measure the plans, not JVM startup.
+  *
+  * `Bench [outDir]` writes the per-query detail files into `outDir`
+  * (default `target/bench`, which git ignores), never into the working
+  * directory, where they would overwrite the copies committed at the root.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
+    val outDir = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(args.headOption.getOrElse("target/bench")))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Actions.cpus()
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run (iteration aid; the driver
@@ -83,8 +89,7 @@ object Bench {
     // (PERF_r11 got n_common=0 for exactly this reason). The un-suffixed
     // file stays the stdout contract's pointer.
     Seq("bench_detail.json", s"bench_detail_c$cpus.json").foreach { f =>
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get(f), (detail + "\n").getBytes("UTF-8"))
+      try java.nio.file.Files.write(outDir.resolve(f), (detail + "\n").getBytes("UTF-8"))
       catch { case e: Throwable =>
         System.err.println(s"[bench] FAILED to write $f: ${e.getMessage}")
       }
@@ -98,7 +103,7 @@ object Bench {
     val cpuTotal = results.map(_._3.cpuMs).sum
     val runTotal = results.map(_._3.runMs).sum
     val line =
-      s"""{"metric":"total","value":$totalJson,"unit":"sec","n":${results.size},"failed":${failed.size},"cpu_ms_total":$cpuTotal,"run_ms_total":$runTotal,"cpus":$cpus,"sf":"$sfDir","detail":"bench_detail.json"}"""
+      s"""{"metric":"total","value":$totalJson,"unit":"sec","n":${results.size},"failed":${failed.size},"cpu_ms_total":$cpuTotal,"run_ms_total":$runTotal,"cpus":$cpus,"sf":"$sfDir","detail":"${outDir.resolve("bench_detail.json")}"}"""
     println(line)
     spark.stop()
   }

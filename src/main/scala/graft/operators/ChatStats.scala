@@ -142,27 +142,21 @@ object ChatStats {
       .groupBy("channel", "week")
       .agg(count(lit(1)).as("total_members"))
 
-  /** get_chat_leaderboard (api.py:2026): top-10 users by message count per
-    * channel-week, as a SALTED two-phase top-k. A single window partitioned
-    * by (channel, week) sorts a hot channel's entire weekly user base in one
-    * task at data volume; instead phase 1 takes a local top-k inside
-    * (channel, week, hash(user) % saltBuckets) — bounding every sort to
-    * 1/saltBuckets of the hottest key — and phase 2 ranks the surviving
-    * saltBuckets*k rows per key. row_number (not rank) with user_id
-    * tiebreak keeps the result deterministic and identical to the
-    * single-window formulation (the true top-k always survives its bucket).
+  /** get_chat_leaderboard (api.py:2026): top-k users by message count per
+    * channel-week, as one `row_number() <= k` window. Spark plans that
+    * filter as a `WindowGroupLimit`, and its `Partial` half runs BELOW the
+    * (channel, week) exchange: each map partition keeps at most k rows per
+    * key, so a hot channel's weekly user base never reaches one task's
+    * sort — the hot-key bound a salted two-phase top-k would give, with one
+    * window and one shuffle fewer (`DashboardPlanSpec` pins the partial
+    * limit). row_number (not rank) with the user_id tiebreak keeps the
+    * result deterministic.
     */
-  def leaderboard(events: DataFrame, k: Int = 10, saltBuckets: Int = 16): DataFrame = {
-    val act = userWeeklyActivity(events)
-    val ord = Seq(col("messages").desc, col("user_id").asc)
-    val local = Window
-      .partitionBy(col("channel"), col("week"), pmod(hash(col("user_id")), lit(saltBuckets)))
-      .orderBy(ord: _*)
-    val global = Window.partitionBy("channel", "week").orderBy(ord: _*)
-    act
-      .withColumn("lrn", row_number().over(local))
-      .filter(col("lrn") <= k)
-      .withColumn("position", row_number().over(global).cast("long"))
+  def leaderboard(events: DataFrame, k: Int = 10): DataFrame = {
+    val byMessages = Window.partitionBy("channel", "week")
+      .orderBy(col("messages").desc, col("user_id").asc)
+    userWeeklyActivity(events)
+      .withColumn("position", row_number().over(byMessages).cast("long"))
       .filter(col("position") <= k)
       .select("channel", "week", "position", "user_id", "messages")
   }
@@ -346,15 +340,21 @@ object ChatStats {
     * different periods, unlike the matrix).
     */
   def commonUsersPair(events: DataFrame, chA: String, wa: String, chB: String, wb: String): DataFrame = {
-    // four consumers (each side's membership join + each side's size count)
-    val ucw = userWeeklyActivity(events).select("user_id", "channel", "week")
-      .sharedCache
-    val sa = ucw.filter(col("channel") === chA && col("week") === to_date(lit(wa))).select("user_id")
-    val sb = ucw.filter(col("channel") === chB && col("week") === to_date(lit(wb))).select("user_id")
-    val common = sa.join(sb, "user_id").agg(count(lit(1)).as("num_common_users"))
-    common
-      .crossJoin(sa.agg(count(lit(1)).as("size_a")))
-      .crossJoin(sb.agg(count(lit(1)).as("size_b")))
+    // channel and week are grouping keys of the rollup, so the cell filter
+    // reaches the scan; one user-keyed aggregate then carries both
+    // memberships (max drops the rollup's own aggregate as redundant)
+    val inA = col("channel") === chA && col("week") === to_date(lit(wa))
+    val inB = col("channel") === chB && col("week") === to_date(lit(wb))
+    userWeeklyActivity(events)
+      .filter(inA || inB)
+      .groupBy("user_id")
+      .agg(max(inA).as("a"), max(inB).as("b"))
+      .agg(
+        // a NULL user is one row of each side's DISTINCT set but never
+        // joins, so it counts in the sizes and not in the intersection
+        count_if(col("a") && col("b") && col("user_id").isNotNull).as("num_common_users"),
+        count_if(col("a")).as("size_a"),
+        count_if(col("b")).as("size_b"))
       .select(
         col("num_common_users"),
         // NULLIF guards the empty-side case (no users in that channel-week):

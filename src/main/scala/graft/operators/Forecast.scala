@@ -29,36 +29,35 @@ object Forecast {
       .groupBy(col("channel"), to_date(date_trunc("month", col("o_orderdate"))).as("month"))
       .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("dur"))
       .select(col("channel"), col("month"), (col("dur").cast("double") / 3600d).as("x"))
-    val wOrd = Window.partitionBy("channel").orderBy("month")
-    val idxed = monthly
-      .withColumn("i", row_number().over(wOrd).cast("double"))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy("channel")).cast("double"))
-      .withColumn("w", when(col("n") >= 3, exp(lit(-1d) + (col("i") - 1d) / (col("n") - 1d))).otherwise(lit(1d)))
-    val stats = idxed.groupBy("channel").agg(
-      max("n").as("n"),
-      (sum(col("w") * col("x")) / sum(col("w"))).as("wm"),
-      sum("x").as("sx"),
-      sum(col("x") * col("x")).as("sx2"),
-      min_by(col("x"), col("month")).as("x_first"),
-      max_by(col("x"), col("month")).as("x_last"))
+    // one select per step: every chained withColumn re-analyzes the plan
+    val w = when(col("n") >= 3, exp(lit(-1d) + (col("i") - 1d) / (col("n") - 1d))).otherwise(lit(1d))
+    val stats = monthly
+      .select(col("channel"), col("month"), col("x"),
+        row_number().over(Window.partitionBy("channel").orderBy("month")).cast("double").as("i"),
+        count(lit(1)).over(Window.partitionBy("channel")).cast("double").as("n"))
+      .groupBy("channel").agg(
+        max("n").as("n"),
+        (sum(w * col("x")) / sum(w)).as("wm"),
+        sum("x").as("sx"),
+        sum(col("x") * col("x")).as("sx2"),
+        min_by(col("x"), col("month")).as("x_first"),
+        max_by(col("x"), col("month")).as("x_last"))
     val sigma = when(col("n") > 1,
       sqrt(greatest(lit(0d), (col("sx2") - col("sx") * col("sx") / col("n")) / col("n"))))
       .otherwise(lit(0.1d))
     val trend = when(col("n") >= 2, (col("x_last") - col("x_first")) / col("n")).otherwise(lit(0d))
-    val horizonCol = explode(sequence(lit(1), lit(horizons)))
+    val f = col("wm") + col("trend") * col("h").cast("double")
+    val widen = col("sigma") * (lit(1d) + (col("h").cast("double") - 1d) * 0.2d)
     stats
-      .withColumn("sigma", sigma)
-      .withColumn("trend", trend)
-      .withColumn("h", horizonCol)
-      .withColumn("f", col("wm") + col("trend") * col("h").cast("double"))
-      .withColumn("widen", col("sigma") * (lit(1d) + (col("h").cast("double") - 1d) * 0.2d))
+      .select(col("channel"), col("wm"), sigma.as("sigma"), trend.as("trend"),
+        explode(sequence(lit(1), lit(horizons))).as("h"))
       .select(
         col("channel"), col("h").cast("int").as("horizon"),
-        fl(col("f"), 4).as("forecast"),
-        fl(greatest(lit(0d), col("f") - col("widen") * 1.645d), 4).as("lower"),
-        fl(greatest(lit(0d), col("f") - col("widen") * 0.674d), 4).as("p25"),
-        fl(col("f") + col("widen") * 0.674d, 4).as("p75"),
-        fl(col("f") + col("widen") * 1.645d, 4).as("upper"))
+        fl(f, 4).as("forecast"),
+        fl(greatest(lit(0d), f - widen * 1.645d), 4).as("lower"),
+        fl(greatest(lit(0d), f - widen * 0.674d), 4).as("p25"),
+        fl(f + widen * 0.674d, 4).as("p75"),
+        fl(f + widen * 1.645d, 4).as("upper"))
   }
 
   /** #103 adaptive NN forecaster — the reference's FULL pipeline

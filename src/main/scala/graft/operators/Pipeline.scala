@@ -15,9 +15,9 @@ import EventSemantics.{fl, flSql}
   * set against the (huge) training scan — the only train-side shuffle is
   * the one partial-aggregated hit count keyed by doc_id; repetition is a
   * pure in-row projection (zero shuffle); hash sampling is an in-row
-  * filter (zero shuffle); stratified sampling uses the same salted
-  * two-phase top-k as the leaderboard so no task ever sorts a whole
-  * stratum.
+  * filter (zero shuffle); stratified sampling is one window top-k whose
+  * partial limit runs before the shuffle, as in the leaderboard, so no
+  * task ever sorts a whole stratum.
   */
 object Pipeline {
 
@@ -237,27 +237,23 @@ object Pipeline {
   // ---- #64 stratified (language-balanced) sampling -------------------------
   /** Per-stratum quota sample: the `quota` docs with the smallest
     * md5-derived hash inside each `lang` — the language-balancing pass of a
-    * corpus build. Deterministic (hash + doc_id tiebreak) and SALTED
-    * two-phase like the leaderboard: phase 1 takes a local top-quota
-    * inside (lang, hash(doc) % saltBuckets), phase 2 ranks the surviving
-    * saltBuckets×quota rows — no task ever sorts a whole stratum, which at
-    * 100 TB is billions of docs for the majority language. (For quotas too
-    * large for a driver-side final rank, the same hash column supports
-    * threshold sampling — keep h below the quota/|stratum| quantile — at
-    * the cost of an approximate cut; this operator is the exact path.)
+    * corpus build. Deterministic (hash + doc_id tiebreak), as one
+    * `row_number() <= quota` window like the leaderboard: Spark plans it as
+    * a `WindowGroupLimit` whose `Partial` half runs below the `lang`
+    * exchange, so each map partition ships at most `quota` docs per
+    * stratum and no task ever sorts a whole stratum, which at 100 TB is
+    * billions of docs for the majority language (`DashboardPlanSpec` pins
+    * the partial limit; it is planned while `quota` is at most
+    * `spark.sql.optimizer.windowGroupLimitThreshold`). For larger quotas
+    * the same hash column supports threshold sampling — keep h below the
+    * quota/|stratum| quantile — at the cost of an approximate cut; this
+    * operator is the exact path.
     */
-  def sampleStratified(documents: DataFrame, quota: Int = 30, saltBuckets: Int = 16): DataFrame = {
-    val h = md5Id(col("doc_id").cast("string"))
-    val ord = Seq(col("h").asc, col("doc_id").asc)
-    val local = Window
-      .partitionBy(col("lang"), pmod(hash(col("doc_id")), lit(saltBuckets)))
-      .orderBy(ord: _*)
-    val global = Window.partitionBy("lang").orderBy(ord: _*)
+  def sampleStratified(documents: DataFrame, quota: Int = 30): DataFrame = {
+    val byHash = Window.partitionBy("lang").orderBy(col("h").asc, col("doc_id").asc)
     documents
-      .select(col("doc_id"), col("lang"), h.as("h"))
-      .withColumn("lrn", row_number().over(local))
-      .filter(col("lrn") <= quota)
-      .withColumn("pos", row_number().over(global).cast("long"))
+      .select(col("doc_id"), col("lang"), md5Id(col("doc_id").cast("string")).as("h"))
+      .withColumn("pos", row_number().over(byHash).cast("long"))
       .filter(col("pos") <= quota)
       .select("lang", "doc_id", "pos")
   }

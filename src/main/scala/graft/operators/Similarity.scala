@@ -24,15 +24,22 @@ object Similarity {
   /** #31 channel×channel cosine of user-message-count vectors, per week.
     * Emits ordered pairs (a < b) that share >= 1 user (zero-sim pairs are
     * absent by construction in both engines).
+    *
+    * The norm `n2` rides on each rollup row as a window sum over (week,
+    * channel): the rollup is computed once and both self-join sides reuse
+    * its exchange, with no cache, no barrier job and no norm joins. Rows of
+    * a NULL user count in `n2` (as in the oracle's `norms`) and never in a
+    * dot product (they never join). The broadcast attach of
+    * [[channelSimilarityFrom]] would scan the fact table twice here:
+    * Catalyst infers `isnotnull(user_id)` on the join side only, so the two
+    * rollup exchanges differ and are not reused.
     */
-  def channelSimilarity(events: DataFrame): DataFrame =
-    channelSimilarityFrom(
-      // consumed three times (both dot-product sides + norms); materialize
-      // the MV-shaped rollup once instead of scanning the fact per consumer
-      // (see ChatStats.attrition for the full rationale)
-      EventSemantics.userWeeklyActivity(events)
-        .select(col("user_id"), col("channel"), col("week"), col("messages"))
-        .sharedCache)
+  def channelSimilarity(events: DataFrame): DataFrame = {
+    val w = EventSemantics.userWeeklyActivity(events)
+      .select(col("user_id"), col("channel"), col("week"), col("messages"))
+    cosines(w.withColumn("n2",
+      sum(col("messages") * col("messages")).over(Window.partitionBy("week", "channel"))))
+  }
 
   /** Cosine similarity from an already-materialized weekly rollup `w`
     * (user_id, channel, week, messages) — the deploy seam for a warehouse
@@ -41,34 +48,34 @@ object Similarity {
     * pair self-join runs with no input exchange (LayoutSpec pins this).
     * Also shares one rollup across consumers in-session
     * (clusteringCommunities).
+    *
+    * `n2` attaches through ONE broadcast join of the |channels × weeks|
+    * norms aggregate: a broadcast join keeps the table's user_id
+    * bucketing, where a (week, channel) window would re-shuffle it on both
+    * join sides. A table is cheap to scan twice; a rollup computed from
+    * events is not, hence the window in [[channelSimilarity]].
     */
   def channelSimilarityFrom(w: DataFrame): DataFrame = {
-    val dots = w.as("a")
+    val norms = w.groupBy("week", "channel")
+      .agg(sum(col("messages") * col("messages")).as("n2"))
+    cosines(w.join(broadcast(norms), Seq("week", "channel")))
+  }
+
+  /** The cosine core over rollup rows that already carry their (week,
+    * channel) norm `n2`: the pair self-join on (user_id, week) and one
+    * aggregate whose keys carry both norms to the division.
+    */
+  private def cosines(w: DataFrame): DataFrame =
+    w.as("a")
       .join(w.as("b"),
         col("a.user_id") === col("b.user_id") && col("a.week") === col("b.week") &&
           col("a.channel") < col("b.channel"))
-      .groupBy(col("a.week").as("week"), col("a.channel").as("channel_a"), col("b.channel").as("channel_b"))
+      .groupBy(col("a.week").as("week"), col("a.channel").as("channel_a"), col("b.channel").as("channel_b"),
+        col("a.n2").as("n2_a"), col("b.n2").as("n2_b"))
       .agg(sum(col("a.messages") * col("b.messages")).as("dot"))
-    // materialized ONCE (eager — both consumers are BroadcastExchange
-    // builds off a cold cache, the documented concurrent-broadcast
-    // block-lock race sharedCacheEager exists for; the count job is one
-    // pass over a |channels×weeks|-sized relation): norms joins back
-    // under two different renames
-    // (channel_a / channel_b), and the rename sits below each
-    // BroadcastExchange, so the canonical plans differ and exchange reuse
-    // never fires — without the cache the rollup was re-aggregated per
-    // side (2 Exchange + 2 HashAggregate in the plan where 1 suffices).
-    // The relation is |channels x weeks|, tiny at any corpus size.
-    val norms = w.groupBy("week", "channel")
-      .agg(sum(col("messages") * col("messages")).as("n2"))
-      .sharedCacheEager
-    dots
-      .join(norms.withColumnRenamed("channel", "channel_a").withColumnRenamed("n2", "n2_a"), Seq("week", "channel_a"))
-      .join(norms.withColumnRenamed("channel", "channel_b").withColumnRenamed("n2", "n2_b"), Seq("week", "channel_b"))
       .select(col("week"), col("channel_a"), col("channel_b"),
         fl(col("dot").cast("double") / (sqrt(col("n2_a").cast("double")) * sqrt(col("n2_b").cast("double"))), 6)
           .as("similarity"))
-  }
 
   val channelSimilaritySql: String =
     s"""WITH act AS ($userWeeklyActivitySql),
@@ -108,7 +115,7 @@ object Similarity {
     val dots = w.as("a").join(w.as("b"), col("a.user_id") === col("b.user_id"))
       .groupBy(col("a.channel").as("channel_a"), col("b.channel").as("channel_b"))
       .agg(sum(col("a.weight") * col("b.weight")).as("dot"))
-    // cached for the same two-rename reuse failure as channelSimilarityFrom
+    // cached so the two renamed norm joins below share one aggregate
     val norms = w.groupBy("channel").agg(sum(col("weight") * col("weight")).as("n2"))
       .sharedCacheEager
     val sims = dots
@@ -221,8 +228,9 @@ object Similarity {
       .join(weighted.as("b"), col("a.term") === col("b.term") && col("a.source") < col("b.source"))
       .groupBy(col("a.source").as("source_a"), col("b.source").as("source_b"))
       .agg(sum(col("a.wt") * col("b.wt")).as("dot"))
-    // cached for the same two-rename broadcast-reuse failure as
-    // channelSimilarityFrom (one row per source — tiny at any scale)
+    // cached so the two renamed norm joins below share one aggregate,
+    // whose renames would otherwise defeat exchange reuse (one row per
+    // source — tiny at any scale)
     val norms = weighted.groupBy("source").agg(sum(col("wt") * col("wt")).as("n2"))
       .sharedCacheEager
     dots

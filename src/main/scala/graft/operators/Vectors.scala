@@ -57,19 +57,27 @@ object Vectors {
       .orderBy(col("cosine").desc, col("vec_id").asc)
       .limit(k)
 
-  /** DuckDB twin of [[rankToQuery]] over a scan of `embeddings`; `where`
-    * adds conjuncts to the query-row exclusion.
+  /** DuckDB twin of [[rankToQuery]] over a scan of the valid vectors
+    * (`vsrc`, for the query row too); `where` adds conjuncts to the
+    * query-row exclusion.
     */
   private def scanTopKSql(qId: Long, k: Int, where: String = ""): String =
-    s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = $qId)
+    s"""WITH $vsrcCte,
+       | q AS (SELECT embedding AS qv FROM vsrc WHERE vec_id = $qId)
        | SELECT e.vec_id, e.label,
        |  ${flSql(cosToSql("e.embedding", "q.qv"), 6)} AS cosine
-       | FROM embeddings e CROSS JOIN q WHERE e.vec_id <> $qId$where
+       | FROM vsrc e CROSS JOIN q WHERE e.vec_id <> $qId$where
        | ORDER BY cosine DESC, e.vec_id ASC LIMIT $k""".stripMargin.replace("\n", "")
 
-  /** #43 brute-force cosine top-k against the vector of `qId`. */
-  def annTopK(embeddings: DataFrame, qId: Long = 0L, k: Int = 10): DataFrame =
-    rankToQuery(embeddings.filter(col("vec_id") =!= qId), embeddings, qId, k)
+  /** #43 brute-force cosine top-k against the vector of `qId`. Candidates
+    * and query row are the [[kmValid]] vectors: vec_dot would score a
+    * wrong-dimension vector over min(len) elements, where the oracle's
+    * cosine is NULL.
+    */
+  def annTopK(embeddings: DataFrame, qId: Long = 0L, k: Int = 10): DataFrame = {
+    val valid = embeddings.filter(kmValid)
+    rankToQuery(valid.filter(col("vec_id") =!= qId), valid, qId, k)
+  }
 
   def annTopKSql(qId: Long = 0L, k: Int = 10): String = scanTopKSql(qId, k)
 
@@ -79,10 +87,12 @@ object Vectors {
     * distance ranking, so the filter pushes down to the scan).
     */
   def searchHighlights(embeddings: DataFrame, qId: Long = 0L, k: Int = 10,
-                       labels: Seq[Int] = Seq(2, 5, 7)): DataFrame =
+                       labels: Seq[Int] = Seq(2, 5, 7)): DataFrame = {
+    val valid = embeddings.filter(kmValid)
     rankToQuery(
-      embeddings.filter(col("vec_id") =!= qId && col("label").isin(labels.map(Integer.valueOf): _*)),
-      embeddings, qId, k)
+      valid.filter(col("vec_id") =!= qId && col("label").isin(labels.map(Integer.valueOf): _*)),
+      valid, qId, k)
+  }
 
   def searchHighlightsSql(qId: Long = 0L, k: Int = 10, labels: Seq[Int] = Seq(2, 5, 7)): String =
     scanTopKSql(qId, k, s" AND e.label IN (${labels.mkString(", ")})")
@@ -185,8 +195,10 @@ object Vectors {
     * precomputed index relation; a query touches TABLES × 1 buckets =
     * ~TABLES/2^BITS of the corpus, and the probe side (TABLES rows) is
     * broadcast. No distance is computed outside the probed buckets.
+    * Only [[kmValid]] vectors are bucketed, scored or used as the query.
     */
   def annLsh(embeddings: DataFrame, qId: Long = 0L, k: Int = 10): DataFrame = {
+    val valid = embeddings.filter(kmValid)
     val vd = transform(col("embedding"), x => x.cast("double"))
     def bucket(t: Int): Column =
       (0 until LSH_BITS).map { j =>
@@ -194,7 +206,7 @@ object Vectors {
         when(graft.functions.VectorFunctions.vecDot(col("vdd"), plane) >= 0d,
           lit(1 << j)).otherwise(lit(0))
       }.reduce(_ + _)
-    val sig = embeddings
+    val sig = valid
       .select(col("vec_id"), col("label"), col("embedding"), vd.as("vdd"))
       .select(col("vec_id"), col("label"), col("embedding"),
         posexplode(array((0 until LSH_TABLES).map(bucket): _*)).as(Seq("t", "bucket")))
@@ -203,7 +215,7 @@ object Vectors {
       sig.filter(col("vec_id") =!= qId)
         .join(broadcast(qBuckets), Seq("t", "bucket"))
         .select("vec_id", "label", "embedding").distinct(),
-      embeddings, qId, k)
+      valid, qId, k)
   }
 
   def annLshSql(qId: Long = 0L, k: Int = 10): String = {
@@ -218,16 +230,17 @@ object Vectors {
         .mkString(" + ")
     val buckets = (0 until LSH_TABLES).map(bucketExpr).mkString("[", ", ", "]")
     val ts = (0 until LSH_TABLES).mkString("[", ", ", "]")
-    s"""WITH vd AS (
+    s"""WITH $vsrcCte,
+       | vd AS (
        |  SELECT vec_id, label, embedding,
        |   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
+       |  FROM vsrc),
        | sig AS (
        |  SELECT vec_id, label, embedding,
        |   unnest($ts) AS t, unnest($buckets) AS bucket
        |  FROM vd),
        | qb AS (SELECT t, bucket FROM sig WHERE vec_id = $qId),
-       | q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = $qId),
+       | q AS (SELECT embedding AS qv FROM vsrc WHERE vec_id = $qId),
        | cand AS (
        |  SELECT DISTINCT s.vec_id, s.label, s.embedding
        |  FROM sig s JOIN qb ON s.t = qb.t AND s.bucket = qb.bucket

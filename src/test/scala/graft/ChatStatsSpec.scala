@@ -38,11 +38,11 @@ class ChatStatsSpec extends SparkSpec {
     assert(offenders == 0, "HLL estimate drifted beyond 5% relative error")
   }
 
-  test("leaderboard: salted two-phase top-k equals an independent in-memory model") {
+  test("leaderboard: windowed top-k equals an independent in-memory model") {
     val lb = ChatStats.leaderboard(events, k = 5)
     // independent model: plain Scala sort/take over the collected rollup —
-    // range checks alone would pass a broken salt phase that surfaces the
-    // WRONG users (any 5 rows with positions 1..5 look plausible)
+    // range checks alone would pass a broken partial limit that surfaces
+    // the WRONG users (any 5 rows with positions 1..5 look plausible)
     val act = EventSemantics.userWeeklyActivity(events)
       .select(col("user_id").cast("long"), col("channel"),
         col("week").cast("string"), col("messages").cast("long"))

@@ -394,6 +394,29 @@ class DedupVectorsSpec extends SparkSpec {
     assert(ivf(emb.unionByName(bad)) == valid)
   }
 
+  test("ann: brute force, filtered search and lsh over a corpus with wrong-dimension vectors equal their valid rows") {
+    // the same 63- and 65-element copies of the query vector: vec_dot
+    // scores mismatched lengths over min(len) elements, so unfiltered they
+    // top each ranking, while the oracles give them a NULL cosine
+    val q = emb.filter(col("vec_id") === 0L).head()
+    val (label, qv) = (q.getAs[Int]("label"), q.getSeq[Float](q.fieldIndex("embedding")).toSeq)
+    val maxId = emb.agg(max("vec_id")).head().getLong(0)
+    val bad = spark.createDataFrame(java.util.List.of(
+      org.apache.spark.sql.Row(maxId + 1, label, qv.take(63)),
+      org.apache.spark.sql.Row(maxId + 2, label, qv :+ 1.0f)),
+      org.apache.spark.sql.types.StructType(Seq("vec_id", "label", "embedding").map(emb.schema(_))))
+    val paths = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "annTopK" -> (Vectors.annTopK(_, k = 5)),
+      "searchHighlights" -> (Vectors.searchHighlights(_, k = 5, labels = Seq(label))),
+      "annLsh" -> (Vectors.annLsh(_, k = 5)))
+    val changed = paths.filter { case (name, run) =>
+      val valid = run(emb).collect().toSeq
+      assert(valid.nonEmpty, name)
+      run(emb.unionByName(bad)).collect().toSeq != valid
+    }.map(_._1)
+    assert(changed.isEmpty, s"wrong-dimension vectors changed the output of ${changed.mkString(", ")}")
+  }
+
   test("semDedup: clusters close the near-dup graph, exactly one survivor each") {
     val pairs = Dedup.embedNearDup(emb).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq

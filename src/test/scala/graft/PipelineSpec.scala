@@ -352,10 +352,21 @@ class PipelineSpec extends SparkSpec {
       assert(rows.map(_._3).sorted.toSeq == (1L to rows.length).toSeq,
         s"ranks in $lang must be contiguous from 1")
     }
-    // salted two-phase output equals the single-window formulation
-    val expected = Pipeline.sampleStratified(docs, quota, saltBuckets = 1).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(res.toSet == expected, "salting must not change the selected sample")
+    // independent model: per lang, sort by (md5-derived hash, doc_id) in
+    // Scala and keep the first quota — the partial window limit below the
+    // exchange must not change the selected sample
+    def h(id: Long): Long = {
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(id.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      java.lang.Long.parseLong(hex.substring(0, 15), 16)
+    }
+    val expected = docs.select("lang", "doc_id").collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+      .groupBy(_._1).toSeq.flatMap { case (lang, xs) =>
+        xs.map(_._2).sortBy(id => (h(id), id)).take(quota).zipWithIndex
+          .map { case (id, i) => (lang, id, (i + 1).toLong) }
+      }.toSet
+    assert(res.toSet == expected, "the sample must be the quota smallest hashes per lang")
   }
 
   test("mixSample: deterministic, near-target total, up-weighted sources oversampled") {

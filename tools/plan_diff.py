@@ -10,9 +10,16 @@ variable's name carries a JVM-wide counter (`lambda x_17`) that moves
 with every lambda built earlier in the process, so all three are
 normalized before comparing, as is the directory a catalog table's
 files sit under (`spark-warehouse` is relative to each checkout's
-working directory). Prints `<key>: same` or a unified diff of
-the normalized plans per key, and exits 1 if any key differs or is
-present in only one dump. This is the plan-identity check for refactors:
+working directory). So are the other names a JVM or an adaptive run
+hands out in its own order: object identity hashes (`[D@4a0d4096`,
+`UnsafeArrayData@9a6059cd`), lambda class names
+(`$$Lambda$5707/0x00007f918564b288`), common-subexpression aliases
+(`_common_expr_3`), broadcast variable ids (`Broadcast(280)`, a
+SparkContext-wide counter that moves with every broadcast made before),
+and the numbers of AQE query stages and codegen stages, which follow the
+order in which stages are created and finish. Prints `<key>: same` or a
+unified diff of the normalized plans per key, and exits 1 if any key
+differs or is present in only one dump. This is the plan-identity check for refactors:
 run Explain on the parent commit and on the change, then diff.
 """
 import difflib
@@ -24,6 +31,12 @@ EXPR_ID = re.compile(r"#\d+L?")
 PLAN_ID = re.compile(r"plan_id=\d+")
 LAMBDA = re.compile(r"(lambda \w+?)_\d+")
 WAREHOUSE = re.compile(r"file:\S*?/spark-warehouse/")
+IDENTITY = re.compile(r"@[0-9a-f]{4,}\b")
+LAMBDA_CLASS = re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+")
+COMMON_EXPR = re.compile(r"_common_expr_\d+")
+STAGE = re.compile(r"(QueryStage) \d+")
+CODEGEN = re.compile(r"\*\(\d+\)")
+BROADCAST_ID = re.compile(r"Broadcast\(\d+\)")
 # sbt prefixes forked-process output and appends its own status lines;
 # Spark's log4j lines (stderr) can interleave with a printed plan
 SBT_PREFIX = re.compile(r"^\[(info|error|warn|success)\] ?")
@@ -32,7 +45,10 @@ LOG_LINE = re.compile(r"^\d\d/\d\d/\d\d \d\d:\d\d:\d\d [A-Z]+ ")
 
 def normalize(line):
     for pattern, repl in ((EXPR_ID, "#N"), (PLAN_ID, "plan_id=N"),
-                          (LAMBDA, r"\1_N"), (WAREHOUSE, "file:<cwd>/spark-warehouse/")):
+                          (LAMBDA, r"\1_N"), (WAREHOUSE, "file:<cwd>/spark-warehouse/"),
+                          (IDENTITY, "@N"), (LAMBDA_CLASS, "$Lambda$N"),
+                          (COMMON_EXPR, "_common_expr_N"), (STAGE, r"\1 N"),
+                          (CODEGEN, "*(N)"), (BROADCAST_ID, "Broadcast(N)")):
         line = pattern.sub(repl, line)
     return line
 
