@@ -226,41 +226,46 @@ object ChatStats {
 
   /** get_common_users / get_common_users_matrix (api.py:1438/1521):
     * directional common-user percentages for every channel pair per week.
-    * Distinct (user, channel, week) first; the self-join runs on that
-    * deduped relation keyed by (user, week).
     */
   def commonUsersMatrix(events: DataFrame): DataFrame =
-    // consumed three times (both self-join sides + channel sizes) with
-    // different downstream pruning/partitioning, so Catalyst cannot reuse
-    // one exchange for all of them; materialize the MV-shaped rollup once
-    // (see attrition for the full rationale)
-    commonUsersMatrixFrom(
-      userWeeklyActivity(events)
-        .select("user_id", "channel", "week")
-        .sharedCache)
+    commonUsersMatrixFrom(userWeeklyActivity(events).select("user_id", "channel", "week"))
 
   /** Matrix from an already-materialized (user_id, channel, week) rollup —
     * the deploy seam for a warehouse that maintains the reference's MV as
-    * a table: bucketed by user_id (Layout.writeBucketed), the self-join
-    * runs with ZERO exchanges (bucket partitioning on a subset of the join
-    * keys co-partitions both sides; LayoutSpec pins this).
+    * a table: bucketed by user_id (Layout.writeBucketed), the (user, week)
+    * aggregate below runs with ZERO exchanges (bucket partitioning on a
+    * subset of its keys satisfies it; LayoutSpec pins this).
+    *
+    * No self-join: each (user, week) lists its distinct channels (at most
+    * |channels|) and emits every ordered pair of them, counted per (week,
+    * channel_a, channel_b). The diagonal (week, c, c) counts cell c's
+    * rows, its size, which a window over (week, channel_a) reads off the
+    * counted block (at most |channels| rows a partition). A struct keeps a
+    * NULL channel in the list. As in the oracle: a NULL user emits only
+    * its diagonal, so it counts in the size and never in `common_users`; a
+    * NULL channel has no diagonal, so it drops as channel_a (no size) and
+    * stays as channel_b; a NULL week pairs nothing.
+    *
+    * Against the cached rollup it replaces (`graft.Bench`, 4 vCPU, median
+    * of 3, SoakGen x30 of sf0.1): 6.0 s against 6.2 (members 9.1 against
+    * 9.9) with the rollup over the broadcast threshold, as at any real
+    * scale (1 MB here); under the default 50 MB, which broadcasts the
+    * cached rollup into its self-join, 6.9 against 5.9 (wall slope over
+    * x1/x10/x30 0.55 against 0.50; members 10.2 against 10.8).
     */
-  def commonUsersMatrixFrom(ucw: DataFrame): DataFrame = {
-    val a = ucw.as("a")
-    val b = ucw.as("b")
-    val pairCounts = a
-      .join(b, col("a.user_id") === col("b.user_id") && col("a.week") === col("b.week"))
-      .groupBy(col("a.week").as("week"), col("a.channel").as("channel_a"), col("b.channel").as("channel_b"))
-      .agg(count(lit(1)).as("common_users"))
-    val sizes = ucw.groupBy("week", "channel").agg(count(lit(1)).as("total_users"))
-    pairCounts
-      .join(
-        sizes.withColumnRenamed("channel", "channel_a").withColumnRenamed("total_users", "size_a"),
-        Seq("week", "channel_a")
-      )
-      .withColumn("pct_a_to_b", fl(col("common_users").cast("double") * 100d / col("size_a").cast("double"), 4))
-      .select("week", "channel_a", "channel_b", "common_users", "pct_a_to_b")
-  }
+  def commonUsersMatrixFrom(ucw: DataFrame): DataFrame =
+    ucw.filter(col("week").isNotNull)
+      .groupBy("user_id", "week").agg(collect_list(struct(col("channel"))).as("cs"))
+      .select(col("user_id"), col("week"), explode(col("cs")).as("a"), col("cs"))
+      .select(col("user_id"), col("week"), col("a.channel").as("channel_a"), explode(col("cs")).as("b"))
+      .filter(col("user_id").isNotNull || col("channel_a") <=> col("b.channel"))
+      .groupBy(col("week"), col("channel_a"), col("b.channel").as("channel_b"))
+      .agg(count(when(col("user_id").isNotNull, 1)).as("common_users"), count(lit(1)).as("n"))
+      .withColumn("size_a", max(when(col("channel_a") === col("channel_b"), col("n")))
+        .over(Window.partitionBy("week", "channel_a")))
+      .filter(col("common_users") > 0 && col("size_a").isNotNull)
+      .select(col("week"), col("channel_a"), col("channel_b"), col("common_users"),
+        fl(col("common_users").cast("double") * 100d / col("size_a").cast("double"), 4).as("pct_a_to_b"))
 
   /** Sketch twin of [[commonUsersMatrixFrom]] for the 100 TB interactive
     * path: per (channel, week) a DataSketches HLL sketch of the user set —
@@ -378,28 +383,16 @@ object ChatStats {
        | FROM c""".stripMargin.replace("\n", "")
 
   /** get_common_members (api.py:1618): matrix restricted to members
-    * (weekly max rank >= 0).
+    * (weekly max rank >= 0), by [[commonUsersMatrixFrom]].
     */
   def commonMembersMatrix(events: DataFrame): DataFrame = {
-    val ud = userData(events)
+    val members = userData(events)
       .withColumn("week", to_date(date_trunc("week", col("day"))))
       .groupBy("user_id", "channel", "week")
       .agg(max("membership_rank").as("rank"))
       .filter(col("rank") >= 0)
       .select("user_id", "channel", "week")
-      .sharedCache
-    val pairCounts = ud.as("a")
-      .join(ud.as("b"), col("a.user_id") === col("b.user_id") && col("a.week") === col("b.week"))
-      .groupBy(col("a.week").as("week"), col("a.channel").as("channel_a"), col("b.channel").as("channel_b"))
-      .agg(count(lit(1)).as("common_members"))
-    val sizes = ud.groupBy("week", "channel").agg(count(lit(1)).as("total_members"))
-    pairCounts
-      .join(
-        sizes.withColumnRenamed("channel", "channel_a").withColumnRenamed("total_members", "size_a"),
-        Seq("week", "channel_a")
-      )
-      .withColumn("pct_a_to_b", fl(col("common_members").cast("double") * 100d / col("size_a").cast("double"), 4))
-      .select("week", "channel_a", "channel_b", "common_members", "pct_a_to_b")
+    commonUsersMatrixFrom(members).withColumnRenamed("common_users", "common_members")
   }
 
   val commonMembersMatrixSql: String =
@@ -455,30 +448,33 @@ object ChatStats {
     * gained/lost vs previous week per channel.
     */
   def userChanges(events: DataFrame, threshold: Int = 5): DataFrame = {
-    // Presence set-difference WITHOUT anti-joins: tag current/shifted-prev
-    // presence rows, collapse per (user, channel, week), then count the
-    // cur-only and prev-only users per (channel, week). Two keyed shuffles
-    // with map-side partial aggregation — the anti-join formulation either
+    // Presence set-difference WITHOUT anti-joins: one explode tags each
+    // qualified row as current presence and as the next week's previous
+    // presence, collapse per (user, channel, week), then count the cur-only
+    // and prev-only users per (channel, week). Two keyed shuffles with
+    // map-side partial aggregation — the anti-join formulation either
     // broadcasts a user-cardinality relation (unscalable) or shuffles
     // three times and full-outer-merges with a sort.
-    val qualified = userWeeklyActivity(events)
+    val tagged = userWeeklyActivity(events)
       .filter(col("messages") >= threshold)
-      .select("user_id", "channel", "week")
-      .sharedCache
-    val tagged = qualified
-      .select(col("user_id"), col("channel"), col("week"), lit(1).as("c"), lit(0).as("p"))
-      .unionByName(qualified
-        .select(col("user_id"), col("channel"), date_add(col("week"), 7).as("week"),
-          lit(0).as("c"), lit(1).as("p")))
+      .select(col("user_id"), col("channel"), explode(array(
+        struct(col("week").as("week"), lit(1).as("c"), lit(0).as("p")),
+        struct(date_add(col("week"), 7).as("week"), lit(0).as("c"), lit(1).as("p")))).as("t"))
     tagged
-      .groupBy("user_id", "channel", "week")
-      .agg(max("c").as("c"), max("p").as("p"))
-      .groupBy("channel", "week")
+      // the oracle's NOT EXISTS never matches a NULL user, channel or week,
+      // so such a row's current and previous-week tags stay apart: it is
+      // gained and lost; and its FULL OUTER JOIN never matches a NULL
+      // channel or week, so their gained and lost counts stay apart too
+      .groupBy(col("user_id"), col("channel"), col("t.week").as("week"),
+        when(col("user_id").isNull || col("channel").isNull || col("t.week").isNull, col("t.c")).as("side"))
+      .agg(max("t.c").as("c"), max("t.p").as("p"))
+      .groupBy(col("channel"), col("week"), when(col("channel").isNull || col("week").isNull, col("c")).as("side"))
       .agg(
         count(when(col("c") === 1 && col("p") === 0, 1)).as("users_gained"),
         count(when(col("p") === 1 && col("c") === 0, 1)).as("users_lost"))
       .filter(col("users_gained") > 0 || col("users_lost") > 0)
-      .withColumn("net_change", col("users_gained") - col("users_lost"))
+      .select(col("channel"), col("week"), col("users_gained"), col("users_lost"),
+        (col("users_gained") - col("users_lost")).as("net_change"))
   }
 
   def userChangesSql(threshold: Int = 5): String =
@@ -504,17 +500,21 @@ object ChatStats {
        |  ON g.channel = l.channel AND g.week = l.week""".stripMargin.replace("\n", "")
 
   /** get_exclusive_chat_users (api.py:2176): % of a channel's weekly users
-    * active in no other channel that week. Computed from the per-user
-    * channel count — one aggregation, no N anti-joins.
+    * active in no other channel that week. Each (user, channel, week) row
+    * carries the user's channel count that week as a `count` window over
+    * (user_id, week) — one aggregation, no N anti-joins, no span join. A
+    * window partition is one user's channels in one week, at most
+    * |channels| rows. Within run noise of the cached span join it
+    * replaced (x30 4.7 s against 4.6 and 5.5 against 5.1 in two rounds;
+    * wall slope over sf0.1 x1/x10/x30 0.68 against 0.65), as a collected
+    * channel list per (user, week) is too (5.3 against 4.9).
     */
-  def exclusiveUsers(events: DataFrame): DataFrame = {
-    val ucw = userWeeklyActivity(events).select("user_id", "channel", "week")
-      .sharedCache
-    val span = ucw
-      .groupBy("user_id", "week")
-      .agg(count(lit(1)).as("n_channels"))
-    ucw
-      .join(span, Seq("user_id", "week"))
+  def exclusiveUsers(events: DataFrame): DataFrame =
+    userWeeklyActivity(events)
+      // the oracle's span join drops a NULL user's or week's rows; a window
+      // would keep them (and the filter reaches the scan)
+      .filter(col("user_id").isNotNull && col("week").isNotNull)
+      .withColumn("n_channels", count(lit(1)).over(Window.partitionBy("user_id", "week")))
       .groupBy("channel", "week")
       .agg(
         count(lit(1)).as("total_users"),
@@ -522,7 +522,6 @@ object ChatStats {
       )
       .withColumn("exclusive_percent",
         fl(col("exclusive_users").cast("double") * 100d / col("total_users").cast("double"), 4))
-  }
 
   val exclusiveUsersSql: String =
     s"""WITH act AS ($userWeeklyActivitySql),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 import graft.Caches.SharedCacheOps
 
@@ -13,8 +13,11 @@ import EventSemantics.{fl, flSql, userWeeklyActivitySql}
   * The reference pivots user×channel message counts into an in-memory
   * matrix and calls sklearn cosine_similarity; here the same math is a
   * self-join on the *rolled-up* (user, channel) relation with exact BIGINT
-  * dot products — |users|×|channels| rows, never raw messages — and the
-  * per-channel norms are a tiny aggregate joined back (broadcast at scale).
+  * dot products — |users|×|channels| rows, never raw messages. No norms
+  * relation is cached or joined back: the weekly similarity carries each
+  * channel's norm on its rows into the join (a window sum from events, one
+  * broadcast attach on the table seam), and recommendations and content
+  * similarity read the norms off the diagonal of their Gram block.
   *
   * Determinism: dot products and norms are exact integer sums; the only
   * doubles are the final sqrt/divide, identical IEEE ops in both engines.
@@ -100,29 +103,31 @@ object Similarity {
   def recommend(events: DataFrame, userId: Long = 3L, exclThreshold: Long = 3L, k: Int = 10): DataFrame =
     recommendFrom(
       EventSemantics.userWeeklyActivity(events)
-        .groupBy("user_id", "channel").agg(sum("messages").as("weight"))
-        .sharedCache,
+        .groupBy("user_id", "channel").agg(sum("messages").as("weight")),
       userId, exclThreshold, k)
 
   /** Recommendations from an already-materialized full-period weight
     * rollup `w` (user_id, channel, weight) — the deploy seam for a
     * warehouse that maintains this table (derivable from the weekly MV by
     * one aggregation, so `incrementRollup` keeps it one step away).
-    * Consumed five times (both dot sides, norms, the user's channels
-    * twice), hence the persist in [[recommend]].
+    *
+    * The dot products are a Gram block over all channel pairs, whose
+    * diagonal holds the norms ([[gramCosines]]): `w` is computed once and
+    * both join sides reuse its exchange, with no norms aggregate, cache or
+    * join. The join is null-safe on user_id, so a NULL user pairs only
+    * with its own rows: it adds to `g`, whose diagonal is the norms the
+    * oracle counts it in, and never to `dot`. At SoakGen x30 of sf0.1
+    * (`graft.Bench`, 4 vCPU, median of 3) it runs 5.6 s and 4.5 CPU-s
+    * against 6.1 and 4.7 for the cached rollup it replaced (wall slope
+    * over x1/x10/x30 0.42 against 0.43). A norm window over `channel`
+    * (at most |channels| tasks for the whole rollup) lost: 5.2 CPU-s
+    * against 3.8 in its own round.
     */
   def recommendFrom(w: DataFrame, userId: Long = 3L, exclThreshold: Long = 3L, k: Int = 10): DataFrame = {
-    val dots = w.as("a").join(w.as("b"), col("a.user_id") === col("b.user_id"))
+    val sims = gramCosines(w.as("a").join(w.as("b"), col("a.user_id") <=> col("b.user_id"))
       .groupBy(col("a.channel").as("channel_a"), col("b.channel").as("channel_b"))
-      .agg(sum(col("a.weight") * col("b.weight")).as("dot"))
-    // cached so the two renamed norm joins below share one aggregate
-    val norms = w.groupBy("channel").agg(sum(col("weight") * col("weight")).as("n2"))
-      .sharedCacheEager
-    val sims = dots
-      .join(norms.withColumnRenamed("channel", "channel_a").withColumnRenamed("n2", "n2_a"), "channel_a")
-      .join(norms.withColumnRenamed("channel", "channel_b").withColumnRenamed("n2", "n2_b"), "channel_b")
-      .select(col("channel_a"), col("channel_b"),
-        (col("dot").cast("double") / (sqrt(col("n2_a").cast("double")) * sqrt(col("n2_b").cast("double")))).as("sim"))
+      .agg(sum(when(col("a.user_id").isNotNull, col("a.weight") * col("b.weight"))).as("dot"),
+        sum(col("a.weight") * col("b.weight")).as("g")), "channel_a", "channel_b", "g")
     // The requesting user's channel vector is bounded by |channels| (the
     // reference fetches it as one row set per request, api.py:930) — ONE
     // capped driver collect, then plain literal predicates. The broadcast
@@ -147,6 +152,20 @@ object Similarity {
         .select(col("channel_a").as("channel_name"),
           fl(log(lit(1d) + col("raw_score") / lit(nUc).cast("double") * 100d) / log(lit(101d)) * 100d, 4)
             .as("score"))
+  }
+
+  /** Cosines `sim` from a Gram block: `dot` rows keyed by (`a`, `b`) that
+    * hold each key's diagonal (k, k), whose `g` is that key's squared
+    * norm. A window over each key reads its norm off the diagonal (a
+    * partition is one key's row of the block, at most |keys| rows), so the
+    * norms need no aggregate, cache or join of their own. A NULL key has no
+    * diagonal and a NULL `dot` pairs no rows: both give a NULL cosine,
+    * which is dropped, as the oracles' norm joins drop them.
+    */
+  private def gramCosines(gram: DataFrame, a: String, b: String, g: String = "dot"): DataFrame = {
+    def norm(k: String) = sqrt(max(when(col(a) === col(b), col(g))).over(Window.partitionBy(k)).cast("double"))
+    gram.select(col(a), col(b), (col("dot").cast("double") / (norm(a) * norm(b))).as("sim"))
+      .filter(col("sim").isNotNull)
   }
 
   def recommendSql(userId: Long = 3L, exclThreshold: Long = 3L, k: Int = 10): String =
@@ -193,16 +212,15 @@ object Similarity {
       // the vocabulary (two blank docs would score similarity 1.0) and
       // diverges from the oracle; same guard as every other tokenizer here
       .filter(length(col("term")) > 0)
-    // ONE corpus scan: tf's partial agg absorbs the exploded token stream
-    // map-side, then the pinned term-partitioned aggregate feeds every
-    // term-keyed consumer — df_, the idf join, the pairwise self-join —
-    // with zero further exchanges (HashPartitioning(term) satisfies each
-    // of their distributions). Without the cache, Catalyst duplicates the
-    // scan+aggregate subtree under each consumer.
+    // ONE corpus scan, no cache: tf's partial agg absorbs the exploded
+    // token stream map-side, and the term-partitioned aggregate carries
+    // its term's document frequency as a `count` window over `term` —
+    // the repartition already satisfies the window's distribution, so df
+    // costs no exchange and no join. A window partition is one term's
+    // sources, at most |sources| rows (`maxDf` caps it for stopwords).
     val tf = terms.groupBy("source", "term").agg(count(lit(1)).as("tf"))
       .repartition(col("term"))
-      .sharedCache
-    val df_ = tf.groupBy("term").agg(count(lit(1)).as("df"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
     // the corpus-size idf scalar: counted over raw documents, not the
     // tokenized aggregate — sklearn (the reference's vectorizer) counts
     // every fitted sample in n, including sources whose whole text is
@@ -211,33 +229,24 @@ object Similarity {
     // (not an eager collect) so the column-pruned source scan runs once
     // inside the query, not once per plan build.
     val n = documents.select(countDistinct("source").as("n_src"))
-    // weighted IS cached: its three consumers (both dot-product sides
-    // and the norms) would otherwise each re-run the idf join AND the
-    // n_src scan hanging under it
-    val weighted = tf.join(df_, "term")
+    val weighted = tf
       .filter(maxDf.map(c => col("df") <= c).getOrElse(lit(true)))
       .crossJoin(broadcast(n))
       .select(col("source"), col("term"),
         (col("tf").cast("double") *
           (log((lit(1d) + col("n_src").cast("double")) / (lit(1d) + col("df").cast("double"))) + lit(1d)))
           .as("wt"))
-      // sharedCache, not bare cache(): Caches.release() must be able to
-      // free these corpus-scale relations between queries in a long session
-      .sharedCache
-    val dots = weighted.as("a")
-      .join(weighted.as("b"), col("a.term") === col("b.term") && col("a.source") < col("b.source"))
+    // a Gram block ([[gramCosines]]): `<=` keeps each source's diagonal,
+    // its n2, in the term-keyed self-join, whose sides keep tf's term
+    // partitioning. SoakGen x30 of sf0.1: 3.8 s against 5.2 for the
+    // cached norms it replaced (graft.Bench, 4 vCPU, median of 3; wall
+    // slope 0.43 on both)
+    gramCosines(weighted.as("a")
+      .join(weighted.as("b"), col("a.term") === col("b.term") && col("a.source") <= col("b.source"))
       .groupBy(col("a.source").as("source_a"), col("b.source").as("source_b"))
-      .agg(sum(col("a.wt") * col("b.wt")).as("dot"))
-    // cached so the two renamed norm joins below share one aggregate,
-    // whose renames would otherwise defeat exchange reuse (one row per
-    // source — tiny at any scale)
-    val norms = weighted.groupBy("source").agg(sum(col("wt") * col("wt")).as("n2"))
-      .sharedCacheEager
-    dots
-      .join(norms.withColumnRenamed("source", "source_a").withColumnRenamed("n2", "n2_a"), "source_a")
-      .join(norms.withColumnRenamed("source", "source_b").withColumnRenamed("n2", "n2_b"), "source_b")
-      .select(col("source_a"), col("source_b"),
-        fl(col("dot") / (sqrt(col("n2_a")) * sqrt(col("n2_b"))), 4).as("similarity"))
+      .agg(sum(col("a.wt") * col("b.wt")).as("dot")), "source_a", "source_b")
+      .filter(col("source_a") < col("source_b"))
+      .select(col("source_a"), col("source_b"), fl(col("sim"), 4).as("similarity"))
   }
 
   val contentSimilaritySql: String =
@@ -295,24 +304,7 @@ object Similarity {
     nodes.map(n => (n, find(n)))
   }
 
-  def clusteringCommunities(events: DataFrame): DataFrame = {
-    // one materialized rollup feeds the similarity edges AND the node list
-    val w = EventSemantics.userWeeklyActivity(events)
-      .select(col("user_id"), col("channel"), col("week"), col("messages"))
-      .sharedCache
-    val edges = channelSimilarityFrom(w)
-      .withColumn("thr", expr("percentile(similarity, 0.5)").over(Window.partitionBy("week")))
-      .filter(col("similarity") > col("thr"))
-      .select(col("week"), col("channel_a"), col("channel_b"))
-    val nodesW = w
-      .select("week", "channel").distinct()
-      .groupBy("week").agg(sort_array(collect_list("channel")).as("ns"))
-    val edgesW = edges.groupBy("week")
-      .agg(collect_list(struct(col("channel_a"), col("channel_b"))).as("es"))
-    nodesW.join(broadcast(edgesW), Seq("week"), "left")
-      .select(col("week"), explode(componentsUdf(col("ns"), col("es"))).as("nc"))
-      .select(col("week"), col("nc._1").as("channel"), col("nc._2").as("community"))
-  }
+  def clusteringCommunities(events: DataFrame): DataFrame = communities(events, componentsUdf)
 
   /** #34 community detection, Leiden partition semantics (api.py:478 runs
     * `leidenalg.find_partition`): same per-week thresholded similarity
@@ -333,21 +325,28 @@ object Similarity {
     Leiden.cluster(nodes, es).toSeq
   }
 
-  def leidenCommunities(events: DataFrame): DataFrame = {
+  def leidenCommunities(events: DataFrame): DataFrame = communities(events, leidenUdf)
+
+  /** The per-week community pipeline under both solvers: edges above the
+    * week's median similarity, as (channel_a, channel_b, similarity)
+    * structs ([[componentsUdf]] reads the first two fields), and every
+    * (week, channel) as a node. One materialized rollup feeds the
+    * similarity edges AND the node list.
+    */
+  private def communities(events: DataFrame, solve: UserDefinedFunction): DataFrame = {
     val w = EventSemantics.userWeeklyActivity(events)
       .select(col("user_id"), col("channel"), col("week"), col("messages"))
       .sharedCache
     val edges = channelSimilarityFrom(w)
       .withColumn("thr", expr("percentile(similarity, 0.5)").over(Window.partitionBy("week")))
       .filter(col("similarity") > col("thr"))
-      .select(col("week"), col("channel_a"), col("channel_b"), col("similarity"))
     val nodesW = w
       .select("week", "channel").distinct()
       .groupBy("week").agg(sort_array(collect_list("channel")).as("ns"))
     val edgesW = edges.groupBy("week")
       .agg(collect_list(struct(col("channel_a"), col("channel_b"), col("similarity"))).as("es"))
     nodesW.join(broadcast(edgesW), Seq("week"), "left")
-      .select(col("week"), explode(leidenUdf(col("ns"), col("es"))).as("nc"))
+      .select(col("week"), explode(solve(col("ns"), col("es"))).as("nc"))
       .select(col("week"), col("nc._1").as("channel"), col("nc._2").as("community"))
   }
 

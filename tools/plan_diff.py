@@ -8,10 +8,11 @@ outside a section are ignored). Expression ids (`#123`, `#123L`) and
 `plan_id=123` differ between runs of the same plan, and a lambda
 variable's name carries a JVM-wide counter (`lambda x_17`) that moves
 with every lambda built earlier in the process, so all three are
-normalized before comparing, as is the directory a catalog table's
+normalized before comparing, as are the directory a catalog table's
 files sit under (`spark-warehouse` is relative to each checkout's
-working directory). So are the other names a JVM or an adaptive run
-hands out in its own order: object identity hashes (`[D@4a0d4096`,
+working directory) and the suffix of a process's private fixture copy
+(`graft_chatlog_fixture.jvm-<pid>-<uuid>`, named per JVM). So are the
+other names a JVM or an adaptive run hands out in its own order: object identity hashes (`[D@4a0d4096`,
 `UnsafeArrayData@9a6059cd`), lambda class names
 (`$$Lambda$5707/0x00007f918564b288`), common-subexpression aliases
 (`_common_expr_3`), broadcast variable ids (`Broadcast(280)`, a
@@ -31,6 +32,7 @@ EXPR_ID = re.compile(r"#\d+L?")
 PLAN_ID = re.compile(r"plan_id=\d+")
 LAMBDA = re.compile(r"(lambda \w+?)_\d+")
 WAREHOUSE = re.compile(r"file:\S*?/spark-warehouse/")
+PRIVATE_COPY = re.compile(r"\.jvm-\d+-[0-9a-f]+")
 IDENTITY = re.compile(r"@[0-9a-f]{4,}\b")
 LAMBDA_CLASS = re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+")
 COMMON_EXPR = re.compile(r"_common_expr_\d+")
@@ -46,6 +48,7 @@ LOG_LINE = re.compile(r"^\d\d/\d\d/\d\d \d\d:\d\d:\d\d [A-Z]+ ")
 def normalize(line):
     for pattern, repl in ((EXPR_ID, "#N"), (PLAN_ID, "plan_id=N"),
                           (LAMBDA, r"\1_N"), (WAREHOUSE, "file:<cwd>/spark-warehouse/"),
+                          (PRIVATE_COPY, ".jvm-N"),
                           (IDENTITY, "@N"), (LAMBDA_CLASS, "$Lambda$N"),
                           (COMMON_EXPR, "_common_expr_N"), (STAGE, r"\1 N"),
                           (CODEGEN, "*(N)"), (BROADCAST_ID, "Broadcast(N)")):

@@ -35,11 +35,14 @@ def run(cmd, env=None, log=None):
 
 
 def bench(sf_dir, tag, only=None):
+    """Run graft.Bench over `sf_dir` into its own output directory
+    (target/soak/bench_<tag>) and return the detail record it wrote."""
     env = {"SPARK_GRAFT_SF_DIR": sf_dir}
     if only:
         env["SPARK_GRAFT_ONLY"] = only
-    run(["sbt", "-batch", "runMain graft.Bench"], env=env, log=f"/tmp/slopes_bench_{tag}.log")
-    with open(os.path.join(REPO, "bench_detail.json")) as f:
+    out = os.path.join(REPO, "target", "soak", f"bench_{tag}")
+    run(["sbt", "-batch", f"runMain graft.Bench {out}"], env=env, log=f"/tmp/slopes_bench_{tag}.log")
+    with open(os.path.join(out, "bench_detail.json")) as f:
         d = json.load(f)
     if d.get("failed"):
         sys.exit(f"[slopes] bench at {sf_dir} had failures: {d['failed']}")

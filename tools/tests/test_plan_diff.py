@@ -20,6 +20,8 @@ RUN_A = """[info] ===== q_x =====
 [info]             +- Generate explode(org.apache.spark.sql.catalyst.expressions.UnsafeArrayData@9a6059cd)
 [info] ===== q_y =====
 [info] Project [a#1]
+[info] ===== src_z =====
+[info] +- FileScan json [user_id#3] Location: InMemoryFileIndex(1 paths)[file:/tmp/graft_chatlog_fixture.jvm-25376-150988cb/chat_logs], PartitionFilters: []
 """
 
 # the same plans from another process: every run-specific name moved
@@ -33,6 +35,8 @@ RUN_B = """[info] ===== q_x =====
 [info]             +- Generate explode(org.apache.spark.sql.catalyst.expressions.UnsafeArrayData@1c2b3a4d)
 [info] ===== q_y =====
 [info] Project [a#7]
+[info] ===== src_z =====
+[info] +- FileScan json [user_id#9] Location: InMemoryFileIndex(1 paths)[file:/tmp/graft_chatlog_fixture.jvm-31002-0d4e9a17/chat_logs], PartitionFilters: []
 """
 
 
@@ -45,7 +49,7 @@ def write(tmp_path, name, text):
 def test_run_specific_names_are_normalized(tmp_path, capsys):
     a, b = write(tmp_path, "a.log", RUN_A), write(tmp_path, "b.log", RUN_B)
     assert plan_diff.main(["plan_diff.py", a, b]) == 0
-    assert capsys.readouterr().out.splitlines() == ["q_x: same", "q_y: same"]
+    assert capsys.readouterr().out.splitlines() == ["q_x: same", "q_y: same", "src_z: same"]
 
 
 def test_a_changed_operator_differs(tmp_path, capsys):
@@ -54,3 +58,11 @@ def test_a_changed_operator_differs(tmp_path, capsys):
     assert plan_diff.main(["plan_diff.py", a, b]) == 1
     out = capsys.readouterr().out.splitlines()
     assert "q_x: same" in out and "q_y: differs" in out
+
+
+def test_a_different_fixture_directory_differs(tmp_path, capsys):
+    # only the per-JVM suffix is normalized, not the fixture it names
+    moved = RUN_B.replace("graft_chatlog_fixture.jvm-31002-0d4e9a17", "other_fixture.jvm-31002-0d4e9a17")
+    a, b = write(tmp_path, "a.log", RUN_A), write(tmp_path, "b.log", moved)
+    assert plan_diff.main(["plan_diff.py", a, b]) == 1
+    assert "src_z: differs" in capsys.readouterr().out.splitlines()
