@@ -17,25 +17,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object Caches {
   private val tracked = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  private val eagerDone = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, java.lang.Boolean]())
-
-  /** Run a cached relation's materialize-before-fanout barrier (one count
-    * job) at most ONCE per [[release]] cycle. Composed queries construct
-    * the same cached relation several times (the incremental dedup gates
-    * build `shingleArrays(old)` through two entry points); Spark's
-    * CacheManager dedupes the STORAGE by canonical plan, but each
-    * construction used to re-run its eager count — a redundant job over
-    * an already-materialized cache. The memo is keyed by the same
-    * canonicalized plan the CacheManager matches on and cleared in
-    * [[release]] (the harness drains caches between reps, so the next
-    * rep's first barrier runs again and nothing persists across runs).
-    * Purely a job-count optimization: a skipped count never changes
-    * results — at worst a racing consumer recomputes cache partitions,
-    * exactly the pre-barrier behavior.
-    */
-  def eagerizeOnce(df: DataFrame): Unit =
-    if (eagerDone.add(df.queryExecution.analyzed.canonicalized)) df.count(): Unit
 
   implicit final class SharedCacheOps(private val df: DataFrame) extends AnyVal {
     /** Persist MEMORY_AND_DISK and register for [[Caches.release]]. */
@@ -58,8 +39,9 @@ object Caches {
       * overall (hyperthread contention during the forced all-core
       * materialization burst) and regressed the capped-Jaccard pipeline
       * 3x — eager is a per-site decision for measured broadcast-fanout
-      * races, exactly like the explicit counts in Dedup.ngramJaccard and
-      * Dedup.shingleArrays.
+      * races (the dedup shingle sets and the capped-Jaccard doc metadata).
+      * A relation needed twice is passed along, not rebuilt: each call
+      * runs its own count.
       */
     def sharedCacheEager: DataFrame = {
       val p = df.sharedCache
@@ -78,6 +60,5 @@ object Caches {
   def release(): Unit = {
     var df = tracked.poll()
     while (df != null) { df.unpersist(blocking = false); df = tracked.poll() }
-    eagerDone.clear()
   }
 }

@@ -167,10 +167,8 @@ object SparkEntry {
     "d_minhash_incremental" -> ((s, d) => {
       import org.apache.spark.sql.functions.col
       val all = Fixtures.plantedDocs(docs(s, d))
-      val old = all.filter(col("doc_id") % 7 < 5)
-      Dedup.dedupMinhashIncrement(
-        Dedup.minhashIndex(old), Dedup.dedupMinhash(old),
-        all, all.filter(col("doc_id") % 7 >= 5))
+      val (oldIndex, oldPairs) = Dedup.minhashState(all.filter(col("doc_id") % 7 < 5))
+      Dedup.dedupMinhashIncrement(oldIndex, oldPairs, all, all.filter(col("doc_id") % 7 >= 5))
     }),
     // cluster-MV maintenance: stored labels as a star forest + the
     // delta-touching pairs through the components machinery; oracle =
@@ -180,9 +178,10 @@ object SparkEntry {
       val all = Fixtures.plantedDocs(docs(s, d))
       val old = all.filter(col("doc_id") % 7 < 5)
       val delta = all.filter(col("doc_id") % 7 >= 5)
+      val (oldIndex, oldPairs) = Dedup.minhashState(old)
       Dedup.dedupClustersIncrement(
-        Dedup.dedupClusters(old).select("doc_id", "cluster_id"),
-        Dedup.minhashDeltaPairs(Dedup.minhashIndex(old), all, delta),
+        Dedup.dedupClustersFromPairs(oldPairs, old).select("doc_id", "cluster_id"),
+        Dedup.minhashDeltaPairs(oldIndex, all, delta),
         all.select("doc_id"))
     }),
     // the same two maintenance proofs at the DEPLOY shape: stored state

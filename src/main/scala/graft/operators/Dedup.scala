@@ -20,6 +20,11 @@ import EventSemantics.{fl, flSql}
   * inverted-index join keyed by shingle (document frequency of a 3-gram is
   * tiny, so the join never explodes); SimHash from 15-bit chunk buckets.
   * Verification only ever touches candidate pairs.
+  *
+  * Every pin goes through [[graft.Caches]] (`sharedCache` /
+  * `sharedCacheEager`), so `Caches.release()` frees all of them; the
+  * `localCheckpoint`s truncate lineage (candidate probe, min-label
+  * supersteps) and are not pins.
   */
 object Dedup {
 
@@ -52,13 +57,16 @@ object Dedup {
     * once per document — inlining it into the shingling lambda makes
     * Catalyst re-evaluate it per element (O(words²) splits per doc).
     *
-    * The relation is CACHED before the non-empty filter: predicate pushdown
+    * The relation is PINNED before the non-empty filter: predicate pushdown
     * would otherwise substitute the whole shingle expression (split
     * included) into the filter node and compute it twice per row; the
     * InMemoryRelation is an optimization barrier, so the filter runs on the
-    * stored column instead. Both dedup pipelines reuse the cache 2-4x.
+    * stored column instead. Both dedup pipelines reuse the pin 2-4x; a
+    * caller that needs one corpus's shingles for two results passes the
+    * returned relation along ([[minhashState]]) instead of shingling again.
+    * The pin is a `sharedCacheEager`, so [[graft.Caches.release]] frees it.
     *
-    * The cache is materialized EAGERLY (one count job) before returning:
+    * The pin is materialized EAGERLY (one count job) before returning:
     * the consumers include broadcast-exchange builds, which Spark runs as
     * concurrent jobs — on a cold cache those jobs race, and every racer
     * recomputes the md5 shingling for the partitions it loses (measured
@@ -67,17 +75,7 @@ object Dedup {
     * shingled exactly once; at cluster scale this is the standard
     * materialize-before-fanout barrier for a reused expensive relation.
     */
-  private def shingleArrays(dd: DataFrame, k: Int): DataFrame = {
-    val cached = shingleArraysLazy(dd, k)
-    // once per release cycle: composed gates (incremental dedup) build
-    // the same shingle relation through several entry points, and the
-    // CacheManager already dedupes the storage — only the barrier job
-    // needed deduping too
-    graft.Caches.eagerizeOnce(cached)
-    cached.where(size(col("shs")) > 0)
-  }
-
-  private def shingleArraysLazy(dd: DataFrame, k: Int): DataFrame =
+  private def shingleArrays(dd: DataFrame, k: Int): DataFrame =
     // hash-repartition by doc before the CPU-heavy shingling projection:
     // the corpus scan may have few/skewed splits (a single parquet file
     // has as many splits as row groups), and the shuffle re-spreads the
@@ -105,7 +103,9 @@ object Dedup {
         coalesce(split(col("text"), "\\s+"), array().cast("array<string>")).as("w"))
       .select(col("doc_id"),
         graft.functions.ShingleFunctions.shingleIds(col("w"), k, sorted = true).as("shs"))
-      .cache()
+      .sharedCacheEager
+      .where(size(col("shs")) > 0)
+
   private def shinglesSql(k: Int): String =
     s"""SELECT DISTINCT doc_id,
        |  CAST(concat('0x', substr(md5(sh), 1, 15)) AS BIGINT) AS xsh FROM (
@@ -162,17 +162,28 @@ object Dedup {
     pairs.minBy { case (b, r) => (err(b, r), b) }
   }
 
-  /** The persisted LSH index — one (doc_id, band, sig) row per band: the
-    * state a deploy stores so near-dup dedup of a new ingest partition
-    * never re-signatures the corpus ([[dedupMinhashIncrement]]). All 32
-    * minhashes are computed in ONE codegen'd pass over the in-row shingle
-    * set (graft.functions.MinhashSignature — zero shuffles, no
-    * interpreted per-perm lambda passes); the skinny relation is cached
-    * so a self-join doesn't compute the signature once per side.
+  /** The LSH index — one (doc_id, band, sig) row per band: the state a
+    * deploy stores so near-dup dedup of a new ingest partition never
+    * re-signatures the corpus ([[dedupMinhashIncrement]]).
     */
-  def minhashIndex(documents: DataFrame, k: Int = 3): DataFrame = {
+  def minhashIndex(documents: DataFrame, k: Int = 3): DataFrame =
+    bandSigs(shingleArrays(canon(documents), k))
+
+  /** The band signatures of a shingle relation. All 32 minhashes are
+    * computed in ONE codegen'd pass over the in-row shingle set
+    * (graft.functions.MinhashSignature — zero shuffles, no interpreted
+    * per-perm lambda passes).
+    *
+    * Pinned eagerly: every index has two or more readers (both sides of
+    * the band self-join; the delta probe and its full-index union; the
+    * warehouse write), and unpinned they recompute the signatures per
+    * reader (+10% executor CPU on `d_minhash_incremental` at sf0.1). The
+    * barrier makes every reader plan over a materialized relation, so AQE
+    * sees fixed statistics (a lazy pin let it build the band join on
+    * either side by run timing).
+    */
+  private def bandSigs(arr: DataFrame): DataFrame = {
     val p = 2147483647L
-    val arr = shingleArrays(canon(documents), k)
     val aConsts = (0 until 32).map(i => md5Const(s"a$i") + 1L)
     val bConsts = (0 until 32).map(i => md5Const(s"b$i"))
     val minsig = arr.select(col("doc_id"),
@@ -182,7 +193,7 @@ object Dedup {
     }
     minsig
       .select(col("doc_id"), posexplode(array(bandSigs: _*)).as(Seq("band", "sig")))
-      .sharedCache
+      .sharedCacheEager
   }
 
   /** Exact-Jaccard verification of a candidate pair set against the
@@ -213,18 +224,26 @@ object Dedup {
     * (band, sig)) and the candidate verify joins (keyed by doc_id, with the
     * tiny candidate side broadcast).
     */
-  def dedupMinhash(documents: DataFrame, k: Int = 3, minJaccard: Double = 0.7): DataFrame = {
-    // the per-doc shingle-set relation (cached inside shingleArrays) feeds
-    // the signature build and both sides of the candidate verify
+  def dedupMinhash(documents: DataFrame, k: Int = 3, minJaccard: Double = 0.7): DataFrame =
+    minhashState(documents, k, minJaccard)._2
+
+  /** A corpus's stored near-dup state — its LSH index ([[minhashIndex]])
+    * and verified pairs ([[dedupMinhash]]) — off ONE shingle pass: the
+    * pinned per-doc shingle sets feed the signature build and both sides
+    * of the candidate verify. The bootstrap of [[dedupMinhashIncrement]]
+    * and [[dedupClustersIncrement]].
+    */
+  def minhashState(documents: DataFrame, k: Int = 3,
+                   minJaccard: Double = 0.7): (DataFrame, DataFrame) = {
     val arr = shingleArrays(canon(documents), k)
-    val bandSig = minhashIndex(documents, k)
-    val cand = bandSig.as("a")
-      .join(bandSig.as("b"),
+    val index = bandSigs(arr)
+    val cand = index.as("a")
+      .join(index.as("b"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    verifyPairs(cand, arr, minJaccard)
+    (index, verifyPairs(cand, arr, minJaccard))
   }
 
   /** #124 incremental near-dup maintenance — the ingest-time reality of
@@ -288,9 +307,11 @@ object Dedup {
       .localCheckpoint()
     // verification shingles ONLY the candidate docs (broadcast semi-join
     // prune) — re-shingling the whole corpus per ingest would be the
-    // O(corpus) signature cost the stored index exists to avoid
+    // O(corpus) signature cost the stored index exists to avoid. No
+    // distinct: a semi-join's build side may repeat keys, and the shuffle
+    // it would cost is one more construction job
     val candDocs = cand.select(col("doc_a").as("doc_id"))
-      .unionByName(cand.select(col("doc_b").as("doc_id"))).distinct()
+      .unionByName(cand.select(col("doc_b").as("doc_id")))
     val needed = documents.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
     verifyPairs(cand, shingleArrays(canon(needed), k), minJaccard)
   }
@@ -315,10 +336,8 @@ object Dedup {
                              smallGraphEdges: Long = 500000L): DataFrame = {
     val oldEdges = oldLabels.filter(col("doc_id") =!= col("cluster_id"))
       .select(col("cluster_id").as("doc_a"), col("doc_id").as("doc_b"))
-    // sharedCache, not a bare cache(): this is the per-ingest maintenance
-    // path — repeated calls in a long-lived session must stay releasable
-    val pairs = oldEdges.unionByName(newPairs.select("doc_a", "doc_b")).sharedCache
-    assignClusters(pairs, nodes.select("doc_id"), maxIterations, smallGraphEdges)
+    assignClusters(oldEdges.unionByName(newPairs.select("doc_a", "doc_b")),
+      nodes.select("doc_id"), maxIterations, smallGraphEdges)
   }
 
   def dedupMinhashSql(k: Int = 3, minJaccard: Double = 0.7): String =
@@ -383,33 +402,30 @@ object Dedup {
     */
   def dedupClusters(documents: DataFrame, k: Int = 3, minJaccard: Double = 0.7,
                     maxIterations: Int = 50,
-                    smallGraphEdges: Long = 500000L): DataFrame = {
-    // cache BELOW the union: both union branches read the pinned pair list
-    // instead of each recomputing the whole minhash lineage
-    val pairs = dedupMinhash(documents, k, minJaccard).select("doc_a", "doc_b").cache()
-    val nodes = documents.select("doc_id")
-    assignClusters(pairs, nodes, maxIterations, smallGraphEdges)
-  }
+                    smallGraphEdges: Long = 500000L): DataFrame =
+    dedupClustersFromPairs(dedupMinhash(documents, k, minJaccard), documents,
+      maxIterations, smallGraphEdges)
 
-  /** #57's components over an ALREADY-MATERIALIZED pair relation (e.g.
-    * the warehouse's stored pairs table) — the bootstrap path of
-    * [[graft.sources.DedupWarehouse]]: deriving labels from the STORED
-    * pairs both matches the deploy flow (state begets state) and avoids
-    * re-running the whole minhash lineage a third time.
+  /** #57's components over a corpus's verified pairs already in hand —
+    * the stored pairs table of [[graft.sources.DedupWarehouse]], or the
+    * pairs of [[minhashState]] whose index the caller also keeps — so
+    * the minhash lineage is not built again for the labels.
     */
   def dedupClustersFromPairs(pairs: DataFrame, nodes: DataFrame,
                              maxIterations: Int = 50,
                              smallGraphEdges: Long = 500000L): DataFrame =
-    assignClusters(pairs.select("doc_a", "doc_b").cache(),
-      nodes.select("doc_id"), maxIterations, smallGraphEdges)
+    assignClusters(pairs, nodes.select("doc_id"), maxIterations, smallGraphEdges)
 
   /** Cluster assignment over an arbitrary near-dup pair graph — shared by
-    * the minhash clusters (#57) and semantic dedup (#95). `pairs` must be
-    * (doc_a, doc_b) LONG columns (cached by the caller if its lineage is
-    * expensive); `nodes` the full (doc_id) node set.
+    * the minhash clusters (#57) and semantic dedup (#95). `edges` must
+    * carry (doc_a, doc_b) LONG columns; `nodes` the full (doc_id) node set.
     */
-  private def assignClusters(pairs: DataFrame, nodes: DataFrame,
+  private def assignClusters(edges: DataFrame, nodes: DataFrame,
                              maxIterations: Int, smallGraphEdges: Long): DataFrame = {
+    // the one pair-list pin: the edge collect below and the distributed
+    // path's supersteps both read it instead of each recomputing the
+    // pairs' whole lineage
+    val pairs = edges.select("doc_a", "doc_b").sharedCache
     // ONE action decides the path AND fetches the small graph: collect at
     // most threshold+1 edges — if we got <= threshold, that IS the complete
     // edge list (limit is only a cap); a full count()+collect() pair would
@@ -477,7 +493,7 @@ object Dedup {
   def semDedup(embeddings: DataFrame, minCos: Double = 0.3,
                maxIterations: Int = 50, smallGraphEdges: Long = 500000L): DataFrame = {
     val pairs = embedNearDup(embeddings, minCos)
-      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")).cache()
+      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
     val nodes = embeddings.select(col("vec_id").as("doc_id"))
     assignClusters(pairs, nodes, maxIterations, smallGraphEdges)
       .withColumnRenamed("doc_id", "vec_id")
@@ -515,7 +531,7 @@ object Dedup {
         .select(col("vec_id"),
           Vectors.kmNearest(cent).getField("cluster").as("label"), col("embedding"))
     val pairs = embedNearDup(relabeled, minCos)
-      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")).cache()
+      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
     val nodes = embeddings.select(col("vec_id").as("doc_id"))
     assignClusters(pairs, nodes, maxIterations, smallGraphEdges)
       .withColumnRenamed("doc_id", "vec_id")
@@ -867,7 +883,6 @@ object Dedup {
         // sf0.1, 32c), no 10^x-row rare relation ever materialized or
         // shuffled. The broadcast handle keeps task binaries O(1) in the
         // hot count (TopProbeLabels bundle discipline).
-        import graft.Caches.SharedCacheOps
         val hotArr = inv.groupBy("xsh").agg(count(lit(1)).as("df"))
           .filter(col("df") > cap).select("xsh")
           .collect().map(_.getLong(0))
@@ -891,12 +906,11 @@ object Dedup {
         // sub-array is the in-row keep-side split ≡ the former
         // sort_array(collect_list(inner join against hot)) + []-coalesce,
         // now a map-side projection of the shingle cache. docMeta feeds
-        // BOTH pair-side broadcast builds — the eager count is the
+        // BOTH pair-side broadcast builds — the eager pin is the
         // documented materialize-before-fanout barrier.
         val docMeta = arr.select(col("doc_id"), size(col("shs")).as("n"),
             split(keep = true).as("hot"))
-          .sharedCache
-        docMeta.count()
+          .sharedCacheEager
         interRare
           .join(docMeta.select(col("doc_id").as("doc_a"), col("n").as("n_a"), col("hot").as("hot_a")), "doc_a")
           .join(docMeta.select(col("doc_id").as("doc_b"), col("n").as("n_b"), col("hot").as("hot_b")), "doc_b")

@@ -61,7 +61,9 @@ object DedupWarehouse {
   @volatile private var bootstrapped: Option[(SparkSession, Int, Int, Double, Int)] = None
 
   /** Full-history build of the three stored relations — the bootstrap job
-    * a deploy runs once, then maintains per ingest batch.
+    * a deploy runs once, then maintains per ingest batch. Index and pairs
+    * come from one [[Dedup.minhashState]] (one shingle pass), the labels
+    * from the stored pairs table.
     */
   def bootstrap(documents: DataFrame, k: Int = 3, minJaccard: Double = 0.7,
                 buckets: Int = 8): Unit = synchronized {
@@ -71,11 +73,11 @@ object DedupWarehouse {
       .forall(spark.catalog.tableExists)
     if (bootstrapped.contains(key) && tablesExist) return
     Seq(IndexTable, PairsTable, LabelsTable).foreach(reset(spark, _))
-    Layout.writeBucketed(Dedup.minhashIndex(documents, k), IndexTable, "sig", buckets)
-    Layout.writeBucketed(Dedup.dedupMinhash(documents, k, minJaccard),
-      PairsTable, "doc_a", buckets)
+    val (index, pairs) = Dedup.minhashState(documents, k, minJaccard)
+    Layout.writeBucketed(index, IndexTable, "sig", buckets)
+    Layout.writeBucketed(pairs, PairsTable, "doc_a", buckets)
     // labels from the STORED pairs (state begets state — and the minhash
-    // lineage is not re-run a third time for the components)
+    // lineage is not run again for the components)
     Layout.writeBucketed(
       Dedup.dedupClustersFromPairs(spark.table(PairsTable), documents.select("doc_id"))
         .select("doc_id", "cluster_id"),

@@ -18,7 +18,10 @@ other names a JVM or an adaptive run hands out in its own order: object identity
 (`_common_expr_3`), broadcast variable ids (`Broadcast(280)`, a
 SparkContext-wide counter that moves with every broadcast made before),
 and the numbers of AQE query stages and codegen stages, which follow the
-order in which stages are created and finish. Prints `<key>: same` or a
+order in which stages are created and finish. A scan's metadata value that
+Spark cut at `spark.sql.maxMetadataStringLength` (`DataFilters: [isnotnull(a#12),
+(pmod(...`) is cut at a length that counts the id digits, so it shows as
+`[...]`. Prints `<key>: same` or a
 unified diff of the normalized plans per key, and exits 1 if any key
 differs or is present in only one dump. This is the plan-identity check for refactors:
 run Explain on the parent commit and on the change, then diff.
@@ -39,6 +42,9 @@ COMMON_EXPR = re.compile(r"_common_expr_\d+")
 STAGE = re.compile(r"(QueryStage) \d+")
 CODEGEN = re.compile(r"\*\(\d+\)")
 BROADCAST_ID = re.compile(r"Broadcast\(\d+\)")
+# a metadata list that ends in Spark's "..." cut, up to that cut and no
+# further than the next `Name: [` item
+TRUNCATED = re.compile(r"(\w+: )\[(?:(?!\w+: \[).)*?\.\.\.(?=,|$)")
 # sbt prefixes forked-process output and appends its own status lines;
 # Spark's log4j lines (stderr) can interleave with a printed plan
 SBT_PREFIX = re.compile(r"^\[(info|error|warn|success)\] ?")
@@ -51,7 +57,8 @@ def normalize(line):
                           (PRIVATE_COPY, ".jvm-N"),
                           (IDENTITY, "@N"), (LAMBDA_CLASS, "$Lambda$N"),
                           (COMMON_EXPR, "_common_expr_N"), (STAGE, r"\1 N"),
-                          (CODEGEN, "*(N)"), (BROADCAST_ID, "Broadcast(N)")):
+                          (CODEGEN, "*(N)"), (BROADCAST_ID, "Broadcast(N)"),
+                          (TRUNCATED, r"\1[...]")):
         line = pattern.sub(repl, line)
     return line
 

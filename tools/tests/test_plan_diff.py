@@ -22,6 +22,8 @@ RUN_A = """[info] ===== q_x =====
 [info] Project [a#1]
 [info] ===== src_z =====
 [info] +- FileScan json [user_id#3] Location: InMemoryFileIndex(1 paths)[file:/tmp/graft_chatlog_fixture.jvm-25376-150988cb/chat_logs], PartitionFilters: []
+[info] ===== p_w =====
+[info] +- FileScan parquet [doc_id#8] Batched: true, DataFilters: [isnotnull(doc_id#8), (pmod(cast(conv(substring(md5(cast(cast(doc_id#8 as string) as bina..., Format: Parquet, PartitionFilters: [], PushedFilters: [IsNotNull(doc_id)]
 """
 
 # the same plans from another process: every run-specific name moved
@@ -37,6 +39,8 @@ RUN_B = """[info] ===== q_x =====
 [info] Project [a#7]
 [info] ===== src_z =====
 [info] +- FileScan json [user_id#9] Location: InMemoryFileIndex(1 paths)[file:/tmp/graft_chatlog_fixture.jvm-31002-0d4e9a17/chat_logs], PartitionFilters: []
+[info] ===== p_w =====
+[info] +- FileScan parquet [doc_id#12345] Batched: true, DataFilters: [isnotnull(doc_id#12345), (pmod(cast(conv(substring(md5(cast(cast(doc_id#12345 as string) as..., Format: Parquet, PartitionFilters: [], PushedFilters: [IsNotNull(doc_id)]
 """
 
 
@@ -49,7 +53,7 @@ def write(tmp_path, name, text):
 def test_run_specific_names_are_normalized(tmp_path, capsys):
     a, b = write(tmp_path, "a.log", RUN_A), write(tmp_path, "b.log", RUN_B)
     assert plan_diff.main(["plan_diff.py", a, b]) == 0
-    assert capsys.readouterr().out.splitlines() == ["q_x: same", "q_y: same", "src_z: same"]
+    assert capsys.readouterr().out.splitlines() == ["p_w: same", "q_x: same", "q_y: same", "src_z: same"]
 
 
 def test_a_changed_operator_differs(tmp_path, capsys):
@@ -66,3 +70,11 @@ def test_a_different_fixture_directory_differs(tmp_path, capsys):
     a, b = write(tmp_path, "a.log", RUN_A), write(tmp_path, "b.log", moved)
     assert plan_diff.main(["plan_diff.py", a, b]) == 1
     assert "src_z: differs" in capsys.readouterr().out.splitlines()
+
+
+def test_a_changed_untruncated_filter_differs(tmp_path, capsys):
+    # only the cut list is hidden; the pushed filters after it still count
+    changed = RUN_B.replace("PushedFilters: [IsNotNull(doc_id)]", "PushedFilters: []")
+    a, b = write(tmp_path, "a.log", RUN_A), write(tmp_path, "b.log", changed)
+    assert plan_diff.main(["plan_diff.py", a, b]) == 1
+    assert "p_w: differs" in capsys.readouterr().out.splitlines()
