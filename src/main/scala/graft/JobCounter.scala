@@ -10,8 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * time for benchmark telemetry: every cache/localCheckpoint
   * materialization is its own job, so per-query job counts make "this
   * query regressed because it now runs 3 jobs instead of 1" diagnosable
-  * straight from BENCH_rN.json — and the CPU-time columns separate plan
-  * cost from box cost (wall time inflated by GC/page-cache pressure shows
+  * straight from Bench's detail file — and the CPU-time columns separate
+  * plan cost from box cost (wall time inflated by GC/page-cache pressure shows
   * as wall >> run_ms with cpu_ms unchanged vs a quiet run).
   */
 final class JobCounter(sc: SparkContext) extends SparkListener {

@@ -64,7 +64,7 @@ object SoakGen {
     * designed stress case. Scaled labels model the deploy reality instead:
     * the block key is an IVF cell / LSH bucket whose cardinality grows
     * with the corpus, so block SIZE stays flat and those operators scale
-    * linearly. Both runs are recorded in SCALING.md.
+    * linearly. Both runs are recorded in `git show d1c0210:SCALING.md`.
     */
   def generate(spark: SparkSession, src: String, out: String, factor: Int,
                scaleLabels: Boolean = false): Unit = {

@@ -151,7 +151,8 @@ object SparkEntry {
     // deploys use) because the DuckDB twin inlines the same literal cap and
     // the gate must compare identical constants across SFs; the spec suite
     // pins autoJaccardCap's zero-loss guarantee and jaccard_hot_soak.json
-    // records it winning wall+CPU on a genuinely stopword-hot corpus (SCALING.md)
+    // (kept in commit d1c0210) records it winning wall+CPU on a genuinely
+    // stopword-hot corpus
     "d_ngram_jaccard_capped" -> ((s, d) =>
       Dedup.ngramJaccard(Fixtures.plantedDocs(docs(s, d)), maxDf = Some(16L))),
     "d_embed_neardup" -> ((s, d) => Dedup.embedNearDup(emb(s, d))),

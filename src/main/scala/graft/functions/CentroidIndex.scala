@@ -11,10 +11,10 @@ import org.apache.spark.sql.SparkSession
   *
   * The flat kernels scan all C centroids per row — O(C·dim), the
   * measured super-linearity of the geometry-blocked graph family once
-  * `Vectors.autoGeoCells` sizes C to the corpus (SCALING.md round-9
-  * sized-labels table). This index groups the C centroids under
-  * S = ceil(√C) super-centroids (a driver-side Lloyd over the centroid
-  * matrix itself — C points, so O(C^1.5·dim) once per expression
+  * `Vectors.autoGeoCells` sizes C to the corpus (the round-9 table in
+  * `git show d1c0210:SCALING.md`). This index groups the C centroids
+  * under S = ceil(√C) super-centroids (a driver-side Lloyd over the
+  * centroid matrix itself — C points, so O(C^1.5·dim) once per expression
   * instantiation) and the kernels then rank the S supers first and scan
   * ONLY the member cells of the [[SUPER_PROBE]] best — the
   * [[TopProbeLabelsHier]] (#121) design applied engine-wide, per-row

@@ -944,11 +944,11 @@ object Dedup {
     * cardinality (copies inflate every shared shingle's df by the cluster
     * size); planted stopword shingles (df ≈ corpus size) do NOT drag it
     * up as long as each doc keeps a (1−t) fraction of rarer shingles —
-    * exactly the regime where capping matters (jaccard_hot_soak.json
-    * measures it). Conservative by design: the guarantee covers the worst
-    * pair, so on corpora with heavy NATURAL phrase sharing the returned
-    * cap can approach the df ceiling and prune little — zero-loss costs
-    * that.
+    * exactly the regime where capping matters (`jaccard_hot_soak.json`,
+    * kept in commit d1c0210, measures it). Conservative by design: the
+    * guarantee covers the worst pair, so on corpora with heavy NATURAL
+    * phrase sharing the returned cap can approach the df ceiling and
+    * prune little — zero-loss costs that.
     */
   def autoJaccardCap(documents: DataFrame, k: Int = 3, minJaccard: Double = 0.3): Long = {
     val arr = shingleArrays(canon(documents), k)
@@ -968,23 +968,6 @@ object Dedup {
         (floor(size(col("dfs")) * lit(1d - minJaccard) + lit(1e-9)) + 1).cast("int")).as("q"))
     val top2 = stat.orderBy(col("q").desc).limit(2).collect().map(_.getLong(0))
     if (top2.length < 2) top2.headOption.getOrElse(1L) else top2(1)
-  }
-
-  /** Shingle-df telemetry for the soak tooling: (max df, candidate pairs
-    * the exhaustive inverted-index join generates = Σ C(df,2), candidate
-    * pairs surviving the cap). Quantifies the quadratic the cap removes.
-    */
-  private[graft] def shingleDfStats(documents: DataFrame, k: Int = 3,
-                                    cap: Long = 16L): (Long, Long, Long) = {
-    val arr = shingleArrays(canon(documents), k)
-    // df*(df-1) stays integral (SQL `/` would widen to double)
-    val r = arr.select(explode(col("shs")).as("xsh"))
-      .groupBy("xsh").agg(count(lit(1)).as("df"))
-      .agg(max(col("df")),
-        sum(col("df") * (col("df") - 1)),
-        sum(when(col("df") <= cap, col("df") * (col("df") - 1)).otherwise(0L)))
-      .head()
-    (r.getLong(0), r.getLong(1) / 2, r.getLong(2) / 2)
   }
 
   /** DuckDB twin of the CAPPED path (`maxDf = Some(cap)`): the df-filter

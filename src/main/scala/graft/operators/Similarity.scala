@@ -331,12 +331,15 @@ object Similarity {
     * week's median similarity, as (channel_a, channel_b, similarity)
     * structs ([[componentsUdf]] reads the first two fields), and every
     * (week, channel) as a node. One materialized rollup feeds the
-    * similarity edges AND the node list.
+    * similarity edges AND the node list. It is pinned eagerly, so both
+    * plan over a relation materialized before planning and AQE sees fixed
+    * statistics (a lazy pin let it build the similarity join on either
+    * side by run timing).
     */
   private def communities(events: DataFrame, solve: UserDefinedFunction): DataFrame = {
     val w = EventSemantics.userWeeklyActivity(events)
       .select(col("user_id"), col("channel"), col("week"), col("messages"))
-      .sharedCache
+      .sharedCacheEager
     val edges = channelSimilarityFrom(w)
       .withColumn("thr", expr("percentile(similarity, 0.5)").over(Window.partitionBy("week")))
       .filter(col("similarity") > col("thr"))

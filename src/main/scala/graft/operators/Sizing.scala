@@ -18,9 +18,9 @@ import org.apache.spark.sql.DataFrame
   *
   * Total sizing cost: two bounded actions (the cap statistic and the
   * vector count) + closed-form math — safe to run at every ingest or
-  * memoize per corpus snapshot. SCALING.md "Sizing at deploy" documents
-  * the recipe; SizingSpec composes all three against the operators on
-  * the spec corpus.
+  * memoize per corpus snapshot. "Sizing at deploy" in `git show
+  * d1c0210:SCALING.md` documents the recipe; SizingSpec composes all
+  * three against the operators on the spec corpus.
   */
 object Sizing {
 
@@ -36,7 +36,7 @@ object Sizing {
   /** Recommended session conf for running the engine over `corpusBytes`
     * of input on `totalCores` executor cores — the arithmetic behind
     * SURVEY §4's "shuffle sized to the cluster at deploy" sentence
-    * (SizingSpec pins it; SCALING.md "Sizing at deploy" documents it):
+    * (SizingSpec pins it; SCALING.md's session conf lists it):
     *
     *  - `spark.sql.shuffle.partitions`: one ~128 MiB shuffle block per
     *    partition so a block (plus 2–3× aggregation expansion) fits an

@@ -642,7 +642,7 @@ object Vectors {
     * corpus saturates the cap and re-fattens blocks to O(N/2^18) ≈ 4k
     * vectors — the residual ceiling is now purely the broadcast budget
     * (past it: shard the index per embedding-space region, out of
-    * contract here; SCALING.md).
+    * contract here; round 11 in `git show d1c0210:SCALING.md`).
     */
   private[graft] def maxGeoCells(dim: Int = DIM): Int = {
     val memCap = ((128L << 20) / (8L * dim)).toInt
@@ -664,11 +664,11 @@ object Vectors {
     * the member cells of the `superProbe` nearest supers. The flat
     * ranking's per-row cost is O(C·dim); the scaled-labels soak measured
     * it as the mp variant's residual super-linearity once blocking
-    * cardinality grows with the corpus (SCALING.md). This bounds it at
-    * O((sqrt(C) + superProbe·C/sqrt(C))·dim) — the standard IVF
-    * coarse-quantizer hierarchy (FAISS-style), at the cost of missing a
-    * cell whose super was pruned (own-label probe always kept, so the
-    * single-block graph is always contained).
+    * cardinality grows with the corpus (`git show d1c0210:SCALING.md`).
+    * This bounds it at O((sqrt(C) + superProbe·C/sqrt(C))·dim) — the
+    * standard IVF coarse-quantizer hierarchy (FAISS-style), at the cost
+    * of missing a cell whose super was pruned (own-label probe always
+    * kept, so the single-block graph is always contained).
     *
     * Determinism: super-centroids come from the same driver Lloyd
     * contract as the PQ codebooks (init = first S cells in label order,

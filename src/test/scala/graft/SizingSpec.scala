@@ -6,8 +6,8 @@ import graft.operators.{Dedup, Sizing, Vectors}
 
 /** Composes the one-call deploy sizing (operators.Sizing) with the
   * operators it feeds, on the spec corpus — the "sizing at deploy"
-  * recipe SCALING.md documents, exercised end to end instead of each
-  * tuner in isolation.
+  * recipe `git show d1c0210:SCALING.md` documents, exercised end to end
+  * instead of each tuner in isolation.
   */
 class SizingSpec extends SparkSpec {
 

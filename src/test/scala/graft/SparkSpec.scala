@@ -19,20 +19,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** Bench's session ([[Actions.session]]), so the specs check the plans
+    * Bench times and Verify gates. Two JVM system properties ride along:
+    * every spec runs with the increment operators' insert-only
+    * precondition assertions armed (operators.Checks) — contract
+    * violations fail tests loudly, production pays nothing — and
+    * `SparkConf` loads `spark.*` properties, which keeps the specs'
+    * warehouse out of the working directory.
+    */
   lazy val session: SparkSession = {
-    // every spec runs with the increment operators' insert-only
-    // precondition assertions armed (operators.Checks) — contract
-    // violations fail tests loudly, production pays nothing
     System.setProperty("graft.spark.debug.checks", "true")
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    System.setProperty("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
+    Actions.session(4)
   }
 }

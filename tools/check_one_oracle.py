@@ -5,8 +5,8 @@ default budgets, and for re-running stragglers in a FRESH process after
 a full check.py run (one long-lived connection accumulates state; the
 round-10 sf1 gate was OOM-killed at 130 GB RSS that way). Since the
 round-10 iterated-argmax rewrite the graph-family replays fit in ~2 GB
-and pass here at sf1; if a replay still exhausts the budget, the
-decomposed checkers (tools/knn_graph_soak_check.py) are the fallback.
+and pass here at sf1; a replay that still exhausts the budget needs a
+larger memLimit or a faster tmpDir.
 CAUTION for stashed oracles (v_knn_join_mph, the PQ family): the SQL in
 oracle_sql.json inlines training literals from ITS OWN Verify run —
 never check one corpus against a string dumped at another SF.

@@ -5,9 +5,10 @@ three-point scaling record in future rounds).
 Generates factor-10 and factor-30 soak corpora with SoakGen (unless they
 already exist), runs graft.Bench at sf0.1 / x10 / x30, fits per-query
 least-squares log-log slopes over x = 1, 10, 30, and writes
-`soak_slopes.json` + a markdown summary to stdout.
+`target/soak/soak_slopes.json` (beside the corpora) + a markdown summary
+to stdout.
 
-Usage: tools/soak_slopes.py [--skip QUERIES] [--fresh]
+Usage: tools/soak_slopes.py [--skip QUERIES] [--fresh] [--only QUERIES]
   --skip  comma list excluded from the x30 run only (default: the five
           kNN-join/graph variants, which share the exact blocked pair
           join that goes quadratic on the fixed-label soak corpus and
@@ -16,6 +17,8 @@ Usage: tools/soak_slopes.py [--skip QUERIES] [--fresh]
           still get a TWO-POINT x1/x10 slope in the output, flagged
           `two_point`, so nothing is silently omitted)
   --fresh regenerate corpora and rerun everything even if files exist
+  --only  re-measure only these queries and merge their rows into the
+          existing output, keeping every row not measured
 """
 import json, math, os, subprocess, sys, argparse
 
@@ -23,6 +26,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF01 = "/root/testdata/sf0.1"
 CORPORA = [("x10", "target/soak/sf1", 10), ("x30", "target/soak/sf3", 30)]
 DEFAULT_SKIP = "v_knn_join,v_knn_join_mp,v_knn_join_mph,v_knn_join_geo,v_knn_join_incremental"
+OUT = os.path.join("target", "soak", "soak_slopes.json")
 
 
 def run(cmd, env=None, log=None):
@@ -49,65 +53,17 @@ def bench(sf_dir, tag, only=None):
     return d
 
 
-SIZED_CORPORA = [("x10sl", "target/soak/sf1sl", 10), ("x30sl", "target/soak/sf3sl", 30)]
-
-
-def run_sized(fresh):
-    """Measure the kNN five at x1/x10/x30 under DEPLOY-SIZED blocking
-    (scaleLabels corpora; geo cells = autoGeoCells) and merge the 3-point
-    slopes into soak_slopes.json as `sized_labels` sub-records — the
-    measured form of the deploy contract the fixed-label skip list argues
-    from (VERDICT r08 item 7)."""
-    for _, out, factor in SIZED_CORPORA:
-        if fresh or not os.path.exists(os.path.join(REPO, out, "embeddings.parquet")):
-            run(["sbt", "-batch", f"runMain graft.SoakGen {SF01} {out} {factor} scaleLabels"],
-                log=f"/tmp/slopes_gen_{factor}sl.log")
-    run(["sbt", "-batch",
-         "runMain graft.KnnSizedSoak 1=" + SF01 + " " +
-         " ".join(f"{f}={out}" for _, out, f in SIZED_CORPORA)],
-        log="/tmp/slopes_sized.log")
-    with open(os.path.join(REPO, "knn_sized_soak.json")) as f:
-        sized = json.load(f)
-    path = os.path.join(REPO, "soak_slopes.json")
-    if os.path.exists(path):
-        with open(path) as f:
-            slopes = json.load(f)
-    else:
-        # --sized before any full slopes run (fresh checkout): start empty
-        slopes = {"queries": {}}
-    for k, v in sized["queries"].items():
-        slopes.setdefault("queries", {}).setdefault(k, {})["sized_labels"] = v
-    slopes["sized_labels_note"] = (
-        "3-point x1/x10/x30 slopes under the deploy blocking contract: "
-        "scaleLabels corpora (block cardinality grows with the corpus, "
-        "block size flat) and geo cells sized by Vectors.autoGeoCells; "
-        "measured by graft.KnnSizedSoak (knn_sized_soak.json)")
-    with open(path, "w") as f:
-        json.dump(slopes, f, indent=1)
-    print(f"\n[slopes] sized-labels 3-point slopes merged into soak_slopes.json:")
-    for k in sorted(sized["queries"]):
-        v = sized["queries"][k]
-        w = "/".join(f"{x:.2f}" for x in v["wall_s"])
-        print(f"  {k:34s} wall {w:>20s}  slopeW {v['wall_slope']:5.2f}  slopeC {v['cpu_slope']:5.2f}")
-
-
-def main():
+def main(argv=None):
     ap = argparse.ArgumentParser()
     ap.add_argument("--skip", default=DEFAULT_SKIP)
     ap.add_argument("--fresh", action="store_true")
-    ap.add_argument("--sized", action="store_true",
-                    help="only run the sized-labels kNN soak and merge into soak_slopes.json")
     ap.add_argument("--only", default=None,
                     help="comma list: re-measure ONLY these queries at x1/x10/x30 and "
                          "merge their rows into the existing soak_slopes.json (for "
                          "refreshing a family whose kernel changed without re-running "
-                         "the full 128-query soak)")
-    a = ap.parse_args()
+                         "the full soak)")
+    a = ap.parse_args(argv)
     skip = set(filter(None, a.skip.split(",")))
-
-    if a.sized:
-        run_sized(a.fresh)
-        return
 
     for _, out, factor in CORPORA:
         if a.fresh or not os.path.exists(os.path.join(REPO, out, "documents.parquet")):
@@ -146,25 +102,14 @@ def main():
             "wall_s": [round(v, 3) for v in w], "wall_slope": round(slope2(*w), 2),
             "cpu_s": [round(v, 1) for v in c], "cpu_slope": round(slope2(*c), 2),
             "two_point": True}
-    # carry over sized-labels records (written by --sized) so a full
-    # refresh doesn't silently drop the deploy-contract measurements
-    path = os.path.join(REPO, "soak_slopes.json")
-    if os.path.exists(path):
+    path = os.path.join(REPO, OUT)
+    if a.only and os.path.exists(path):
+        # targeted refresh: replace only the measured rows, keep the rest
         with open(path) as f:
             prev = json.load(f)
-        if a.only:
-            # targeted refresh: replace only the measured rows, keep the rest
-            for k, v in out["queries"].items():
-                if "sized_labels" in prev.get("queries", {}).get(k, {}):
-                    v["sized_labels"] = prev["queries"][k]["sized_labels"]
-                prev.setdefault("queries", {})[k] = v
-            out = prev
-        else:
-            for k, v in prev.get("queries", {}).items():
-                if "sized_labels" in v and k in out["queries"]:
-                    out["queries"][k]["sized_labels"] = v["sized_labels"]
-            if "sized_labels_note" in prev:
-                out["sized_labels_note"] = prev["sized_labels_note"]
+        prev.setdefault("queries", {}).update(out["queries"])
+        out = prev
+    os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w") as f:
         json.dump(out, f, indent=1)
 
@@ -176,7 +121,7 @@ def main():
     for k, v in rows[:15]:
         w = "/".join(f"{x:.2f}" for x in v["wall_s"])
         print(f"{k:34s} {w:>22s} {v['wall_slope']:7.2f} {v['cpu_slope']:7.2f}")
-    print("[slopes] full table: soak_slopes.json")
+    print(f"[slopes] full table: {OUT}")
 
 
 if __name__ == "__main__":
