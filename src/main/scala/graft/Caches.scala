@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Release seam for operator-internal persisted relations.
@@ -16,13 +17,14 @@ import org.apache.spark.storage.StorageLevel
   * before returning (e.g. k-means training samples) do not register.
   */
 object Caches {
-  private val tracked = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+  /** Each tracked relation's non-blocking unpersist. */
+  private val tracked = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
 
   implicit final class SharedCacheOps(private val df: DataFrame) extends AnyVal {
     /** Persist MEMORY_AND_DISK and register for [[Caches.release]]. */
     def sharedCache: DataFrame = {
       val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      tracked.add(p)
+      tracked.add(() => p.unpersist(blocking = false))
       p
     }
 
@@ -48,17 +50,32 @@ object Caches {
       p.count()
       p
     }
+
+    /** Eager `localCheckpoint` registered for [[Caches.release]]: lineage
+      * truncation whose persisted RDD lives outside the CacheManager, so
+      * `clearCache` never frees it. Unlike a released cache, a released
+      * checkpoint cannot recompute: release only once its consumers ran.
+      */
+    def sharedCheckpoint: DataFrame = {
+      val cp = df.localCheckpoint()
+      cp.queryExecution.logical.foreach {
+        case r: LogicalRDD => tracked.add(() => r.rdd.unpersist(blocking = false))
+        case _ =>
+      }
+      cp
+    }
   }
 
   /** Number of currently tracked (not yet released) relations. */
   def trackedCount: Int = tracked.size()
 
-  /** Unpersist every tracked relation (non-blocking) and forget it. Safe to
-    * call while other queries build plans: a relation unpersisted here at
-    * worst recomputes; results never change.
+  /** Unpersist every tracked relation and checkpoint (non-blocking) and
+    * forget it. A cache unpersisted under a query still in flight at worst
+    * recomputes; a checkpoint's rows are gone, so call this between
+    * requests, never under one.
     */
   def release(): Unit = {
-    var df = tracked.poll()
-    while (df != null) { df.unpersist(blocking = false); df = tracked.poll() }
+    var unpersist = tracked.poll()
+    while (unpersist != null) { unpersist(); unpersist = tracked.poll() }
   }
 }

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * ASCII-only — without planted positives the dedup / decontamination /
   * repetition / charset-classifier pipelines would be verified only on the
   * trivial all-negative path. Every fixture is a pure deterministic
-  * function of (doc_id, text), expressed twice (Column + DuckDB SQL) so the
-  * two engines cannot drift.
+  * function of (doc_id, text); its DuckDB twin is
+  * [[graft.oracle.TextOracle]].
   */
 object Fixtures {
 
@@ -35,8 +35,8 @@ object Fixtures {
       timestamp_seconds(lit(TS_EPOCH_BASE) + col("vec_id") * 60))
 
   // ---- planted near/exact duplicates (dedup suite input) -------------------
-  private val NEAR_OFF = 10000000L
-  private val EXACT_OFF = 20000000L
+  private[graft] val NEAR_OFF = 10000000L
+  private[graft] val EXACT_OFF = 20000000L
 
   /** Corpus + planted near-duplicates (last 5 words dropped, doc_id + 1e7)
     * and exact duplicates (doc_id + 2e7), text canonicalized the same way
@@ -54,16 +54,6 @@ object Fixtures {
       .select((col("doc_id") + EXACT_OFF).as("doc_id"), lower(trim(col("text"))).as("text"))
     base.unionByName(near).unionByName(exact)
   }
-
-  val plantedDocsSql: String =
-    s"""SELECT doc_id, lower(trim(text)) AS text FROM documents
-       | UNION ALL
-       | SELECT doc_id + $NEAR_OFF AS doc_id, array_to_string(w[1:len(w)-5], ' ') AS text
-       | FROM (SELECT doc_id, regexp_extract_all(lower(trim(text)), '[^ \\t\\n\\x0B\\f\\r]+') AS w FROM documents)
-       | WHERE doc_id % 5 = 0 AND len(w) > 10
-       | UNION ALL
-       | SELECT doc_id + $EXACT_OFF AS doc_id, lower(trim(text)) AS text FROM documents
-       | WHERE doc_id % 25 = 0""".stripMargin.replace("\n", "")
 
   // ---- benchmark eval-set carve (decontamination input) --------------------
   /** A stand-in benchmark: for every doc with doc_id % 17 = 0, words 3..22
@@ -96,14 +86,6 @@ object Fixtures {
       .filter(col("doc_id") % 7 === 0 || col("doc_id") % 11 === 0)
       .select(col("doc_id"), col("text"),
         when(col("doc_id") % 7 === 0, lit(0d)).otherwise(lit(1d)).as("label"))
-
-  /** DuckDB twin of [[qualityCorpus]]'s text column (for the classifier's
-    * literal-inlined oracle — [[graft.OracleStash]]).
-    */
-  val qualityCorpusTextSql: String =
-    """CASE WHEN doc_id % 7 = 0
-      | THEN concat_ws(' ', coalesce(text, ''), 'click here buy now free offer winner prize claim instant cash bonus')
-      | ELSE text END""".stripMargin.replace("\n", "")
 
   // ---- within-doc repetition injection (repetition-score input) ------------
   /** Docs with doc_id % 9 = 0 get their first six words appended twice —
@@ -139,19 +121,6 @@ object Fixtures {
       .when(m === 9, lit("🎉 🎉"))
       .otherwise(t)
   }
-  val charsetTextSql: String =
-    """CASE doc_id % 11
-      | WHEN 0 THEN concat('こんにちは ', substr(text, 1, 40))
-      | WHEN 1 THEN concat('カタカナ ', substr(text, 1, 40))
-      | WHEN 2 THEN concat('漢字 ', substr(text, 1, 40))
-      | WHEN 3 THEN concat(substr(text, 1, 40), ' すごい！')
-      | WHEN 4 THEN 'wwww'
-      | WHEN 5 THEN concat('한국어 ', substr(text, 1, 40))
-      | WHEN 6 THEN concat('русский ', substr(text, 1, 40))
-      | WHEN 7 THEN '12345'
-      | WHEN 8 THEN ':_konkonmori: :_wave:'
-      | WHEN 9 THEN '🎉 🎉'
-      | ELSE text END""".stripMargin.replace("\n", "")
 
   /** (doc_id, text) with the charset-augmented message as `text`. */
   def charsetDocs(documents: DataFrame): DataFrame =
@@ -167,14 +136,6 @@ object Fixtures {
       .when(m === 4, lit("Member (1 year)"))
       .otherwise(lit("hello"))
   }
-  val badgeTextSql: String =
-    """CASE doc_id % 6
-      | WHEN 0 THEN NULL
-      | WHEN 1 THEN 'New member'
-      | WHEN 2 THEN concat(CAST(doc_id % 23 AS VARCHAR), ' months')
-      | WHEN 3 THEN concat(CAST(doc_id % 5 AS VARCHAR), ' years')
-      | WHEN 4 THEN 'Member (1 year)'
-      | ELSE 'hello' END""".stripMargin.replace("\n", "")
 
   /** (doc_id, badge) with the synthesized badge string. */
   def badgeDocs(documents: DataFrame): DataFrame =
@@ -190,14 +151,6 @@ object Fixtures {
       .when(m === 4, lit("looool"))
       .otherwise(t)
   }
-  val humorTextSql: String =
-    """CASE doc_id % 7
-      | WHEN 0 THEN concat(substr(text, 1, 30), ' lol')
-      | WHEN 1 THEN concat('草 ', substr(text, 1, 30))
-      | WHEN 2 THEN 'hahaha that was great'
-      | WHEN 3 THEN concat('笑いすぎた', 'ｗｗ')
-      | WHEN 4 THEN 'looool'
-      | ELSE text END""".stripMargin.replace("\n", "")
 
   /** (doc_id, text) with the humor-augmented message as `text`. */
   def humorDocs(documents: DataFrame): DataFrame =
@@ -215,12 +168,6 @@ object Fixtures {
       .when(m === 2, concat(t, lit(" ssn 123-45-6789")))
       .otherwise(t)
   }
-  val piiTextSql: String =
-    """CASE doc_id % 5
-      | WHEN 0 THEN concat(substr(text, 1, 60), ' contact me at user', CAST(doc_id AS VARCHAR), '@example.com')
-      | WHEN 1 THEN concat('call 555-', format('{:03d}', doc_id % 1000), '-4567 ', substr(text, 1, 60))
-      | WHEN 2 THEN concat(substr(text, 1, 60), ' ssn 123-45-6789')
-      | ELSE substr(text, 1, 60) END""".stripMargin.replace("\n", "")
 
   def piiDocs(documents: DataFrame): DataFrame =
     documents.select(col("doc_id"), piiText.as("text"))
@@ -236,12 +183,6 @@ object Fixtures {
       .when(m === 2, concat(lit("x &gt; y &amp;&amp; y &lt; z: "), t))
       .otherwise(t)
   }
-  val htmlTextSql: String =
-    """CASE doc_id % 4
-      | WHEN 0 THEN concat('<html><body><p>', substr(text, 1, 60), '</p><br/><div class="x">footer</div></body></html>')
-      | WHEN 1 THEN concat('<a href="http://example.com?a=1&amp;b=2">', substr(text, 1, 60), '</a> &lt;3')
-      | WHEN 2 THEN concat('x &gt; y &amp;&amp; y &lt; z: ', substr(text, 1, 60))
-      | ELSE substr(text, 1, 60) END""".stripMargin.replace("\n", "")
 
   def htmlDocs(documents: DataFrame): DataFrame =
     documents.select(col("doc_id"), htmlText.as("text"))
@@ -259,13 +200,6 @@ object Fixtures {
       .when(m === 3, concat(t, lit(" to:2024-03-10 till then")))
       .otherwise(t)
   }
-  val queryTextSql: String =
-    """CASE doc_id % 5
-      | WHEN 0 THEN concat('channel:"Pekora Ch." from:2024-01-15 ', substr(text, 1, 40))
-      | WHEN 1 THEN concat(substr(text, 1, 40), ' channel:chan_', CAST(doc_id % 7 AS VARCHAR))
-      | WHEN 2 THEN concat(substr(text, 1, 40), ' from:2024-02-30')
-      | WHEN 3 THEN concat(substr(text, 1, 40), ' to:2024-03-10 till then')
-      | ELSE substr(text, 1, 40) END""".stripMargin.replace("\n", "")
 
   def queryDocs(documents: DataFrame): DataFrame =
     documents.select(col("doc_id"), queryText.as("text"))

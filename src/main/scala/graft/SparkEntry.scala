@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators._
+import graft.oracle.Oracle
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
   *
@@ -217,12 +218,13 @@ object SparkEntry {
     "v_ann_lsh" -> ((s, d) => Vectors.annLsh(emb(s, d))),
     "v_knn_join" -> ((s, d) => Vectors.knnJoin(emb(s, d))),
     "v_knn_join_mp" -> ((s, d) => Vectors.knnJoinMultiProbe(emb(s, d))),
-    // two-level coarse quantizer for probe assignment (trained-constant
-    // stashed oracle replays the full hierarchy)
-    "v_knn_join_mph" -> ((s, d) => Vectors.knnJoinMultiProbeHier(emb(s, d), stashOracle = true)),
+    // two-level coarse quantizer for probe assignment (the oracle replays
+    // the recorded hierarchy)
+    "v_knn_join_mph" -> ((s, d) => { val e = emb(s, d)
+      Vectors.knnJoinMultiProbeHier(e, Vectors.trainProbeHierarchy(e).map(Oracle.knnJoinMph), 5, 2, 2, false) }),
     // blocks = LEARNED k-means cells instead of the label column (the geo
     // upgrade of the graph build); oracle replays train -> assign -> probe
-    // -> graph end-to-end through the unrolled-Lloyd CTE chain, no stash
+    // -> graph end-to-end through the unrolled-Lloyd CTE chain, no recorded model
     "v_knn_join_geo" -> ((s, d) => Vectors.knnJoinGeo(emb(s, d))),
     // graph-MV maintenance: stored graph + delta vectors, untouched blocks
     // pass through verbatim (an in-row `isin` filter on the collected
@@ -249,15 +251,19 @@ object SparkEntry {
         s, old, e.filter(col("vec_id") % 10 >= 8))
     }),
     // PQ codes + ADC scoring — the Lloyd codebook is not SQL-expressible,
-    // so no DuckDB oracle (rows-only check); the spec pins exact-path
-    // equality with brute force and determinism
-    "v_ann_pq" -> ((s, d) => Vectors.annPq(emb(s, d))),
-    // residual (two-stage) PQ refinement — same rows-only rationale
-    "v_ann_pq_residual" -> ((s, d) => Vectors.annPqResidual(emb(s, d))),
-    // rows-only by design (trained index, like the PQ family): spec pins
-    // brute-force equality at full probe/rerank + cell-pruning containment
-    "v_ann_ivfpq" -> ((s, d) => Vectors.annIvfPq(emb(s, d))),
-    "v_ann_ivfpq_geo" -> ((s, d) => Vectors.annIvfPqGeo(emb(s, d))),
+    // so training runs once here and the oracle replays the recorded
+    // codebook; the spec pins exact-path equality with brute force
+    "v_ann_pq" -> ((s, d) => { val e = emb(s, d)
+      Vectors.annPq(e, Vectors.trainPq(e).map(Oracle.annPq), 10, 100) }),
+    // residual (two-stage) PQ refinement — same recorded-model oracle
+    "v_ann_pq_residual" -> ((s, d) => { val e = emb(s, d)
+      Vectors.annPqResidual(e, Vectors.trainPqResidual(e).map(Oracle.annPqResidual), 10, 100) }),
+    // spec pins brute-force equality at full probe/rerank + cell-pruning
+    // containment
+    "v_ann_ivfpq" -> ((s, d) => { val e = emb(s, d)
+      Vectors.annIvfPq(e, Vectors.trainIvfPq(e).map(Oracle.annIvfPq), 10, 3, 100) }),
+    "v_ann_ivfpq_geo" -> ((s, d) => { val e = Vectors.geoCells(emb(s, d))
+      Vectors.annIvfPq(e, Vectors.trainIvfPq(e).map(Oracle.annIvfPqGeo), 10, 3, 100) }),
     // clustering-MV maintenance: the QUERY builds state from two ingest
     // partitions merged; the ORACLE builds it monolithically — equality
     // proves the additive maintenance is exact
@@ -270,9 +276,11 @@ object SparkEntry {
       Vectors.kmeansStateExploded(Vectors.mergeKmeansState(
         Vectors.kmeansState(even, cent), Vectors.kmeansState(odd, cent)))
     }),
-    // OPQ ANN (#105): learned orthogonal rotation + PQ — rows-only
-    // (Lloyd + Procrustes not SQL-expressible), spec-gated by OpqSpec
-    "v_ann_pq_opq" -> ((s, d) => Vectors.annPqOpq(emb(s, d))),
+    // OPQ ANN (#105): learned orthogonal rotation + PQ — Lloyd +
+    // Procrustes are not SQL-expressible, so the oracle replays the
+    // recorded rotation and codebook; OpqSpec pins the training
+    "v_ann_pq_opq" -> ((s, d) => { val e = emb(s, d)
+      Vectors.annPqOpq(e, Vectors.trainPqOpq(e).map(Oracle.annPqOpq), 10, 100) }),
     // --- text suite (#1-3, 45-48) ---
     "t_categorize" -> ((s, d) => TextOps.categorizeDocs(Fixtures.charsetDocs(docs(s, d)))),
     "t_membership_rank" -> ((s, d) => TextOps.membershipRankDocs(Fixtures.badgeDocs(docs(s, d)))),
@@ -291,15 +299,15 @@ object SparkEntry {
     "p_decontaminate_bloom" -> ((s, d) => Pipeline.decontaminateBloom(docs(s, d), Fixtures.evalPrompts(docs(s, d)))),
     "p_perplexity_buckets" -> ((s, d) => Pipeline.perplexityBuckets(docs(s, d))),
     // LR training itself is not SQL-expressible, but SCORING is: the
-    // trained (weights, bias) ride into a literal-inlined stashed oracle
-    // (OracleStash) that DuckDB re-runs over the raw table
-    "t_quality_classifier" -> ((s, d) => TextOps.qualityClassifier(
-      Fixtures.qualityCorpus(docs(s, d)), Fixtures.qualityLabels(docs(s, d)),
-      oracleTextSql = Some(Fixtures.qualityCorpusTextSql))),
+    // recorded (weights, bias) ride into a literal-inlined oracle that
+    // DuckDB re-runs over the raw table
+    "t_quality_classifier" -> ((s, d) => TextOps.qualityClassifier(Fixtures.qualityCorpus(docs(s, d)),
+      Oracle.qualityClassifier(TextOps.trainQualityClassifier(Fixtures.qualityLabels(docs(s, d)))))),
     // rows-only by design: iterative BPE training is not SQL-expressible;
     // spec-gated (hand-computed merges, Spark ≡ driver-encoder equality)
     "p_bpe_train" -> ((s, d) => Pipeline.bpeTrain(docs(s, d))),
-    "t_tokenize_bpe" -> ((s, d) => TextOps.tokenizeBpe(docs(s, d), oracleTextSql = Some("text"))),
+    "t_tokenize_bpe" -> ((s, d) => { val ds = docs(s, d)
+      TextOps.tokenizeBpe(ds, Oracle.tokenizeBpe(Pipeline.bpeMerges(ds))) }),
     "t_repetition" -> ((s, d) => Pipeline.repetitionScore(Fixtures.repeatedDocs(docs(s, d)))),
     "p_sample_hash" -> ((s, d) => Pipeline.sampleHash(docs(s, d))),
     "p_shuffle_shards" -> ((s, d) => Pipeline.shuffleShards(docs(s, d))),
@@ -320,7 +328,8 @@ object SparkEntry {
     "p_bpe_pairs" -> ((s, d) => Pipeline.bpePairs(docs(s, d))),
     "v_quantize_int8" -> ((s, d) => Vectors.quantizeInt8(emb(s, d))),
     "v_cluster_kmeans" -> ((s, d) => Vectors.clusterKmeans(emb(s, d))),
-    "v_cluster_kmeanspar" -> ((s, d) => Vectors.clusterKmeansPar(emb(s, d), stashOracle = true)),
+    "v_cluster_kmeanspar" -> ((s, d) => { val e = emb(s, d)
+      Vectors.clusterKmeansPar(e, Oracle.clusterKmeansPar(Vectors.trainKmeansPar(e))) }),
     "v_cluster_sample" -> ((s, d) => Vectors.clusterSample(emb(s, d))),
     // train-batch / monitor-stream: centroids from the batch corpus, the
     // batch twin of the streaming drift monitor as the oracle-checked form
@@ -358,160 +367,7 @@ object SparkEntry {
   )
 
   /** DuckDB-dialect oracle for each query (same table names, same column
-    * names, same rounding).
+    * names, same rounding): [[graft.oracle.Oracle.sql]].
     */
-  def oracleSql: Map[String, String] = Map(
-    "q_user_video_rollup" -> EventSemantics.userDataSql,
-    "q_user_monthly_activity" -> EventSemantics.userWeeklyActivitySql,
-    "q_language_stats" -> languageStatsSql,
-    "q_user_language_share" -> userLanguageShareSql,
-    "q_membership_summary" -> ChatStats.membershipSummarySql,
-    "q_hours_total" -> StreamingHours.totalSql,
-    "q_hours_avg" -> StreamingHours.avgSql,
-    "q_hours_max" -> StreamingHours.maxSql,
-    "q_monthly_hours" -> StreamingHours.monthlyHoursSql(1L),
-    "q_hours_diff" -> StreamingHours.hoursDiffSql,
-    "q_chat_makeup" -> Makeup.chatMakeupSql,
-    "q_message_type_percents" -> Makeup.messageTypePercentsSql("click", "jp"),
-    "q_common_users" -> ChatStats.commonUsersPairSql("click", "2024-01-01", "view", "2024-01-08"),
-    "q_common_users_matrix" -> ChatStats.commonUsersMatrixSql,
-    "q_common_members" -> ChatStats.commonMembersMatrixSql,
-    "q_membership_counts" -> s"SELECT * FROM (${ChatStats.membershipSummarySql}) WHERE week = DATE '2024-01-15'",
-    "q_membership_total" -> membershipTotalSql,
-    "q_membership_changes" -> ChatStats.membershipChangesSql,
-    "q_chat_leaderboard" -> ChatStats.leaderboardSql(),
-    "q_user_changes" -> ChatStats.userChangesSql(),
-    "q_exclusive_users" -> ChatStats.exclusiveUsersSql,
-    "q_heavy_lang_users" -> ChatStats.heavyLangUsersSql,
-    "q_user_percentile" -> ChatStats.userPercentileSql,
-    "q_engagement" -> ChatStats.engagementSql,
-    "q_attrition" -> ChatStats.attritionSql(),
-    "q_retention_cohort" -> ChatStats.retentionCohortSql,
-    // the full-scan rollup IS the oracle: increment(rollup(old), new) must
-    // reproduce it exactly (additive-merge equivalence)
-    "q_rollup_incremental" -> EventSemantics.userWeeklyActivitySql,
-    // the full-scan userData IS the oracle (mergeable-aggregate equivalence)
-    "q_userdata_incremental" -> EventSemantics.userDataSql,
-    "q_site_stats" -> ChatStats.siteStatsSql,
-    "q_funniest_moment" -> Highlights.funniestMomentSql(),
-    "q_highlight_velocity" -> Highlights.highlightVelocitySql(),
-    "q_video_highlights" -> Highlights.videoHighlightsSql(),
-    "q_log_coverage" -> Highlights.logCoverageSql(),
-    "q_funniest_offsets" -> Highlights.funniestOffsetsSql(),
-    "q_channel_names" -> StreamingHours.channelNamesSql,
-    "q_date_ranges" -> StreamingHours.dateRangesSql,
-    "q_channel_similarity" -> Similarity.channelSimilaritySql,
-    "q_recommend" -> Similarity.recommendSql(exclThreshold = 12L),
-    "q_content_similarity" -> Similarity.contentSimilaritySql,
-    "q_clustering_communities" -> Similarity.clusteringCommunitiesSql,
-    "q_forecast_hours" -> Forecast.forecastHoursSql(),
-    "d_dedup_exact" -> Dedup.dedupExactSql,
-    "d_dedup_minhash" -> Dedup.dedupMinhashSql(),
-    "d_minhash_incremental" -> Dedup.dedupMinhashSql(),
-    "d_clusters_incremental" -> Dedup.dedupClustersSql(),
-    "d_minhash_incremental_wh" -> Dedup.dedupMinhashSql(),
-    "d_clusters_incremental_wh" -> Dedup.dedupClustersSql(),
-    "d_dedup_simhash" -> Dedup.dedupSimhashSql(),
-    "d_ngram_jaccard" -> Dedup.ngramJaccardSql(),
-    "d_ngram_jaccard_capped" -> Dedup.ngramJaccardCappedSql(cap = 16L),
-    "d_embed_neardup" -> Dedup.embedNearDupSql(),
-    "d_dedup_clusters" -> Dedup.dedupClustersSql(),
-    "d_dedup_incremental" -> Dedup.dedupIncrementalSql(),
-    "d_substring_overlap" -> Dedup.substringOverlapSql(),
-    "d_dedup_lines" -> Dedup.dedupLinesSql(),
-    "d_semdedup" -> Dedup.semDedupSql(),
-    "d_semdedup_geo" -> Dedup.semDedupGeoSql(),
-    "q_search_highlights" -> Vectors.searchHighlightsSql(),
-    "v_ann_topk" -> Vectors.annTopKSql(),
-    "v_ann_ivf" -> Vectors.annIvfSql(),
-    "v_ann_lsh" -> Vectors.annLshSql(),
-    "v_knn_join" -> Vectors.knnJoinSql(),
-    "v_knn_join_mp" -> Vectors.knnJoinMultiProbeSql(),
-    "v_knn_join_geo" -> Vectors.knnJoinGeoSql(),
-    "v_knn_join_incremental" -> Vectors.knnGraphSql(),
-    "v_knn_join_incremental_wh" -> Vectors.knnGraphSql(),
-    "t_categorize" -> TextOps.categorizeDocsSql,
-    "t_membership_rank" -> TextOps.membershipRankDocsSql,
-    "t_humor" -> TextOps.humorDocsSql,
-    "t_lang_id" -> TextOps.langIdDocsSql,
-    "t_quality_score" -> TextOps.qualityDocsSql,
-    "t_token_count" -> TextOps.tokenCountDocsSql,
-    "t_fingerprint" -> TextOps.fingerprintDocsSql,
-    "t_pii_scrub" -> TextOps.piiScrubDocsSql,
-    "t_strip_html" -> TextOps.stripHtmlDocsSql,
-    "t_char_entropy" -> TextOps.charEntropyDocsSql,
-    "t_gopher_rules" -> TextOps.gopherRulesDocsSql,
-    "t_parse_query" -> TextOps.parseQueryDocsSql,
-    "p_decontaminate" -> Pipeline.decontaminateSql(),
-    // same oracle as p_decontaminate: the bloom is candidate pruning only,
-    // an exact join re-verifies every survivor
-    "p_decontaminate_bloom" -> Pipeline.decontaminateSql(),
-    "p_perplexity_buckets" -> Pipeline.perplexityBucketsSql(),
-    "t_repetition" -> Pipeline.repetitionScoreSql(),
-    "p_sample_hash" -> Pipeline.sampleHashSql(),
-    "p_shuffle_shards" -> Pipeline.shuffleShardsSql(),
-    "p_sample_stratified" -> Pipeline.sampleStratifiedSql(),
-    "p_sample_threshold" -> Pipeline.sampleThresholdSql(),
-    "p_dsir" -> Pipeline.dsirSql(),
-    "p_mix_sample" -> Pipeline.mixSampleSql(),
-    "p_dataset_card" -> Pipeline.datasetCardSql,
-    "p_pack" -> Pipeline.packSequencesSql(),
-    "p_corpus_build" -> Pipeline.corpusBuildSql(),
-    "p_token_percentiles" -> Pipeline.tokenPercentilesSql,
-    "p_unigram_nll" -> Pipeline.unigramNllSql,
-    "p_bigram_nll" -> Pipeline.bigramNllSql,
-    "p_top_terms" -> Pipeline.topTermsSql(),
-    "p_bpe_pairs" -> Pipeline.bpePairsSql(),
-    "v_quantize_int8" -> Vectors.quantizeInt8Sql,
-    "v_cluster_kmeans" -> Vectors.clusterKmeansSql(),
-    "v_kmeans_incremental" -> Vectors.kmeansStateSql(),
-    "v_cluster_sample" -> Vectors.clusterSampleSql(),
-    "s_stream_cluster" -> graft.streaming.ClusterStream.clusterCountsSql(),
-    // the stub decode + frame slicing are deterministic byte math, and the
-    // resize's source pixels are a closed-form formula through a LOSSLESS
-    // codec, so these three ARE oracle-checkable; the plain codec
-    // round-trips (m_image_decode/m_audio_decode) stay rows-only
-    "m_multimodal_meta" -> operators.Multimodal.mediaFeaturesSql,
-    "m_frame_sample" -> operators.Multimodal.frameSampleSql(),
-    "m_resize" -> operators.Multimodal.imageResizeSql(),
-    "s_stream_sessionize" -> graft.streaming.EventStream.sessionizeExactSql(),
-    "s_stream_membership" -> graft.streaming.MembershipStream.transitionsSql,
-    "s_stream_dedup" -> graft.streaming.DedupStream.survivorsSql,
-    "s_stream_velocity" -> graft.streaming.VelocityStream.burstsSql(),
-    "s_sessionize_gap" -> graft.streaming.EventStream.gapSessionsSql(),
-    "src_chatlog_rollup" -> graft.sources.ChatLogSources.fixtureRollupSql
-  ) ++ trainedOracles
-
-  /** Trained-model oracles (literal-inlined codebooks/rotations/LUTs —
-    * [[graft.OracleStash]]): present only after the
-    * corresponding query has run in this JVM. Verify runs every query
-    * BEFORE dumping oracle_sql.json, so the driver's gate always includes
-    * them; a cold JVM simply omits the entry (→ the driver records the
-    * weaker rows-only check rather than comparing against a stale oracle).
-    */
-  private def trainedOracles: Map[String, String] =
-    Seq("v_ann_pq", "v_ann_pq_residual", "v_ann_pq_opq", "v_ann_ivfpq", "v_ann_ivfpq_geo",
-        "t_quality_classifier", "t_tokenize_bpe", "v_cluster_kmeanspar", "v_knn_join_mph")
-      .flatMap(k => OracleStash.get(k).map(k -> _)).toMap
-
-  private val languageStatsSql: String =
-    s"""WITH ud AS (${EventSemantics.userDataSql})
-       | SELECT channel, CAST(date_trunc('week', day) AS DATE) AS week,
-       |  CAST(SUM(jp_count) AS BIGINT) AS jp_count, CAST(SUM(kr_count) AS BIGINT) AS kr_count,
-       |  CAST(SUM(ru_count) AS BIGINT) AS ru_count, CAST(SUM(emoji_count) AS BIGINT) AS emoji_count,
-       |  CAST(SUM(es_en_id_count) AS BIGINT) AS es_en_id_count,
-       |  CAST(SUM(total_message_count) AS BIGINT) AS total_messages
-       | FROM ud WHERE total_message_count > 0 GROUP BY 1, 2""".stripMargin.replace("\n", "")
-
-  private val userLanguageShareSql: String =
-    s"""WITH ud AS (${EventSemantics.userDataSql})
-       | SELECT user_id, channel, CAST(date_trunc('week', day) AS DATE) AS week,
-       |  CAST(SUM(jp_count) AS BIGINT) AS total_jp_messages,
-       |  CAST(SUM(total_message_count - emoji_count) AS BIGINT) AS total_non_emoji_messages
-       | FROM ud WHERE total_message_count > 0 GROUP BY 1, 2, 3""".stripMargin.replace("\n", "")
-
-  private val membershipTotalSql: String =
-    s"""SELECT channel, week, CAST(SUM(membership_count) AS BIGINT) AS total_members
-       | FROM (${ChatStats.membershipSummarySql})
-       | WHERE membership_rank <> -1 GROUP BY 1, 2""".stripMargin.replace("\n", "")
+  def oracleSql: Map[String, String] = graft.oracle.Oracle.sql
 }

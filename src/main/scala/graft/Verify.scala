@@ -20,7 +20,7 @@ object Verify {
         // rows just written (one bounded aggregate over the dump file) —
         // the oracle's BIGINT key would MIS-RANK, not error, past 2^40
         if (name.startsWith("v_knn_join"))
-          graft.operators.Checks.requireOkeyDomain(
+          graft.oracle.Oracle.requireOkeyDomain(
             spark.read.parquet(s"$outDir/$name"), name)
       } catch { case e: Throwable =>
         failed += name
@@ -28,9 +28,8 @@ object Verify {
       }
       Actions.reset(spark)
     }
-    // oracleSql must be materialized AFTER the loop: the trained-model
-    // oracles (Vectors.stashedSql) only exist once their query has run in
-    // this JVM — binding before the loop dumps an empty stash.
+    // oracleSql must be read AFTER the loop: a trained key's oracle renders
+    // the model its registry entry recorded while running in this JVM.
     val oracles = SparkEntry.oracleSql.filter(kv => queries.contains(kv._1))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

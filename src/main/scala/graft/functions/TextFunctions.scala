@@ -17,19 +17,11 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Java's default `\s` class spelled explicitly, for DuckDB twins: RE2's
-    * `\s` lacks U+000B (vertical tab), so every oracle regex uses these
-    * classes instead of `\s`/`\S` — otherwise a VT inside text makes the
-    * two engines tokenize differently and fails the gate.
-    */
-  val WS_SQL = "[ \\t\\n\\x0B\\f\\r]"
-  val NWS_SQL = "[^ \\t\\n\\x0B\\f\\r]"
-
   // Java (Spark) vs RE2 (DuckDB) script-class spellings.
   private val jpJ = "[\\p{IsHiragana}\\p{IsKatakana}\\p{IsHan}]"
-  private val jpD = "[\\p{Hiragana}\\p{Katakana}\\p{Han}]"
-  private val krJ = "[\\p{IsHangul}]"; private val krD = "[\\p{Hangul}]"
-  private val ruJ = "[\\p{IsCyrillic}]"; private val ruD = "[\\p{Cyrillic}]"
+  private[graft] val jpD = "[\\p{Hiragana}\\p{Katakana}\\p{Han}]"
+  private val krJ = "[\\p{IsHangul}]"; private[graft] val krD = "[\\p{Hangul}]"
+  private val ruJ = "[\\p{IsCyrillic}]"; private[graft] val ruD = "[\\p{Cyrillic}]"
 
   // ---- categorize_message (chat_parser.py:60) ------------------------------
   // Cascade: pure-emoji -> jp (script | ！？ | ^[wｗ]+$) -> kr -> ru ->
@@ -39,12 +31,6 @@ object TextFunctions {
     val noEmoji = regexp_replace(noShort, "[\\p{So}]", "")
     val remainder = regexp_replace(noEmoji, "[\\s\\x{200D}\\x{FE0E}\\x{FE0F}]", "")
     remainder === "" && (noShort =!= c || noEmoji =!= noShort)
-  }
-  private def isPureEmojiSql(e: String): String = {
-    val noShort = s"regexp_replace($e, ':[^: \\t\\n\\x0B\\f\\r]+:', '', 'g')"
-    val noEmoji = s"regexp_replace($noShort, '[\\p{So}]', '', 'g')"
-    val remainder = s"regexp_replace($noEmoji, '[ \\t\\n\\x0B\\f\\r\\x{200D}\\x{FE0E}\\x{FE0F}]', '', 'g')"
-    s"($remainder = '' AND ($noShort <> $e OR $noEmoji <> $noShort))"
   }
 
   def categorize(c: Column): Column = {
@@ -61,17 +47,6 @@ object TextFunctions {
       .when(lo.rlike("^[0-9]+\\z"), "number")
       .otherwise("es_en_id")
   }
-  def categorizeSql(e: String): String = {
-    val lo = s"lower(trim($e))"
-    s"""CASE WHEN $e IS NULL OR trim($e) = '' THEN NULL
-       | WHEN ${isPureEmojiSql(s"trim($e)")} THEN 'emoji'
-       | WHEN regexp_matches($lo, '$jpD') OR regexp_matches($lo, '[！？]')
-       |      OR regexp_matches($lo, '^[wｗ]+$$') THEN 'jp'
-       | WHEN regexp_matches($lo, '$krD') THEN 'kr'
-       | WHEN regexp_matches($lo, '$ruD') THEN 'ru'
-       | WHEN regexp_matches($lo, '^[0-9]+$$') THEN 'number'
-       | ELSE 'es_en_id' END""".stripMargin.replace("\n", "")
-  }
 
   // ---- parse_membership_rank (chat_parser.py:11) ---------------------------
   // '' / null -> -1; 'new member' -> 0; 'N month(s)' -> N; 'N year(s)' -> 12N.
@@ -84,19 +59,9 @@ object TextFunctions {
       .when(num =!= "", when(unit === "year", num.cast("int") * 12).otherwise(num.cast("int")))
       .otherwise(-1)
   }
-  def membershipRankSql(e: String): String = {
-    val lo = s"lower(trim(coalesce($e, '')))"
-    val num = s"regexp_extract($lo, '(\\d+)$WS_SQL*(month|year)', 1)"
-    val unit = s"regexp_extract($lo, '(\\d+)$WS_SQL*(month|year)', 2)"
-    s"""CASE WHEN $lo = '' THEN -1
-       | WHEN contains($lo, 'new member') THEN 0
-       | WHEN $num <> '' THEN CASE WHEN $unit = 'year'
-       |   THEN CAST($num AS INT) * 12 ELSE CAST($num AS INT) END
-       | ELSE -1 END""".stripMargin.replace("\n", "")
-  }
 
   // ---- has_humor (feature_analysis.py:7) -----------------------------------
-  private val humorList = Seq(
+  private[graft] val humorList = Seq(
     "草", "茶葉", "_fbkcha", "_lol", "lmao", "lmfao", "haha", "🤣", "😆",
     "jaja", "笑", "xd", "wkwk", "ｗ", "rofl", "kek", "looool", "xddd")
 
@@ -107,13 +72,6 @@ object TextFunctions {
     val hasLol = c.rlike("(?i)\\blol+\\b")
     val repeated = c.rlike("(?i)(ha){2,}|(w{2,})|(o?l{2,}o+l+)")
     anySub || hasLol || wEnd || repeated
-  }
-  def hasHumorSql(e: String): String = {
-    val anySub = humorList.map(s => s"contains($e, '$s')").mkString(" OR ")
-    s"""($anySub
-       | OR regexp_matches($e, '(?i)\\blol+\\b')
-       | OR (regexp_matches($e, '$jpD') AND regexp_matches($e, 'ｗ+$$'))
-       | OR regexp_matches($e, '(?i)(ha){2,}|(w{2,})|(o?l{2,}o+l+)'))""".stripMargin.replace("\n", "")
   }
 
   // ---- language ID heuristic (training-data op #45) ------------------------
@@ -127,26 +85,14 @@ object TextFunctions {
       .when(lo.rlike("\\b(the|and|of|to|in|is|it|for|that|with)\\b"), "en")
       .otherwise("unk")
   }
-  def langIdSql(e: String): String = {
-    val lo = s"lower($e)"
-    s"""CASE WHEN $e IS NULL THEN NULL
-       | WHEN regexp_matches($lo, '$jpD') THEN 'ja'
-       | WHEN regexp_matches($lo, '$krD') THEN 'ko'
-       | WHEN regexp_matches($lo, '$ruD') THEN 'ru'
-       | WHEN regexp_matches($lo, '\\b(the|and|of|to|in|is|it|for|that|with)\\b') THEN 'en'
-       | ELSE 'unk' END""".stripMargin.replace("\n", "")
-  }
 
   // ---- token counting (training-data op #47) -------------------------------
   /** Whitespace tokens. */
   def wsTokenCount(c: Column): Column = regexp_count(c, lit("\\S+"))
-  def wsTokenCountSql(e: String): String = s"len(regexp_extract_all($e, '$NWS_SQL+'))"
 
   /** BPE-ish pre-tokenizer: letter runs, single digits, single symbols. */
   private val bpePat = "[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"
-  private val bpePatSql = "[A-Za-z]+|[0-9]|[^A-Za-z0-9 \\t\\n\\x0B\\f\\r]"
   def bpeTokenCount(c: Column): Column = regexp_count(c, lit(bpePat))
-  def bpeTokenCountSql(e: String): String = s"len(regexp_extract_all($e, '$bpePatSql'))"
 
   // ---- quality score (training-data op #46) --------------------------------
   // Blend of length, stopword-ratio proximity to 0.4, symbol ratio, mean
@@ -163,17 +109,6 @@ object TextFunctions {
     when(words === 0d, 0d)
       .otherwise(lenScore * 0.25d + stopScore * 0.25d + punctScore * 0.25d + mwlScore * 0.25d)
   }
-  def qualityScoreSql(e: String): String = {
-    val words = s"CAST(len(regexp_extract_all($e, '$NWS_SQL+')) AS DOUBLE)"
-    val stops = s"CAST(len(regexp_extract_all(lower($e), '\\b(the|a|and|of|to|in|is|it|for|on)\\b')) AS DOUBLE)"
-    val punct = s"CAST(len(regexp_extract_all($e, '[^A-Za-z0-9 \\t\\n\\x0B\\f\\r]')) AS DOUBLE)"
-    val chars = s"CAST(length(regexp_replace($e, '$WS_SQL', '', 'g')) AS DOUBLE)"
-    s"""CASE WHEN $words = 0 THEN 0 ELSE
-       |  least($words / 100, 1) * 0.25
-       |  + (1 - least(abs($stops / $words - 0.4) / 0.4, 1)) * 0.25
-       |  + (1 - least($punct / $chars * 5, 1)) * 0.25
-       |  + least($chars / $words / 8, 1) * 0.25 END""".stripMargin.replace("\n", "")
-  }
 
   // ---- Gopher-style rule filter (training-data op #81) ---------------------
   /** The published Gopher repetition/quality RULES (Rae et al. 2021, §A1.1)
@@ -184,7 +119,7 @@ object TextFunctions {
     * ≥ 80% words with an alphabetic char, ≥ 2 distinct stopwords).
     * All in-row exact double arithmetic — zero exchanges (t_ invariant).
     */
-  private val gopherStops = Seq("the", "be", "to", "of", "and", "that", "have", "with")
+  private[graft] val gopherStops = Seq("the", "be", "to", "of", "and", "that", "have", "with")
 
   def gopherWords(c: Column): Column = wsTokenCount(c).cast("double")
   def gopherMwl(c: Column): Column =
@@ -197,17 +132,6 @@ object TextFunctions {
   def gopherStopCount(c: Column): Column =
     gopherStops.map(s => when(lower(c).rlike(s"\\b$s\\b"), 1).otherwise(0))
       .reduce[Column](_ + _).cast("long")
-
-  def gopherWordsSql(e: String): String =
-    s"CAST(len(regexp_extract_all($e, '$NWS_SQL+')) AS DOUBLE)"
-  def gopherMwlSql(e: String): String =
-    s"CAST(length(regexp_replace($e, '$WS_SQL', '', 'g')) AS DOUBLE) / ${gopherWordsSql(e)}"
-  def gopherSymbolRatioSql(e: String): String =
-    s"CAST(len(regexp_extract_all($e, '#')) + len(regexp_extract_all($e, '\\.\\.\\.')) AS DOUBLE) / ${gopherWordsSql(e)}"
-  def gopherAlphaFracSql(e: String): String =
-    s"CAST(len(regexp_extract_all($e, '$NWS_SQL*[A-Za-z]$NWS_SQL*')) AS DOUBLE) / ${gopherWordsSql(e)}"
-  def gopherStopCountSql(e: String): String =
-    s"CAST(${gopherStops.map(s => s"(CASE WHEN regexp_matches(lower($e), '\\b$s\\b') THEN 1 ELSE 0 END)").mkString(" + ")} AS BIGINT)"
 
   /** The five Gopher-rule predicates at the canonical thresholds
     * (50–100k words, mean word length 3–10, symbol ratio < 0.1, alpha
@@ -231,25 +155,10 @@ object TextFunctions {
   /** All five rules ANDed — the Gopher keep decision. */
   def gopherKeep(t: Column): Column = gopherRuleCols(t).reduce(_ && _)
 
-  def gopherRuleSqls(e: String): Seq[String] = {
-    val w = gopherWordsSql(e)
-    Seq(
-      s"($w > 0 AND $w >= 50 AND $w <= 100000)",
-      s"($w > 0 AND ${gopherMwlSql(e)} >= 3 AND ${gopherMwlSql(e)} <= 10)",
-      s"($w > 0 AND ${gopherSymbolRatioSql(e)} < 0.1)",
-      s"($w > 0 AND ${gopherAlphaFracSql(e)} > 0.8)",
-      s"(${gopherStopCountSql(e)} >= 2)")
-  }
-
-  def gopherKeepSql(e: String): String =
-    gopherRuleSqls(e).mkString("(", " AND ", ")")
-
   // ---- document fingerprint (training-data op #48) -------------------------
   /** Canonical-token md5 fingerprint (whitespace-normalization invariant). */
   def md5Fingerprint(c: Column): Column =
     md5(concat_ws(" ", split(lower(trim(c)), "\\s+")))
-  def md5FingerprintSql(e: String): String =
-    s"md5(array_to_string(regexp_extract_all(lower(trim($e)), '$NWS_SQL+'), ' '))"
 
   /** Order-sensitive polynomial rolling hash: left fold
     * acc = (acc * 131 + tokenId) mod 1e9+7 where tokenId is a 24-bit
@@ -259,10 +168,5 @@ object TextFunctions {
     val toks = split(lower(trim(c)), "\\s+")
     val ids = transform(toks, t => conv(substring(md5(t), 1, 6), 16, 10).cast("long"))
     aggregate(ids, lit(0L), (acc, x) => (acc * 131L + x) % 1000000007L)
-  }
-  def polyFingerprintSql(e: String): String = {
-    val toks = s"regexp_extract_all(lower(trim($e)), '$NWS_SQL+')"
-    val ids = s"list_transform($toks, t -> CAST(concat('0x', substr(md5(t), 1, 6)) AS BIGINT))"
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), $ids), (acc, x) -> (acc * 131 + x) % 1000000007)"
   }
 }

@@ -96,24 +96,6 @@ object ChatStats {
       )
   }
 
-  val membershipSummarySql: String =
-    s"""WITH ud AS ($userDataSql),
-       | wk AS (SELECT *, CAST(date_trunc('week', day) AS DATE) AS week FROM ud),
-       | latest AS (
-       |  SELECT channel, week, membership_rank, user_id,
-       |    ROW_NUMBER() OVER (PARTITION BY user_id, channel, week ORDER BY
-       |      CASE WHEN membership_rank >= 0 THEN 0
-       |           WHEN membership_rank = -2 THEN 1 ELSE 2 END ASC,
-       |      last_ts DESC, day DESC) AS rn
-       |  FROM wk),
-       | counts AS (
-       |  SELECT channel, week, membership_rank,
-       |    COUNT(user_id) AS membership_count
-       |  FROM latest WHERE rn = 1 GROUP BY 1, 2, 3)
-       | SELECT channel, week, membership_rank, membership_count,
-       |  ${flSql("CAST(membership_count AS DOUBLE) * 100 / CAST(SUM(membership_count) OVER (PARTITION BY channel, week) AS DOUBLE)", 4)} AS percentage_total
-       | FROM counts""".stripMargin.replace("\n", "")
-
   /** get_group_membership_summary for ONE period (the reference endpoint is
     * month-scoped, api.py:1792; here the period is the ISO week and
     * `weekStart` must be a Monday). The period predicate lands on the RAW
@@ -161,13 +143,6 @@ object ChatStats {
       .select("channel", "week", "position", "user_id", "messages")
   }
 
-  def leaderboardSql(k: Int = 10): String =
-    s"""WITH act AS ($userWeeklyActivitySql)
-       | SELECT channel, week, position, user_id, messages FROM (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY channel, week
-       |    ORDER BY messages DESC, user_id ASC) AS position FROM act)
-       | WHERE position <= $k""".stripMargin.replace("\n", "")
-
   /** get_chat_engagement (api.py:2853): users, messages, avg msgs/user. */
   def engagement(events: DataFrame): DataFrame =
     userWeeklyActivity(events)
@@ -180,13 +155,6 @@ object ChatStats {
         "avg_messages_per_user",
         fl(col("total_messages").cast("double") / col("total_users").cast("double"), 4)
       )
-
-  val engagementSql: String =
-    s"""WITH act AS ($userWeeklyActivitySql)
-       | SELECT channel, week, COUNT(user_id) AS total_users,
-       |  CAST(SUM(messages) AS BIGINT) AS total_messages,
-       |  ${flSql("CAST(SUM(messages) AS DOUBLE) / CAST(COUNT(user_id) AS DOUBLE)", 4)} AS avg_messages_per_user
-       | FROM act GROUP BY 1, 2""".stripMargin.replace("\n", "")
 
   /** Sketch twin of [[engagement]] for the 100 TB interactive path: HLL++
     * distinct users straight off the event scan — no per-user rollup
@@ -217,12 +185,6 @@ object ChatStats {
       .withColumn("percentile", fl(cume_dist().over(w) * 100d, 4))
       .select("user_id", "channel", "week", "messages", "percentile")
   }
-
-  val userPercentileSql: String =
-    s"""WITH act AS ($userWeeklyActivitySql)
-       | SELECT user_id, channel, week, messages,
-       |  ${flSql("CUME_DIST() OVER (PARTITION BY channel, week ORDER BY messages ASC) * 100", 4)} AS percentile
-       | FROM act""".stripMargin.replace("\n", "")
 
   /** get_common_users / get_common_users_matrix (api.py:1438/1521):
     * directional common-user percentages for every channel pair per week.
@@ -327,19 +289,6 @@ object ChatStats {
       .groupBy("channel", "week")
       .agg(hll_union_agg(col("sk")).as("sk"))
 
-  val commonUsersMatrixSql: String =
-    s"""WITH act AS ($userWeeklyActivitySql),
-       | ucw AS (SELECT DISTINCT user_id, channel, week FROM act),
-       | pairs AS (
-       |  SELECT a.week, a.channel AS channel_a, b.channel AS channel_b,
-       |    COUNT(*) AS common_users
-       |  FROM ucw a JOIN ucw b ON a.user_id = b.user_id AND a.week = b.week
-       |  GROUP BY 1, 2, 3),
-       | sizes AS (SELECT week, channel, COUNT(*) AS total_users FROM ucw GROUP BY 1, 2)
-       | SELECT p.week, p.channel_a, p.channel_b, p.common_users,
-       |  ${flSql("CAST(p.common_users AS DOUBLE) * 100 / CAST(s.total_users AS DOUBLE)", 4)} AS pct_a_to_b
-       | FROM pairs p JOIN sizes s ON s.week = p.week AND s.channel = p.channel_a""".stripMargin.replace("\n", "")
-
   /** get_common_users (api.py:1438) for one cross-period pair:
     * channel A in week wa vs channel B in week wb (sets can come from
     * different periods, unlike the matrix).
@@ -372,16 +321,6 @@ object ChatStats {
       )
   }
 
-  def commonUsersPairSql(chA: String, wa: String, chB: String, wb: String): String =
-    s"""WITH act AS ($userWeeklyActivitySql),
-       | sa AS (SELECT DISTINCT user_id FROM act WHERE channel = '$chA' AND week = DATE '$wa'),
-       | sb AS (SELECT DISTINCT user_id FROM act WHERE channel = '$chB' AND week = DATE '$wb'),
-       | c AS (SELECT COUNT(*) AS num_common_users FROM sa JOIN sb USING (user_id))
-       | SELECT c.num_common_users,
-       |  ${flSql("CAST(c.num_common_users AS DOUBLE) * 100 / NULLIF(CAST((SELECT COUNT(*) FROM sa) AS DOUBLE), 0)", 4)} AS pct_a_to_b,
-       |  ${flSql("CAST(c.num_common_users AS DOUBLE) * 100 / NULLIF(CAST((SELECT COUNT(*) FROM sb) AS DOUBLE), 0)", 4)} AS pct_b_to_a
-       | FROM c""".stripMargin.replace("\n", "")
-
   /** get_common_members (api.py:1618): matrix restricted to members
     * (weekly max rank >= 0), by [[commonUsersMatrixFrom]].
     */
@@ -394,21 +333,6 @@ object ChatStats {
       .select("user_id", "channel", "week")
     commonUsersMatrixFrom(members).withColumnRenamed("common_users", "common_members")
   }
-
-  val commonMembersMatrixSql: String =
-    s"""WITH ud AS ($userDataSql),
-       | mem AS (
-       |  SELECT user_id, channel, CAST(date_trunc('week', day) AS DATE) AS week
-       |  FROM ud GROUP BY 1, 2, 3 HAVING MAX(membership_rank) >= 0),
-       | pairs AS (
-       |  SELECT a.week, a.channel AS channel_a, b.channel AS channel_b,
-       |    COUNT(*) AS common_members
-       |  FROM mem a JOIN mem b ON a.user_id = b.user_id AND a.week = b.week
-       |  GROUP BY 1, 2, 3),
-       | sizes AS (SELECT week, channel, COUNT(*) AS total_members FROM mem GROUP BY 1, 2)
-       | SELECT p.week, p.channel_a, p.channel_b, p.common_members,
-       |  ${flSql("CAST(p.common_members AS DOUBLE) * 100 / CAST(s.total_members AS DOUBLE)", 4)} AS pct_a_to_b
-       | FROM pairs p JOIN sizes s ON s.week = p.week AND s.channel = p.channel_a""".stripMargin.replace("\n", "")
 
   /** get_group_membership_changes (api.py:1832): LAG(rank) per
     * (user, channel) over days -> gains (-1 -> member), losses
@@ -429,20 +353,6 @@ object ChatStats {
       )
       .withColumn("differential", col("gains_count") - col("losses_count"))
   }
-
-  val membershipChangesSql: String =
-    s"""WITH ud AS ($userDataSql),
-       | t AS (
-       |  SELECT channel, CAST(date_trunc('week', day) AS DATE) AS week,
-       |    membership_rank,
-       |    LAG(membership_rank) OVER (PARTITION BY user_id, channel ORDER BY day ASC) AS prev_rank
-       |  FROM ud)
-       | SELECT channel, week,
-       |  COUNT(CASE WHEN prev_rank = -1 AND membership_rank <> -1 THEN 1 END) AS gains_count,
-       |  COUNT(CASE WHEN prev_rank <> -1 AND membership_rank = -1 THEN 1 END) AS losses_count,
-       |  COUNT(CASE WHEN prev_rank = -1 AND membership_rank <> -1 THEN 1 END)
-       |   - COUNT(CASE WHEN prev_rank <> -1 AND membership_rank = -1 THEN 1 END) AS differential
-       | FROM t WHERE prev_rank IS NOT NULL GROUP BY 1, 2""".stripMargin.replace("\n", "")
 
   /** get_user_changes (api.py:2097): active users (>= threshold msgs)
     * gained/lost vs previous week per channel.
@@ -477,28 +387,6 @@ object ChatStats {
         (col("users_gained") - col("users_lost")).as("net_change"))
   }
 
-  def userChangesSql(threshold: Int = 5): String =
-    s"""WITH act AS ($userWeeklyActivitySql),
-       | q AS (SELECT user_id, channel, week FROM act WHERE messages >= $threshold),
-       | prev AS (SELECT user_id, channel, CAST(week + INTERVAL 7 DAY AS DATE) AS week FROM q),
-       | gained AS (
-       |  SELECT channel, week, COUNT(*) AS users_gained FROM q
-       |  WHERE NOT EXISTS (SELECT 1 FROM prev p WHERE p.user_id = q.user_id
-       |    AND p.channel = q.channel AND p.week = q.week)
-       |  GROUP BY 1, 2),
-       | lost AS (
-       |  SELECT channel, week, COUNT(*) AS users_lost FROM prev
-       |  WHERE NOT EXISTS (SELECT 1 FROM q WHERE q.user_id = prev.user_id
-       |    AND q.channel = prev.channel AND q.week = prev.week)
-       |  GROUP BY 1, 2)
-       | SELECT COALESCE(g.channel, l.channel) AS channel,
-       |  COALESCE(g.week, l.week) AS week,
-       |  COALESCE(g.users_gained, 0) AS users_gained,
-       |  COALESCE(l.users_lost, 0) AS users_lost,
-       |  COALESCE(g.users_gained, 0) - COALESCE(l.users_lost, 0) AS net_change
-       | FROM gained g FULL OUTER JOIN lost l
-       |  ON g.channel = l.channel AND g.week = l.week""".stripMargin.replace("\n", "")
-
   /** get_exclusive_chat_users (api.py:2176): % of a channel's weekly users
     * active in no other channel that week. Each (user, channel, week) row
     * carries the user's channel count that week as a `count` window over
@@ -523,16 +411,6 @@ object ChatStats {
       .withColumn("exclusive_percent",
         fl(col("exclusive_users").cast("double") * 100d / col("total_users").cast("double"), 4))
 
-  val exclusiveUsersSql: String =
-    s"""WITH act AS ($userWeeklyActivitySql),
-       | ucw AS (SELECT DISTINCT user_id, channel, week FROM act),
-       | span AS (SELECT user_id, week, COUNT(*) AS n_channels FROM ucw GROUP BY 1, 2)
-       | SELECT u.channel, u.week, COUNT(*) AS total_users,
-       |  COUNT(CASE WHEN s.n_channels = 1 THEN 1 END) AS exclusive_users,
-       |  ${flSql("CAST(COUNT(CASE WHEN s.n_channels = 1 THEN 1 END) AS DOUBLE) * 100 / CAST(COUNT(*) AS DOUBLE)", 4)} AS exclusive_percent
-       | FROM ucw u JOIN span s ON s.user_id = u.user_id AND s.week = u.week
-       | GROUP BY 1, 2""".stripMargin.replace("\n", "")
-
   /** get_jp_user_percent (api.py:2464): % of a channel-week's users whose
     * jp messages exceed half their non-emoji messages. Integer compare
     * (2*jp > non_emoji) keeps it exact.
@@ -547,17 +425,6 @@ object ChatStats {
       )
       .withColumn("jp_user_percent",
         fl(col("jp_users").cast("double") * 100d / col("total_users").cast("double"), 4))
-
-  val heavyLangUsersSql: String =
-    s"""WITH ud AS ($userDataSql),
-       | share AS (
-       |  SELECT user_id, channel, CAST(date_trunc('week', day) AS DATE) AS week,
-       |    SUM(jp_count) AS jp, SUM(total_message_count - emoji_count) AS ne
-       |  FROM ud WHERE total_message_count > 0 GROUP BY 1, 2, 3)
-       | SELECT channel, week, COUNT(*) AS total_users,
-       |  COUNT(CASE WHEN ne > 0 AND jp * 2 > ne THEN 1 END) AS jp_users,
-       |  ${flSql("CAST(COUNT(CASE WHEN ne > 0 AND jp * 2 > ne THEN 1 END) AS DOUBLE) * 100 / CAST(COUNT(*) AS DOUBLE)", 4)} AS jp_user_percent
-       | FROM share GROUP BY 1, 2""".stripMargin.replace("\n", "")
 
   /** get_attrition_rates (api.py:2355): top-K users over the baseline
     * window (first `baselineWeeks` weeks) by total messages, then % of
@@ -617,18 +484,6 @@ object ChatStats {
         fl(col("active_users").cast("double") * 100d / lit(topK).cast("double"), 4))
   }
 
-  def attritionSql(topK: Int = 1000, baselineWeeks: Int = 3): String =
-    s"""WITH act AS ($userWeeklyActivitySql),
-       | wk AS (SELECT week, ROW_NUMBER() OVER (ORDER BY week ASC) AS week_idx
-       |   FROM (SELECT DISTINCT week FROM act)),
-       | ai AS (SELECT a.*, wk.week_idx FROM act a JOIN wk USING (week)),
-       | top AS (SELECT user_id FROM ai WHERE week_idx <= $baselineWeeks
-       |   GROUP BY user_id ORDER BY SUM(messages) DESC, user_id ASC LIMIT $topK),
-       | later AS (SELECT DISTINCT user_id, week FROM ai WHERE week_idx > $baselineWeeks)
-       | SELECT week, COUNT(*) AS active_users,
-       |  ${flSql(s"CAST(COUNT(*) AS DOUBLE) * 100 / $topK", 4)} AS percent_active
-       | FROM later JOIN top USING (user_id) GROUP BY week""".stripMargin.replace("\n", "")
-
   /** #82 cohort retention matrix — the classic product-analytics twin of
     * attrition (api.py:2355 tracks ONE fixed baseline cohort; this tracks
     * EVERY weekly first-seen cohort per channel): users grouped by their
@@ -670,25 +525,6 @@ object ChatStats {
           .as("retention"))
   }
 
-  val retentionCohortSql: String =
-    s"""WITH act AS ($userWeeklyActivitySql),
-       | wc AS (
-       |  SELECT user_id, channel, week,
-       |   MIN(week) OVER (PARTITION BY user_id, channel) AS cohort_week
-       |  FROM act),
-       | cells AS (
-       |  SELECT channel, cohort_week,
-       |   CAST(date_diff('day', cohort_week, week) / 7 AS INT) AS offset_weeks,
-       |   COUNT(*) AS active_users
-       |  FROM wc GROUP BY 1, 2, 3)
-       | SELECT channel, cohort_week, offset_weeks, active_users,
-       |  MAX(CASE WHEN offset_weeks = 0 THEN active_users END)
-       |   OVER (PARTITION BY channel, cohort_week) AS cohort_size,
-       |  ${flSql(
-          "CAST(active_users AS DOUBLE) / CAST(MAX(CASE WHEN offset_weeks = 0 THEN active_users END) OVER (PARTITION BY channel, cohort_week) AS DOUBLE)",
-          6)} AS retention
-       | FROM cells""".stripMargin.replace("\n", "")
-
   /** Site-wide stats (api.py:2629-2676): #chat-logs (channel-days), total
     * messages, date range. One scan, one row.
     */
@@ -703,8 +539,4 @@ object ChatStats {
         max("ts").as("max_ts")
       )
 
-  val siteStatsSql: String =
-    s"""SELECT COUNT(DISTINCT ($channelSql, $daySql)) AS num_chat_logs,
-       | COUNT(*) AS num_messages, MIN(ts) AS min_ts, MAX(ts) AS max_ts
-       | FROM events WHERE NOT $isGiftSql""".stripMargin.replace("\n", "")
 }

@@ -19,39 +19,6 @@ object Checks {
   def enabled: Boolean =
     java.lang.Boolean.getBoolean("graft.spark.debug.checks")
 
-  /** Gate-path guard for the graph oracles' okey packing domain
-    * (VERDICT r10 item 3): `twoStageTopKSql`'s BIGINT order key
-    * `round(cosine·10^6)·2^40 − vec_b` is an order isomorphism only
-    * while every vec_id sits in [0, 2^40) — a violating corpus would
-    * yield a WRONG oracle (possibly a wrong PASS), not an error. This
-    * asserts the bound on the DUMPED Spark result (both id columns: the
-    * oracle packs vec_b, but the two columns draw from the same corpus,
-    * so either violating means the okey domain is unsound for this
-    * corpus). Unlike [[requireDisjoint]] this is NOT debug-gated: it
-    * runs in Verify over the already-materialized dump — one bounded
-    * aggregate over ≤ k·N rows the gate just wrote, never a corpus scan.
-    * The oracle side carries the same guard in-query (DuckDB `error()`
-    * in the `scored` CTE), so both engines fail loud rather than
-    * hash-diverge.
-    */
-  def requireOkeyDomain(df: DataFrame, op: String): Unit = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    val cols = df.columns.toSet
-    if (cols.contains("vec_a") && cols.contains("vec_b")) {
-      val r = df.agg(
-        min(col("vec_a").cast("long")), max(col("vec_a").cast("long")),
-        min(col("vec_b").cast("long")), max(col("vec_b").cast("long"))).collect()(0)
-      if (!r.isNullAt(0)) {
-        val lo = math.min(r.getLong(0), r.getLong(2))
-        val hi = math.max(r.getLong(1), r.getLong(3))
-        require(lo >= 0 && hi < Vectors.OKEY_ID_BOUND,
-          s"$op: okey domain violated — vec_ids span [$lo, $hi] but the " +
-            s"iterated-argmax oracle key requires [0, ${Vectors.OKEY_ID_BOUND}); " +
-            "the registered SQL would mis-rank, not error, so the gate fails here")
-      }
-    }
-  }
-
   /** Assert `delta`'s `idCol` values never appear in `stored`. The count
     * is keyed by the (small-by-premise) delta via a semi-join, so even in
     * test the cost is one delta-sized pass, never a stored-state scan

@@ -23,14 +23,11 @@ object EventSemantics {
 
   // ---- channel ------------------------------------------------------------
   val channel: Column = col("event_type").as("channel")
-  val channelSql = "event_type"
 
   // ---- periods ------------------------------------------------------------
   val day: Column = to_date(date_trunc("day", col("ts")))
-  val daySql = "CAST(date_trunc('day', ts) AS DATE)"
 
   val week: Column = to_date(date_trunc("week", col("ts")))
-  val weekSql = "CAST(date_trunc('week', ts) AS DATE)"
 
   // ---- message category (chat_parser.categorize_message analog) -----------
   // Deterministic 5-way split on `value` (double comparisons are identical
@@ -41,26 +38,18 @@ object EventSemantics {
       .when(col("value") < 50d, "es_en_id")
       .when(col("value") < 100d, "kr")
       .otherwise("ru")
-  val categorySql =
-    """CASE WHEN value < 10 THEN 'emoji' WHEN value < 25 THEN 'jp'
-      | WHEN value < 50 THEN 'es_en_id' WHEN value < 100 THEN 'kr'
-      | ELSE 'ru' END""".stripMargin.replace("\n", "")
 
   // ---- membership rank (chat_parser.parse_membership_rank analog) ---------
   // Drifts by day per user so rank *transitions* occur (gains/losses/LAG
   // queries). -1 = non-member; 0..6 = member tiers.
   val membershipRank: Column =
     ((col("user_id") + dayofmonth(col("ts"))) % 8 - 1).cast("int")
-  val membershipRankSql =
-    "CAST((user_id + CAST(EXTRACT(day FROM ts) AS BIGINT)) % 8 - 1 AS INT)"
 
   // ---- gift flag (chat_downloader gift_member analog) ----------------------
   val isGift: Column = col("event_id") % 97 === 0
-  val isGiftSql = "(event_id % 97 = 0)"
 
   // ---- humor flag (feature_analysis.has_humor analog) ----------------------
   val isHumor: Column = col("value") < 10d
-  val isHumorSql = "(value < 10)"
 
   /** The `user_data` table build — reference chat_downloader.py:152-179.
     * One row per (user, channel, day): category-pivot counts over real
@@ -84,20 +73,6 @@ object EventSemantics {
       )
   }
 
-  /** DuckDB oracle twin of [[userData]] as a CTE body (FROM events). */
-  val userDataSql: String = {
-    val cats = Seq("jp", "kr", "ru", "emoji", "es_en_id")
-    val catSql = cats
-      .map(c => s"COUNT(CASE WHEN NOT $isGiftSql AND ($categorySql) = '$c' THEN 1 END) AS ${c}_count")
-      .mkString(", ")
-    s"""SELECT user_id, $channelSql AS channel, $daySql AS day, $catSql,
-       | COUNT(CASE WHEN NOT $isGiftSql THEN 1 END) AS total_message_count,
-       | MAX($membershipRankSql) AS membership_rank,
-       | MAX(ts) AS last_ts,
-       | (COUNT(CASE WHEN NOT $isGiftSql THEN 1 END) = 0) AS is_gift
-       | FROM events GROUP BY 1, 2, 3""".stripMargin.replace("\n", "")
-  }
-
   /** Weekly activity rollup — mv_user_monthly_activity analog
     * (db/queries.py:179): user x channel x week -> message count,
     * excluding gift-only rows.
@@ -107,11 +82,6 @@ object EventSemantics {
       .filter(!isGift)
       .groupBy(col("user_id"), channel, week.as("week"))
       .agg(count(lit(1)).as("messages"))
-
-  val userWeeklyActivitySql: String =
-    s"""SELECT user_id, $channelSql AS channel, $weekSql AS week,
-       | COUNT(*) AS messages FROM events WHERE NOT $isGiftSql
-       | GROUP BY 1, 2, 3""".stripMargin.replace("\n", "")
 
   /** Incremental maintenance of the weekly rollup — the reference's
     * monthly MV refresh (`refresh_membership_data_for_month`,
@@ -188,9 +158,5 @@ object EventSemantics {
   def fl(c: Column, scale: Int): Column = {
     val p = math.pow(10, scale)
     floor(c * p) / p
-  }
-  def flSql(expr: String, scale: Int): String = {
-    val p = math.pow(10, scale).toLong
-    s"floor(($expr) * $p) / $p"
   }
 }

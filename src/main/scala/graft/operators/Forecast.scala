@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import EventSemantics.{fl, flSql}
+import EventSemantics.fl
 
 /** Statistical streaming-hours forecast — reference
   * `data_ingestion/utils/forecaster.py:318` statistical_forecast (the
@@ -120,43 +120,4 @@ object Forecast {
       .toDF()
   }
 
-  def forecastHoursSql(horizons: Int = 3): String =
-    s"""WITH monthly AS (
-       |  SELECT c.c_name AS channel,
-       |    CAST(date_trunc('month', o.o_orderdate) AS DATE) AS month,
-       |    CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / 3600 AS x
-       |  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-       |  GROUP BY 1, 2),
-       | idxed AS (
-       |  SELECT channel, month, x,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY channel ORDER BY month) AS DOUBLE) AS i,
-       |    CAST(COUNT(*) OVER (PARTITION BY channel) AS DOUBLE) AS n
-       |  FROM monthly),
-       | wtd AS (
-       |  SELECT *, CASE WHEN n >= 3 THEN exp(-1 + (i - 1) / (n - 1)) ELSE 1 END AS w
-       |  FROM idxed),
-       | stats AS (
-       |  SELECT channel, MAX(n) AS n,
-       |    SUM(w * x) / SUM(w) AS wm,
-       |    SUM(x) AS sx, SUM(x * x) AS sx2,
-       |    arg_min(x, month) AS x_first, arg_max(x, month) AS x_last
-       |  FROM wtd GROUP BY 1),
-       | prep AS (
-       |  SELECT channel, wm,
-       |    CASE WHEN n > 1 THEN sqrt(greatest(0, (sx2 - sx * sx / n) / n)) ELSE 0.1 END AS sigma,
-       |    CASE WHEN n >= 2 THEN (x_last - x_first) / n ELSE 0 END AS trend
-       |  FROM stats),
-       | hz AS (SELECT unnest(range(1, ${horizons + 1})) AS h),
-       | ex AS (
-       |  SELECT p.channel, CAST(hz.h AS INT) AS horizon,
-       |    p.wm + p.trend * CAST(hz.h AS DOUBLE) AS f,
-       |    p.sigma * (1 + 0.2 * (CAST(hz.h AS DOUBLE) - 1)) AS widen
-       |  FROM prep p CROSS JOIN hz)
-       | SELECT channel, horizon,
-       |  ${flSql("f", 4)} AS forecast,
-       |  ${flSql("greatest(0, f - 1.645 * widen)", 4)} AS lower,
-       |  ${flSql("greatest(0, f - 0.674 * widen)", 4)} AS p25,
-       |  ${flSql("f + 0.674 * widen", 4)} AS p75,
-       |  ${flSql("f + 1.645 * widen", 4)} AS upper
-       | FROM ex""".stripMargin.replace("\n", "")
 }

@@ -18,7 +18,6 @@ import EventSemantics._
 object Highlights {
 
   private val epochS = floor(col("ts").cast("double")).cast("long")
-  private val epochSSql = "CAST(floor(epoch(ts)) AS BIGINT)"
 
   /** Funniest moment per channel-day: 30-minute humor-concentration
     * buckets, argmax, shifted back 10 s (reference uses 30 s buckets on
@@ -38,16 +37,6 @@ object Highlights {
       .select("channel", "day", "funniest_ts", "humor_n")
   }
 
-  def funniestMomentSql(bucketS: Long = 1800L): String =
-    s"""WITH counts AS (
-       | SELECT $channelSql AS channel, $daySql AS day,
-       |  CAST(floor($epochSSql / $bucketS) AS BIGINT) AS bucket, COUNT(*) AS humor_n
-       | FROM events WHERE $isHumorSql AND NOT $isGiftSql GROUP BY 1, 2, 3)
-       | SELECT channel, day, bucket * $bucketS - 10 AS funniest_ts, humor_n FROM (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY channel, day
-       |    ORDER BY humor_n DESC, bucket ASC) AS rn FROM counts)
-       | WHERE rn = 1""".stripMargin.replace("\n", "")
-
   /** Chat-velocity highlight candidates per channel-day: 15-minute message
     * buckets, top-N above a minimum burst size (ai_summarizer.py:139-143:
     * nlargest(num_highlights) with count > 9).
@@ -65,16 +54,6 @@ object Highlights {
       .withColumn("spike_start", col("bucket") * bucketS)
       .select("channel", "day", "spike_start", "velocity")
   }
-
-  def highlightVelocitySql(bucketS: Long = 900L, topN: Int = 3, minBurst: Long = 5L): String =
-    s"""WITH counts AS (
-       | SELECT $channelSql AS channel, $daySql AS day,
-       |  CAST(floor($epochSSql / $bucketS) AS BIGINT) AS bucket, COUNT(*) AS velocity
-       | FROM events WHERE NOT $isGiftSql GROUP BY 1, 2, 3)
-       | SELECT channel, day, bucket * $bucketS AS spike_start, velocity FROM (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY channel, day
-       |    ORDER BY velocity DESC, bucket ASC) AS rn FROM counts)
-       | WHERE rn <= $topN AND velocity > $minBurst""".stripMargin.replace("\n", "")
 
   /** get_video_highlights (api.py:2918): per-video highlight listing for a
     * channel group and month — highlights (lineitem) joined to videos
@@ -101,17 +80,6 @@ object Highlights {
         col("l_returnflag").as("topic_tag"),
         col("l_linenumber").as("highlight_idx"),
         datediff(col("l_shipdate"), col("o_orderdate")).cast("int").as("relative_days"))
-
-  def videoHighlightsSql(group: String = "AUTOMOBILE", month: String = "1996-03-01"): String =
-    s"""SELECT l.l_orderkey AS video_id, c.c_name AS channel,
-       | o.o_orderpriority AS title, l.l_returnflag AS topic_tag,
-       | l.l_linenumber AS highlight_idx,
-       | CAST(date_diff('day', o.o_orderdate, l.l_shipdate) AS INT) AS relative_days
-       | FROM lineitem l
-       | JOIN orders o ON l.l_orderkey = o.o_orderkey
-       |  AND CAST(date_trunc('month', o.o_orderdate) AS DATE) = DATE '$month'
-       | JOIN customer c ON o.o_custkey = c.c_custkey
-       |  AND c.c_mktsegment = '$group'""".stripMargin.replace("\n", "")
 
   /** get_funniest_timestamps (api.py:2680): per-video funniest-moment
     * offsets for one channel group and month. The reference query computes a
@@ -162,23 +130,6 @@ object Highlights {
           - col("last_chat_epoch") + col("dur")).as("relative_ts"))
   }
 
-  def funniestOffsetsSql(group: String = "AUTOMOBILE", month: String = "1996-03-01"): String =
-    s"""WITH chans AS (
-       |  SELECT c_custkey, c_name AS channel FROM customer WHERE c_mktsegment = '$group'),
-       | vids AS (
-       |  SELECT o_orderkey, channel, o_orderpriority AS title,
-       |   CAST(floor(epoch(CAST(o_orderdate AS TIMESTAMP))) AS BIGINT) AS end_epoch,
-       |   CAST(floor(o_totalprice) AS BIGINT) AS dur
-       |  FROM orders JOIN chans ON o_custkey = c_custkey),
-       | last_chat AS (
-       |  SELECT l_orderkey, CAST(floor(epoch(CAST(MAX(l_shipdate) AS TIMESTAMP))) AS BIGINT) AS last_chat_epoch
-       |  FROM lineitem
-       |  WHERE l_shipdate >= DATE '$month' AND l_shipdate < DATE '$month' + INTERVAL 1 MONTH
-       |  GROUP BY 1)
-       | SELECT v.o_orderkey AS video_id, v.channel, v.title,
-       |  v.end_epoch - v.dur + v.dur // 2 - lc.last_chat_epoch + v.dur AS relative_ts
-       | FROM vids v JOIN last_chat lc ON v.o_orderkey = lc.l_orderkey""".stripMargin.replace("\n", "")
-
   /** Chat-log coverage QA (data_ingestion/check_log_length.py): how much of
     * each channel-day the chat log actually spans, as the fraction of
     * distinct 15-minute buckets with at least one message. One partial-agg
@@ -195,10 +146,4 @@ object Highlights {
         fl(col("buckets").cast("double") * 100d / lit(bucketsPerDay).cast("double"), 4))
   }
 
-  def logCoverageSql(bucketS: Long = 900L): String =
-    s"""SELECT $channelSql AS channel, $daySql AS day,
-       | COUNT(DISTINCT CAST(floor($epochSSql / $bucketS) AS BIGINT)) AS buckets,
-       | COUNT(*) AS n_messages,
-       | ${flSql(s"CAST(COUNT(DISTINCT CAST(floor($epochSSql / $bucketS) AS BIGINT)) AS DOUBLE) * 100 / ${86400L / bucketS}", 4)} AS coverage_pct
-       | FROM events WHERE NOT $isGiftSql GROUP BY 1, 2""".stripMargin.replace("\n", "")
 }

@@ -15,7 +15,6 @@ import EventSemantics._
 object Makeup {
 
   private val valueCenti = round(col("value") * 100d).cast("long")
-  private val valueCentiSql = "CAST(round(value * 100) AS BIGINT)"
 
   /** Per channel-week: per-category messages-per-streaming-minute. */
   def chatMakeup(events: DataFrame): DataFrame = {
@@ -33,19 +32,6 @@ object Makeup {
     cats.foldLeft(agg) { (df, c) =>
       df.withColumn(s"${c}_rate_per_minute", fl(col(s"${c}_n").cast("double") / minutes, 4))
     }.select(col("channel") +: col("week") +: cats.map(c => col(s"${c}_rate_per_minute")): _*)
-  }
-
-  val chatMakeupSql: String = {
-    val cats = Seq("jp", "kr", "ru", "emoji", "es_en_id")
-    val catAgg = cats.map(c =>
-      s"COUNT(CASE WHEN NOT $isGiftSql AND ($categorySql) = '$c' THEN 1 END) AS ${c}_n").mkString(", ")
-    val rates = cats.map(c =>
-      s"${flSql(s"CAST(${c}_n AS DOUBLE) / (CAST(centi_s AS DOUBLE) / 100 / 60)", 4)} AS ${c}_rate_per_minute").mkString(", ")
-    s"""WITH agg AS (
-       | SELECT $channelSql AS channel, $weekSql AS week,
-       |  SUM($valueCentiSql) AS centi_s, $catAgg
-       | FROM events GROUP BY 1, 2)
-       | SELECT channel, week, $rates FROM agg""".stripMargin.replace("\n", "")
   }
 
   /** get_message_type_percents (api.py:2268) for one channel + category:
@@ -67,14 +53,4 @@ object Makeup {
       .select("week", "percent", "message_rate")
   }
 
-  def messageTypePercentsSql(chan: String, cat: String): String =
-    s"""WITH agg AS (
-       | SELECT $weekSql AS week, SUM($valueCentiSql) AS centi_s,
-       |  COUNT(CASE WHEN NOT $isGiftSql AND ($categorySql) = '$cat' THEN 1 END) AS cat_n,
-       |  COUNT(CASE WHEN NOT $isGiftSql AND ($categorySql) <> 'emoji' THEN 1 END) AS non_emoji_n
-       | FROM events WHERE event_type = '$chan' GROUP BY 1)
-       | SELECT week,
-       |  ${flSql("CAST(cat_n AS DOUBLE) * 100 / CAST(non_emoji_n AS DOUBLE)", 4)} AS percent,
-       |  ${flSql("CAST(cat_n AS DOUBLE) / (CAST(centi_s AS DOUBLE) / 100 / 60)", 4)} AS message_rate
-       | FROM agg""".stripMargin.replace("\n", "")
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 import graft.Caches.SharedCacheOps
 
-import EventSemantics.{fl, flSql, userWeeklyActivitySql}
+import EventSemantics.fl
 
 /** Channel-similarity analytics — reference `web/api.py:418`
   * channel_clustering, `:914` recommend_channels, `:658` content_clustering.
@@ -80,21 +80,6 @@ object Similarity {
         fl(col("dot").cast("double") / (sqrt(col("n2_a").cast("double")) * sqrt(col("n2_b").cast("double"))), 6)
           .as("similarity"))
 
-  val channelSimilaritySql: String =
-    s"""WITH act AS ($userWeeklyActivitySql),
-       | dots AS (
-       |  SELECT a.week, a.channel AS channel_a, b.channel AS channel_b,
-       |    SUM(a.messages * b.messages) AS dot
-       |  FROM act a JOIN act b ON a.user_id = b.user_id AND a.week = b.week
-       |    AND a.channel < b.channel
-       |  GROUP BY 1, 2, 3),
-       | norms AS (SELECT week, channel, SUM(messages * messages) AS n2 FROM act GROUP BY 1, 2)
-       | SELECT d.week, d.channel_a, d.channel_b,
-       |  ${flSql("CAST(d.dot AS DOUBLE) / (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE)))", 6)} AS similarity
-       | FROM dots d
-       | JOIN norms na ON na.week = d.week AND na.channel = d.channel_a
-       | JOIN norms nb ON nb.week = d.week AND nb.channel = d.channel_b""".stripMargin.replace("\n", "")
-
   /** #32 recommend_channels (api.py:914): for one user, score every
     * candidate channel by Σ cosine-sim to the user's channels (full-period
     * weights), excluding channels where the user already has > 3 messages,
@@ -168,29 +153,6 @@ object Similarity {
       .filter(col("sim").isNotNull)
   }
 
-  def recommendSql(userId: Long = 3L, exclThreshold: Long = 3L, k: Int = 10): String =
-    s"""WITH act AS ($userWeeklyActivitySql),
-       | w AS (SELECT user_id, channel, SUM(messages) AS weight FROM act GROUP BY 1, 2),
-       | dots AS (
-       |  SELECT a.channel AS channel_a, b.channel AS channel_b, SUM(a.weight * b.weight) AS dot
-       |  FROM w a JOIN w b ON a.user_id = b.user_id GROUP BY 1, 2),
-       | norms AS (SELECT channel, SUM(weight * weight) AS n2 FROM w GROUP BY 1),
-       | sims AS (
-       |  SELECT d.channel_a, d.channel_b,
-       |    CAST(d.dot AS DOUBLE) / (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))) AS sim
-       |  FROM dots d
-       |  JOIN norms na ON na.channel = d.channel_a
-       |  JOIN norms nb ON nb.channel = d.channel_b),
-       | mine AS (SELECT channel AS uc, weight FROM w WHERE user_id = $userId AND weight > 0),
-       | raw AS (
-       |  SELECT s.channel_a, SUM(s.sim) AS raw_score
-       |  FROM sims s JOIN mine m ON s.channel_b = m.uc
-       |  WHERE s.channel_a NOT IN (SELECT uc FROM mine WHERE weight > $exclThreshold)
-       |  GROUP BY 1)
-       | SELECT channel_a AS channel_name,
-       |  ${flSql("ln(1 + raw_score / CAST((SELECT COUNT(*) FROM mine) AS DOUBLE) * 100) / ln(101) * 100", 4)} AS score
-       | FROM raw ORDER BY raw_score DESC, channel_a ASC LIMIT $k""".stripMargin.replace("\n", "")
-
   /** #33 content_clustering (api.py:658): TF-IDF over each source's
     * concatenated text, pairwise cosine. Unigram terms, smooth idf
     * (ln((1+N)/(1+df))+1, sklearn's formula), exact integer tf.
@@ -248,28 +210,6 @@ object Similarity {
       .filter(col("source_a") < col("source_b"))
       .select(col("source_a"), col("source_b"), fl(col("sim"), 4).as("similarity"))
   }
-
-  val contentSimilaritySql: String =
-    s"""WITH terms AS (
-       |  SELECT source, unnest(regexp_extract_all(lower(trim(text)), '[^ \\t\\n\\x0B\\f\\r]+')) AS term
-       |  FROM documents),
-       | tf AS (SELECT source, term, COUNT(*) AS tf FROM terms GROUP BY 1, 2),
-       | dfs AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-       | n AS (SELECT COUNT(DISTINCT source) AS n_src FROM documents),
-       | wtd AS (
-       |  SELECT tf.source, tf.term,
-       |    CAST(tf.tf AS DOUBLE) * (ln((1 + CAST(n.n_src AS DOUBLE)) / (1 + CAST(dfs.df AS DOUBLE))) + 1) AS wt
-       |  FROM tf JOIN dfs ON tf.term = dfs.term CROSS JOIN n),
-       | dots AS (
-       |  SELECT a.source AS source_a, b.source AS source_b, SUM(a.wt * b.wt) AS dot
-       |  FROM wtd a JOIN wtd b ON a.term = b.term AND a.source < b.source
-       |  GROUP BY 1, 2),
-       | norms AS (SELECT source, SUM(wt * wt) AS n2 FROM wtd GROUP BY 1)
-       | SELECT d.source_a, d.source_b,
-       |  ${flSql("d.dot / (sqrt(na.n2) * sqrt(nb.n2))", 4)} AS similarity
-       | FROM dots d
-       | JOIN norms na ON na.source = d.source_a
-       | JOIN norms nb ON nb.source = d.source_b""".stripMargin.replace("\n", "")
 
   /** #34 community detection analog (api.py:478 Leiden): keep edges whose
     * similarity exceeds the per-week median, then EXACT connected components
@@ -353,19 +293,4 @@ object Similarity {
       .select(col("week"), col("nc._1").as("channel"), col("nc._2").as("community"))
   }
 
-  val clusteringCommunitiesSql: String =
-    s"""WITH RECURSIVE sims AS ($channelSimilaritySql),
-       | thr AS (SELECT week, quantile_cont(similarity, 0.5) AS thr FROM sims GROUP BY 1),
-       | e AS (
-       |  SELECT s.week, s.channel_a, s.channel_b FROM sims s JOIN thr t ON s.week = t.week
-       |  WHERE s.similarity > t.thr),
-       | e2 AS (SELECT week, channel_a, channel_b FROM e
-       |  UNION SELECT week, channel_b, channel_a FROM e),
-       | nodes AS (SELECT DISTINCT week, channel FROM ($userWeeklyActivitySql)),
-       | reach AS (
-       |  SELECT week, channel, channel AS r FROM nodes
-       |  UNION
-       |  SELECT reach.week, reach.channel, e2.channel_b AS r
-       |  FROM reach JOIN e2 ON e2.week = reach.week AND e2.channel_a = reach.r)
-       | SELECT week, channel, MIN(r) AS community FROM reach GROUP BY 1, 2""".stripMargin.replace("\n", "")
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import EventSemantics.{fl, flSql}
+import EventSemantics.fl
 
 /** Streaming-hours queries (reference web/utils.py:261 streaming_hours_query
   * and api.py:1122-2023). "Videos" analog: `orders` rows, with
@@ -33,12 +33,6 @@ object StreamingHours {
         to_date(date_trunc("month", col("o_orderdate"))).as("month"),
         col("o_totalprice").cast("decimal(18,2)").as("duration_s"))
 
-  private val videosSql =
-    """SELECT c.c_name AS channel, c.c_mktsegment AS channel_group,
-      | CAST(date_trunc('month', o.o_orderdate) AS DATE) AS month,
-      | CAST(o.o_totalprice AS DECIMAL(18,2)) AS duration_s
-      | FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey""".stripMargin.replace("\n", "")
-
   /** SUM variant — get_group_total_streaming_hours (api.py:1232). */
   def total(orders: DataFrame, customer: DataFrame): DataFrame =
     videos(orders, customer)
@@ -46,12 +40,6 @@ object StreamingHours {
       .agg(sum("duration_s").as("dur"))
       .withColumn("hours", fl(col("dur").cast("double") / 3600d, 4))
       .drop("dur")
-
-  val totalSql: String =
-    s"""WITH v AS ($videosSql)
-       | SELECT channel, channel_group, month,
-       |  ${flSql("CAST(SUM(duration_s) AS DOUBLE) / 3600", 4)} AS hours
-       | FROM v GROUP BY 1, 2, 3""".stripMargin.replace("\n", "")
 
   /** AVG variant — get_group_avg_streaming_hours (api.py:1271). */
   def avg(orders: DataFrame, customer: DataFrame): DataFrame =
@@ -62,12 +50,6 @@ object StreamingHours {
         fl(col("dur").cast("double") / col("n").cast("double") / 3600d, 4))
       .drop("dur", "n")
 
-  val avgSql: String =
-    s"""WITH v AS ($videosSql)
-       | SELECT channel, channel_group, month,
-       |  ${flSql("CAST(SUM(duration_s) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) / 3600", 4)} AS hours
-       | FROM v GROUP BY 1, 2, 3""".stripMargin.replace("\n", "")
-
   /** MAX variant — get_group_max_streaming_hours (api.py:1310). */
   def max(orders: DataFrame, customer: DataFrame): DataFrame =
     videos(orders, customer)
@@ -76,12 +58,6 @@ object StreamingHours {
       .withColumn("hours", fl(col("dur").cast("double") / 3600d, 4))
       .drop("dur")
 
-  val maxSql: String =
-    s"""WITH v AS ($videosSql)
-       | SELECT channel, channel_group, month,
-       |  ${flSql("CAST(MAX(duration_s) AS DOUBLE) / 3600", 4)} AS hours
-       | FROM v GROUP BY 1, 2, 3""".stripMargin.replace("\n", "")
-
   /** get_monthly_streaming_hours (api.py:1122): one channel over time. */
   def monthlyHours(orders: DataFrame, customer: DataFrame, custkey: Long): DataFrame =
     videos(orders, customer.filter(col("c_custkey") === custkey))
@@ -89,12 +65,6 @@ object StreamingHours {
       .agg(sum("duration_s").as("dur"))
       .withColumn("total_streaming_hours", fl(col("dur").cast("double") / 3600d, 4))
       .drop("dur")
-
-  def monthlyHoursSql(custkey: Long): String =
-    s"""WITH v AS ($videosSql)
-       | SELECT month, ${flSql("CAST(SUM(duration_s) AS DOUBLE) / 3600", 4)} AS total_streaming_hours
-       | FROM v JOIN customer c2 ON v.channel = c2.c_name AND c2.c_custkey = $custkey
-       | GROUP BY 1""".stripMargin.replace("\n", "")
 
   /** get_group_streaming_hours_diff (api.py:1943): month-over-month change
     * via self-join on month+1 (exact decimal subtraction, then double).
@@ -124,9 +94,6 @@ object StreamingHours {
   def channelNames(customer: DataFrame): DataFrame =
     customer.select(col("c_name").as("channel_name")).orderBy("channel_name")
 
-  val channelNamesSql: String =
-    "SELECT c_name AS channel_name FROM customer ORDER BY 1"
-
   /** get_date_ranges (api.py:2596): earliest/latest video end time — one
     * all-null-group aggregate, a single partial-agg reduction at any scale.
     */
@@ -136,15 +103,4 @@ object StreamingHours {
       org.apache.spark.sql.functions.min(col("o_orderdate")).as("min_date"),
       org.apache.spark.sql.functions.max(col("o_orderdate")).as("max_date"))
 
-  val dateRangesSql: String =
-    "SELECT MIN(o_orderdate) AS min_date, MAX(o_orderdate) AS max_date FROM orders"
-
-  val hoursDiffSql: String =
-    s"""WITH v AS ($videosSql),
-       | m AS (SELECT channel, month, SUM(duration_s) AS dur FROM v GROUP BY 1, 2)
-       | SELECT cur.channel, cur.month,
-       |  ${flSql("CAST(cur.dur AS DOUBLE) / 3600", 4)} AS hours,
-       |  ${flSql("CAST(COALESCE(cur.dur - prev.dur, cur.dur) AS DOUBLE) / 3600", 4)} AS change
-       | FROM m cur LEFT JOIN m prev ON prev.channel = cur.channel
-       |  AND CAST(prev.month + INTERVAL 1 MONTH AS DATE) = cur.month""".stripMargin.replace("\n", "")
 }

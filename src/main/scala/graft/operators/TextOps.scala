@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
@@ -24,26 +24,18 @@ object TextOps {
   /** #1 charset classifier (chat_parser.categorize_message). */
   def categorizeDocs(documents: DataFrame): DataFrame =
     documents.select(col("doc_id"), categorize(col("text")).as("category"))
-  val categorizeDocsSql: String =
-    s"SELECT doc_id, ${categorizeSql(s"(${graft.Fixtures.charsetTextSql})")} AS category FROM documents"
 
   /** #2 membership badge parser (chat_parser.parse_membership_rank). */
   def membershipRankDocs(documents: DataFrame): DataFrame =
     documents.select(col("doc_id"), membershipRank(col("badge")).as("rank_months"))
-  val membershipRankDocsSql: String =
-    s"SELECT doc_id, ${membershipRankSql(s"(${graft.Fixtures.badgeTextSql})")} AS rank_months FROM documents"
 
   /** #3 humor detector (feature_analysis.has_humor). */
   def humorDocs(documents: DataFrame): DataFrame =
     documents.select(col("doc_id"), hasHumor(col("text")).as("is_humor"))
-  val humorDocsSql: String =
-    s"SELECT doc_id, ${hasHumorSql(s"(${graft.Fixtures.humorTextSql})")} AS is_humor FROM documents"
 
   /** #45 language ID over augmented messages. */
   def langIdDocs(documents: DataFrame): DataFrame =
     documents.select(col("doc_id"), langId(col("text")).as("lang_id"))
-  val langIdDocsSql: String =
-    s"SELECT doc_id, ${langIdSql(s"(${graft.Fixtures.charsetTextSql})")} AS lang_id FROM documents"
 
   /** #46 quality scoring over the raw corpus. */
   def qualityDocs(documents: DataFrame): DataFrame =
@@ -51,11 +43,6 @@ object TextOps {
       col("doc_id"),
       wsTokenCount(col("text")).cast("long").as("n_words"),
       EventSemantics.fl(qualityScore(col("text")), 4).as("quality"))
-  val qualityDocsSql: String =
-    s"""SELECT doc_id,
-       | CAST(${wsTokenCountSql("text")} AS BIGINT) AS n_words,
-       | ${EventSemantics.flSql(qualityScoreSql("text"), 4)} AS quality
-       | FROM documents""".stripMargin.replace("\n", "")
 
   /** #81 Gopher rule filter: the published hard rules as per-doc flags +
     * keep verdict (the stage BEFORE score-ranking in a corpus build).
@@ -85,24 +72,6 @@ object TextOps {
       rAlpha.as("r_alpha"), rStop.as("r_stop"),
       (rLen && rMwl && rSym && rAlpha && rStop).as("keep"))
   }
-  val gopherRulesDocsSql: String = {
-    val w = gopherWordsSql("text")
-    val mwl = gopherMwlSql("text")
-    val sym = gopherSymbolRatioSql("text")
-    val alpha = gopherAlphaFracSql("text")
-    val stops = gopherStopCountSql("text")
-    val Seq(rLen, rMwl, rSym, rAlpha, rStop) = gopherRuleSqls("text")
-    s"""SELECT doc_id,
-       | CAST($w AS BIGINT) AS n_words,
-       | CASE WHEN $w = 0 THEN 0 ELSE ${EventSemantics.flSql(mwl, 6)} END AS mean_word_len,
-       | CASE WHEN $w = 0 THEN 0 ELSE ${EventSemantics.flSql(sym, 6)} END AS symbol_ratio,
-       | CASE WHEN $w = 0 THEN 0 ELSE ${EventSemantics.flSql(alpha, 6)} END AS alpha_frac,
-       | $stops AS n_stop,
-       | $rLen AS r_len, $rMwl AS r_mwl, $rSym AS r_symbol,
-       | $rAlpha AS r_alpha, $rStop AS r_stop,
-       | ($rLen AND $rMwl AND $rSym AND $rAlpha AND $rStop) AS keep
-       | FROM documents""".stripMargin.replace("\n", "")
-  }
 
   /** #47 token counting (whitespace + BPE-ish). */
   def tokenCountDocs(documents: DataFrame): DataFrame =
@@ -110,10 +79,6 @@ object TextOps {
       col("doc_id"),
       wsTokenCount(col("text")).cast("long").as("ws_tokens"),
       bpeTokenCount(col("text")).cast("long").as("bpe_tokens"))
-  val tokenCountDocsSql: String =
-    s"""SELECT doc_id, CAST(${wsTokenCountSql("text")} AS BIGINT) AS ws_tokens,
-       | CAST(${bpeTokenCountSql("text")} AS BIGINT) AS bpe_tokens
-       | FROM documents""".stripMargin.replace("\n", "")
 
   /** #48 order-sensitive fingerprints. */
   def fingerprintDocs(documents: DataFrame): DataFrame =
@@ -121,10 +86,6 @@ object TextOps {
       col("doc_id"),
       md5Fingerprint(col("text")).as("fp_md5"),
       polyFingerprint(col("text")).as("fp_poly"))
-  val fingerprintDocsSql: String =
-    s"""SELECT doc_id, ${md5FingerprintSql("text")} AS fp_md5,
-       | ${polyFingerprintSql("text")} AS fp_poly
-       | FROM documents""".stripMargin.replace("\n", "")
 
   // ---- #79 character-entropy scoring ---------------------------------------
   /** Shannon entropy of the per-document character distribution (nats) —
@@ -157,37 +118,20 @@ object TextOps {
         col("st").getField("n_chars").as("n_chars"),
         EventSemantics.fl(col("st").getField("raw_h"), 4).as("entropy"))
 
-  val charEntropyDocsSql: String =
-    s"""WITH chars AS (
-       |  SELECT doc_id, c FROM (
-       |   SELECT doc_id, unnest(string_split(text, '')) AS c FROM documents)
-       |  WHERE c <> ''),
-       | freq AS (SELECT doc_id, c, COUNT(*) AS n FROM chars GROUP BY 1, 2),
-       | tot AS (SELECT doc_id, CAST(SUM(n) AS BIGINT) AS total FROM freq GROUP BY 1),
-       | h AS (
-       |  SELECT f.doc_id, tot.total,
-       |   -SUM((CAST(f.n AS DOUBLE) / CAST(tot.total AS DOUBLE))
-       |     * ln(CAST(f.n AS DOUBLE) / CAST(tot.total AS DOUBLE))) AS raw_h
-       |  FROM freq f JOIN tot ON f.doc_id = tot.doc_id GROUP BY 1, 2)
-       | SELECT d.doc_id,
-       |  COALESCE(h.total, 0) AS n_chars,
-       |  COALESCE(${EventSemantics.flSql("h.raw_h", 4)}, 0.0) AS entropy
-       | FROM documents d LEFT JOIN h ON d.doc_id = h.doc_id""".stripMargin.replace("\n", "")
-
   // ---- #58 PII scrubbing ---------------------------------------------------
   // Scrubs the caller's text verbatim; the PII injection that gives the
   // oracle verifiable positives lives in graft.Fixtures.piiDocs. Patterns
   // use RE2-compatible syntax so Spark (Java regex) and DuckDB (RE2) agree.
-  private val emailPat = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-  private val phonePat = "\\b[0-9]{3}-[0-9]{3}-[0-9]{4}\\b"
-  private val ssnPat = "\\b[0-9]{3}-[0-9]{2}-[0-9]{4}\\b"
+  private[graft] val emailPat = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
+  private[graft] val phonePat = "\\b[0-9]{3}-[0-9]{3}-[0-9]{4}\\b"
+  private[graft] val ssnPat = "\\b[0-9]{3}-[0-9]{2}-[0-9]{4}\\b"
 
   // ---- #69 HTML/boilerplate stripping --------------------------------------
   // Web-corpus cleaning over the caller's text verbatim (markup fixture:
   // graft.Fixtures.htmlDocs) — tags removed, the four standard entities
   // unescaped, whitespace collapsed. Pure in-row regex chain: zero
   // shuffle, no UDF.
-  private val tagPat = "<[^>]+>"
+  private[graft] val tagPat = "<[^>]+>"
 
   /** #69 strip markup: tag count + cleaned text (tags → space, entities
     * unescaped, whitespace collapsed, trimmed).
@@ -208,18 +152,6 @@ object TextOps {
       regexp_count(raw, lit(tagPat)).cast("long").as("n_tags"),
       cleaned.as("cleaned"))
   }
-  val stripHtmlDocsSql: String = {
-    val raw = s"(${graft.Fixtures.htmlTextSql})"
-    val cleaned =
-      s"""trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-         |regexp_replace(regexp_replace($raw, '$tagPat', ' ', 'g'),
-         | '&amp;', '&', 'g'), '&lt;', '<', 'g'), '&gt;', '>', 'g'),
-         | '&quot;', '"', 'g'), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))""".stripMargin.replace("\n", "")
-    s"""SELECT doc_id,
-       | CAST(len(regexp_extract_all($raw, '$tagPat')) AS BIGINT) AS n_tags,
-       | $cleaned AS cleaned
-       | FROM documents""".stripMargin.replace("\n", "")
-  }
 
   /** #58 PII scrub: count + redact emails/phones/SSNs (SSNs first — the
     * phone pattern would otherwise half-match an SSN).
@@ -237,19 +169,6 @@ object TextOps {
       regexp_count(msg, lit(phonePat)).cast("long").as("n_phones"),
       regexp_count(msg, lit(ssnPat)).cast("long").as("n_ssns"),
       scrubbed.as("scrubbed"))
-  }
-  val piiScrubDocsSql: String = {
-    val msg = s"(${graft.Fixtures.piiTextSql})"
-    val scrubbed =
-      s"""regexp_replace(regexp_replace(regexp_replace($msg,
-         | '$ssnPat', '<SSN>', 'g'), '$phonePat', '<PHONE>', 'g'),
-         | '$emailPat', '<EMAIL>', 'g')""".stripMargin.replace("\n", "")
-    s"""SELECT doc_id,
-       | CAST(len(regexp_extract_all($msg, '$emailPat')) AS BIGINT) AS n_emails,
-       | CAST(len(regexp_extract_all($msg, '$phonePat')) AS BIGINT) AS n_phones,
-       | CAST(len(regexp_extract_all($msg, '$ssnPat')) AS BIGINT) AS n_ssns,
-       | $scrubbed AS scrubbed
-       | FROM documents""".stripMargin.replace("\n", "")
   }
 
   // ---- #90 search-query operator parsing ------------------------------------
@@ -296,33 +215,6 @@ object TextOps {
         col("error"))
   }
 
-  val parseQueryDocsSql: String =
-    s"""WITH src AS (SELECT doc_id, (${graft.Fixtures.queryTextSql}) AS q FROM documents),
-       | ex AS (
-       |  SELECT doc_id,
-       |   coalesce(nullif(regexp_extract(q, 'channel:"([^"]+)"|channel:([^ \\t\\n\\x0B\\f\\r]+)', 1), ''),
-       |            nullif(regexp_extract(q, 'channel:"([^"]+)"|channel:([^ \\t\\n\\x0B\\f\\r]+)', 2), '')) AS channel_raw,
-       |   nullif(regexp_extract(q, 'from:(\\d{4}-\\d{2}-\\d{2})', 1), '') AS from_s,
-       |   nullif(regexp_extract(q, 'to:(\\d{4}-\\d{2}-\\d{2})', 1), '') AS to_s,
-       |   trim(regexp_replace(regexp_replace(regexp_replace(q,
-       |    'channel:"([^"]+)"|channel:([^ \\t\\n\\x0B\\f\\r]+)', '', 'g'), 'from:\\d{4}-\\d{2}-\\d{2}', '', 'g'),
-       |    'to:\\d{4}-\\d{2}-\\d{2}', '', 'g')) AS clean_raw
-       |  FROM src),
-       | v AS (
-       |  SELECT *, TRY_CAST(from_s AS DATE) AS from_d, TRY_CAST(to_s AS DATE) AS to_d,
-       |   CASE WHEN from_s IS NOT NULL AND TRY_CAST(from_s AS DATE) IS NULL
-       |     THEN 'invalid from date: ' || from_s
-       |    WHEN to_s IS NOT NULL AND TRY_CAST(to_s AS DATE) IS NULL
-       |     THEN 'invalid to date: ' || to_s END AS error
-       |  FROM ex)
-       | SELECT doc_id,
-       |  CASE WHEN error IS NULL THEN clean_raw END AS clean_query,
-       |  CASE WHEN error IS NULL THEN channel_raw END AS channel_name,
-       |  CASE WHEN error IS NULL THEN from_d END AS from_date,
-       |  CASE WHEN error IS NULL THEN to_d END AS to_date,
-       |  error
-       | FROM v""".stripMargin.replace("\n", "")
-
   // ---- learned BPE tokenization --------------------------------------------
   /** #112 corpus-wide tokenization with a LEARNED BPE vocabulary — the real
     * token accounting of a training-data build, vs [[tokenCountDocs]]'
@@ -330,21 +222,14 @@ object TextOps {
     * sample ([[Pipeline.bpeTrain]]'s contract, same trainer) and baked
     * into the plan; encoding is the codegen'd in-row
     * [[graft.functions.BpeEncode]] expression — zero exchanges at any
-    * corpus size (the t_ plan audit pins it). Rows-only by design;
-    * spec pins Spark ≡ driver-encoder equality and merge-count
-    * monotonicity.
+    * corpus size (the t_ plan audit pins it). The spec pins Spark ≡
+    * driver-encoder equality and merge-count monotonicity.
     */
   def tokenizeBpe(documents: DataFrame, numMerges: Int = 64,
-                  sampleCap: Int = 2048,
-                  oracleTextSql: Option[String] = None): DataFrame = {
-    val merges = Pipeline.bpeMerges(documents, numMerges, sampleCap)
-    // literal-inlined trained oracle: DuckDB independently re-runs the
-    // ranked-merge BPE apply against the inlined merge table (recursive
-    // CTE, one leftmost merge of the lowest-rank pair per step — provably
-    // the same fixpoint as encodeWord's mergeAll loop, because any rule
-    // whose symbol was born from merge r necessarily has rank > r)
-    oracleTextSql.foreach(src => graft.OracleStash.put("t_tokenize_bpe",
-      tokenizeBpeOracleSql(merges, src)))
+                  sampleCap: Int = 2048): DataFrame =
+    tokenizeBpe(documents, Pipeline.bpeMerges(documents, numMerges, sampleCap))
+
+  def tokenizeBpe(documents: DataFrame, merges: Array[String]): DataFrame = {
     // null text = empty doc (0 tokens), matching the oracle's left-join
     // fallback — without the coalesce, BpeEncode null-propagates and
     // size(NULL) diverges from the twin's 0
@@ -379,19 +264,21 @@ object TextOps {
     * audit pins it).
     */
   def qualityClassifier(documents: DataFrame, labeled: DataFrame,
-                        buckets: Int = 1024, sampleCap: Int = 2048,
-                        oracleTextSql: Option[String] = None): DataFrame = {
-    import graft.ml.QualityClassifier
+                        buckets: Int = 1024, sampleCap: Int = 2048): DataFrame =
+    qualityClassifier(documents, trainQualityClassifier(labeled, buckets, sampleCap))
+
+  /** [[qualityClassifier]]'s trained model: (weights[buckets], bias). */
+  def trainQualityClassifier(labeled: DataFrame, buckets: Int = 1024,
+                             sampleCap: Int = 2048): (Array[Double], Double) = {
     val sample = labeled.select("doc_id", "text", "label")
       .orderBy("doc_id").limit(sampleCap)
       .collect().map(r => (r.getString(1), r.getDouble(2))).toSeq
-    val (w, b) = QualityClassifier.train(sample, buckets)
-    // literal-inlined trained oracle (the PQ-codebook trick): the caller
-    // supplies the DuckDB twin of `documents`.text over the raw table and
-    // DuckDB independently re-runs tokenize → md5 bucket → weight fold →
-    // sigmoid against the inlined trained weights
-    oracleTextSql.foreach(src => graft.OracleStash.put("t_quality_classifier",
-      qualityClassifierOracleSql(w, b, buckets, src)))
+    graft.ml.QualityClassifier.train(sample, buckets)
+  }
+
+  def qualityClassifier(documents: DataFrame, model: (Array[Double], Double)): DataFrame = {
+    val (w, b) = model
+    val buckets = w.length
     // coalesce: NULL text must score like the driver's tokens(null) = []
     // (the neutral sigmoid(b)), not propagate NULL past the size guard
     val toks = expr("filter(split(lower(trim(coalesce(text, ''))), '\\\\s+'), t -> length(t) > 0)")
@@ -410,75 +297,4 @@ object TextOps {
       .select(col("doc_id"), col("score"), (col("score") >= 0.5).as("is_quality"))
   }
 
-  /** DuckDB replica of [[tokenizeBpe]] with the trained merge table
-    * inlined: per DISTINCT lowercased word, a recursive CTE re-runs the
-    * ranked BPE apply — each step finds the lowest-rank adjacent pair
-    * (`list_position` against the rank-ordered merge literal) and merges
-    * its LEFTMOST occurrence; a word exits the recursion when no pair has
-    * a rank. Equivalent to [[graft.ml.BpeTokenizer.encodeWord]]'s
-    * merge-all loop (see the call-site note). Token counts join back to
-    * docs on the word.
-    */
-  private def tokenizeBpeOracleSql(merges: Array[String], textSql: String): String = {
-    def q(s: String) = "'" + s.replace("'", "''") + "'"
-    val mv = merges.map(q).mkString("[", ", ", "]")
-    s"""WITH RECURSIVE
-       | bpe_m AS (SELECT $mv AS v),
-       | bpe_d AS (SELECT doc_id, $textSql AS text FROM documents),
-       | bpe_dw AS (SELECT doc_id, unnest(regexp_extract_all(lower(trim(coalesce(text, ''))), '[^ \\t\\n\\x0B\\f\\r]+')) AS w FROM bpe_d),
-       | bpe_uw AS (SELECT DISTINCT w FROM bpe_dw),
-       | bpe_r AS (
-       |  SELECT w, 0 AS it, string_split(w, '') AS syms FROM bpe_uw
-       |  UNION ALL
-       |  SELECT w, it + 1 AS it,
-       |   list_concat(list_concat(syms[1:pj-1], [pa || pb]), syms[pj+2:len(syms)]) AS syms
-       |  FROM (
-       |   SELECT w, it, syms, pa, pb,
-       |    list_min(list_filter(range(1, len(syms)), i -> syms[i] = pa AND syms[i+1] = pb)) AS pj
-       |   FROM (
-       |    SELECT w, it, syms,
-       |     split_part(mv[br], ' ', 1) AS pa, split_part(mv[br], ' ', 2) AS pb
-       |    FROM (
-       |     SELECT r.w, r.it, r.syms, m.v AS mv,
-       |      list_min(list_filter(list_transform(range(1, len(r.syms)),
-       |       i -> list_position(m.v, r.syms[i] || ' ' || r.syms[i+1])), x -> x IS NOT NULL AND x > 0)) AS br
-       |     FROM bpe_r r, bpe_m m)
-       |    WHERE br IS NOT NULL))),
-       | bpe_wc AS (
-       |  SELECT w, len(syms) AS ntok FROM (
-       |   SELECT w, syms, row_number() OVER (PARTITION BY w ORDER BY it DESC) AS rn FROM bpe_r)
-       |  WHERE rn = 1),
-       | bpe_agg AS (
-       |  SELECT d.doc_id, SUM(c.ntok) AS bpe FROM bpe_dw d JOIN bpe_wc c ON d.w = c.w GROUP BY 1)
-       | SELECT d0.doc_id,
-       |  CAST(coalesce(a.bpe, 0) AS BIGINT) AS bpe_tokens,
-       |  CAST(${graft.functions.TextFunctions.wsTokenCountSql("d0.text")} AS BIGINT) AS ws_words,
-       |  CASE WHEN coalesce(a.bpe, 0) > 0
-       |   THEN ${EventSemantics.flSql("CAST(length(d0.text) AS DOUBLE) / CAST(a.bpe AS DOUBLE)", 4)}
-       |   ELSE CAST(0 AS DOUBLE) END AS chars_per_token
-       | FROM bpe_d d0 LEFT JOIN bpe_agg a ON d0.doc_id = a.doc_id""".stripMargin.replace("\n", "")
-  }
-
-  /** DuckDB replica of [[qualityClassifier]]'s scoring with the trained
-    * (weights, bias) inlined as literals: same whitespace tokens, the same
-    * 60-bit md5 bucket (here an explicit hex fold — DuckDB has no `conv`),
-    * the same sequential weight fold / mean / sigmoid, floored at the same
-    * scale. `textSql` is the raw-table twin of the scored corpus' text.
-    */
-  private def qualityClassifierOracleSql(w: Array[Double], b: Double,
-                                         buckets: Int, textSql: String): String = {
-    import graft.OracleStash.{dl, dlist}
-    // conv(substring(md5(t),1,15),16,10): fold the 15 hex chars to a BIGINT
-    val hash = "list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      "list_transform(range(1, 16), i -> CAST(strpos('0123456789abcdef', substr(md5(t), CAST(i AS INT), 1)) - 1 AS BIGINT))), " +
-      "(a, h) -> a * 16 + h)"
-    val sumW = s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-      s"list_transform(s.toks, t -> w.v[CAST($hash % $buckets AS INT) + 1])), (a, x) -> a + x)"
-    val z = s"${dl(b)} + (CASE WHEN len(s.toks) <= 0 THEN CAST(0 AS DOUBLE) ELSE $sumW / len(s.toks) END)"
-    val score = EventSemantics.flSql(s"1.0 / (1.0 + exp(-($z)))", 4)
-    s"""WITH qc_w AS (SELECT ${dlist(w.toSeq)} AS v),
-       | qc_src AS (SELECT doc_id, regexp_extract_all(lower(trim(coalesce($textSql, ''))), '[^ \\t\\n\\x0B\\f\\r]+') AS toks FROM documents),
-       | qc_sc AS (SELECT s.doc_id, $score AS score FROM qc_src s, qc_w w)
-       | SELECT doc_id, score, (score >= 0.5) AS is_quality FROM qc_sc""".stripMargin.replace("\n", "")
-  }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import EventSemantics.{fl, flSql}
+import EventSemantics.fl
 
 /** Vector similarity search over the `embeddings` table (SURVEY §2 #36,
   * #43, #44) — the Spark-native analog of the reference's pgvector
@@ -24,7 +24,7 @@ import EventSemantics.{fl, flSql}
   */
 object Vectors {
 
-  private val DIM = 64
+  private[graft] val DIM = 64
 
   /** query vector (vec_id = qId) widened to double, as a 1-row frame. */
   private def queryVec(embeddings: DataFrame, qId: Long): DataFrame =
@@ -37,11 +37,6 @@ object Vectors {
     def dot(a: Column, b: Column) = graft.functions.VectorFunctions.vecDot(a, b)
     dot(v, q) / (sqrt(dot(v, v)) * sqrt(dot(q, q)))
   }
-
-  private def dotSql(a: String, b: String) =
-    s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, ${DIM + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))), (acc, x) -> acc + x)"
-  private def cosToSql(v: String, q: String) =
-    s"${dotSql(v, q)} / (sqrt(${dotSql(v, v)}) * sqrt(${dotSql(q, q)}))"
 
   /** Exact-cosine top-k of `cands` (vec_id, label, embedding) against the
     * query vector of `qId`: the broadcast 1-row query, the 6-floored
@@ -57,18 +52,6 @@ object Vectors {
       .orderBy(col("cosine").desc, col("vec_id").asc)
       .limit(k)
 
-  /** DuckDB twin of [[rankToQuery]] over a scan of the valid vectors
-    * (`vsrc`, for the query row too); `where` adds conjuncts to the
-    * query-row exclusion.
-    */
-  private def scanTopKSql(qId: Long, k: Int, where: String = ""): String =
-    s"""WITH $vsrcCte,
-       | q AS (SELECT embedding AS qv FROM vsrc WHERE vec_id = $qId)
-       | SELECT e.vec_id, e.label,
-       |  ${flSql(cosToSql("e.embedding", "q.qv"), 6)} AS cosine
-       | FROM vsrc e CROSS JOIN q WHERE e.vec_id <> $qId$where
-       | ORDER BY cosine DESC, e.vec_id ASC LIMIT $k""".stripMargin.replace("\n", "")
-
   /** #43 brute-force cosine top-k against the vector of `qId`. Candidates
     * and query row are the [[kmValid]] vectors: vec_dot would score a
     * wrong-dimension vector over min(len) elements, where the oracle's
@@ -78,8 +61,6 @@ object Vectors {
     val valid = embeddings.filter(kmValid)
     rankToQuery(valid.filter(col("vec_id") =!= qId), valid, qId, k)
   }
-
-  def annTopKSql(qId: Long = 0L, k: Int = 10): String = scanTopKSql(qId, k)
 
   /** #36 structured-filter ANN (search_highlights): same top-k but only
     * over rows passing the metadata predicate (label whitelist here; the
@@ -93,9 +74,6 @@ object Vectors {
       valid.filter(col("vec_id") =!= qId && col("label").isin(labels.map(Integer.valueOf): _*)),
       valid, qId, k)
   }
-
-  def searchHighlightsSql(qId: Long = 0L, k: Int = 10, labels: Seq[Int] = Seq(2, 5, 7)): String =
-    scanTopKSql(qId, k, s" AND e.label IN (${labels.mkString(", ")})")
 
   /** Per-label mean vectors (label, cvec) of `e` — the coarse quantizer
     * of the IVF paths and the probe centroids of the multi-probe graph.
@@ -122,17 +100,6 @@ object Vectors {
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1)
 
-  /** DuckDB twin of [[labelCentroids]] over `src` (`where` filters the
-    * input rows): per-dim means in CTE `cent`, reassembled as
-    * `cvecs(label, cvec)`.
-    */
-  private def centroidCtesSql(src: String, where: String = ""): String =
-    s"""cent AS (
-       |  SELECT label, i AS pos, AVG(CAST(embedding[i] AS DOUBLE)) AS cv
-       |  FROM $src, (SELECT unnest(range(1, ${DIM + 1})) AS i)$where
-       |  GROUP BY 1, 2),
-       | cvecs AS (SELECT label, list(cv ORDER BY pos) AS cvec FROM cent GROUP BY 1)""".stripMargin
-
   /** #44 IVF-style ANN: per-label centroids as the coarse quantizer, rank
     * cells by centroid-to-query cosine, probe the top `nProbe` cells, then
     * exact top-k inside the probed cells only. Centroids and candidates are
@@ -150,22 +117,9 @@ object Vectors {
       embeddings, qId, k)
   }
 
-  def annIvfSql(qId: Long = 0L, k: Int = 10, nProbe: Int = 3): String =
-    s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = $qId),
-       | $vsrcCte,
-       | ${centroidCtesSql("vsrc")},
-       | probed AS (
-       |  SELECT c.label FROM cvecs c CROSS JOIN q
-       |  ORDER BY ${cosToSql("c.cvec", "q.qv")} DESC, c.label ASC LIMIT $nProbe)
-       | SELECT e.vec_id, e.label,
-       |  ${flSql(cosToSql("e.embedding", "q.qv"), 6)} AS cosine
-       | FROM vsrc e JOIN probed p ON e.label = p.label CROSS JOIN q
-       | WHERE e.vec_id <> $qId
-       | ORDER BY cosine DESC, e.vec_id ASC LIMIT $k""".stripMargin.replace("\n", "")
-
   // ---- #83 random-hyperplane LSH ANN ---------------------------------------
-  private val LSH_TABLES = 4
-  private val LSH_BITS = 6
+  private[graft] val LSH_TABLES = 4
+  private[graft] val LSH_BITS = 6
 
   /** Deterministic ±1 hyperplane component for (table, bit, dim): parity of
     * an md5-derived value, computed once on the driver and inlined as a
@@ -178,7 +132,7 @@ object Vectors {
       .digest(s"lsh$t-$j-$d".getBytes("UTF-8")).map("%02x".format(_)).mkString
     if ((java.lang.Long.parseLong(hex.substring(0, 7), 16) & 1L) == 0L) 1.0 else -1.0
   }
-  private def lshPlane(t: Int, j: Int): Seq[Double] =
+  private[graft] def lshPlane(t: Int, j: Int): Seq[Double] =
     (1 to DIM).map(d => lshSign(t, j, d))
 
   /** #83 LSH-bucketed ANN (Charikar's SimHash-for-cosine, the sibling of
@@ -216,39 +170,6 @@ object Vectors {
         .join(broadcast(qBuckets), Seq("t", "bucket"))
         .select("vec_id", "label", "embedding").distinct(),
       valid, qId, k)
-  }
-
-  def annLshSql(qId: Long = 0L, k: Int = 10): String = {
-    def planeLit(t: Int, j: Int): String =
-      lshPlane(t, j).map(s => if (s > 0) "1.0" else "-1.0").mkString("[", ", ", "]")
-    // same strict left-fold element order as the Spark-side vec_dot
-    def signDot(t: Int, j: Int): String =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, ${DIM + 1}), i -> CAST(v[i] AS DOUBLE) * (${planeLit(t, j)})[i])), (acc, x) -> acc + x)"
-    def bucketExpr(t: Int): String =
-      (0 until LSH_BITS)
-        .map(j => s"(CASE WHEN ${signDot(t, j)} >= 0 THEN ${1 << j} ELSE 0 END)")
-        .mkString(" + ")
-    val buckets = (0 until LSH_TABLES).map(bucketExpr).mkString("[", ", ", "]")
-    val ts = (0 until LSH_TABLES).mkString("[", ", ", "]")
-    s"""WITH $vsrcCte,
-       | vd AS (
-       |  SELECT vec_id, label, embedding,
-       |   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM vsrc),
-       | sig AS (
-       |  SELECT vec_id, label, embedding,
-       |   unnest($ts) AS t, unnest($buckets) AS bucket
-       |  FROM vd),
-       | qb AS (SELECT t, bucket FROM sig WHERE vec_id = $qId),
-       | q AS (SELECT embedding AS qv FROM vsrc WHERE vec_id = $qId),
-       | cand AS (
-       |  SELECT DISTINCT s.vec_id, s.label, s.embedding
-       |  FROM sig s JOIN qb ON s.t = qb.t AND s.bucket = qb.bucket
-       |  WHERE s.vec_id <> $qId)
-       | SELECT c.vec_id, c.label,
-       |  ${flSql(cosToSql("c.embedding", "q.qv"), 6)} AS cosine
-       | FROM cand c CROSS JOIN q
-       | ORDER BY cosine DESC, c.vec_id ASC LIMIT $k""".stripMargin.replace("\n", "")
   }
 
   // ---- #94 blocked kNN join --------------------------------------------------
@@ -413,150 +334,11 @@ object Vectors {
     topK(blockPairs(embeddings, probes = Some(topLabels)), k)
   }
 
-  /** Validity predicate of the oracles' scored relations — the DuckDB twin
-    * of the Spark sides' [[kmValid]] entry filter.
-    */
-  private def vecValidSql: String =
-    s"vec_id IS NOT NULL AND embedding IS NOT NULL AND len(embedding) = $DIM" +
-      " AND len(list_filter(embedding, x -> x IS NULL)) = 0"
-
-  /** The graph-family oracles' `vsrc` CTE: the valid vectors of raw
-    * `embeddings`, as [[blockPairs]] admits them.
-    */
-  private def vsrcCte: String =
-    s"vsrc AS (SELECT vec_id, label, embedding FROM embeddings WHERE $vecValidSql)"
-
-  /** The relation a family oracle scores for `src`, and the CTEs that
-    * define it: raw `embeddings` is read through [[vsrcCte]]; a derived
-    * relation (the geo relabel) is valid by construction.
-    */
-  private[operators] def validSrcSql(src: String): (String, Seq[String]) =
-    if (src == "embeddings") ("vsrc", Seq(vsrcCte)) else (src, Nil)
-
-  /** Shared DuckDB tail of the probe-family oracles: bounded-state
-    * global top-k over a `pairs(vec_a, vec_b, cosine)` CTE
-    * by ITERATED ARGMAX. Three formulations have now been measured at the
-    * factor-10 soak corpus: the single ROW_NUMBER window externalizes one
-    * sort over every candidate pair (>79 GB spill — VERDICT r09 item 5);
-    * the r10 two-stage ordered-list aggregate bounds the final window but
-    * DuckDB's `list()` state still holds every block's full candidate
-    * list in the aggregate hash table (same spill exhaustion, measured
-    * r10). This form is the one whose state is actually bounded: the
-    * pairs are materialized ONCE with an exact BIGINT order key
-    * (`round(cosine·1e6)·2^40 − vec_b` — cosine is already floored at
-    * scale 6 by `flSql`, so the integer snap is lossless, and the key
-    * order IS (cosine DESC, vec_b ASC); requires vec_id < 2^40, 35 bits
-    * at the x30 soak), then k unrolled `max()` passes find each vec_a's
-    * k-th-largest key (one BIGINT of state per vector per pass, spillable
-    * sequential scans of the materialized CTE), and the final filter
-    * keeps only keys ≥ that threshold — the closing ROW_NUMBER window
-    * ranks ≤ k rows per vector. Bit-equal to the single window: keys are
-    * distinct within a vec_a (a pair's (vec_a, vec_b) appears under
-    * exactly one probe_label, and vec_b disambiguates equal cosines), so
-    * the k-th max is a total-order threshold selecting exactly the
-    * window's first k rows.
-    *
-    * KEY-DOMAIN GUARDS (r11, VERDICT item 3 + advisor): the packing is
-    * only an order isomorphism while 0 ≤ vec_b < 2^40 and the cosine was
-    * already floored at scale 6 (the snap `round(cosine·1e6)` is then
-    * lossless). A violating corpus previously produced a WRONG oracle,
-    * not an error; `scored` now raises via `error()` on an out-of-domain
-    * vec_b (evaluated lazily — in-domain corpora pay one comparison per
-    * pair), and Verify additionally asserts the dumped Spark side
-    * ([[graft.operators.Checks.requireOkeyDomain]]). The floor scale is
-    * [[OKEY_COS_SCALE]], shared with every pairs CTE's `flSql` call. The
-    * closing `nn_rank <= k` filter is defensive: correctness rests on
-    * keys being distinct per vec_a (true for every current pairs CTE);
-    * if a future caller emitted duplicate (vec_a, vec_b) rows the filter
-    * bounds the damage to the contract instead of silently emitting more
-    * than k rows per vector — it operates on ≤ k+dup rows, so it costs
-    * nothing. NULL-cosine pairs (a zero-norm embedding passes
-    * `vecValidSql`; DuckDB x/0.0 is NULL) get a NULL okey and are
-    * DROPPED by construction (max() ignores NULLs and `okey >= kth` is
-    * never true for NULL) — same as the Spark side, where the
-    * `cosine DESC` sort puts NULL last and the row never enters top-k
-    * unless a block has < k non-null candidates, which the synthetic and
-    * reference corpora (no zero-norm vectors) never produce.
-    */
-  private def twoStageTopKSql(k: Int, extraCols: Seq[String] = Nil): String = {
-    require(k >= 1, s"top-k oracle needs k >= 1, got $k")
-    val extraSel = extraCols.map(c => s"$c, ").mkString          // in scored
-    val extraOut = extraCols.map(c => s"s.$c AS $c, ").mkString  // in the final select
-    val ms = (2 to k).map { i =>
-      s""", m$i AS (SELECT s.vec_a, max(s.okey) AS k$i FROM scored s
-         |  JOIN m${i - 1} ON s.vec_a = m${i - 1}.vec_a AND s.okey < m${i - 1}.k${i - 1}
-         |  GROUP BY s.vec_a)""".stripMargin
-    }.mkString
-    val kth = ((k to 2 by -1).map(i => s"m$i.k$i") :+ "m1.k1").mkString("coalesce(", ", ", ")")
-    val ljs = (2 to k).map(i => s" LEFT JOIN m$i ON m1.vec_a = m$i.vec_a").mkString
-    val scale = math.pow(10, OKEY_COS_SCALE).toLong // 6-floored cosine → lossless snap
-    s""", scored AS MATERIALIZED (
-       |  SELECT ${extraSel}vec_a, vec_b, cosine,
-       |   CASE WHEN vec_b < 0 OR vec_b >= $OKEY_ID_BOUND
-       |    THEN CAST(error('okey domain violated: vec_id must be in [0, 2^40)') AS BIGINT)
-       |    ELSE CAST(round(cosine * $scale) AS BIGINT) * $OKEY_ID_BOUND - vec_b END AS okey
-       |  FROM pairs),
-       | m1 AS (SELECT vec_a, max(okey) AS k1 FROM scored GROUP BY vec_a)$ms,
-       | th AS (SELECT m1.vec_a AS vec_a, $kth AS kth FROM m1$ljs)
-       | SELECT * FROM (
-       |  SELECT ${extraOut}s.vec_a AS vec_a, s.vec_b AS vec_b, s.cosine AS cosine,
-       |   CAST(ROW_NUMBER() OVER (PARTITION BY s.vec_a ORDER BY s.okey DESC) AS BIGINT) AS nn_rank
-       |  FROM scored s JOIN th ON s.vec_a = th.vec_a WHERE s.okey >= th.kth)
-       | WHERE nn_rank <= $k""".stripMargin.replace("\n", "")
-  }
-
-  /** The okey packing's contract constants: cosines are floored at
-    * scale 10^OKEY_COS_SCALE before the integer snap — the scale
-    * [[blockPairs]] and [[blockPairsSql]], the family's one pairs site per
-    * engine, floor at — and vec_ids must fit below 2^40,
-    * guarded in `scored` (DuckDB `error()`) and on the Spark dump
-    * ([[graft.operators.Checks.requireOkeyDomain]]).
+  /** The okey packing's cosine scale: [[blockPairs]] and its DuckDB
+    * twin, the family's one pairs site per engine, floor cosines at
+    * 10^OKEY_COS_SCALE before the oracle's integer snap.
     */
   private[graft] val OKEY_COS_SCALE: Int = 6
-  private[graft] val OKEY_ID_BOUND: Long = 1L << 40
-
-  /** DuckDB twin of [[blockPairs]]: (vec_a, vec_b, cosine) over the valid
-    * relation `src`, pairing within a block by the id comparison `idOp`.
-    * `probed` reads the block from a `probes(vec_id, probe_label)` CTE
-    * (own label included) instead of the a-side label.
-    */
-  private[operators] def blockPairsSql(src: String, idOp: String = "<>",
-                                       probed: Boolean = false,
-                                       withLabel: Boolean = false): String = {
-    val from =
-      if (probed) s"probes p JOIN $src a ON a.vec_id = p.vec_id JOIN $src b ON b.label = p.probe_label"
-      else s"$src a JOIN $src b ON a.label = b.label"
-    s"SELECT ${if (withLabel) "a.label AS label, " else ""}a.vec_id AS vec_a, b.vec_id AS vec_b, " +
-      s"${flSql(cosToSql("a.embedding", "b.embedding"), OKEY_COS_SCALE)} AS cosine" +
-      s" FROM $from AND a.vec_id $idOp b.vec_id"
-  }
-
-  /** The kNN-graph oracle: `ctes` (each ending in ", "), the
-    * [[blockPairsSql]] `pairs` CTE over `src`, then the bounded top-k tail.
-    */
-  private def graphSql(k: Int, ctes: String, src: String, probed: Boolean = false,
-                       withLabel: Boolean = false): String =
-    s"WITH ${ctes}pairs AS (${blockPairsSql(src, probed = probed, withLabel = withLabel)}) " +
-      twoStageTopKSql(k, if (withLabel) Seq("label") else Nil)
-
-  /** `src0` / `prefixCtes` parameterize the replay over a derived source
-    * relation (the geo variant feeds the k-means-relabeled corpus through
-    * the identical probe/pair/top-k chain).
-    */
-  def knnJoinMultiProbeSql(k: Int = 5, nProbe: Int = 2, src0: String = "embeddings",
-                           prefixCtes: String = ""): String = {
-    val (src, valid) = validSrcSql(src0)
-    graphSql(k, s"""${valid.map(_ + ", ").mkString}$prefixCtes${centroidCtesSql(src, " WHERE label IS NOT NULL")},
-       | ranked AS (
-       |  SELECT e.vec_id, c.label AS probe_label,
-       |   ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |     ORDER BY ${flSql(cosToSql("c.cvec", "e.embedding"), 6)} DESC, c.label ASC) AS pr
-       |  FROM $src e CROSS JOIN cvecs c),
-       | probes AS (
-       |  SELECT vec_id, probe_label FROM ranked WHERE pr <= $nProbe
-       |  UNION SELECT vec_id, label AS probe_label FROM $src), """.stripMargin.replace("\n", ""),
-      src, probed = true)
-  }
 
   /** #122 geometry-blocked kNN join — the deploy reality of the blocked
     * kNN graph: the block key is a LEARNED IVF cell ([[clusterKmeans]]'s
@@ -568,9 +350,9 @@ object Vectors {
     * through the fused [[graft.functions.TopProbeLabels]] expression
     * against the CELL-MEAN centroids of the relabeled corpus.
     *
-    * ORACLE-EXACT with zero stashing: the assignment is the deterministic
-    * fixed-point Lloyd the unrolled CTE chain replays (kmeansCtes →
-    * kmeansAssignSql), and the probe/pair/top-k chain is the mp oracle
+    * ORACLE-EXACT without a recorded model: the assignment is the deterministic
+    * fixed-point Lloyd the oracle's unrolled CTE chain replays, and the
+    * probe/pair/top-k chain is the mp oracle
     * parameterized over the relabeled relation — the whole composition
     * (train → assign → probe → graph) is replayed end-to-end in DuckDB.
     * The gate's fixed kCells=8 keeps every kernel on the flat scan, so
@@ -649,15 +431,6 @@ object Vectors {
     math.max(1 << 14, memCap)
   }
 
-  def knnJoinGeoSql(k: Int = 5, nProbe: Int = 2, kCells: Int = 8, iters: Int = 3): String =
-    knnJoinMultiProbeSql(k, nProbe, src0 = "geo",
-      prefixCtes = s"""${kmeansCtes(kCells, iters)},
-        | asg AS (${kmeansAssignSql(iters)}),
-        | geo AS (
-        |  SELECT e.vec_id, a.cluster AS label, e.embedding
-        |  FROM embeddings e JOIN asg a ON a.vec_id = e.vec_id),
-        | """.stripMargin.replace("\n", ""))
-
   /** #119 hierarchical multi-probe kNN join: identical join semantics to
     * [[knnJoinMultiProbe]], but probe ASSIGNMENT goes through a two-level
     * coarse quantizer — score ceil(sqrt(C)) super-cells first, then only
@@ -674,16 +447,23 @@ object Vectors {
     * contract as the PQ codebooks (init = first S cells in label order,
     * fixed iters, ties to lowest index) on the C cell centroids; both
     * ranking stages compare 6-floored cosines with index/label ASC
-    * tie-breaks. The trained constants (super-centroids + cell→super
-    * map + cell centroids) literal-inline into a stashed oracle that
-    * replays the full hierarchy in DuckDB.
+    * tie-breaks. The trained hierarchy ([[ProbeHierarchy]]) is a value
+    * the caller can keep and re-apply.
     */
   def knnJoinMultiProbeHier(embeddings: DataFrame, k: Int = 5, nProbe: Int = 2,
-                            superProbe: Int = 2, stashOracle: Boolean = false,
-                            unrolled: Boolean = false): DataFrame = {
-    import graft.OracleStash.dlist
+                            superProbe: Int = 2, unrolled: Boolean = false): DataFrame =
+    knnJoinMultiProbeHier(embeddings, trainProbeHierarchy(embeddings), k, nProbe, superProbe, unrolled)
+
+  /** The trained two-level coarse quantizer: the label cells' centroids,
+    * the super-centroids and each cell's super.
+    */
+  final case class ProbeHierarchy(cells: Array[(Int, Array[Double])], supers: Array[Array[Double]],
+                                  cellSup: Array[Int])
+
+  /** Trains [[ProbeHierarchy]] (None when no labeled cell exists). */
+  def trainProbeHierarchy(embeddings: DataFrame): Option[ProbeHierarchy] = {
     val cents = centroidTable(embeddings)
-    if (cents.isEmpty) return knnJoin(embeddings, k)
+    if (cents.isEmpty) return None
     val nSup = math.ceil(math.sqrt(cents.length.toDouble)).toInt
     // driver Lloyd on the C cell-centroid vectors = trainPqCodebook with
     // one subspace (same init/iteration/tie contract), S supers
@@ -699,14 +479,16 @@ object Vectors {
       }
       best
     }
-    val cellSup: Array[Int] = cents.map(c => nearestSup(c._2))
-    if (stashOracle) {
-      val supVals = supCents.toIndexedSeq.zipWithIndex
-        .map { case (v, j) => s"($j, ${dlist(v.toSeq)})" }.mkString(", ")
-      val cellVals = cents.toIndexedSeq.zipWithIndex
-        .map { case ((l, cv), ci) => s"(${cellSup(ci)}, $l, ${dlist(cv.toSeq)})" }.mkString(", ")
-      graft.OracleStash.put("v_knn_join_mph", knnJoinMphOracleSql(supVals, cellVals, k, nProbe, superProbe))
-    }
+    Some(ProbeHierarchy(cents, supCents, cents.map(c => nearestSup(c._2))))
+  }
+
+  /** [[knnJoinMultiProbeHier]] over a trained hierarchy (None: the
+    * single-block [[knnJoin]]).
+    */
+  def knnJoinMultiProbeHier(embeddings: DataFrame, hierarchy: Option[ProbeHierarchy], k: Int,
+                            nProbe: Int, superProbe: Int, unrolled: Boolean): DataFrame = {
+    if (hierarchy.isEmpty) return knnJoin(embeddings, k)
+    val ProbeHierarchy(cents, supCents, cellSup) = hierarchy.get
     // Deploy path: BOTH ranking stages fused into the codegen'd
     // TopProbeLabelsHier expression — supers, cell→super map and cell
     // centroids are codegen reference objects, so plan size is O(1) in C
@@ -739,44 +521,16 @@ object Vectors {
       // a NULL vector nulls the expression; the unrolled form's all-null
       // scores pick supers {0..superProbe-1} (sid asc) then member cells
       // label-asc — the same list, precomputed here as the coalesce arm
-      val sp = math.min(superProbe, nSup)
+      val sp = math.min(superProbe, supCents.length)
       val nullFallback = cents.indices
         .filter(ci => cellSup(ci) < sp).take(nProbe).map(ci => cents(ci)._1)
       val topLabels = coalesce(
         graft.functions.VectorFunctions.topProbeLabelsHier(
-          col("embedding"), DIM, supFlat, labelArr, cellSup, cellFlat, nProbe, superProbe),
+          col("embedding"), DIM, supCents.flatten, labelArr, cellSup, cellFlat, nProbe, superProbe),
         typedLit(nullFallback))
       topK(blockPairs(embeddings, probes = Some(topLabels)), k)
     }
   }
-
-  /** DuckDB twin of the hierarchy, from the literal-inlined trained
-    * constants (supers, cell→super map, cell centroids): replay super
-    * ranking → member-cell ranking → probes → pairs → top-k.
-    */
-  private def knnJoinMphOracleSql(supVals: String, cellVals: String,
-                                  k: Int, nProbe: Int, superProbe: Int): String =
-    graphSql(k, s"""$vsrcCte,
-       | sup AS (SELECT * FROM (VALUES $supVals) AS t(sid, svec)),
-       | cells AS (SELECT * FROM (VALUES $cellVals) AS t(sid, lbl, cvec)),
-       | sscore AS (
-       |  SELECT e.vec_id, s.sid,
-       |   ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |     ORDER BY ${flSql(cosToSql("s.svec", "e.embedding"), 6)} DESC, s.sid ASC) AS sr
-       |  FROM vsrc e CROSS JOIN sup s),
-       | cscore AS (
-       |  SELECT e.vec_id, c.lbl,
-       |   ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |     ORDER BY ${flSql(cosToSql("c.cvec", "e.embedding"), 6)} DESC, c.lbl ASC) AS cr
-       |  FROM vsrc e
-       |  JOIN sscore t ON t.vec_id = e.vec_id AND t.sr <= $superProbe
-       |  JOIN cells c ON c.sid = t.sid),
-       | probes AS (
-       |  SELECT vec_id, lbl AS probe_label FROM cscore WHERE cr <= $nProbe
-       |  UNION SELECT vec_id, label AS probe_label FROM vsrc), """.stripMargin.replace("\n", ""),
-      "vsrc", probed = true)
-
-  def knnJoinSql(k: Int = 5): String = graphSql(k, s"$vsrcCte, ", "vsrc")
 
   /** The blocked kNN graph WITH its block key — the stored-MV form of
     * [[knnJoin]] (at deploy the graph is partitioned by `label`, which is
@@ -786,8 +540,6 @@ object Vectors {
     */
   def knnGraph(embeddings: DataFrame, k: Int = 5): DataFrame =
     topK(blockPairs(embeddings, withLabel = true), k)
-
-  def knnGraphSql(k: Int = 5): String = graphSql(k, s"$vsrcCte, ", "vsrc", withLabel = true)
 
   /** #123 incremental maintenance of the blocked kNN graph — the
     * incremental-MV discipline ([[mergeKmeansState]],
@@ -907,8 +659,11 @@ object Vectors {
       .select(col("vec_id"), col("label"),
         lit(0d).as("adc_cosine"), lit(0d).as("cosine"))
 
+  /** |q|, the ADC cosine's query norm. */
+  private[graft] def pqQNorm(q: Array[Double]): Double = math.sqrt(q.map(x => x * x).sum)
+
   /** Query LUTs per (subspace, code): dot(q_s, centroid) and |centroid|². */
-  private def pqLuts(q: Array[Double], cb: Array[Double], m: Int, kk: Int)
+  private[graft] def pqLuts(q: Array[Double], cb: Array[Double], m: Int, kk: Int)
       : (Array[Array[Double]], Array[Array[Double]]) = {
     val sub = DIM / m
     (Array.tabulate(m, kk) { (s, c) =>
@@ -919,7 +674,7 @@ object Vectors {
   }
 
   /** Shared ADC tail: raw-double ADC ranking → rerank cut → exact-cosine
-    * top-k — the Spark twin of [[pqTailSql]]. `scored` must carry
+    * top-k, twinned by the PQ oracles' shared tail. `scored` must carry
     * (vec_id, label, embedding, adc_cosine).
     */
   private def adcTopK(scored: DataFrame, embeddings: DataFrame, qId: Long,
@@ -928,7 +683,7 @@ object Vectors {
       embeddings, qId, k, fl(col("adc_cosine"), 6).as("adc_cosine"))
 
   /** The scorable corpus: everything but the query row, validity-filtered
-    * exactly like [[pqSrcSql]]'s oracle CTE (an invalid row would
+    * exactly like the PQ oracles' source CTE (an invalid row would
     * NULL-propagate through pqEncode on this side but receive a real
     * tie-broken code in DuckDB — divergent candidate sets).
     */
@@ -953,25 +708,40 @@ object Vectors {
     * At 100 TB: the codes relation is 8 bytes/vector (64-byte floats →
     * 8-byte codes, 32× smaller than the raw scan IVF/LSH still read for
     * verification); the ADC scan is pure in-row lookups; only `rerank`
-    * rows ever touch raw vectors. Oracle: the trained codebook/LUTs are
-    * deterministic driver arrays, literal-inlined into a STASHED
-    * hash-exact DuckDB replay (see the trained-model-oracles block below)
-    * — changing the ADC formula must change [[annPqOracleSql]] in step;
-    * the spec additionally pins exact-path equality (rerank ≥ corpus
-    * reproduces brute-force top-k bit-for-bit) and determinism.
+    * rows ever touch raw vectors. The trained codebook is a deterministic
+    * driver array ([[PqModel]]), so a DuckDB replay can inline it as
+    * literals; the spec additionally pins exact-path equality (rerank ≥
+    * corpus reproduces brute-force top-k bit-for-bit) and determinism.
     */
   def annPq(embeddings: DataFrame, qId: Long = 0L, k: Int = 10,
             m: Int = 8, codebookK: Int = 16, rerank: Int = 100,
-            sampleN: Int = 256, iters: Int = 5): DataFrame = {
+            sampleN: Int = 256, iters: Int = 5): DataFrame =
+    annPq(embeddings, trainPq(embeddings, qId, m, codebookK, sampleN, iters), k, rerank)
+
+  /** A trained PQ-family query: the query row `q` (`qId`'s vector), the
+    * subspace count `m`, `codebookK` codes per subspace and the codebooks
+    * (`cb`; `cb2` the residual stage's, `rot` the OPQ rotation — empty
+    * where the variant has none).
+    */
+  final case class PqModel(qId: Long, q: Array[Double], m: Int, codebookK: Int, cb: Array[Double],
+                           cb2: Array[Double] = Array.empty, rot: Array[Double] = Array.empty)
+
+  /** [[annPq]]'s training: None on a degenerate corpus (nothing to train
+    * on / query vector absent).
+    */
+  def trainPq(embeddings: DataFrame, qId: Long = 0L, m: Int = 8, codebookK: Int = 16,
+              sampleN: Int = 256, iters: Int = 5): Option[PqModel] = {
     val sample = pqSample(embeddings, sampleN)
     val qRow = pqQueryRow(embeddings, qId)
-    if (sample.isEmpty || qRow.isEmpty) return pqEmpty(embeddings)
-    val cb = trainPqCodebook(sample, DIM, m, codebookK, iters)
-    val q = qRow.get
-    val qNorm = math.sqrt(q.map(x => x * x).sum)
+    if (sample.isEmpty || qRow.isEmpty) None
+    else Some(PqModel(qId, qRow.get, m, codebookK, trainPqCodebook(sample, DIM, m, codebookK, iters)))
+  }
+
+  def annPq(embeddings: DataFrame, model: Option[PqModel], k: Int, rerank: Int): DataFrame = {
+    if (model.isEmpty) return pqEmpty(embeddings)
+    val PqModel(qId, q, m, codebookK, cb, _, _) = model.get
+    val qNorm = pqQNorm(q)
     val (lutDot, lutN2) = pqLuts(q, cb, m, codebookK)
-    sqlStash.put("v_ann_pq",
-      annPqOracleSql(qId, k, m, codebookK, rerank, cb, lutDot, lutN2, qNorm))
     val codes = pqCorpus(embeddings, qId)
       .select(col("vec_id"), col("label"), col("embedding"),
         graft.functions.VectorFunctions.pqEncode(col("embedding"), DIM, m, codebookK, cb).as("codes"))
@@ -1013,185 +783,6 @@ object Vectors {
     }
   }
 
-  // ---- trained-model oracles (literal-inlined) -----------------------------
-
-  /** Oracle SQL for the trained PQ family goes through [[graft.OracleStash]],
-    * available once the operator has run in this JVM — Verify dumps
-    * oracle_sql.json AFTER its query loop, so the driver's gate always sees
-    * these. The codebooks / rotations / LUT tables are deterministic driver
-    * arrays (seeded md5 sample order, fixed-count Lloyd / Procrustes with
-    * sequential-fold arithmetic): every run rebuilds bit-identical values,
-    * so the operator can inline them as SQL literals and DuckDB
-    * independently re-runs the encode + ADC scoring + re-rank against
-    * them — the [[annLsh]] hyperplane trick extended to trained constants.
-    */
-  private def sqlStash = graft.OracleStash
-  import graft.OracleStash.{dl, dlist}
-
-  /** |centroid|² per (subspace, code) — the same ascending-j fold as
-    * [[graft.functions.PqEncode]]'s plan-time cnorm, recomputed here so the
-    * oracle inlines bit-identical values.
-    */
-  private def pqCnorm(cb: Array[Double], m: Int, kk: Int, sub: Int): Array[Double] =
-    Array.tabulate(m * kk) { sc =>
-      var acc = 0d
-      var j = 0
-      while (j < sub) { val x = cb(sc * sub + j); acc += x * x; j += 1 }
-      acc
-    }
-
-  /** CTE chain replicating [[graft.functions.PqEncode]] in DuckDB: for every
-    * row of `src` (vec_id + the vector `elem` reads), the per-subspace
-    * argmin code against the `cbName`/`cnName` literal CTEs via the same
-    * expanded-form distance `cn[s,c] − 2·⟨v_s, c⟩` — ascending-j
-    * `list_reduce` fold, first-min (lowest code) tie-break. Emits
-    * `<out>_d`, `<out>_e` and `<out>` (vec_id, cs = list of m codes).
-    * `elem(i)` must yield the DOUBLE vector element at 1-based index `i`
-    * reading from alias `t`.
-    */
-  private def pqEncodeCtes(src: String, elem: String => String, m: Int, kk: Int,
-                           cbName: String, cnName: String, out: String): String = {
-    val sub = DIM / m
-    val dot = s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, ${sub + 1}), j -> ${elem(s"ss.s * $sub + j")} * $cbName.v[((ss.s * $kk + cc.c) * $sub) + j])), (acc, x) -> acc + x)"
-    s"""${out}_d AS (
-       |  SELECT t.vec_id, ss.s, cc.c,
-       |   $cnName.v[ss.s * $kk + cc.c + 1] - 2 * $dot AS d
-       |  FROM $src t, (SELECT unnest(range(0, $m)) AS s) ss,
-       |   (SELECT unnest(range(0, $kk)) AS c) cc, $cbName, $cnName),
-       | ${out}_e AS (
-       |  SELECT vec_id, s, c FROM (
-       |   SELECT vec_id, s, c, row_number() OVER (PARTITION BY vec_id, s ORDER BY d ASC, c ASC) AS rn
-       |   FROM ${out}_d) WHERE rn = 1),
-       | $out AS (SELECT vec_id, list(c ORDER BY s) AS cs FROM ${out}_e GROUP BY 1)""".stripMargin
-  }
-
-  /** Shared corpus CTE for the three plain-PQ oracles: the SAME validity
-    * predicate as the Spark sides' [[kmValid]] (the ivfPqOracleSql shape),
-    * so a NULL/wrong-dim embedding can never be scored by one engine and
-    * dropped (or NULL-ranked) by the other.
-    */
-  private def pqSrcSql(qId: Long): String =
-    s"src AS (SELECT vec_id, label, embedding FROM embeddings WHERE vec_id <> $qId AND $vecValidSql)"
-
-  /** Shared tail: ADC ranking → rerank cut → exact-cosine top-k, identical
-    * to the Spark plans' orderBy/limit sequence (raw doubles rank, floored
-    * doubles display).
-    */
-  private def pqTailSql(tbl: String, qId: Long, k: Int, rerank: Int): String =
-    s""" cand AS (SELECT * FROM adc ORDER BY adc_cosine DESC, vec_id ASC LIMIT $rerank),
-       | q AS (SELECT embedding AS qv FROM $tbl WHERE vec_id = $qId)
-       | SELECT c.vec_id, c.label, ${flSql("c.adc_cosine", 6)} AS adc_cosine,
-       |  ${flSql(cosToSql("c.embedding", "q.qv"), 6)} AS cosine
-       | FROM cand c CROSS JOIN q
-       | ORDER BY cosine DESC, c.vec_id ASC LIMIT $k""".stripMargin
-
-  private def annPqOracleSql(qId: Long, k: Int, m: Int, kk: Int, rerank: Int,
-      cb: Array[Double], lutDot: Array[Array[Double]], lutN2: Array[Array[Double]],
-      qNorm: Double): String = {
-    val cn = pqCnorm(cb, m, kk, DIM / m)
-    val dSum = (0 until m).map(s => s"(${dlist(lutDot(s))})[t.cs[${s + 1}] + 1]").mkString(" + ")
-    val nSum = (0 until m).map(s => s"(${dlist(lutN2(s))})[t.cs[${s + 1}] + 1]").mkString(" + ")
-    s"""WITH cb AS (SELECT ${dlist(cb)} AS v),
-       | cn AS (SELECT ${dlist(cn)} AS v),
-       | ${pqSrcSql(qId)},
-       | ${pqEncodeCtes("src", i => s"CAST(t.embedding[$i] AS DOUBLE)", m, kk, "cb", "cn", "codes")},
-       | adc AS (
-       |  SELECT s.vec_id, s.label, s.embedding,
-       |   ($dSum) / (sqrt($nSum) * ${dl(qNorm)}) AS adc_cosine
-       |  FROM codes t JOIN src s ON s.vec_id = t.vec_id),
-       |${pqTailSql("embeddings", qId, k, rerank)}""".stripMargin.replace("\n", "")
-  }
-
-  private def annPqResidualOracleSql(qId: Long, k: Int, m: Int, kk: Int, rerank: Int,
-      cb1: Array[Double], cb2: Array[Double],
-      d1: Array[Array[Double]], d2: Array[Array[Double]],
-      n1: Array[Array[Double]], n2: Array[Array[Double]],
-      cross: Array[Array[Double]], qNorm: Double): String = {
-    val sub = DIM / m
-    val cn1 = pqCnorm(cb1, m, kk, sub)
-    val cn2 = pqCnorm(cb2, m, kk, sub)
-    val dSum = (0 until m).map(s =>
-      s"((${dlist(d1(s))})[t1.cs[${s + 1}] + 1] + (${dlist(d2(s))})[t2.cs[${s + 1}] + 1])").mkString(" + ")
-    val nSum = (0 until m).map(s =>
-      s"((${dlist(n1(s))})[t1.cs[${s + 1}] + 1] + (${dlist(n2(s))})[t2.cs[${s + 1}] + 1] + (${dlist(cross(s))})[t1.cs[${s + 1}] * $kk + t2.cs[${s + 1}] + 1])").mkString(" + ")
-    // stage-1 reconstruction element at 1-based i: subspace (i-1)//sub,
-    // within-subspace (i-1)%sub — the Spark recon1 index arithmetic
-    val recon = s"cb1.v[((((i - 1) // $sub) * $kk + t.cs[((i - 1) // $sub) + 1]) * $sub) + ((i - 1) % $sub) + 1]"
-    s"""WITH cb1 AS (SELECT ${dlist(cb1)} AS v),
-       | cn1 AS (SELECT ${dlist(cn1)} AS v),
-       | cb2 AS (SELECT ${dlist(cb2)} AS v),
-       | cn2x AS (SELECT ${dlist(cn2)} AS v),
-       | ${pqSrcSql(qId)},
-       | ${pqEncodeCtes("src", i => s"CAST(t.embedding[$i] AS DOUBLE)", m, kk, "cb1", "cn1", "codes1")},
-       | rsrc AS (
-       |  SELECT s.vec_id, list_transform(range(1, ${DIM + 1}), i ->
-       |   CAST(s.embedding[i] AS DOUBLE) - $recon) AS rv
-       |  FROM codes1 t JOIN src s ON s.vec_id = t.vec_id CROSS JOIN cb1),
-       | ${pqEncodeCtes("rsrc", i => s"t.rv[$i]", m, kk, "cb2", "cn2x", "codes2")},
-       | adc AS (
-       |  SELECT s.vec_id, s.label, s.embedding,
-       |   ($dSum) / (sqrt($nSum) * ${dl(qNorm)}) AS adc_cosine
-       |  FROM codes1 t1 JOIN codes2 t2 ON t1.vec_id = t2.vec_id
-       |   JOIN src s ON s.vec_id = t1.vec_id),
-       |${pqTailSql("embeddings", qId, k, rerank)}""".stripMargin.replace("\n", "")
-  }
-
-  private def annPqOpqOracleSql(qId: Long, k: Int, m: Int, kk: Int, rerank: Int,
-      rot: Array[Double], cb: Array[Double],
-      lutDot: Array[Array[Double]], lutN2: Array[Array[Double]],
-      qNorm: Double): String = {
-    val cn = pqCnorm(cb, m, kk, DIM / m)
-    val dSum = (0 until m).map(s => s"(${dlist(lutDot(s))})[t.cs[${s + 1}] + 1]").mkString(" + ")
-    val nSum = (0 until m).map(s => s"(${dlist(lutN2(s))})[t.cs[${s + 1}] + 1]").mkString(" + ")
-    // R·v row r (0-based) = ascending fold over 1-based ci of
-    // rot[r*DIM + ci] · v[ci] — the RotateVec kernel's exact sequence
-    s"""WITH rot AS (SELECT ${dlist(rot)} AS v),
-       | cb AS (SELECT ${dlist(cb)} AS v),
-       | cn AS (SELECT ${dlist(cn)} AS v),
-       | ${pqSrcSql(qId)},
-       | rsrc AS (
-       |  SELECT s.vec_id, list_transform(range(0, $DIM), r ->
-       |   list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, ${DIM + 1}),
-       |    ci -> rot.v[r * $DIM + ci] * CAST(s.embedding[ci] AS DOUBLE))), (acc, x) -> acc + x)) AS rv
-       |  FROM src s CROSS JOIN rot),
-       | ${pqEncodeCtes("rsrc", i => s"t.rv[$i]", m, kk, "cb", "cn", "codes")},
-       | adc AS (
-       |  SELECT s.vec_id, s.label, s.embedding,
-       |   ($dSum) / (sqrt($nSum) * ${dl(qNorm)}) AS adc_cosine
-       |  FROM codes t JOIN src s ON s.vec_id = t.vec_id),
-       |${pqTailSql("embeddings", qId, k, rerank)}""".stripMargin.replace("\n", "")
-  }
-
-  private def ivfPqOracleSql(withPrefix: String, tbl: String,
-      qId: Long, k: Int, m: Int, kk: Int, rerank: Int,
-      probed: Seq[(Int, Array[Double], Double, Double, Array[Double])],
-      cb: Array[Double], dLut: Array[Array[Double]], n2Lut: Array[Array[Double]],
-      qNorm: Double): String = {
-    val cn = pqCnorm(cb, m, kk, DIM / m)
-    val values = probed.map { case (lbl, cvec, cdotq, cn2v, cross) =>
-      s"($lbl, ${dlist(cvec)}, ${dl(cdotq)}, ${dl(cn2v)}, ${dlist(cross)})"
-    }.mkString(", ")
-    val dSum = (0 until m).map(s => s"(${dlist(dLut(s))})[t.cs[${s + 1}] + 1]").mkString(" + ")
-    val nSum = (0 until m).map(s =>
-      s"((${dlist(n2Lut(s))})[t.cs[${s + 1}] + 1] + s.crs[${s * kk} + t.cs[${s + 1}] + 1])").mkString(" + ")
-    s"""WITH ${withPrefix}probed AS (SELECT * FROM (VALUES $values) AS pv(label, cvec, cdotq, cn2, crs)),
-       | cb AS (SELECT ${dlist(cb)} AS v),
-       | cn AS (SELECT ${dlist(cn)} AS v),
-       | src AS (
-       |  SELECT e.vec_id, e.label, e.embedding, p.cvec, p.cdotq, p.cn2, p.crs
-       |  FROM $tbl e JOIN probed p ON e.label = p.label
-       |  WHERE e.vec_id <> $qId AND e.vec_id IS NOT NULL AND e.embedding IS NOT NULL
-       |   AND len(e.embedding) = $DIM AND len(list_filter(e.embedding, x -> x IS NULL)) = 0),
-       | rsrc AS (SELECT vec_id, list_transform(range(1, ${DIM + 1}), i ->
-       |   CAST(embedding[i] AS DOUBLE) - cvec[i]) AS rv FROM src),
-       | ${pqEncodeCtes("rsrc", i => s"t.rv[$i]", m, kk, "cb", "cn", "codes")},
-       | adc AS (
-       |  SELECT s.vec_id, s.label, s.embedding,
-       |   (s.cdotq + ($dSum)) / (sqrt(s.cn2 + ($nSum)) * ${dl(qNorm)}) AS adc_cosine
-       |  FROM codes t JOIN src s ON s.vec_id = t.vec_id),
-       |${pqTailSql(tbl, qId, k, rerank)}""".stripMargin.replace("\n", "")
-  }
-
   /** #98 residual (two-stage) PQ ANN — the refinement seat the plain PQ
     * operator (#89) reserves: stage 1 quantizes the vector, stage 2
     * quantizes the RESIDUAL `v − reconstruct₁(v)` with its own codebook
@@ -1211,32 +802,47 @@ object Vectors {
     */
   def annPqResidual(embeddings: DataFrame, qId: Long = 0L, k: Int = 10,
                     m: Int = 4, codebookK: Int = 16, rerank: Int = 100,
-                    sampleN: Int = 256, iters: Int = 5): DataFrame = {
-    val sub = DIM / m
+                    sampleN: Int = 256, iters: Int = 5): DataFrame =
+    annPqResidual(embeddings, trainPqResidual(embeddings, qId, m, codebookK, sampleN, iters), k, rerank)
+
+  /** [[annPqResidual]]'s training: the stage-1 codebook `cb` and the
+    * residual codebook `cb2`.
+    */
+  def trainPqResidual(embeddings: DataFrame, qId: Long = 0L, m: Int = 4, codebookK: Int = 16,
+                      sampleN: Int = 256, iters: Int = 5): Option[PqModel] = {
     val sample = pqSample(embeddings, sampleN)
     val qRow = pqQueryRow(embeddings, qId)
-    if (sample.isEmpty || qRow.isEmpty) return pqEmpty(embeddings)
+    if (sample.isEmpty || qRow.isEmpty) return None
     val cb1 = trainPqCodebook(sample, DIM, m, codebookK, iters)
     val residuals = sample.map { v =>
       val rec = pqReconstructLocal(pqEncodeLocal(v, cb1, DIM, m, codebookK), cb1, DIM, m, codebookK)
       Array.tabulate(DIM)(i => v(i) - rec(i))
     }
-    val cb2 = trainPqCodebook(residuals, DIM, m, codebookK, iters)
-    val q = qRow.get
-    val qNorm = math.sqrt(q.map(x => x * x).sum)
-    val (d1, n1) = pqLuts(q, cb1, m, codebookK)
-    val (d2, n2lut) = pqLuts(q, cb2, m, codebookK)
-    // cross[s][c1*k + c2] = 2 * <cent1_s_c1, cent2_s_c2>
-    val cross = Array.tabulate(m) { s =>
+    Some(PqModel(qId, qRow.get, m, codebookK, cb1, cb2 = trainPqCodebook(residuals, DIM, m, codebookK, iters)))
+  }
+
+  /** cross[s][c1*k + c2] = 2 * <cent1_s_c1, cent2_s_c2>: the residual
+    * ADC norm's within-subspace cross term.
+    */
+  private[graft] def pqCross(model: PqModel): Array[Array[Double]] = {
+    val PqModel(_, _, m, codebookK, cb1, cb2, _) = model
+    val sub = DIM / m
+    Array.tabulate(m) { s =>
       Array.tabulate(codebookK * codebookK) { cc =>
         val c1 = cc / codebookK; val c2 = cc % codebookK
         2d * (0 until sub).map(j =>
           cb1((s * codebookK + c1) * sub + j) * cb2((s * codebookK + c2) * sub + j)).sum
       }
     }
-    sqlStash.put("v_ann_pq_residual",
-      annPqResidualOracleSql(qId, k, m, codebookK, rerank, cb1, cb2,
-        d1, d2, n1, n2lut, cross, qNorm))
+  }
+
+  def annPqResidual(embeddings: DataFrame, model: Option[PqModel], k: Int, rerank: Int): DataFrame = {
+    if (model.isEmpty) return pqEmpty(embeddings)
+    val PqModel(qId, q, m, codebookK, cb1, cb2, _) = model.get
+    val qNorm = pqQNorm(q)
+    val (d1, n1) = pqLuts(q, cb1, m, codebookK)
+    val (d2, n2lut) = pqLuts(q, cb2, m, codebookK)
+    val cross = pqCross(model.get)
     // stage-1 reconstruction + subtract fused into ONE codegen'd kernel
     // ([[graft.functions.PqResidual]]): the former zip_with over an
     // array(dim × element_at(lit(cb1), ...)) tree carried dim COPIES of
@@ -1344,16 +950,27 @@ object Vectors {
     */
   def annPqOpq(embeddings: DataFrame, qId: Long = 0L, k: Int = 10,
                m: Int = 8, codebookK: Int = 16, rerank: Int = 100,
-               sampleN: Int = 256, iters: Int = 5, opqIters: Int = 8): DataFrame = {
+               sampleN: Int = 256, iters: Int = 5, opqIters: Int = 8): DataFrame =
+    annPqOpq(embeddings, trainPqOpq(embeddings, qId, m, codebookK, sampleN, iters, opqIters), k, rerank)
+
+  /** [[annPqOpq]]'s training: the rotation `rot` and the rotated-space
+    * codebook `cb`.
+    */
+  def trainPqOpq(embeddings: DataFrame, qId: Long = 0L, m: Int = 8, codebookK: Int = 16,
+                 sampleN: Int = 256, iters: Int = 5, opqIters: Int = 8): Option[PqModel] = {
     val sample = pqSample(embeddings, sampleN)
     val qRow = pqQueryRow(embeddings, qId)
-    if (sample.isEmpty || qRow.isEmpty) return pqEmpty(embeddings)
+    if (sample.isEmpty || qRow.isEmpty) return None
     val (rot, cb) = trainOpq(sample, DIM, m, codebookK, iters, opqIters)
-    val q = graft.ml.LinAlg.matvec(rot, DIM, qRow.get)
-    val qNorm = math.sqrt(qRow.get.map(x => x * x).sum) // = |R·q|, R orthogonal
+    Some(PqModel(qId, qRow.get, m, codebookK, cb, rot = rot))
+  }
+
+  def annPqOpq(embeddings: DataFrame, model: Option[PqModel], k: Int, rerank: Int): DataFrame = {
+    if (model.isEmpty) return pqEmpty(embeddings)
+    val PqModel(qId, qRaw, m, codebookK, cb, _, rot) = model.get
+    val q = graft.ml.LinAlg.matvec(rot, DIM, qRaw)
+    val qNorm = pqQNorm(qRaw) // = |R·q|, R orthogonal
     val (lutDot, lutN2) = pqLuts(q, cb, m, codebookK)
-    sqlStash.put("v_ann_pq_opq",
-      annPqOpqOracleSql(qId, k, m, codebookK, rerank, rot, cb, lutDot, lutN2, qNorm))
     val codes = pqCorpus(embeddings, qId)
       .select(col("vec_id"), col("label"), col("embedding"),
         graft.functions.VectorFunctions.pqEncode(
@@ -1397,18 +1014,6 @@ object Vectors {
           .as("max_err"))
   }
 
-  val quantizeInt8Sql: String =
-    s"""WITH v AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       |  FROM embeddings),
-       | s AS (
-       |  SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) / 127 AS scale FROM v)
-       | SELECT vec_id, ${flSql("scale", 6)} AS scale,
-       |  CASE WHEN scale = 0 THEN 0.0
-       |   ELSE ${flSql("list_max(list_transform(v, x -> abs(floor(x / scale) * scale - x)))", 6)}
-       |  END AS max_err
-       | FROM s""".stripMargin.replace("\n", "")
-
   // ---- #109 corpus-wide distributed k-means --------------------------------
 
   /** Fixed-point quantization scale for the centroid-update sums. At 1e6 a
@@ -1416,7 +1021,7 @@ object Vectors {
     * member vectors of magnitude ~10; beyond that, lower the scale (the
     * only effect is coarser centroids — assignment stays exact either way).
     */
-  private val KM_QS = 1e6
+  private[graft] val KM_QS = 1e6
 
   /** Embedding-only validity — for relations that carry no vec_id (e.g.
     * a raw (ts, embedding) stream): non-null, right dimension, no null
@@ -1427,8 +1032,8 @@ object Vectors {
       size(filter(col("embedding"), x => x.isNull)) === 0
 
   /** A valid member vector for the k-means and kNN-graph families
-    * (mirrored in the e CTE of every oracle sharing [[kmeansCtes]] and in
-    * the graph oracles' `vsrc` via [[vecValidSql]]).
+    * (mirrored in the k-means oracles' `e` CTE and the graph oracles'
+    * `vsrc`).
     */
   private[graft] def kmValid: Column = col("vec_id").isNotNull && embValid
 
@@ -1593,112 +1198,37 @@ object Vectors {
     * production init for balanced IVF cells at corpus scale (the k
     * lowest-id init of [[clusterKmeans]] can seed adjacent ids into the
     * same region; oversampling seeds proportionally to cost). Same
-    * fixed-point Lloyd loop and assignment as [[clusterKmeans]]; the
-    * trained init centroids are literal-inlined into a stashed oracle
-    * ([[graft.OracleStash]]) and DuckDB replays the Lloyd iterations +
-    * assignment from them.
+    * fixed-point Lloyd loop and assignment as [[clusterKmeans]].
     */
   def clusterKmeansPar(embeddings: DataFrame, k: Int = 8, rounds: Int = 3,
-                       iters: Int = 3, stashOracle: Boolean = false): DataFrame = {
+                       iters: Int = 3): DataFrame =
+    clusterKmeansPar(embeddings, trainKmeansPar(embeddings, k, rounds, iters))
+
+  /** k-means‖'s trained model: the init centroids and the Lloyd
+    * centroids trained from them (both empty on an empty corpus).
+    */
+  final case class KmeansParModel(init: Array[Array[Double]], centroids: Array[Array[Double]])
+
+  def trainKmeansPar(embeddings: DataFrame, k: Int = 8, rounds: Int = 3,
+                     iters: Int = 3): KmeansParModel = {
     val e = embeddings.filter(kmValid).select(col("vec_id"), col("embedding"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val init = kmeansParInit(e, k, rounds)
     val cent = trainCentroidsFrom(e, init, iters)
     e.unpersist(blocking = false)
+    KmeansParModel(init, cent)
+  }
+
+  def clusterKmeansPar(embeddings: DataFrame, model: KmeansParModel): DataFrame = {
+    val e = embeddings.filter(kmValid).select(col("vec_id"), col("embedding"))
+    val cent = model.centroids
     if (cent.isEmpty)
       return e.filter(lit(false))
         .select(col("vec_id"), lit(0).cast("int").as("cluster"), lit(0d).as("dist"))
-    if (stashOracle) {
-      // Trained-constant oracle boundary (documented pattern): the oracle
-      // replays Lloyd + assignment from the Spark-computed INIT centroids
-      // inlined as literals, so the k-means|| init itself sits OUTSIDE the
-      // DuckDB check — an init regression would shift both sides
-      // identically and still pass the gate. The init's quality/semantics
-      // guard is KmeansSpec's cost-separation test, not this oracle.
-      val c0 = init.zipWithIndex
-        .map { case (v, i) => s"($i, ${dlist(v.toSeq)})" }
-        .mkString("c0 AS (SELECT CAST(cl AS INT) AS cluster, c FROM (VALUES ",
-          ", ", ") AS t(cl, c))")
-      graft.OracleStash.put("v_cluster_kmeanspar",
-        (s"WITH ${kmeansCtesWithInit(c0, iters)}\n " + kmeansAssignSql(iters)).replace("\n", ""))
-    }
     e.select(col("vec_id"), kmNearest(cent).as("_km_nc"))
       .select(col("vec_id"), col("_km_nc.cluster").as("cluster"),
         fl(col("_km_nc.dist"), 6).as("dist"))
   }
-
-  private def kmDistSql(v: String, c: String) =
-    s"(${dotSql(v, v)} - 2 * ${dotSql(v, c)} + ${dotSql(c, c)})"
-
-  /** The (vec_id, v, cluster) assignment rows against the centroids in
-    * CTE `centCte` — the ONE SQL twin of the in-row assignment, used by
-    * every training iteration and the state oracle's final assignment.
-    */
-  private def kmAssignRowsSql(centCte: String): String =
-    s"""SELECT vec_id, v, cluster FROM (
-       |  SELECT e.vec_id, e.v, c.cluster,
-       |   row_number() OVER (PARTITION BY e.vec_id
-       |    ORDER BY ${kmDistSql("e.v", "c.c")} ASC, c.cluster ASC) AS rn
-       |  FROM e CROSS JOIN $centCte c) WHERE rn = 1""".stripMargin
-
-  /** The k-means CTE chain shared by [[clusterKmeansSql]] and
-    * [[clusterSampleSql]]: e (valid widened vectors), c0 (init), then per
-    * iteration assign → exact fixed-point per-dim sums → centroid update
-    * with empty-cluster carry-over. Final centroids land in c`iters`.
-    */
-  private[graft] def kmeansCtes(k: Int, iters: Int): String =
-    kmeansCtesWithInit(
-      s"""c0 AS (
-         | SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cluster, v AS c
-         | FROM e ORDER BY vec_id LIMIT $k)""".stripMargin, iters)
-
-  /** Same chain from an arbitrary `c0` clause (literal init centroids for
-    * the trained k-means‖ oracle, lowest-id top-k for the static one).
-    */
-  private[graft] def kmeansCtesWithInit(c0Sql: String, iters: Int): String = {
-    val sb = new StringBuilder
-    sb.append(
-      s"""e AS (
-         | SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         | FROM embeddings
-         | WHERE vec_id IS NOT NULL
-         |  AND embedding IS NOT NULL AND len(embedding) = $DIM
-         |  AND len(list_filter(embedding, x -> x IS NULL)) = 0),
-         | $c0Sql""".stripMargin)
-    for (t <- 1 to iters) {
-      sb.append(
-        s""",
-           | a$t AS (
-           | ${kmAssignRowsSql(s"c${t - 1}")}),
-           | s$t AS (
-           | SELECT cluster, i AS pos,
-           |  CAST(SUM(CAST(floor(v[i] * ${KM_QS.toLong}.0) AS BIGINT)) AS DOUBLE) AS sv,
-           |  CAST(COUNT(*) AS DOUBLE) AS nv
-           | FROM a$t, (SELECT unnest(range(1, ${DIM + 1})) AS i)
-           | GROUP BY 1, 2),
-           | c$t AS (
-           | SELECT p.cluster, COALESCE(u.c, p.c) AS c
-           | FROM c${t - 1} p LEFT JOIN (
-           |  SELECT cluster, list(sv / nv / ${KM_QS.toLong}.0 ORDER BY pos) AS c
-           |  FROM s$t GROUP BY 1) u
-           | ON p.cluster = u.cluster)""".stripMargin)
-    }
-    sb.toString
-  }
-
-  /** Final-assignment select against the c`iters` centroids. */
-  private[graft] def kmeansAssignSql(iters: Int): String =
-    s"""SELECT vec_id, cluster, ${flSql("dd", 6)} AS dist FROM (
-       |  SELECT e.vec_id, c.cluster, ${kmDistSql("e.v", "c.c")} AS dd,
-       |   row_number() OVER (PARTITION BY e.vec_id
-       |    ORDER BY ${kmDistSql("e.v", "c.c")} ASC, c.cluster ASC) AS rn
-       |  FROM e CROSS JOIN c$iters c) WHERE rn = 1""".stripMargin
-
-  /** DuckDB twin of [[clusterKmeans]]: the same iterations unrolled as a
-    * CTE chain, ending in the final assignment.
-    */
-  def clusterKmeansSql(k: Int = 8, iters: Int = 3): String =
-    (s"WITH ${kmeansCtes(k, iters)}\n " + kmeansAssignSql(iters)).replace("\n", "")
 
   // ---- #114 IVF-PQ composite index -----------------------------------------
 
@@ -1723,21 +1253,17 @@ object Vectors {
   def annIvfPq(embeddings: DataFrame, qId: Long = 0L, k: Int = 10,
                nProbe: Int = 3, m: Int = 4, codebookK: Int = 16,
                rerank: Int = 100, sampleN: Int = 256, iters: Int = 5): DataFrame =
-    annIvfPqImpl(embeddings, qId, k, nProbe, m, codebookK, rerank, sampleN, iters,
-      oracleKey = "v_ann_ivfpq", oraclePrefix = "", oracleTbl = "embeddings")
+    annIvfPq(embeddings, trainIvfPq(embeddings, qId, m, codebookK, sampleN, iters), k, nProbe, rerank)
 
-  /** Body shared with [[annIvfPqGeo]]; `oracleKey`/`oraclePrefix`/
-    * `oracleTbl` route the literal-inlined oracle ([[graft.OracleStash]]) — geo
-    * prepends the k-means relabel CTEs and reads from that relation.
+  /** IVF-PQ's trained index: the coarse quantizer's cells (one centroid
+    * per label) and the residual PQ (`pq.cb`, one codebook shared across
+    * cells, the FAISS default).
     */
-  private def annIvfPqImpl(embeddings: DataFrame, qId: Long, k: Int,
-               nProbe: Int, m: Int, codebookK: Int,
-               rerank: Int, sampleN: Int, iters: Int,
-               oracleKey: String, oraclePrefix: String, oracleTbl: String): DataFrame = {
-    val sub = DIM / m
-    val empty = embeddings.filter(lit(false))
-      .select(col("vec_id"), col("label"), lit(0d).as("adc_cosine"), lit(0d).as("cosine"))
+  final case class IvfPqModel(cells: Map[Int, Array[Double]], pq: PqModel)
 
+  /** [[annIvfPq]]'s training: None when no cell, query row or sample exists. */
+  def trainIvfPq(embeddings: DataFrame, qId: Long = 0L, m: Int = 4, codebookK: Int = 16,
+                 sampleN: Int = 256, iters: Int = 5): Option[IvfPqModel] = {
     // coarse quantizer: one centroid per label cell (bounded relation),
     // collected once — the knnJoinMultiProbe contract
     val cells = centroidTable(embeddings).toMap
@@ -1754,56 +1280,59 @@ object Vectors {
       .limit(sampleN)
       .collect()
       .map(r => (r.getInt(1), r.getSeq[Float](2).map(_.toDouble).toArray))
-    if (cells.isEmpty || qRow.isEmpty || sample.isEmpty) return empty
-
-    val q = qRow.get.getSeq[Float](0).map(_.toDouble).toArray
-    val qNorm = math.sqrt(q.map(x => x * x).sum)
-    // residual codebook: one PQ shared across cells (the FAISS default)
+    if (cells.isEmpty || qRow.isEmpty || sample.isEmpty) return None
     val residuals = sample.map { case (lbl, v) =>
       val c = cells.getOrElse(lbl, new Array[Double](DIM))
       Array.tabulate(DIM)(i => v(i) - c(i))
     }
-    val cb = trainPqCodebook(residuals, DIM, m, codebookK, iters)
+    Some(IvfPqModel(cells, PqModel(qId, qRow.get.getSeq[Float](0).map(_.toDouble).toArray,
+      m, codebookK, trainPqCodebook(residuals, DIM, m, codebookK, iters))))
+  }
 
-    // probe the nProbe cells nearest the query by centroid cosine
-    // (driver math over the bounded cell relation; lowest label on ties)
+  /** The `nProbe` cells nearest the query by centroid cosine (driver math
+    * over the bounded cell relation; lowest label on ties), each with its
+    * cell-dependent ADC terms: (label, centroid, ⟨c_cell, q⟩, |c_cell|²,
+    * the 2⟨c_cell_s, cent_s_c⟩ cross LUT).
+    */
+  private[graft] def ivfProbed(model: IvfPqModel, nProbe: Int)
+      : Seq[(Int, Array[Double], Double, Double, Array[Double])] = {
+    val PqModel(_, q, m, codebookK, cb, _, _) = model.pq
+    val sub = DIM / m
     def cos(a: Array[Double], b: Array[Double]): Double = {
       def dot(x: Array[Double], y: Array[Double]) =
         (0 until DIM).foldLeft(0d)((acc, i) => acc + x(i) * y(i))
       dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
     }
-    val probed = cells.toSeq
+    model.cells.toSeq
       .sortBy { case (lbl, c) => (-cos(c, q), lbl) }
       .take(nProbe)
+      .map { case (lbl, c) =>
+        val cdotq = (0 until DIM).map(i => c(i) * q(i)).sum
+        val cn2 = (0 until DIM).map(i => c(i) * c(i)).sum
+        val cross = Array.tabulate(m * codebookK) { sc =>
+          val s = sc / codebookK; val cc = sc % codebookK
+          2d * (0 until sub).map(j => c(s * sub + j) * cb((s * codebookK + cc) * sub + j)).sum
+        }
+        (lbl, c, cdotq, cn2, cross)
+      }
+  }
 
+  def annIvfPq(embeddings: DataFrame, model: Option[IvfPqModel], k: Int, nProbe: Int,
+               rerank: Int): DataFrame = {
+    if (model.isEmpty) return pqEmpty(embeddings)
+    val PqModel(qId, q, m, codebookK, cb, _, _) = model.get.pq
+    val qNorm = pqQNorm(q)
     // residual-ADC LUTs vs the query's own residual per cell would need a
     // per-cell dot table; sharing one residual codebook means dot(r̂, q)
     // and |r̂|² LUTs are global, while ⟨c_cell, q⟩, |c_cell|² and the
-    // 2⟨c_cell_s, cent_s_c⟩ cross LUT ride the probed relation
-    val dLut = Array.tabulate(m, codebookK) { (s, c) =>
-      (0 until sub).map(j => q(s * sub + j) * cb((s * codebookK + c) * sub + j)).sum
-    }
-    val n2Lut = Array.tabulate(m, codebookK) { (s, c) =>
-      (0 until sub).map(j => { val x = cb((s * codebookK + c) * sub + j); x * x }).sum
-    }
+    // cross LUT ride the probed relation
+    val (dLut, n2Lut) = pqLuts(q, cb, m, codebookK)
+    val probed = ivfProbed(model.get, nProbe)
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val probedRows = probed.map { case (lbl, c) =>
-      val cdotq = (0 until DIM).map(i => c(i) * q(i)).sum
-      val cn2 = (0 until DIM).map(i => c(i) * c(i)).sum
-      val cross = Array.tabulate(m * codebookK) { sc =>
-        val s = sc / codebookK; val cc = sc % codebookK
-        2d * (0 until sub).map(j => c(s * sub + j) * cb((s * codebookK + cc) * sub + j)).sum
-      }
-      (lbl, c, cdotq, cn2, cross)
-    }
-    val probedDf = probedRows
+    val probedDf = probed
       .map { case (lbl, c, cdotq, cn2, cross) => (lbl, c.toSeq, cdotq, cn2, cross.toSeq) }
       .toDF("label", "cvec", "cdotq", "cn2", "cross")
-    sqlStash.put(oracleKey,
-      ivfPqOracleSql(oraclePrefix, oracleTbl, qId, k, m, codebookK, rerank,
-        probedRows, cb, dLut, n2Lut, qNorm))
-
     val vd = transform(col("embedding"), x => x.cast("double"))
     val codes = embeddings
       .filter(col("vec_id") =!= qId && kmValid &&
@@ -1897,21 +1426,6 @@ object Vectors {
     state.select(col("cluster"), posexplode(col("sv")).as(Seq("pos", "sval")), col("n"))
       .select(col("cluster"), col("pos"), col("sval").cast("long").as("s"), col("n"))
 
-  /** DuckDB oracle for the incremental-maintenance query: the MONOLITHIC
-    * state build (train + assign the whole corpus at once, exact
-    * fixed-point sums) — hash-equality with the registry's two-partition
-    * merge IS the proof that maintenance is exact.
-    */
-  def kmeansStateSql(k: Int = 8, iters: Int = 3): String =
-    s"""WITH ${kmeansCtes(k, iters)},
-       | af AS (
-       | ${kmAssignRowsSql(s"c$iters")})
-       | SELECT cluster, CAST(i - 1 AS INT) AS pos,
-       |  CAST(SUM(CAST(floor(v[i] * ${KM_QS.toLong}.0) AS BIGINT)) AS BIGINT) AS s,
-       |  COUNT(*) AS n
-       | FROM af, (SELECT unnest(range(1, ${DIM + 1})) AS i)
-       | GROUP BY 1, 2""".stripMargin.replace("\n", "")
-
   /** [[annIvfPq]] with GEOMETRY cells: the coarse quantizer is
     * [[clusterKmeans]]'s Voronoi partition instead of the arbitrary
     * `label` column — the production composition (FAISS trains its IVF
@@ -1923,19 +1437,17 @@ object Vectors {
   def annIvfPqGeo(embeddings: DataFrame, qId: Long = 0L, k: Int = 10,
                   kCells: Int = 8, cellIters: Int = 3, nProbe: Int = 3,
                   m: Int = 4, codebookK: Int = 16, rerank: Int = 100,
-                  sampleN: Int = 256, iters: Int = 5): DataFrame = {
+                  sampleN: Int = 256, iters: Int = 5): DataFrame =
+    annIvfPq(geoCells(embeddings, kCells, cellIters), qId, k, nProbe, m, codebookK, rerank,
+      sampleN, iters)
+
+  /** `embeddings` relabeled by [[clusterKmeans]]' cells: the relation
+    * [[annIvfPqGeo]] indexes.
+    */
+  def geoCells(embeddings: DataFrame, kCells: Int = 8, cellIters: Int = 3): DataFrame = {
     val asg = clusterKmeans(embeddings, kCells, cellIters)
       .select(col("vec_id"), col("cluster").as("label"))
-    val relabeled = embeddings.drop("label").join(asg, "vec_id")
-    // oracle: the relabeled relation as CTEs (the already-proven k-means
-    // unroll) feeding the same literal-inlined IVF-PQ body
-    val prefix = s"${kmeansCtes(kCells, cellIters)}, " +
-      s"asg AS (SELECT vec_id, cluster FROM (${kmeansAssignSql(cellIters)})), " +
-      "emb2 AS (SELECT e0.vec_id, a.cluster AS label, e0.embedding " +
-      "FROM embeddings e0 JOIN asg a ON e0.vec_id = a.vec_id), "
-    annIvfPqImpl(relabeled, qId, k, nProbe, m, codebookK, rerank, sampleN, iters,
-      oracleKey = "v_ann_ivfpq_geo", oraclePrefix = prefix.replace("\n", ""),
-      oracleTbl = "emb2")
+    embeddings.drop("label").join(asg, "vec_id")
   }
 
   // ---- #110 cluster-balanced curation sampling -----------------------------
@@ -1966,15 +1478,4 @@ object Vectors {
       .select("cluster", "vec_id")
   }
 
-  def clusterSampleSql(k: Int = 8, iters: Int = 3, quota: Long = 40L): String = {
-    val hashMax = (1L << 60).toDouble
-    s"""WITH ${kmeansCtes(k, iters)},
-       | asg AS (${kmeansAssignSql(iters)}),
-       | cnt AS (SELECT cluster, COUNT(*) AS n_c FROM asg GROUP BY 1)
-       | SELECT a.cluster, a.vec_id
-       | FROM asg a JOIN cnt c ON a.cluster = c.cluster
-       | WHERE ${Pipeline.md5IdSql("CAST(a.vec_id AS VARCHAR)")} <
-       |  least(CAST($quota AS DOUBLE) / CAST(c.n_c AS DOUBLE), 1.0) * $hashMax""".stripMargin
-      .replace("\n", "")
-  }
 }

@@ -134,7 +134,7 @@ object ChatLogSources {
   val fixtureDir: String =
     new java.io.File(System.getProperty("java.io.tmpdir"), "graft_chatlog_fixture").getPath
 
-  private val fixtureCats = Seq("jp", "kr", "ru", "emoji", "es_en_id")
+  private[graft] val fixtureCats = Seq("jp", "kr", "ru", "emoji", "es_en_id")
   private val fixtureVideos = Seq(("chanX", "vidA"), ("chanX", "vidB"), ("chanY", "vidC"))
 
   /** Write the exact on-disk cache layout the reference produces
@@ -409,27 +409,4 @@ object ChatLogSources {
       .withColumn("last_ts", col("last_ts").cast("double"))
   }
 
-  /** DuckDB twin: independently re-reads the SAME gzipped JSON-lines files
-    * (read_json over the reference layout, video_id from the file name —
-    * the oracle exercises the format, not just the aggregation) and
-    * re-derives the rollup.
-    */
-  val fixtureRollupSql: String = {
-    val cols = "{user_id: 'VARCHAR', username: 'VARCHAR', timestamp: 'DOUBLE', " +
-      "membership_rank: 'INTEGER', message_category: 'VARCHAR', message: 'VARCHAR', " +
-      "message_type: 'VARCHAR', gifter: 'VARCHAR'}"
-    val catCols = fixtureCats.map(c =>
-      s"CAST(COUNT(CASE WHEN message_type = 'chat' AND message_category = '$c' THEN 1 END) AS BIGINT) AS ${c}_count")
-      .mkString(", ")
-    s"""WITH cl AS (
-       |  SELECT *, regexp_extract(filename, '([^/]+)\\.jsonl\\.gz$$', 1) AS video_id
-       |  FROM read_json('$fixtureDir/chat_logs/*.jsonl.gz',
-       |   format='newline_delimited', filename=true, columns=$cols))
-       | SELECT user_id, video_id, $catCols,
-       |  CAST(COUNT(CASE WHEN message_type = 'chat' THEN 1 END) AS BIGINT) AS total_message_count,
-       |  MAX(CASE WHEN membership_rank >= -1 THEN membership_rank END) AS membership_rank,
-       |  MAX(timestamp) AS last_ts,
-       |  (COUNT(CASE WHEN message_type = 'chat' THEN 1 END) = 0) AS is_gift
-       | FROM cl GROUP BY 1, 2""".stripMargin.replace("\n", "")
-  }
 }

@@ -17,7 +17,7 @@ import graft.operators.{Dedup, Layout}
   *
   * The `_wh` gate entries bootstrap from the old partition and maintain
   * with the delta; their oracle is STILL the monolithic full-corpus SQL
-  * (dedupMinhashSql / dedupClustersSql), so hash equality proves the
+  * (the monolithic minhash / clusters oracles), so hash equality proves the
   * stored-state maintenance exact end to end — write, scan, probe, merge.
   *
   * Bucketing: the index by `sig` (the probe join's high-cardinality key;

@@ -19,7 +19,7 @@ import graft.operators.{Layout, Vectors}
   * partitioned by block, not rebuild per query).
   *
   * The `_wh` gate entry's oracle is STILL the monolithic full-corpus
-  * graph SQL ([[Vectors.knnGraphSql]]), so hash equality proves the
+  * graph SQL (the `v_knn_join_incremental` oracle), so hash equality proves the
   * stored-state maintenance exact end to end — write, scan, prune,
   * rebuild, union. Bucketing by `label`: the maintenance filter and the
   * deploy's partition-overwrite write path are both label-keyed (at

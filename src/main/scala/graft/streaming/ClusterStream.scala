@@ -51,17 +51,4 @@ object ClusterStream {
       .select(col("w.start").as("window_start"), col("cluster"), col("n"))
   }
 
-  /** DuckDB oracle for the batch twin: the unrolled k-means CTE chain
-    * (training + final assignment), the registry's deterministic
-    * vec_id-derived timestamps, and Spark's epoch-aligned tumbling-window
-    * arithmetic.
-    */
-  def clusterCountsSql(k: Int = 8, iters: Int = 3,
-                       bucketSeconds: Long = 900L): String =
-    s"""WITH ${Vectors.kmeansCtes(k, iters)},
-       | asg AS (${Vectors.kmeansAssignSql(iters)})
-       | SELECT CAST(to_timestamp(CAST(floor((${graft.Fixtures.TS_EPOCH_BASE} + a.vec_id * 60) / $bucketSeconds) AS BIGINT) * $bucketSeconds) AS TIMESTAMP) AS window_start,
-       |  a.cluster, COUNT(*) AS n
-       | FROM asg a
-       | GROUP BY 1, 2""".stripMargin.replace("\n", "")
 }

@@ -3,8 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
-
 /** Streaming exact deduplication (SURVEY §2 #59) — the ingestion-time half
   * of the training-data dedup story: drop re-crawled/re-sent copies before
   * they ever land in the corpus, instead of (or in addition to) batch
@@ -49,8 +47,4 @@ object DedupStream {
       .agg(min("doc_id").as("doc_id"))
       .select("doc_id", "content_hash")
 
-  val survivorsSql: String =
-    s"""WITH dd AS (${graft.Fixtures.plantedDocsSql})
-       | SELECT MIN(doc_id) AS doc_id, sha256(text) AS content_hash
-       | FROM dd GROUP BY 2""".stripMargin.replace("\n", "")
 }

@@ -41,12 +41,6 @@ object EventStream {
         col("event_type").as("channel"))
       .agg(count(lit(1)).as("n_events"), countDistinct("user_id").as("n_users"))
 
-  def sessionizeExactSql(windowSeconds: Long = 21600L): String =
-    s"""SELECT CAST(to_timestamp(CAST(floor(epoch(ts) / $windowSeconds) AS BIGINT) * $windowSeconds) AS TIMESTAMP) AS window_start,
-       | event_type AS channel, COUNT(*) AS n_events,
-       | COUNT(DISTINCT user_id) AS n_users
-       | FROM events GROUP BY 1, 2""".stripMargin.replace("\n", "")
-
   /** GAP-based sessionization per user — Spark's native `session_window`
     * (dynamic windows that extend `gap` past each event and merge while
     * they overlap), the operator behind "user session" analytics. In
@@ -69,19 +63,4 @@ object EventStream {
       .select(col("user_id"), col("w.start").as("session_start"), col("n_events"))
   }
 
-  def gapSessionsSql(gapSeconds: Long = 1800L): String =
-    s"""WITH lagd AS (
-       |  SELECT user_id, ts, LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev
-       |  FROM events),
-       | flag AS (
-       |  SELECT user_id, ts,
-       |   CASE WHEN prev IS NULL OR epoch(ts) - epoch(prev) >= $gapSeconds THEN 1 ELSE 0 END AS new_s
-       |  FROM lagd),
-       | sid AS (
-       |  SELECT user_id, ts,
-       |   SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
-       |  FROM flag)
-       | SELECT user_id, CAST(MIN(ts) AS TIMESTAMP) AS session_start,
-       |  COUNT(*) AS n_events
-       | FROM sid GROUP BY user_id, sid""".stripMargin.replace("\n", "")
 }

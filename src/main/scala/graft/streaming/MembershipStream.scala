@@ -88,17 +88,4 @@ object MembershipStream {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(detect)
   }
 
-  /** DuckDB oracle: the reference's LAG formulation of the same semantics. */
-  def transitionsSql: String =
-    s"""WITH r AS (
-       | SELECT user_id, ${EventSemantics.channelSql} AS channel, ts, event_id,
-       |  ${EventSemantics.membershipRankSql} AS rank FROM events),
-       | lagged AS (
-       | SELECT *, LAG(rank) OVER (PARTITION BY user_id, channel
-       |   ORDER BY ts, event_id) AS prev_rank FROM r)
-       | SELECT user_id, channel, ts, prev_rank, rank AS new_rank,
-       |  CASE WHEN prev_rank = -1 AND rank >= 0 THEN 'gained'
-       |       WHEN prev_rank >= 0 AND rank = -1 THEN 'lost'
-       |       ELSE 'changed' END AS kind
-       | FROM lagged WHERE prev_rank IS NOT NULL AND prev_rank <> rank""".stripMargin.replace("\n", "")
 }

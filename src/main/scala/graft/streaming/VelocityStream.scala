@@ -40,12 +40,4 @@ object VelocityStream {
       .select(col("w.start").as("spike_start"), col("channel"), col("velocity"))
   }
 
-  /** DuckDB oracle: identical windowing arithmetic (Spark's tumbling
-    * windows align to the epoch origin, exactly floor(epoch/sec)*sec).
-    */
-  def burstsSql(bucketSeconds: Long = 900L, minBurst: Long = 5L): String =
-    s"""SELECT CAST(to_timestamp(CAST(floor(epoch(ts) / $bucketSeconds) AS BIGINT) * $bucketSeconds) AS TIMESTAMP) AS spike_start,
-       | ${EventSemantics.channelSql} AS channel, COUNT(*) AS velocity
-       | FROM events WHERE NOT ${EventSemantics.isGiftSql}
-       | GROUP BY 1, 2 HAVING COUNT(*) > $minBurst""".stripMargin.replace("\n", "")
 }

@@ -73,6 +73,9 @@ class DashboardPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
           executed.add(qe)
         override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
       }
+      // an earlier test's query-end event may still be queued on the bus;
+      // deliver it before registering, or the listener counts it here
+      org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
       spark.listenerManager.register(listener)
       val counter = new JobCounter(spark.sparkContext)
       val (df, jobs) = try {

@@ -8,9 +8,9 @@ import graft.operators.Dedup
 
 /** Every relation a dedup operator pins is tracked by [[Caches]]: after a
   * materialized entry, `Caches.release()` alone leaves the session's
-  * CacheManager empty. A bare `.cache()` inside an operator would stay
-  * pinned for the session's life (only `clearCache` frees it) and fails
-  * here.
+  * CacheManager and the SparkContext's persisted RDDs empty. A bare
+  * `.cache()` or `localCheckpoint()` inside an operator would stay pinned
+  * for the session's life and fails here.
   */
 class DedupReleaseSpec extends SparkSpec {
 
@@ -58,6 +58,9 @@ class DedupReleaseSpec extends SparkSpec {
       assert(Caches.trackedCount > 0, s"$name pinned nothing: the check would be vacuous")
       Caches.release()
       assert(cacheManager.isEmpty, s"$name left an untracked cache entry")
+      // localCheckpoint persists its RDD outside the CacheManager
+      val rdds = spark.sparkContext.getPersistentRDDs.values
+      assert(rdds.isEmpty, s"$name left persisted RDDs: ${rdds.mkString(", ")}")
     }
   }
 }

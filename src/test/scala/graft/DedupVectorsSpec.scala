@@ -1085,25 +1085,4 @@ class DedupVectorsSpec extends SparkSpec {
       assert(hex == expected, s"doc $id: 2x decimation diverges")
     }
   }
-
-  test("requireOkeyDomain: out-of-domain vec_ids fail loud; in-domain pass (VERDICT r10 item 3)") {
-    val s = spark
-    import s.implicits._
-    import graft.operators.Checks
-    // the exact bound: 2^40 - 1 is the last packable id, 2^40 the first
-    // that silently corrupts the oracle's BIGINT order key
-    val ok = Seq((0L, (1L << 40) - 1, 0.5, 1L)).toDF("vec_a", "vec_b", "cosine", "nn_rank")
-    Checks.requireOkeyDomain(ok, "spec-ok") // must not throw
-    val high = Seq((1L, 1L << 40, 0.5, 1L)).toDF("vec_a", "vec_b", "cosine", "nn_rank")
-    val eHigh = intercept[IllegalArgumentException] {
-      Checks.requireOkeyDomain(high, "spec-high")
-    }
-    assert(eHigh.getMessage.contains("okey domain violated"))
-    // negative ids invert the `- vec_b` tie-break order: also rejected
-    val neg = Seq((-3L, 7L, 0.5, 1L)).toDF("vec_a", "vec_b", "cosine", "nn_rank")
-    intercept[IllegalArgumentException] { Checks.requireOkeyDomain(neg, "spec-neg") }
-    // non-graph schemas and empty graphs are out of scope, not errors
-    Checks.requireOkeyDomain(Seq((1L, "x")).toDF("id", "t"), "spec-other")
-    Checks.requireOkeyDomain(ok.filter("vec_a < 0"), "spec-empty")
-  }
 }

@@ -10,15 +10,29 @@ import graft.operators.{EventSemantics, Layout}
   */
 class LayoutSpec extends SparkSpec {
 
+  /** Runs `body` under `confs`, then restores each key's previous value
+    * (or unsets it), so the shared session leaves as it came.
+    */
+  private def withConf[T](confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private val noBroadcast = "spark.sql.autoBroadcastJoinThreshold" -> "-1"
+  // deploy conf (SCALING.md): accept co-partitioning on a SUBSET of the
+  // join keys — both sides are bucketed on user_id, the join adds week
+  private val subsetCoPartition = "spark.sql.requireAllClusterKeysForCoPartition" -> "false"
+
   test("commonUsersMatrix over a bucketed MV table avoids the self-join shuffle") {
     val ucw = EventSemantics.userWeeklyActivity(Tables.events(spark, sfDir))
       .select("user_id", "channel", "week")
     Layout.writeBucketed(ucw, "ucw_mv", "user_id", 4)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // deploy conf (SCALING.md): accept co-partitioning on a SUBSET of the
-    // join keys — both sides are bucketed on user_id, the join adds week
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    try {
+    try withConf(noBroadcast, subsetCoPartition) {
       val viaBucketed = graft.operators.ChatStats.commonUsersMatrixFrom(spark.table("ucw_mv"))
       val plan = viaBucketed.queryExecution.executedPlan.toString
       // the pair self-join on (user_id, week) must co-partition from the
@@ -33,8 +47,6 @@ class LayoutSpec extends SparkSpec {
       assert(viaBucketed.exceptAll(viaEvents).count() == 0)
       assert(viaEvents.exceptAll(viaBucketed).count() == 0)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (50 * 1024 * 1024).toString)
-      spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "true")
       spark.sql("DROP TABLE IF EXISTS ucw_mv")
       spark.catalog.clearCache()
     }
@@ -44,9 +56,7 @@ class LayoutSpec extends SparkSpec {
     val w = EventSemantics.userWeeklyActivity(Tables.events(spark, sfDir))
       .select("user_id", "channel", "week", "messages")
     Layout.writeBucketed(w, "ucw_sim_mv", "user_id", 4)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    try {
+    try withConf(noBroadcast, subsetCoPartition) {
       val viaBucketed = graft.operators.Similarity.channelSimilarityFrom(spark.table("ucw_sim_mv"))
       val plan = viaBucketed.queryExecution.executedPlan.toString
       val joinInputShuffles = plan.linesIterator
@@ -57,8 +67,6 @@ class LayoutSpec extends SparkSpec {
       assert(viaBucketed.exceptAll(viaEvents).count() == 0)
       assert(viaEvents.exceptAll(viaBucketed).count() == 0)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (50 * 1024 * 1024).toString)
-      spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "true")
       spark.sql("DROP TABLE IF EXISTS ucw_sim_mv")
       spark.catalog.clearCache()
     }
@@ -91,8 +99,7 @@ class LayoutSpec extends SparkSpec {
       "act_bucketed_b", "user_id", 4)
 
     // disable broadcast so the join strategy decision is about partitioning
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try withConf(noBroadcast) {
       val bucketed = spark.table("act_bucketed_a")
         .join(spark.table("act_bucketed_b"), "user_id")
       val bucketedPlan = bucketed.queryExecution.executedPlan.toString
@@ -105,7 +112,6 @@ class LayoutSpec extends SparkSpec {
       assert(plainPlan.contains("Exchange hashpartitioning"),
         "control: the unbucketed join is expected to shuffle")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (50 * 1024 * 1024).toString)
       spark.sql("DROP TABLE IF EXISTS act_bucketed_a")
       spark.sql("DROP TABLE IF EXISTS act_bucketed_b")
     }

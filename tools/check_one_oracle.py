@@ -7,9 +7,10 @@ round-10 sf1 gate was OOM-killed at 130 GB RSS that way). Since the
 round-10 iterated-argmax rewrite the graph-family replays fit in ~2 GB
 and pass here at sf1; a replay that still exhausts the budget needs a
 larger memLimit or a faster tmpDir.
-CAUTION for stashed oracles (v_knn_join_mph, the PQ family): the SQL in
-oracle_sql.json inlines training literals from ITS OWN Verify run —
-never check one corpus against a string dumped at another SF.
+CAUTION for the nine trained keys (v_knn_join_mph, the PQ family, ...):
+graft.oracle renders the model each key's registry entry recorded in ITS
+OWN Verify run as SQL literals, so never check one corpus against a
+string dumped at another SF.
 
 Usage: tools/check_one_oracle.py <sfDir> <verifyOutDir> <queryName>
          [memLimit] [tmpDir]
