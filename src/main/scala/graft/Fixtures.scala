@@ -41,18 +41,26 @@ object Fixtures {
   /** Corpus + planted near-duplicates (last 5 words dropped, doc_id + 1e7)
     * and exact duplicates (doc_id + 2e7), text canonicalized the same way
     * the dedup operators canonicalize internally.
+    *
+    * ONE scan of `documents`, not a union of three, so no downstream
+    * stage runs three tasks per split: each row explodes into its copies'
+    * doc_id offsets (0, and the `when`-guarded planted ones; a failed or
+    * NULL guard is a NULL offset, dropped), and doc_id and text are
+    * derived from the offset after the explode, so a consumer of doc_id
+    * alone never computes the text.
     */
   def plantedDocs(documents: DataFrame): DataFrame = {
-    val w = split(lower(trim(col("text"))), "\\s+")
-    val base = documents.select(col("doc_id"), lower(trim(col("text"))).as("text"))
-    val near = documents
-      .filter(col("doc_id") % 5 === 0 && size(w) > 10)
-      .select((col("doc_id") + NEAR_OFF).as("doc_id"),
-        concat_ws(" ", slice(w, lit(1), size(w) - 5)).as("text"))
-    val exact = documents
-      .filter(col("doc_id") % 25 === 0)
-      .select((col("doc_id") + EXACT_OFF).as("doc_id"), lower(trim(col("text"))).as("text"))
-    base.unionByName(near).unionByName(exact)
+    val id = col("doc_id")
+    val text = lower(trim(col("text")))
+    val w = split(text, "\\s+")
+    documents
+      .select(id, col("text"), explode(array(lit(0L),
+        when(id % 5 === 0 && size(w) > 10, lit(NEAR_OFF)),
+        when(id % 25 === 0, lit(EXACT_OFF)))).as("off"))
+      .where(col("off").isNotNull)
+      .select((id + col("off")).as("doc_id"),
+        when(col("off") === NEAR_OFF, concat_ws(" ", slice(w, lit(1), size(w) - 5)))
+          .otherwise(text).as("text"))
   }
 
   // ---- benchmark eval-set carve (decontamination input) --------------------

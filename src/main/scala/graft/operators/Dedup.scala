@@ -48,6 +48,27 @@ object Dedup {
     * tokenization is hoisted into its own projection so the regex split runs
     * once per document — inlining it into the shingling lambda makes
     * Catalyst re-evaluate it per element (O(words²) splits per doc).
+    * Lazy: [[shingleArrays]] pins it for a corpus; the candidate-doc
+    * verify of [[minhashDeltaPairs]] reads it unpinned.
+    */
+  private def shingles(dd: DataFrame, k: Int): DataFrame =
+    // array_sort: the set is ORDER-INSENSITIVE to every consumer (minhash
+    // min-fold, SQL-join oracles), and sortedness lets the pair-verify hot
+    // path use the two-pointer SortedIntersectSize kernel instead of
+    // array_intersect's per-row hash set
+    // array_sort + distinct + md5 ids fused into ONE codegen'd ShingleIds
+    // pass (sorted=true ≡ the former array_sort(array_distinct(transform(
+    // filter(...)))) HOF chain, pinned elementwise in
+    // ExpressionPropertySpec); the coalesce preserves []-on-null-text
+    dd.select(col("doc_id"),
+        coalesce(split(col("text"), "\\s+"), array().cast("array<string>")).as("w"))
+      .select(col("doc_id"),
+        graft.functions.ShingleFunctions.shingleIds(col("w"), k, sorted = true).as("shs"))
+
+  /** A corpus's non-empty [[shingles]], PINNED — with `minhash`, pinned
+    * together with their 32 minhashes (`mh`, one codegen'd
+    * MinhashSignature pass), so a minhash corpus pays one pin, not one for
+    * the sets and one for the index.
     *
     * The relation is PINNED before the non-empty filter: predicate pushdown
     * would otherwise substitute the whole shingle expression (split
@@ -67,7 +88,7 @@ object Dedup {
     * shingled exactly once; at cluster scale this is the standard
     * materialize-before-fanout barrier for a reused expensive relation.
     */
-  private def shingleArrays(dd: DataFrame, k: Int): DataFrame =
+  private def shingleArrays(dd: DataFrame, k: Int, minhash: Boolean = false): DataFrame = {
     // hash-repartition by doc before the CPU-heavy shingling projection:
     // the corpus scan may have few/skewed splits (a single parquet file
     // has as many splits as row groups), and the shuffle re-spreads the
@@ -82,21 +103,13 @@ object Dedup {
     // fixed cost (BytesToBytesMap page allocate/zero per HashAggregate,
     // stack-dump-attributed) burned ~100-160 ms/task on stages moving a
     // few hundred KB, ~2/3 of the capped-Jaccard query's CPU at sf0.1.
-    // array_sort: the set is ORDER-INSENSITIVE to every consumer (minhash
-    // min-fold, SQL-join oracles), and sortedness lets the pair-verify hot
-    // path use the two-pointer SortedIntersectSize kernel instead of
-    // array_intersect's per-row hash set
-    // array_sort + distinct + md5 ids fused into ONE codegen'd ShingleIds
-    // pass (sorted=true ≡ the former array_sort(array_distinct(transform(
-    // filter(...)))) HOF chain, pinned elementwise in
-    // ExpressionPropertySpec); the coalesce preserves []-on-null-text
-    dd.repartition(col("doc_id"))
-      .select(col("doc_id"),
-        coalesce(split(col("text"), "\\s+"), array().cast("array<string>")).as("w"))
-      .select(col("doc_id"),
-        graft.functions.ShingleFunctions.shingleIds(col("w"), k, sorted = true).as("shs"))
+    val sets = shingles(dd.repartition(col("doc_id")), k)
+    (if (minhash) sets.withColumn("mh", graft.functions.HashFunctions.minhashSignature(col("shs"),
+      (0 until 32).map(i => md5Const(s"a$i") + 1L), (0 until 32).map(i => md5Const(s"b$i")),
+      2147483647L)) else sets)
       .sharedCacheEager
       .where(size(col("shs")) > 0)
+  }
 
   // ---- #39 MinHash + LSH ---------------------------------------------------
   /** Perm constants for [[dedupMinhash]], md5-derived exactly like the oracle SQL computes them
@@ -150,43 +163,36 @@ object Dedup {
     * re-signatures the corpus ([[dedupMinhashIncrement]]).
     */
   def minhashIndex(documents: DataFrame, k: Int = 3): DataFrame =
-    bandSigs(shingleArrays(canon(documents), k))
+    bandSigs(shingleArrays(canon(documents), k, minhash = true))
 
-  /** The band signatures of a shingle relation. All 32 minhashes are
-    * computed in ONE codegen'd pass over the in-row shingle set
-    * (graft.functions.MinhashSignature — zero shuffles, no interpreted
-    * per-perm lambda passes).
-    *
-    * Pinned eagerly: every index has two or more readers (both sides of
+  /** The band signatures of a pinned `(doc_id, shs, mh)` relation: a lazy
+    * projection that only formats the 8 band strings of 4 minhashes each.
+    * The minhashes sit in the pin, so the index's readers (both sides of
     * the band self-join; the delta probe and its full-index union; the
-    * warehouse write), and unpinned they recompute the signatures per
-    * reader (+10% executor CPU on `d_minhash_incremental` at sf0.1). The
-    * barrier makes every reader plan over a materialized relation, so AQE
-    * sees fixed statistics (a lazy pin let it build the band join on
-    * either side by run timing).
+    * warehouse write) never recompute them (+10% executor CPU on
+    * `d_minhash_incremental` at sf0.1 when they did), and plan over a
+    * materialized relation, so AQE sees fixed statistics.
     */
-  private def bandSigs(arr: DataFrame): DataFrame = {
-    val p = 2147483647L
-    val aConsts = (0 until 32).map(i => md5Const(s"a$i") + 1L)
-    val bConsts = (0 until 32).map(i => md5Const(s"b$i"))
-    val minsig = arr.select(col("doc_id"),
-      graft.functions.HashFunctions.minhashSignature(col("shs"), aConsts, bConsts, p).as("mh"))
-    val bandSigs = (0 until 8).map { bnd =>
+  private def bandSigs(sets: DataFrame): DataFrame = {
+    val bands = (0 until 8).map { bnd =>
       concat_ws("-", (0 until 4).map(r => element_at(col("mh"), bnd * 4 + r + 1).cast("string")): _*)
     }
-    minsig
-      .select(col("doc_id"), posexplode(array(bandSigs: _*)).as(Seq("band", "sig")))
-      .sharedCacheEager
+    sets.select(col("doc_id"), posexplode(array(bands: _*)).as(Seq("band", "sig")))
   }
 
   /** Exact-Jaccard verification of a candidate pair set against the
     * corpus's in-row shingle sets (two-pointer kernel over the sorted
-    * arrays — no inverted-index re-join, no groupBy).
+    * arrays — no inverted-index re-join, no groupBy). A pair with an empty
+    * set has no Jaccard and is dropped.
     */
   private def verifyPairs(cand: DataFrame, arr: DataFrame, minJaccard: Double): DataFrame =
     cand
       .join(arr.select(col("doc_id").as("doc_a"), col("shs").as("shs_a")), "doc_a")
       .join(arr.select(col("doc_id").as("doc_b"), col("shs").as("shs_b")), "doc_b")
+      // over both sides, so it stays above the joins: a one-sided
+      // size(shs) > 0 is pushed below an unpinned `arr`'s semi-join and
+      // shingles every row of its scan
+      .filter(least(size(col("shs_a")), size(col("shs_b"))) > 0)
       .withColumn("inter",
         graft.functions.HashFunctions.sortedIntersectSize(col("shs_a"), col("shs_b")))
       .withColumn("jaccard",
@@ -211,14 +217,14 @@ object Dedup {
     minhashState(documents, k, minJaccard)._2
 
   /** A corpus's stored near-dup state — its LSH index ([[minhashIndex]])
-    * and verified pairs ([[dedupMinhash]]) — off ONE shingle pass: the
-    * pinned per-doc shingle sets feed the signature build and both sides
-    * of the candidate verify. The bootstrap of [[dedupMinhashIncrement]]
-    * and [[dedupClustersIncrement]].
+    * and verified pairs ([[dedupMinhash]]) — off ONE shingle pass and ONE
+    * pin: the pinned per-doc shingle sets and minhashes feed the band
+    * strings and both sides of the candidate verify. The bootstrap of
+    * [[dedupMinhashIncrement]] and [[dedupClustersIncrement]].
     */
   def minhashState(documents: DataFrame, k: Int = 3,
                    minJaccard: Double = 0.7): (DataFrame, DataFrame) = {
-    val arr = shingleArrays(canon(documents), k)
+    val arr = shingleArrays(canon(documents), k, minhash = true)
     val index = bandSigs(arr)
     val cand = index.as("a")
       .join(index.as("b"),
@@ -292,11 +298,13 @@ object Dedup {
     // prune) — re-shingling the whole corpus per ingest would be the
     // O(corpus) signature cost the stored index exists to avoid. No
     // distinct: a semi-join's build side may repeat keys, and the shuffle
-    // it would cost is one more construction job
+    // it would cost is one more construction job. No pin either: the
+    // candidate docs are few, and an unpinned relation has no cold cache
+    // for the verify's broadcast builds to race on
     val candDocs = cand.select(col("doc_a").as("doc_id"))
       .unionByName(cand.select(col("doc_b").as("doc_id")))
     val needed = documents.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-    verifyPairs(cand, shingleArrays(canon(needed), k), minJaccard)
+    verifyPairs(cand, shingles(canon(needed), k), minJaccard)
   }
 
   /** #125 incremental cluster maintenance — the last stage of the dedup
@@ -879,8 +887,12 @@ object Dedup {
       .withColumn("h", md5(col("segment")))
       .sharedCache
     val segCounts = segments.groupBy("h").agg(count(lit(1)).as("seg_df"))
+    // shuffle_hash hint: a fixed plan (AQE otherwise picks the broadcast
+    // build side by which stage of the shared cache finishes first), no
+    // sort of either side, a build side of one row per distinct segment,
+    // and a join AQE still splits on a skewed h
     segments
-      .join(segCounts, "h")
+      .join(segCounts.hint("shuffle_hash"), "h")
       .withColumn("dup", col("seg_df") > 1)
       .groupBy("doc_id")
       .agg(

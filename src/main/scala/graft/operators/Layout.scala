@@ -18,14 +18,28 @@ object Layout {
     * catalog. Readers in any later session of the same warehouse get
     * shuffle-free joins/aggregations on `key` against other tables
     * bucketed the same way (same key, same bucket count).
+    *
+    * One file per bucket: written as `df` is partitioned, each writer task
+    * would open a file per bucket it holds (up to partitions × buckets).
+    * The rows are rebalanced on their bucket id, `pmod(hash(key), buckets)`
+    * (Spark's; the hint takes column names only), so AQE coalesces a small
+    * table into one writer task and splits a bucket past the advisory
+    * partition size across several; `repartition(buckets, key)` would
+    * always run `buckets` tasks.
     */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write
+  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit = {
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    val bucket = "__graft_bucket"
+    df.withColumn(bucket, pmod(hash(col(key)), lit(buckets)))
+      .hint("rebalance", bucket)
+      .drop(bucket)
+      .write
       .mode("overwrite")
       .format("parquet")
       .bucketBy(buckets, key)
       .sortBy(key)
       .saveAsTable(table)
+  }
 
   /** Write `df` Hive-partitioned by the month of `tsCol` (directories
     * `month=YYYY-MM-01/`) — the layout that makes every month-scoped query

@@ -554,7 +554,8 @@ object Vectors {
     * the proof the maintenance is exact (the v_kmeans_incremental shape).
     *
     * The touched label set is COLLECTED once (bounded by the blocking
-    * cardinality — the same train-once contract as the probe centroids)
+    * cardinality — the same train-once contract as the probe centroids —
+    * and capped at [[maxGeoCells]], past which the call fails)
     * and applied as an in-row `isin` literal filter on both sides: the
     * stored graph is never joined or reshuffled, and because `label` is
     * the graph MV's partition column at deploy, the kept-edge filter is
@@ -575,8 +576,11 @@ object Vectors {
   def knnGraphIncrement(oldGraph: DataFrame, oldVectors: DataFrame,
                         delta: DataFrame, k: Int = 5): DataFrame = {
     Checks.requireDisjoint(oldVectors, delta, "vec_id", "knnGraphIncrement")
+    val cap = maxGeoCells()
     val touched: Seq[Int] = delta.filter(col("label").isNotNull)
-      .select("label").distinct().collect().toIndexedSeq.map(_.getInt(0))
+      .select("label").distinct().limit(cap + 1).collect().toIndexedSeq.map(_.getInt(0))
+    require(touched.length <= cap, s"knnGraphIncrement: the delta touches more than " +
+      s"maxGeoCells() = $cap labels, the bound of its touched-label collect")
     // a delta with no labeled vectors invalidates nothing
     if (touched.isEmpty) return oldGraph
     val kept = oldGraph.filter(!col("label").isInCollection(touched))

@@ -15,8 +15,8 @@ import org.apache.spark.sql.SparkSession
 class ConfInvarianceSpec extends SparkSpec {
 
   private val keys = Seq("q_clustering_communities", "d_dedup_minhash", "v_knn_join",
-    "p_decontaminate", "t_membership_rank", "m_multimodal_meta", "s_sessionize_gap",
-    "src_chatlog_rollup")
+    "v_knn_join_incremental_wh", "p_decontaminate", "t_membership_rank", "m_multimodal_meta",
+    "s_sessionize_gap", "src_chatlog_rollup")
 
   private val variants = Seq(
     "broadcast joins off" -> ("spark.sql.autoBroadcastJoinThreshold" -> "-1"),

@@ -10,7 +10,8 @@ import graft.sources.DedupWarehouse
   * and pairs, and the [[DedupWarehouse]] tables written from them — and
   * the maintenance that runs over it: every maintained result equals the
   * monolithic operator over the whole corpus, on the planted fixture and
-  * on degenerate corpora.
+  * on degenerate corpora. And what building it costs: one scan of the
+  * planted corpus, one pin per minhash corpus.
   */
 class DedupStateSpec extends SparkSpec {
 
@@ -112,5 +113,67 @@ class DedupStateSpec extends SparkSpec {
       corpus(10L -> s"$text today", 11L -> "an unrelated sentence about weather and trains"))
     assert(pairs.map(p => (p(0), p(1))) === Set((1L, 10L)))
     assert(clusters === Set(Seq(1L, 1L, true), Seq(2L, 2L, true), Seq(10L, 1L, false), Seq(11L, 11L, true)))
+  }
+
+  /** The planted fixture as three filtered scans of `documents`. */
+  private def plantedByUnion(documents: DataFrame): DataFrame = {
+    val w = split(lower(trim(col("text"))), "\\s+")
+    val base = documents.select(col("doc_id"), lower(trim(col("text"))).as("text"))
+    val near = documents.filter(col("doc_id") % 5 === 0 && size(w) > 10)
+      .select((col("doc_id") + graft.Fixtures.NEAR_OFF).as("doc_id"),
+        concat_ws(" ", slice(w, lit(1), size(w) - 5)).as("text"))
+    val exact = documents.filter(col("doc_id") % 25 === 0)
+      .select((col("doc_id") + graft.Fixtures.EXACT_OFF).as("doc_id"), lower(trim(col("text"))).as("text"))
+    base.unionByName(near).unionByName(exact)
+  }
+
+  private def multiset(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (r, rs) => r -> rs.size }
+
+  private val long = "One two three four five six seven eight nine ten eleven twelve"
+
+  test("plantedDocs ≡ the union of three filtered scans, as a multiset") {
+    val raw = Tables.documents(spark, sfDir)
+    assert(multiset(graft.Fixtures.plantedDocs(raw)) === multiset(plantedByUnion(raw)))
+    val s = spark
+    import s.implicits._
+    val edge = Seq[(java.lang.Long, String)](
+      (null, long), (null, null), (5L, null), (25L, null), (5L, long), (25L, long), (50L, long),
+      (10L, "  Just Ten Words Here To Make Exactly Ten Words Long  "), (25L, "short text"),
+      (7L, long), (75L, long), (75L, long), (3L, "")).toDF("doc_id", "text")
+    val planted = multiset(graft.Fixtures.plantedDocs(edge))
+    assert(planted === multiset(plantedByUnion(edge)))
+    assert(planted.values.sum == 13 + 5 + 6, planted) // near: 5,25,50,75,75; exact: 25,25,50,75,75,25
+  }
+
+  test("plantedDocs plans one scan of documents") {
+    def scans(df: DataFrame) = df.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }.size
+    val raw = Tables.documents(spark, sfDir)
+    assert(scans(plantedByUnion(raw)) == 3, "control: the union scans three times")
+    assert(scans(graft.Fixtures.plantedDocs(raw)) == 1)
+  }
+
+  test("minhashState pins once: the shingle sets with their minhashes") {
+    Caches.release()
+    try {
+      Dedup.minhashState(old)
+      assert(Caches.trackedCount == 1)
+    } finally Caches.release()
+  }
+
+  // 20 with a pin for each corpus's shingle sets, another for its band
+  // index and a third for the candidate docs' shingles: half of that
+  test("constructing d_minhash_incremental runs at most 10 jobs") {
+    Caches.release()
+    Tables.documents(spark, sfDir) // the table resolution is not the key's
+    val counter = new JobCounter(spark.sparkContext)
+    val before = counter.snapshot()
+    try {
+      SparkEntry.queries("d_minhash_incremental")(spark, sfDir)
+      val jobs = (counter.snapshot() - before).jobs
+      assert(jobs <= 10, s"$jobs construction jobs")
+    } finally Caches.release()
   }
 }

@@ -678,6 +678,16 @@ class DedupVectorsSpec extends SparkSpec {
     }
   }
 
+  test("knnGraphIncrement fails loudly on a delta touching more than maxGeoCells labels") {
+    val cap = Vectors.maxGeoCells()
+    val old = spark.range(0).select(col("id").as("vec_id"), col("id").cast("int").as("label"))
+    val delta = spark.range(cap + 1L)
+      .select((col("id") + 1).as("vec_id"), col("id").cast("int").as("label"))
+    val e = intercept[IllegalArgumentException](Vectors.knnGraphIncrement(old, old, delta))
+    assert(e.getMessage.contains("knnGraphIncrement") && e.getMessage.contains(s"maxGeoCells() = $cap"),
+      e.getMessage)
+  }
+
   test("knnGraphIncrement: single-block delta leaves every other block untouched") {
     val s = spark
     import s.implicits._

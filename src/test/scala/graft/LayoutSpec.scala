@@ -1,12 +1,17 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
 
 import graft.operators.{EventSemantics, Layout}
 
 /** Pins the bucketing co-location claim (SURVEY §4 / SCALING.md): a join
   * between two tables bucketed on the join key must be exchange-free,
-  * while the same join on unbucketed relations shuffles both sides.
+  * while the same join on unbucketed relations shuffles both sides. And
+  * the write's file layout: one file per bucket for a small table, a
+  * bucket split across writer tasks when it outgrows AQE's advisory size.
   */
 class LayoutSpec extends SparkSpec {
 
@@ -114,6 +119,45 @@ class LayoutSpec extends SparkSpec {
     } finally {
       spark.sql("DROP TABLE IF EXISTS act_bucketed_a")
       spark.sql("DROP TABLE IF EXISTS act_bucketed_b")
+    }
+  }
+
+  /** (bucket id from the file name, file) of every file of `table`. */
+  private def bucketFiles(table: String): Seq[(Int, String)] =
+    spark.table(table).inputFiles.toSeq.map(f => BucketingUtils.getBucketId(new Path(f).getName).get -> f)
+
+  private def bucketOf(key: String, buckets: Int) = pmod(hash(col(key)), lit(buckets))
+
+  private def writeAndRead[T](df: DataFrame, table: String, buckets: Int)(check: Seq[(Int, String)] => T): T = {
+    Layout.writeBucketed(df, table, "k", buckets)
+    try check(bucketFiles(table)) finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("writeBucketed writes one file per non-empty bucket, holding only that bucket's keys") {
+    // four input partitions: written in its own partitioning, each writer
+    // task would open a file per bucket (up to 4 × 8)
+    val df = spark.range(0, 2000, 1, 4).select((col("id") % 37).as("k"), col("id").as("v"))
+    writeAndRead(df, "bucket_files", 8) { files =>
+      val ids = files.map(_._1)
+      val nonEmpty = df.select(bucketOf("k", 8)).distinct().count()
+      assert(ids.distinct.size == ids.size, s"a bucket in more than one file: ${files.mkString("\n")}")
+      assert(ids.size == nonEmpty)
+      for ((b, f) <- files)
+        assert(spark.read.parquet(f).filter(bucketOf("k", 8) =!= b).isEmpty, s"$f holds another bucket's keys")
+      assert(spark.table("bucket_files").count() == 2000)
+    }
+  }
+
+  test("writeBucketed splits a bucket larger than the advisory partition size across writer tasks") {
+    val df = spark.range(0, 100000, 1, 8).select((col("id") % 2).as("k"), col("id").as("v"))
+    withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4k") {
+      writeAndRead(df, "bucket_split", 4) { files =>
+        val perBucket = files.groupBy(_._1).map { case (b, fs) => b -> fs.size }
+        assert(perBucket.values.exists(_ > 1), s"no bucket was split across writer tasks: $perBucket")
+        for ((b, f) <- files)
+          assert(spark.read.parquet(f).filter(bucketOf("k", 4) =!= b).isEmpty, s"$f holds another bucket's keys")
+        assert(spark.table("bucket_split").count() == 100000)
+      }
     }
   }
 }
