@@ -7,7 +7,7 @@ package graft
   *
   * `Bench [outDir]` writes the per-query detail files into `outDir`
   * (default `target/bench`, which git ignores), never into the working
-  * directory, where they would overwrite the copies committed at the root.
+  * directory.
   */
 object Bench {
   def main(args: Array[String]): Unit = {

@@ -221,7 +221,7 @@ object SparkEntry {
     // two-level coarse quantizer for probe assignment (the oracle replays
     // the recorded hierarchy)
     "v_knn_join_mph" -> ((s, d) => { val e = emb(s, d)
-      Vectors.knnJoinMultiProbeHier(e, Vectors.trainProbeHierarchy(e).map(Oracle.knnJoinMph), 5, 2, 2, false) }),
+      Vectors.knnJoinMultiProbeHier(e, Vectors.trainProbeHierarchy(e).map(Oracle.knnJoinMph), 5, 2, 2) }),
     // blocks = LEARNED k-means cells instead of the label column (the geo
     // upgrade of the graph build); oracle replays train -> assign -> probe
     // -> graph end-to-end through the unrolled-Lloyd CTE chain, no recorded model

@@ -24,8 +24,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * scoring is a tight compiled O(C·dim) loop with an O(nProbe)
   * insertion buffer — plan size O(1) in C.
   *
-  * Bit-exactness contract with the unrolled form (pinned by
-  * DedupVectorsSpec):
+  * Bit-exactness contract with the unrolled form (DedupVectorsSpec keeps
+  * that formulation and pins every row's probe list against it):
   *  - each dot is the strict ascending fold of [[DotProduct]]
   *    (`acc += v_i * q_i` from 0), centroid self-dots precomputed with
   *    the same fold;
@@ -48,7 +48,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   *    literal (lowest-`nProbe` labels).
   *
   * `labels`/`cents` must be sorted by label ascending (the collect in
-  * `Vectors.knnJoinMultiProbe` guarantees it); ties then break to the
+  * `Vectors.centroidTable` guarantees it); ties then break to the
   * lower index = lower label.
   */
 case class TopProbeLabels(child: Expression,
@@ -264,12 +264,6 @@ object ProbeKernel {
     while (i < size) { out(i) = labels(bufI(i)); i += 1 }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  /** Backward-compatible flat entry (spec twins call this directly). */
-  def topProbes(arr: ArrayData, isFloat: Boolean, dim: Int, nC: Int,
-                labels: Array[Int], cents: Array[Double], cnorm: Array[Double],
-                nProbe: Int): ArrayData =
-    topProbes(arr, isFloat, dim, nC, labels, cents, cnorm, nProbe, null)
 
   def topProbesHier(arr: ArrayData, isFloat: Boolean, dim: Int,
                     nS: Int, supCents: Array[Double], snorm: Array[Double],

@@ -558,11 +558,6 @@ object NearestCentroid {
     else flatScan(v, n, dvv, dim, k, cent, cn)
   }
 
-  /** Backward-compatible flat entry (spec twins call this directly). */
-  def compute(arr: ArrayData, isFloat: Boolean, dim: Int, k: Int,
-              cent: Array[Double], cn: Array[Double]): Any =
-    compute(arr, isFloat, dim, k, cent, cn, null)
-
   private def flatScan(v: Array[Double], n: Int, dvv: Double, dim: Int, k: Int,
                        cent: Array[Double], cn: Array[Double]): Any = {
     var bestJ = -1

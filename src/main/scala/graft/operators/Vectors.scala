@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import EventSemantics.fl
@@ -89,16 +89,19 @@ object Vectors {
       .select(col("label"), transform(col("sv"), x => x / col("nv").cast("double")).as("cvec"))
 
   /** [[labelCentroids]] of the valid, labeled vectors, collected in label
-    * order — ONE driver collect bounded by the label/cell cardinality. An
+    * order — ONE driver collect bounded by the label/cell cardinality
+    * ([[maxGeoCells]], past which the call fails). An
     * invalid row would hard-throw in vec_sum (wrong dim) or skew the mean
     * (vec_sum's per-slot null skip over the FULL row count vs DuckDB AVG's
     * non-null denominator); a null label must not become a centroid group.
     */
-  private def centroidTable(embeddings: DataFrame): Array[(Int, Array[Double])] =
-    labelCentroids(embeddings.filter(kmValid && col("label").isNotNull))
-      .collect()
+  private def centroidTable(embeddings: DataFrame): Array[(Int, Array[Double])] = {
+    val cap = maxGeoCells()
+    Checks.boundedCollect(labelCentroids(embeddings.filter(kmValid && col("label").isNotNull)),
+      cap, s"centroidTable's label cells (maxGeoCells() = $cap)")
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1)
+  }
 
   /** #44 IVF-style ANN: per-label centroids as the coarse quantizer, rank
     * cells by centroid-to-query cosine, probe the top `nProbe` cells, then
@@ -204,9 +207,8 @@ object Vectors {
     * width at plan-build time; clusterConf pins it for a fleet).
     *
     * `key` is the streamed side's unique row id (vec_id for the vector
-    * block joins, doc_id for the shingle inverted-index pair joins —
-    * r12 generalization so [[graft.operators.Dedup.ngramJaccard]] can use
-    * the same guard).
+    * block joins, doc_id for [[graft.operators.Dedup.ngramJaccard]]'s
+    * shingle inverted-index pair joins).
     */
   private[operators] def spreadIfBroadcastJoin(aSide: DataFrame, source: DataFrame,
                                                key: String = "vec_id"): DataFrame = {
@@ -293,45 +295,36 @@ object Vectors {
     * moves keyed by its home label exactly as the single-block join), so
     * cost scales by nProbe × block size, never the corpus.
     */
-  def knnJoinMultiProbe(embeddings: DataFrame, k: Int = 5, nProbe: Int = 2,
-                        unrolled: Boolean = false): DataFrame = {
+  def knnJoinMultiProbe(embeddings: DataFrame, k: Int = 5, nProbe: Int = 2): DataFrame = {
     val cents = centroidTable(embeddings)
     // no blocks at all (empty corpus): the probe array would be a
     // zero-width VOID literal that analysis rejects — and with no rows
     // the multi-probe graph IS the single-block graph (empty)
     if (cents.isEmpty) return knnJoin(embeddings, k)
-    // Probe ranking is (-centroid cosine, label) ascending = score desc,
-    // label asc — deterministic in-row. The score is floored at 6 decimals
-    // like the final cosine: centroids come from a distributed double fold
-    // here and a per-dim AVG in the oracle, so an unrounded near-tie could
-    // rank probes differently per engine / partitioning and change the
-    // candidate set.
-    //
-    // Deploy path: the fused codegen'd TopProbeLabels expression — the
-    // centroid matrix is ONE codegen reference object, so plan size is
-    // O(1) in the cell count C and scoring is a compiled O(C·dim) loop.
-    // `unrolled = true` keeps the original one-literal-struct-per-cell
-    // array_sort formulation alive purely as the spec twin that pins the
-    // expression's bit-exact equivalence (it is O(C) plan nodes and
-    // interpreted per-row HOF eval — a scale-killer at FAISS cell counts).
-    val topLabels = if (unrolled) {
-      val scoredCents = cents.map { case (l, cv) =>
-        struct((-fl(cosTo(typedLit(cv.toSeq), col("embedding")), 6)).as("neg"), lit(l).as("lbl"))
-      }
-      transform(
-        slice(array_sort(array(scoredCents.toIndexedSeq: _*)), 1, nProbe),
-        x => x.getField("lbl"))
-    } else {
-      val labelArr = cents.map(_._1)
-      val centFlat = cents.flatMap(_._2)
-      // a NULL vector nulls the expression; the unrolled form's all-null
-      // scores degenerate to label-asc ranking, restored here by coalesce
-      coalesce(
-        graft.functions.VectorFunctions.topProbeLabels(
-          col("embedding"), DIM, labelArr, centFlat, nProbe),
-        typedLit(labelArr.take(math.min(nProbe, labelArr.length)).toSeq))
-    }
-    topK(blockPairs(embeddings, probes = Some(topLabels)), k)
+    topK(blockPairs(embeddings, probes = Some(probeLabels(cents, nProbe))), k)
+  }
+
+  /** The `nProbe` labels of `cells` nearest each row's `embedding`: the
+    * fused codegen'd [[graft.functions.TopProbeLabels]] expression. The
+    * centroid matrix is ONE codegen reference object, so plan size is
+    * O(1) in the cell count C and scoring is a compiled O(C·dim) loop.
+    *
+    * Probe ranking is (-centroid cosine, label) ascending = score desc,
+    * label asc — deterministic in-row. The score is floored at 6 decimals
+    * like the final cosine: centroids come from a distributed double fold
+    * here and a per-dim AVG in the oracle, so an unrounded near-tie could
+    * rank probes differently per engine / partitioning and change the
+    * candidate set. DedupVectorsSpec pins the expression row by row
+    * against the one-literal-struct-per-cell array_sort formulation.
+    */
+  private[graft] def probeLabels(cells: Array[(Int, Array[Double])], nProbe: Int): Column = {
+    val labelArr = cells.map(_._1)
+    // a NULL vector nulls the expression; the array_sort form's all-null
+    // scores degenerate to label-asc ranking, restored here by coalesce
+    coalesce(
+      graft.functions.VectorFunctions.topProbeLabels(
+        col("embedding"), DIM, labelArr, cells.flatMap(_._2), nProbe),
+      typedLit(labelArr.take(math.min(nProbe, labelArr.length)).toSeq))
   }
 
   /** The okey packing's cosine scale: [[blockPairs]] and its DuckDB
@@ -390,15 +383,13 @@ object Vectors {
     * ([[graft.functions.CentroidIndex]]) the per-row assignment cost is
     * O((√C + C/√C)·dim) ≈ O(√C·dim), so the per-row graph cost
     * O(√C·dim) + O(nProbe·(N/C)·dim) (pair join at block size N/C) is
-    * minimized at C = (nProbe·N)^(2/3) — the balance point the round-9
-    * √(nProbe·N) sizing had under the FLAT O(C·dim) scan. Larger C =
+    * minimized at C = (nProbe·N)^(2/3). Larger C =
     * smaller blocks = a pair join that grows as N^(1/3) per row instead
     * of N^(1/2); candidates per vector (recall budget) still GROW with
-    * the corpus, as before. Capped at [[maxGeoCells]] — since r11 the
-    * centroid matrix ships as a broadcast VARIABLE
-    * ([[graft.functions.CentroidBundle]]), so the old 2^14 "sane plan
-    * reference object" ceiling is gone and the cap is the real resource
-    * bound (broadcast budget + train-once index build). Deploys call
+    * the corpus. Capped at [[maxGeoCells]] — the centroid matrix ships as
+    * a broadcast VARIABLE ([[graft.functions.CentroidBundle]]), so the
+    * cap is the real resource bound (broadcast budget + train-once index
+    * build). Deploys call
     * this; the GATE keeps the fixed kCells=8 because the DuckDB twin's
     * unrolled-Lloyd CTE chain must inline the identical literal.
     */
@@ -408,9 +399,9 @@ object Vectors {
     math.max(1, math.min(c, maxGeoCells()))
   }
 
-  /** The geometry family's cell-count ceiling, re-derived (r11) now
-    * that centroid matrices are broadcast variables, not plan reference
-    * objects, and the two-level index's super-training DISTRIBUTES past
+  /** The geometry family's cell-count ceiling. Centroid matrices are
+    * broadcast variables, not plan reference objects, and the two-level
+    * index's super-training DISTRIBUTES past
     * [[graft.functions.CentroidIndex.distMin]] (fixed-point sums, so
     * the unordered reduce stays deterministic): the one binding
     * resource left is the BROADCAST budget — the C×dim double matrix
@@ -418,8 +409,8 @@ object Vectors {
     * derived arrays add ~√C·dim doubles + 2C ints ≈ noise). At dim 64
     * that is 2^18 cells; the index build at that C is ~4·10^10
     * multiply-adds SPREAD OVER THE CLUSTER (seconds at 32 cores,
-    * sub-second on a fleet), no longer a driver stall. Floored at the
-    * old 2^14 so no corpus regresses. At (nProbe·N)^(2/3) sizing, 2^18
+    * sub-second on a fleet), not a driver stall. Floored at 2^14, the
+    * earlier fixed cap, so no corpus loses cells. At (nProbe·N)^(2/3) sizing, 2^18
     * cells covers N ≈ 6·10^7 vectors at the optimum; a 10^9-vector
     * corpus saturates the cap and re-fattens blocks to O(N/2^18) ≈ 4k
     * vectors — the residual ceiling is now purely the broadcast budget
@@ -451,8 +442,8 @@ object Vectors {
     * the caller can keep and re-apply.
     */
   def knnJoinMultiProbeHier(embeddings: DataFrame, k: Int = 5, nProbe: Int = 2,
-                            superProbe: Int = 2, unrolled: Boolean = false): DataFrame =
-    knnJoinMultiProbeHier(embeddings, trainProbeHierarchy(embeddings), k, nProbe, superProbe, unrolled)
+                            superProbe: Int = 2): DataFrame =
+    knnJoinMultiProbeHier(embeddings, trainProbeHierarchy(embeddings), k, nProbe, superProbe)
 
   /** The trained two-level coarse quantizer: the label cells' centroids,
     * the super-centroids and each cell's super.
@@ -469,67 +460,39 @@ object Vectors {
     // one subspace (same init/iteration/tie contract), S supers
     val supFlat = trainPqCodebook(cents.map(_._2), DIM, m = 1, k = nSup, iters = 3)
     val supCents = Array.tabulate(nSup)(j => java.util.Arrays.copyOfRange(supFlat, j * DIM, (j + 1) * DIM))
-    def nearestSup(v: Array[Double]): Int = {
-      var best = 0; var bd = Double.MaxValue; var c = 0
-      while (c < nSup) {
-        var d = 0d; var j = 0
-        while (j < DIM) { val t = v(j) - supCents(c)(j); d += t * t; j += 1 }
-        if (d < bd) { bd = d; best = c }
-        c += 1
-      }
-      best
-    }
-    Some(ProbeHierarchy(cents, supCents, cents.map(c => nearestSup(c._2))))
+    Some(ProbeHierarchy(cents, supCents, cents.map(c => nearestSq(c._2, 0, supFlat, 0, nSup, DIM))))
   }
 
   /** [[knnJoinMultiProbeHier]] over a trained hierarchy (None: the
     * single-block [[knnJoin]]).
     */
   def knnJoinMultiProbeHier(embeddings: DataFrame, hierarchy: Option[ProbeHierarchy], k: Int,
-                            nProbe: Int, superProbe: Int, unrolled: Boolean): DataFrame = {
-    if (hierarchy.isEmpty) return knnJoin(embeddings, k)
-    val ProbeHierarchy(cents, supCents, cellSup) = hierarchy.get
-    // Deploy path: BOTH ranking stages fused into the codegen'd
-    // TopProbeLabelsHier expression — supers, cell→super map and cell
-    // centroids are codegen reference objects, so plan size is O(1) in C
-    // and the per-row cost is the compiled O((S + superProbe·C/S)·dim)
-    // two-stage loop. `unrolled = true` keeps the original formulation
-    // (per-super literal structs + one when-guarded literal entry per
-    // cell) alive as the spec twin pinning bit-exact equivalence; its
-    // design notes — centroids must live in expressions not data, the
-    // super choice must be materialized once as a column because the
-    // interpreted projection has no CSE — are retained in git history
-    // and superseded by the fused expression.
-    if (unrolled) {
-      val supScored = supCents.toIndexedSeq.zipWithIndex.map { case (sc, j) =>
-        struct((-fl(cosTo(typedLit(sc.toSeq), col("embedding")), 6)).as("neg"), lit(j).as("sid"))
-      }
-      val topSupers = transform(
-        slice(array_sort(array(supScored: _*)), 1, superProbe), x => x.getField("sid"))
-      def scoredCand(sup: Column) = filter(
-        array(cents.toIndexedSeq.zipWithIndex.map { case ((l, cv), ci) =>
-          when(array_contains(sup, lit(cellSup(ci))),
-            struct((-fl(cosTo(typedLit(cv.toSeq), col("embedding")), 6)).as("neg"),
-              lit(l).as("lbl")))
-        }: _*), c => c.isNotNull)
-      val topLabels = transform(
-        slice(array_sort(scoredCand(col("_sup"))), 1, nProbe), x => x.getField("lbl"))
-      topK(blockPairs(embeddings.withColumn("_sup", topSupers), probes = Some(topLabels)), k)
-    } else {
-      val labelArr = cents.map(_._1)
-      val cellFlat = cents.flatMap(_._2)
-      // a NULL vector nulls the expression; the unrolled form's all-null
-      // scores pick supers {0..superProbe-1} (sid asc) then member cells
-      // label-asc — the same list, precomputed here as the coalesce arm
-      val sp = math.min(superProbe, supCents.length)
-      val nullFallback = cents.indices
-        .filter(ci => cellSup(ci) < sp).take(nProbe).map(ci => cents(ci)._1)
-      val topLabels = coalesce(
-        graft.functions.VectorFunctions.topProbeLabelsHier(
-          col("embedding"), DIM, supCents.flatten, labelArr, cellSup, cellFlat, nProbe, superProbe),
-        typedLit(nullFallback))
-      topK(blockPairs(embeddings, probes = Some(topLabels)), k)
+                            nProbe: Int, superProbe: Int): DataFrame =
+    hierarchy.fold(knnJoin(embeddings, k)) { h =>
+      topK(blockPairs(embeddings, probes = Some(hierProbeLabels(h, nProbe, superProbe))), k)
     }
+
+  /** [[probeLabels]] through the two-level quantizer: BOTH ranking stages
+    * fused into the codegen'd [[graft.functions.TopProbeLabelsHier]]
+    * expression. Supers, cell→super map and cell centroids are codegen
+    * reference objects, so plan size is O(1) in C and the per-row cost is
+    * the compiled O((S + superProbe·C/S)·dim) two-stage loop.
+    */
+  private[graft] def hierProbeLabels(hierarchy: ProbeHierarchy, nProbe: Int,
+                                     superProbe: Int): Column = {
+    val ProbeHierarchy(cents, supCents, cellSup) = hierarchy
+    val labelArr = cents.map(_._1)
+    val cellFlat = cents.flatMap(_._2)
+    // a NULL vector nulls the expression; the array_sort form's all-null
+    // scores pick supers {0..superProbe-1} (sid asc) then member cells
+    // label-asc — the same list, precomputed here as the coalesce arm
+    val sp = math.min(superProbe, supCents.length)
+    val nullFallback = cents.indices
+      .filter(ci => cellSup(ci) < sp).take(nProbe).map(ci => cents(ci)._1)
+    coalesce(
+      graft.functions.VectorFunctions.topProbeLabelsHier(
+        col("embedding"), DIM, supCents.flatten, labelArr, cellSup, cellFlat, nProbe, superProbe),
+      typedLit(nullFallback))
   }
 
   /** The blocked kNN graph WITH its block key — the stored-MV form of
@@ -561,9 +524,7 @@ object Vectors {
     * the graph MV's partition column at deploy, the kept-edge filter is
     * PARTITION PRUNING — untouched partitions are not even read, and the
     * maintenance write is an overwrite of exactly the touched ones. Cost
-    * scales with the delta's block footprint, never the corpus. (The
-    * join-based formulation re-ran the delta's distinct-label aggregate
-    * once per broadcast site — five exchanges where zero are needed.)
+    * scales with the delta's block footprint, never the corpus.
     *
     * CONTRACT — insert-only delta: `delta`'s vec_ids must be DISJOINT
     * from `oldVectors`' (new vectors, not re-ingested updates). A
@@ -577,10 +538,10 @@ object Vectors {
                         delta: DataFrame, k: Int = 5): DataFrame = {
     Checks.requireDisjoint(oldVectors, delta, "vec_id", "knnGraphIncrement")
     val cap = maxGeoCells()
-    val touched: Seq[Int] = delta.filter(col("label").isNotNull)
-      .select("label").distinct().limit(cap + 1).collect().toIndexedSeq.map(_.getInt(0))
-    require(touched.length <= cap, s"knnGraphIncrement: the delta touches more than " +
-      s"maxGeoCells() = $cap labels, the bound of its touched-label collect")
+    val touched: Seq[Int] = Checks.boundedCollect(
+        delta.filter(col("label").isNotNull).select("label").distinct(), cap,
+        s"knnGraphIncrement's touched labels (maxGeoCells() = $cap)")
+      .toIndexedSeq.map(_.getInt(0))
     // a delta with no labeled vectors invalidates nothing
     if (touched.isEmpty) return oldGraph
     val kept = oldGraph.filter(!col("label").isInCollection(touched))
@@ -590,6 +551,23 @@ object Vectors {
   }
 
   // ---- #89 product-quantization ANN ----------------------------------------
+  /** The driver-side argmin every Lloyd step and encode shares: the index
+    * of the row nearest `v[vOff, vOff + len)` among the `k` rows of `len`
+    * doubles at `cents[cOff..]`, by the squared L2 Σ(v − c)² folded in
+    * element order; the first minimum wins (ties to the lowest index).
+    */
+  private def nearestSq(v: Array[Double], vOff: Int, cents: Array[Double], cOff: Int,
+                        k: Int, len: Int): Int = {
+    var best = 0; var bd = Double.MaxValue; var c = 0
+    while (c < k) {
+      var d = 0d; var j = 0
+      while (j < len) { val t = v(vOff + j) - cents(cOff + c * len + j); d += t * t; j += 1 }
+      if (d < bd) { bd = d; best = c }
+      c += 1
+    }
+    best
+  }
+
   /** Deterministic Lloyd-iteration codebook: per subspace, k centroids
     * trained on a driver-bounded sample (init = the sample's first k
     * points; fixed iteration count; empty clusters keep their centroid;
@@ -598,62 +576,63 @@ object Vectors {
     * produce the identical codebook.
     */
   private[graft] def trainPqCodebook(sample: Array[Array[Double]], dim: Int,
-                                         m: Int, k: Int, iters: Int): Array[Double] = {
+                                     m: Int, k: Int, iters: Int): Array[Double] = {
     require(sample.nonEmpty, "PQ codebook needs a non-empty training sample")
     val sub = dim / m
     val cb = new Array[Double](m * k * sub)
-    var s = 0
-    while (s < m) {
-      val pts = sample.map(v => java.util.Arrays.copyOfRange(v, s * sub, (s + 1) * sub))
-      var cent = Array.tabulate(k)(c => pts(c % pts.length).clone())
-      var it = 0
-      while (it < iters) {
-        val sums = Array.fill(k)(new Array[Double](sub))
+    for (s <- 0 until m) {
+      val off = s * k * sub
+      for (c <- 0 until k) System.arraycopy(sample(c % sample.length), s * sub, cb, off + c * sub, sub)
+      for (_ <- 1 to iters) {
+        val sums = new Array[Double](k * sub)
         val cnt = new Array[Int](k)
-        pts.foreach { p =>
-          var best = 0; var bd = Double.MaxValue
-          var c = 0
-          while (c < k) {
-            var d = 0d; var j = 0
-            while (j < sub) { val t = p(j) - cent(c)(j); d += t * t; j += 1 }
-            if (d < bd) { bd = d; best = c }
-            c += 1
-          }
+        sample.foreach { v =>
+          val best = nearestSq(v, s * sub, cb, off, k, sub)
           cnt(best) += 1
           var j = 0
-          while (j < sub) { sums(best)(j) += p(j); j += 1 }
+          while (j < sub) { sums(best * sub + j) += v(s * sub + j); j += 1 }
         }
-        cent = Array.tabulate(k)(c =>
-          if (cnt(c) > 0) sums(c).map(_ / cnt(c)) else cent(c))
-        it += 1
+        for (c <- 0 until k if cnt(c) > 0; j <- 0 until sub)
+          cb(off + c * sub + j) = sums(c * sub + j) / cnt(c)
       }
-      var c = 0
-      while (c < k) {
-        System.arraycopy(cent(c), 0, cb, (s * k + c) * sub, sub)
-        c += 1
-      }
-      s += 1
     }
     cb
   }
 
   // ---- shared PQ-family machinery (annPq / annPqResidual / annPqOpq) -----
+  /** Column `i` of a collected row, a float array, widened to doubles. */
+  private def doubles(r: Row, i: Int): Array[Double] = r.getSeq[Float](i).map(_.toDouble).toArray
+
   /** Deterministic bounded training sample (md5-shuffled order, vec_id
-    * tiebreak), drawn from VALID vectors only — a NULL/wrong-dim row would
-    * NPE the driver-side collect before any codebook existed.
+    * tiebreak) as (vec_id, label, embedding) rows, drawn from VALID
+    * vectors only — a NULL/wrong-dim row would NPE the driver-side
+    * collect before any codebook existed.
     */
-  private def pqSample(embeddings: DataFrame, sampleN: Int): Array[Array[Double]] =
+  private def pqSample(embeddings: DataFrame, sampleN: Int): Array[Row] =
     embeddings.filter(kmValid)
-      .select(col("vec_id"), col("embedding"))
+      .select(col("vec_id"), col("label"), col("embedding"))
       .orderBy(md5(concat(lit("pq-sample-"), col("vec_id"))), col("vec_id"))
       .limit(sampleN)
       .collect()
-      .map(_.getSeq[Float](1).map(_.toDouble).toArray)
 
+  /** The query row of `qId`; kmValid guards it too, so a null /
+    * wrong-dim query vector degrades to the empty result instead of
+    * crashing the driver collect.
+    */
   private def pqQueryRow(embeddings: DataFrame, qId: Long): Option[Array[Double]] =
     embeddings.filter(col("vec_id") === qId && kmValid)
       .select("embedding").limit(1).collect().headOption
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+      .map(doubles(_, 0))
+
+  /** The plain training front of the PQ family: the sample's vectors and
+    * the query row, or None when either is missing.
+    */
+  private def pqInputs(embeddings: DataFrame, qId: Long,
+                       sampleN: Int): Option[(Array[Array[Double]], Array[Double])] = {
+    val sample = pqSample(embeddings, sampleN).map(doubles(_, 2))
+    val qRow = pqQueryRow(embeddings, qId)
+    if (sample.isEmpty) None else qRow.map(sample -> _)
+  }
 
   /** Degenerate corpus (nothing to train on / query vector absent): the
     * top-k of nothing is the empty result, not a crash.
@@ -677,13 +656,23 @@ object Vectors {
     })
   }
 
-  /** Shared ADC tail: raw-double ADC ranking → rerank cut → exact-cosine
-    * top-k, twinned by the PQ oracles' shared tail. `scored` must carry
-    * (vec_id, label, embedding, adc_cosine).
+  /** `lut[code]`: the LUT entry of a 0-based code. */
+  private def lutAt(lut: Column, code: Column): Column = element_at(lut, code + 1)
+
+  /** The m-term ADC sum, folded left over the subspaces in order. */
+  private def adcSum(m: Int)(term: Int => Column): Column = (0 until m).map(term).reduceLeft(_ + _)
+
+  /** Shared ADC tail: the raw-double ADC cosine `dot / (sqrt(n2) · |q|)`
+    * over `codes` (vec_id, label, embedding + code columns) → ranking →
+    * rerank cut → exact-cosine top-k, twinned by the PQ oracles' shared
+    * tail. Each caller groups its `dot` and `n2` terms as its oracle does.
     */
-  private def adcTopK(scored: DataFrame, embeddings: DataFrame, qId: Long,
-                      k: Int, rerank: Int): DataFrame =
-    rankToQuery(scored.orderBy(col("adc_cosine").desc, col("vec_id").asc).limit(rerank),
+  private def adcTopK(codes: DataFrame, embeddings: DataFrame, qId: Long, k: Int, rerank: Int,
+                      qNorm: Double, dot: Column, n2: Column): DataFrame =
+    rankToQuery(
+      codes.select(col("vec_id"), col("label"), col("embedding"),
+          (dot / (sqrt(n2) * qNorm)).as("adc_cosine"))
+        .orderBy(col("adc_cosine").desc, col("vec_id").asc).limit(rerank),
       embeddings, qId, k, fl(col("adc_cosine"), 6).as("adc_cosine"))
 
   /** The scorable corpus: everything but the query row, validity-filtered
@@ -735,10 +724,9 @@ object Vectors {
     */
   def trainPq(embeddings: DataFrame, qId: Long = 0L, m: Int = 8, codebookK: Int = 16,
               sampleN: Int = 256, iters: Int = 5): Option[PqModel] = {
-    val sample = pqSample(embeddings, sampleN)
-    val qRow = pqQueryRow(embeddings, qId)
-    if (sample.isEmpty || qRow.isEmpty) None
-    else Some(PqModel(qId, qRow.get, m, codebookK, trainPqCodebook(sample, DIM, m, codebookK, iters)))
+    pqInputs(embeddings, qId, sampleN).map { case (sample, q) =>
+      PqModel(qId, q, m, codebookK, trainPqCodebook(sample, DIM, m, codebookK, iters))
+    }
   }
 
   def annPq(embeddings: DataFrame, model: Option[PqModel], k: Int, rerank: Int): DataFrame = {
@@ -749,33 +737,22 @@ object Vectors {
     val codes = pqCorpus(embeddings, qId)
       .select(col("vec_id"), col("label"), col("embedding"),
         graft.functions.VectorFunctions.pqEncode(col("embedding"), DIM, m, codebookK, cb).as("codes"))
-    val adcDot = (0 until m).map(s =>
-      element_at(lit(lutDot(s)), col("codes").getItem(s) + 1)).reduce(_ + _)
-    val adcN2 = (0 until m).map(s =>
-      element_at(lit(lutN2(s)), col("codes").getItem(s) + 1)).reduce(_ + _)
-    adcTopK(codes
-      .select(col("vec_id"), col("label"), col("embedding"),
-        (adcDot / (sqrt(adcN2) * qNorm)).as("adc_cosine")),
-      embeddings, qId, k, rerank)
+    adcTopK(codes, embeddings, qId, k, rerank, qNorm,
+      adcSum(m)(s => lutAt(lit(lutDot(s)), col("codes").getItem(s))),
+      adcSum(m)(s => lutAt(lit(lutN2(s)), col("codes").getItem(s))))
   }
 
-  /** Driver-side PQ encode (same nearest-centroid rule as the codegen'd
-    * [[graft.functions.PqEncode]]): used to build residual training sets.
+  /** Driver-side PQ encode, used to build residual training sets: per
+    * subspace, [[nearestSq]]'s Σ(v − c)² argmin. The codegen'd
+    * [[graft.functions.PqEncode]] ranks by |c|² − 2·v·c instead — the same
+    * argmin in exact arithmetic, but the two roundings can split a
+    * near-tie differently (VectorFunctionsSpec pins agreement on the spec
+    * corpus).
     */
   private[graft] def pqEncodeLocal(v: Array[Double], cb: Array[Double],
-                                       dim: Int, m: Int, k: Int): Array[Int] = {
+                                   dim: Int, m: Int, k: Int): Array[Int] = {
     val sub = dim / m
-    Array.tabulate(m) { s =>
-      var best = 0; var bd = Double.MaxValue
-      var c = 0
-      while (c < k) {
-        var d = 0d; var j = 0
-        while (j < sub) { val t = v(s * sub + j) - cb((s * k + c) * sub + j); d += t * t; j += 1 }
-        if (d < bd) { bd = d; best = c }
-        c += 1
-      }
-      best
-    }
+    Array.tabulate(m)(s => nearestSq(v, s * sub, cb, s * k * sub, k, sub))
   }
 
   private[graft] def pqReconstructLocal(codes: Array[Int], cb: Array[Double],
@@ -814,15 +791,14 @@ object Vectors {
     */
   def trainPqResidual(embeddings: DataFrame, qId: Long = 0L, m: Int = 4, codebookK: Int = 16,
                       sampleN: Int = 256, iters: Int = 5): Option[PqModel] = {
-    val sample = pqSample(embeddings, sampleN)
-    val qRow = pqQueryRow(embeddings, qId)
-    if (sample.isEmpty || qRow.isEmpty) return None
-    val cb1 = trainPqCodebook(sample, DIM, m, codebookK, iters)
-    val residuals = sample.map { v =>
-      val rec = pqReconstructLocal(pqEncodeLocal(v, cb1, DIM, m, codebookK), cb1, DIM, m, codebookK)
-      Array.tabulate(DIM)(i => v(i) - rec(i))
+    pqInputs(embeddings, qId, sampleN).map { case (sample, q) =>
+      val cb1 = trainPqCodebook(sample, DIM, m, codebookK, iters)
+      val residuals = sample.map { v =>
+        val rec = pqReconstructLocal(pqEncodeLocal(v, cb1, DIM, m, codebookK), cb1, DIM, m, codebookK)
+        Array.tabulate(DIM)(i => v(i) - rec(i))
+      }
+      PqModel(qId, q, m, codebookK, cb1, cb2 = trainPqCodebook(residuals, DIM, m, codebookK, iters))
     }
-    Some(PqModel(qId, qRow.get, m, codebookK, cb1, cb2 = trainPqCodebook(residuals, DIM, m, codebookK, iters)))
   }
 
   /** cross[s][c1*k + c2] = 2 * <cent1_s_c1, cent2_s_c2>: the residual
@@ -847,13 +823,11 @@ object Vectors {
     val (d1, n1) = pqLuts(q, cb1, m, codebookK)
     val (d2, n2lut) = pqLuts(q, cb2, m, codebookK)
     val cross = pqCross(model.get)
-    // stage-1 reconstruction + subtract fused into ONE codegen'd kernel
-    // ([[graft.functions.PqResidual]]): the former zip_with over an
-    // array(dim × element_at(lit(cb1), ...)) tree carried dim COPIES of
-    // the codebook literal in the plan (533 KB of plan text at dim 64,
-    // serialized into every task binary) and two HOF traversals per row;
-    // the kernel holds cb1 once and computes the identical IEEE
-    // subtracts (PqResidualSpec pins elementwise equality)
+    // stage-1 reconstruction + subtract in ONE codegen'd kernel
+    // ([[graft.functions.PqResidual]]): it holds cb1 once, where a
+    // zip_with over element_at(lit(cb1), ...) terms carries dim COPIES of
+    // the codebook literal in the plan and every task binary
+    // (PqResidualSpec pins elementwise equality)
     val codes = pqCorpus(embeddings, qId)
       .select(col("vec_id"), col("label"), col("embedding"),
         graft.functions.VectorFunctions.pqEncode(col("embedding"), DIM, m, codebookK, cb1).as("c1"))
@@ -862,18 +836,12 @@ object Vectors {
           graft.functions.VectorFunctions.pqResidual(
             col("embedding"), col("c1"), DIM, m, codebookK, cb1),
           DIM, m, codebookK, cb2))
-    val adcDot = (0 until m).map(s =>
-      element_at(lit(d1(s)), col("c1").getItem(s) + 1) +
-        element_at(lit(d2(s)), col("c2").getItem(s) + 1)).reduce(_ + _)
-    val adcN2 = (0 until m).map(s =>
-      element_at(lit(n1(s)), col("c1").getItem(s) + 1) +
-        element_at(lit(n2lut(s)), col("c2").getItem(s) + 1) +
-        element_at(lit(cross(s)),
-          col("c1").getItem(s) * codebookK + col("c2").getItem(s) + 1)).reduce(_ + _)
-    adcTopK(codes
-      .select(col("vec_id"), col("label"), col("embedding"),
-        (adcDot / (sqrt(adcN2) * qNorm)).as("adc_cosine")),
-      embeddings, qId, k, rerank)
+    def c1(s: Int) = col("c1").getItem(s)
+    def c2(s: Int) = col("c2").getItem(s)
+    adcTopK(codes, embeddings, qId, k, rerank, qNorm,
+      adcSum(m)(s => lutAt(lit(d1(s)), c1(s)) + lutAt(lit(d2(s)), c2(s))),
+      adcSum(m)(s => lutAt(lit(n1(s)), c1(s)) + lutAt(lit(n2lut(s)), c2(s)) +
+        lutAt(lit(cross(s)), c1(s) * codebookK + c2(s))))
   }
 
   /** Mean rotated-space reconstruction error of (rot, codebook) over the
@@ -962,11 +930,10 @@ object Vectors {
     */
   def trainPqOpq(embeddings: DataFrame, qId: Long = 0L, m: Int = 8, codebookK: Int = 16,
                  sampleN: Int = 256, iters: Int = 5, opqIters: Int = 8): Option[PqModel] = {
-    val sample = pqSample(embeddings, sampleN)
-    val qRow = pqQueryRow(embeddings, qId)
-    if (sample.isEmpty || qRow.isEmpty) return None
-    val (rot, cb) = trainOpq(sample, DIM, m, codebookK, iters, opqIters)
-    Some(PqModel(qId, qRow.get, m, codebookK, cb, rot = rot))
+    pqInputs(embeddings, qId, sampleN).map { case (sample, q) =>
+      val (rot, cb) = trainOpq(sample, DIM, m, codebookK, iters, opqIters)
+      PqModel(qId, q, m, codebookK, cb, rot = rot)
+    }
   }
 
   def annPqOpq(embeddings: DataFrame, model: Option[PqModel], k: Int, rerank: Int): DataFrame = {
@@ -980,14 +947,9 @@ object Vectors {
         graft.functions.VectorFunctions.pqEncode(
           graft.functions.VectorFunctions.rotateVec(col("embedding"), DIM, rot),
           DIM, m, codebookK, cb).as("codes"))
-    val adcDot = (0 until m).map(s =>
-      element_at(lit(lutDot(s)), col("codes").getItem(s) + 1)).reduce(_ + _)
-    val adcN2 = (0 until m).map(s =>
-      element_at(lit(lutN2(s)), col("codes").getItem(s) + 1)).reduce(_ + _)
-    adcTopK(codes
-      .select(col("vec_id"), col("label"), col("embedding"),
-        (adcDot / (sqrt(adcN2) * qNorm)).as("adc_cosine")),
-      embeddings, qId, k, rerank)
+    adcTopK(codes, embeddings, qId, k, rerank, qNorm,
+      adcSum(m)(s => lutAt(lit(lutDot(s)), col("codes").getItem(s))),
+      adcSum(m)(s => lutAt(lit(lutN2(s)), col("codes").getItem(s))))
   }
 
   /** #67 symmetric int8 scalar quantization of the embedding column — the
@@ -1050,23 +1012,30 @@ object Vectors {
   private[graft] def kmNearest(cent: Array[Array[Double]]): Column =
     graft.functions.VectorFunctions.nearestCentroid(col("embedding"), DIM, cent.flatten)
 
-  /** Lloyd training loop only: returns the final centroids (empty if the
-    * corpus has no valid vectors). See [[clusterKmeans]] for semantics.
+  /** The Lloyd trainer both k-means inits share: persists the valid
+    * (vec_id, embedding) relation, draws the init from it, runs
+    * [[trainCentroidsFrom]] and releases the training cache (every action
+    * on it has completed; repeated callers, e.g. the geo-cells ANN in a
+    * query loop, must not accumulate corpus copies). Both centroid sets
+    * are empty if the corpus has no valid vectors.
     */
-  private[graft] def trainCentroids(embeddings: DataFrame, k: Int,
-                                    iters: Int): Array[Array[Double]] = {
+  private def trainLloyd(embeddings: DataFrame, iters: Int)
+                        (init: DataFrame => Array[Array[Double]]): KmeansParModel = {
     val e = embeddings.filter(kmValid).select(col("vec_id"), col("embedding"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // deterministic init: the k lowest-vec_id vectors (a top-k, not a sort)
-    val init: Array[Array[Double]] = e.orderBy("vec_id").limit(k).collect()
-      .map(_.getSeq[Float](1).map(_.toDouble).toArray)
-    val cent = trainCentroidsFrom(e, init, iters)
-    // the centroids are plain driver arrays now — release the training
-    // cache (every action on e has completed; repeated callers, e.g. the
-    // geo-cells ANN in a query loop, must not accumulate corpus copies)
+    val start = init(e)
+    val cent = trainCentroidsFrom(e, start, iters)
     e.unpersist(blocking = false)
-    cent
+    KmeansParModel(start, cent)
   }
+
+  /** Lloyd training loop only: returns the final centroids (empty if the
+    * corpus has no valid vectors). See [[clusterKmeans]] for semantics.
+    * Deterministic init: the k lowest-vec_id vectors (a top-k, not a sort).
+    */
+  private[graft] def trainCentroids(embeddings: DataFrame, k: Int,
+                                    iters: Int): Array[Array[Double]] =
+    trainLloyd(embeddings, iters)(_.orderBy("vec_id").limit(k).collect().map(doubles(_, 1))).centroids
 
   /** The Lloyd fixed-point loop from an arbitrary init (caller owns the
     * persistence of `e`, which must already be kmValid-filtered).
@@ -1111,9 +1080,14 @@ object Vectors {
     * zero joins, zero windows. iters+1 passes over the corpus total, the
     * canonical distributed-k-means shape.
     */
-  def clusterKmeans(embeddings: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
+  def clusterKmeans(embeddings: DataFrame, k: Int = 8, iters: Int = 3): DataFrame =
+    clusterOf(embeddings, trainCentroids(embeddings, k, iters))
+
+  /** (vec_id, cluster, 6-floored dist) of the valid vectors against
+    * `cent`; empty centroids give the empty result.
+    */
+  private def clusterOf(embeddings: DataFrame, cent: Array[Array[Double]]): DataFrame = {
     val e = embeddings.filter(kmValid).select(col("vec_id"), col("embedding"))
-    val cent = trainCentroids(embeddings, k, iters)
     if (cent.isEmpty)
       return e.filter(lit(false))
         .select(col("vec_id"), lit(0).cast("int").as("cluster"), lit(0d).as("dist"))
@@ -1144,8 +1118,7 @@ object Vectors {
   private[graft] def kmeansParInit(e: DataFrame, k: Int, rounds: Int = 3,
                                    oversample: Int = -1): Array[Array[Double]] = {
     val l = if (oversample > 0) oversample else 2 * k
-    val first = e.orderBy("vec_id").limit(1).collect()
-      .map(_.getSeq[Float](1).map(_.toDouble).toArray)
+    val first = e.orderBy("vec_id").limit(1).collect().map(doubles(_, 1))
     if (first.isEmpty) return Array.empty
     var cand: Array[Array[Double]] = first
     val u = (expr("conv(substring(md5(CAST(vec_id AS STRING)), 1, 15), 16, 10)")
@@ -1159,8 +1132,7 @@ object Vectors {
         // cap: E[new] = l per round; 8l bounds a pathological corpus
         val picked = costs
           .filter(col("u") * lit(psiQ.toDouble) < col("d2q").cast("double") * l)
-          .orderBy("vec_id").limit(8 * l).collect()
-          .map(_.getSeq[Float](1).map(_.toDouble).toArray)
+          .orderBy("vec_id").limit(8 * l).collect().map(doubles(_, 1))
         cand = cand ++ picked
       }
     }
@@ -1176,16 +1148,10 @@ object Vectors {
     for (_ <- 1 to 5) {
       val sums = Array.fill(k)(new Array[Double](DIM))
       val ns = new Array[Long](k)
+      val flat = cent.flatten
       weighted.foreach { case (v, w, _) =>
         if (w > 0) {
-          var best = 0; var bd = Double.MaxValue
-          var j = 0
-          while (j < k) {
-            var d = 0d; var t = 0
-            while (t < DIM) { val x = v(t) - cent(j)(t); d += x * x; t += 1 }
-            if (d < bd) { bd = d; best = j }
-            j += 1
-          }
+          val best = nearestSq(v, 0, flat, 0, k, DIM)
           var t = 0
           while (t < DIM) { sums(best)(t) += v(t) * w; t += 1 }
           ns(best) += w
@@ -1214,25 +1180,11 @@ object Vectors {
   final case class KmeansParModel(init: Array[Array[Double]], centroids: Array[Array[Double]])
 
   def trainKmeansPar(embeddings: DataFrame, k: Int = 8, rounds: Int = 3,
-                     iters: Int = 3): KmeansParModel = {
-    val e = embeddings.filter(kmValid).select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val init = kmeansParInit(e, k, rounds)
-    val cent = trainCentroidsFrom(e, init, iters)
-    e.unpersist(blocking = false)
-    KmeansParModel(init, cent)
-  }
+                     iters: Int = 3): KmeansParModel =
+    trainLloyd(embeddings, iters)(kmeansParInit(_, k, rounds))
 
-  def clusterKmeansPar(embeddings: DataFrame, model: KmeansParModel): DataFrame = {
-    val e = embeddings.filter(kmValid).select(col("vec_id"), col("embedding"))
-    val cent = model.centroids
-    if (cent.isEmpty)
-      return e.filter(lit(false))
-        .select(col("vec_id"), lit(0).cast("int").as("cluster"), lit(0d).as("dist"))
-    e.select(col("vec_id"), kmNearest(cent).as("_km_nc"))
-      .select(col("vec_id"), col("_km_nc.cluster").as("cluster"),
-        fl(col("_km_nc.dist"), 6).as("dist"))
-  }
+  def clusterKmeansPar(embeddings: DataFrame, model: KmeansParModel): DataFrame =
+    clusterOf(embeddings, model.centroids)
 
   // ---- #114 IVF-PQ composite index -----------------------------------------
 
@@ -1271,26 +1223,18 @@ object Vectors {
     // coarse quantizer: one centroid per label cell (bounded relation),
     // collected once — the knnJoinMultiProbe contract
     val cells = centroidTable(embeddings).toMap
-    // kmValid guards the query row too: a null / wrong-dim query vector
-    // degrades to the empty result instead of crashing the driver collect
-    val qRow = embeddings.filter(col("vec_id") === qId && kmValid)
-      .select("embedding").limit(1).collect().headOption
-    // training sample with labels, seeded-hash order (the PQ contract);
+    val qRow = pqQueryRow(embeddings, qId)
     // label null-guard mirrors the cells aggregate — a sample row must
     // belong to a cell
-    val sample = embeddings.filter(col("label").isNotNull && kmValid)
-      .select(col("vec_id"), col("label"), col("embedding"))
-      .orderBy(md5(concat(lit("pq-sample-"), col("vec_id"))), col("vec_id"))
-      .limit(sampleN)
-      .collect()
-      .map(r => (r.getInt(1), r.getSeq[Float](2).map(_.toDouble).toArray))
+    val sample = pqSample(embeddings.filter(col("label").isNotNull), sampleN)
+      .map(r => (r.getInt(1), doubles(r, 2)))
     if (cells.isEmpty || qRow.isEmpty || sample.isEmpty) return None
     val residuals = sample.map { case (lbl, v) =>
       val c = cells.getOrElse(lbl, new Array[Double](DIM))
       Array.tabulate(DIM)(i => v(i) - c(i))
     }
-    Some(IvfPqModel(cells, PqModel(qId, qRow.get.getSeq[Float](0).map(_.toDouble).toArray,
-      m, codebookK, trainPqCodebook(residuals, DIM, m, codebookK, iters))))
+    Some(IvfPqModel(cells, PqModel(qId, qRow.get, m, codebookK,
+      trainPqCodebook(residuals, DIM, m, codebookK, iters))))
   }
 
   /** The `nProbe` cells nearest the query by centroid cosine (driver math
@@ -1344,15 +1288,11 @@ object Vectors {
       .join(broadcast(probedDf), "label")
       .withColumn("c2", graft.functions.VectorFunctions.pqEncode(
         zip_with(vd, col("cvec"), (x, c) => x - c), DIM, m, codebookK, cb))
-    val adcDot = col("cdotq") + (0 until m).map(s =>
-      element_at(lit(dLut(s)), col("c2").getItem(s) + 1)).reduce(_ + _)
-    val adcN2 = col("cn2") + (0 until m).map(s =>
-      element_at(lit(n2Lut(s)), col("c2").getItem(s) + 1) +
-        element_at(col("cross"), lit(s * codebookK) + col("c2").getItem(s) + 1)).reduce(_ + _)
-    adcTopK(codes
-      .select(col("vec_id"), col("label"), col("embedding"),
-        (adcDot / (sqrt(adcN2) * qNorm)).as("adc_cosine")),
-      embeddings, qId, k, rerank)
+    def c2(s: Int) = col("c2").getItem(s)
+    adcTopK(codes, embeddings, qId, k, rerank, qNorm,
+      col("cdotq") + adcSum(m)(s => lutAt(lit(dLut(s)), c2(s))),
+      col("cn2") + adcSum(m)(s =>
+        lutAt(lit(n2Lut(s)), c2(s)) + lutAt(col("cross"), lit(s * codebookK) + c2(s))))
   }
 
   // ---- #117 incremental clustering-MV maintenance --------------------------
@@ -1402,7 +1342,8 @@ object Vectors {
     * anti-correlated with every real centroid.
     */
   def centroidsOf(state: DataFrame, frozen: Array[Array[Double]]): Array[Array[Double]] = {
-    val rows = state.collect()
+    val rows = Checks.boundedCollect(state, frozen.length,
+        s"centroidsOf's state (frozen.length = ${frozen.length})")
       .map(r => r.getInt(0) -> ((r.getSeq[Double](1).toArray, r.getLong(2)))).toMap
     frozen.zipWithIndex.map { case (prev, j) =>
       rows.get(j).fold(prev) { case (s, n) => s.map(_ / n.toDouble / KM_QS) }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Multimodal, Vectors}
@@ -774,31 +775,76 @@ class DedupVectorsSpec extends SparkSpec {
     assert(sem == Map(1L -> (1L, true), 2L -> (2L, true), 3L -> (3L, true)), s"semDedup: $sem")
   }
 
+  // The one-literal-struct-per-cell array_sort formulations that the fused
+  // TopProbeLabels / TopProbeLabelsHier expressions replaced: O(C) plan
+  // nodes, interpreted per row. They stay here as the reference the
+  // expressions must reproduce bit for bit, row by row.
+  private def negCos(cv: Array[Double]): Column = {
+    import graft.functions.VectorFunctions.vecDot
+    val c = typedLit(cv.toSeq)
+    val q = col("embedding")
+    -graft.operators.EventSemantics.fl(vecDot(c, q) / (sqrt(vecDot(c, c)) * sqrt(vecDot(q, q))), 6)
+  }
+
+  private def sortedLabels(cands: Column, n: Int, field: String): Column =
+    transform(slice(array_sort(cands), 1, n), x => x.getField(field))
+
+  private def unrolledProbes(cells: Array[(Int, Array[Double])], nProbe: Int): Column =
+    sortedLabels(array(cells.toIndexedSeq.map { case (l, cv) =>
+      struct(negCos(cv).as("neg"), lit(l).as("lbl"))
+    }: _*), nProbe, "lbl")
+
+  /** Needs the `_sup` column of [[unrolledSupers]]: the interpreted
+    * projection has no CSE, so the super choice is materialized once.
+    */
+  private def unrolledHierProbes(h: Vectors.ProbeHierarchy, nProbe: Int): Column =
+    sortedLabels(filter(array(h.cells.toIndexedSeq.zipWithIndex.map { case ((l, cv), ci) =>
+      when(array_contains(col("_sup"), lit(h.cellSup(ci))),
+        struct(negCos(cv).as("neg"), lit(l).as("lbl")))
+    }: _*), c => c.isNotNull), nProbe, "lbl")
+
+  private def unrolledSupers(h: Vectors.ProbeHierarchy, superProbe: Int): Column =
+    sortedLabels(array(h.supers.toIndexedSeq.zipWithIndex.map { case (sc, j) =>
+      struct(negCos(sc).as("neg"), lit(j).as("sid"))
+    }: _*), superProbe, "sid")
+
+  /** Every row of `df` whose fused probe list (flat and hierarchical)
+    * differs from the array_sort one, over the cells of
+    * `trainProbeHierarchy(df)`.
+    */
+  private def probeMismatches(df: DataFrame, nProbe: Int, superProbe: Int): Seq[String] = {
+    val h = Vectors.trainProbeHierarchy(df).get
+    df.withColumn("_sup", unrolledSupers(h, superProbe))
+      .select(col("vec_id"),
+        Vectors.probeLabels(h.cells, nProbe).as("flat"), unrolledProbes(h.cells, nProbe).as("flat_ref"),
+        Vectors.hierProbeLabels(h, nProbe, superProbe).as("hier"),
+        unrolledHierProbes(h, nProbe).as("hier_ref"))
+      .collect().toSeq
+      .flatMap { r =>
+        Seq(("flat", 1), ("hier", 3)).collect {
+          case (kind, i) if r.getSeq[Int](i) != r.getSeq[Int](i + 1) =>
+            s"$kind vec ${r.get(0)}: ${r.getSeq[Int](i)} vs ${r.getSeq[Int](i + 1)}"
+        }
+      }
+  }
+
   test("fused probe expressions ≡ unrolled formulations on the real corpus (flat + hier)") {
     // the deploy path (TopProbeLabels / TopProbeLabelsHier codegen'd
-    // expressions, O(1) plan size in C) must reproduce the original
-    // one-literal-per-cell array_sort plans bit-for-bit
-    val flatExpr = Vectors.knnJoinMultiProbe(emb, k = 5, nProbe = 2)
-      .collect().map(_.toSeq).toSet
-    val flatUnrolled = Vectors.knnJoinMultiProbe(emb, k = 5, nProbe = 2, unrolled = true)
-      .collect().map(_.toSeq).toSet
-    assert(flatExpr === flatUnrolled)
-    val hierExpr = Vectors.knnJoinMultiProbeHier(emb, k = 5, nProbe = 2, superProbe = 2)
-      .collect().map(_.toSeq).toSet
-    val hierUnrolled = Vectors.knnJoinMultiProbeHier(emb, k = 5, nProbe = 2, superProbe = 2,
-      unrolled = true).collect().map(_.toSeq).toSet
-    assert(hierExpr === hierUnrolled)
+    // expressions, O(1) plan size in C) must reproduce the array_sort
+    // probe list of every row bit-for-bit
+    val bad = probeMismatches(emb, nProbe = 2, superProbe = 2)
+    assert(bad.isEmpty, bad.take(5).mkString("; "))
   }
 
   test("fused probe expressions ≡ unrolled on degenerate vectors (null/null-element/null-label)") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    // every null/NaN shape the unrolled plan defines behavior for:
+    // every null/NaN shape the array_sort formulation defines behavior for:
     //  - a NULL vector nulls every cosine → probe ranking degenerates to
     //    label ASC (the coalesce fallback arm on the expression path)
     //  - a NULL ELEMENT nulls dot(q,q) → same degeneration, but through
     //    the expression's own kernel (array non-null)
-    //  - a NULL label keeps its a-side probes but never matches b-side
+    //  - a NULL label still gets its probe list (the label is no input)
     // (zero-NORM vectors are OUTSIDE the operator contract: under ANSI
     // the downstream join cosine's 0/0 throws DIVIDE_BY_ZERO on either
     // probe-assignment path)
@@ -824,16 +870,8 @@ class DedupVectorsSpec extends SparkSpec {
       StructField("embedding", ArrayType(FloatType, containsNull = true), nullable = true)))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
     for (np <- Seq(1, 2, 5)) {
-      val fe = Vectors.knnJoinMultiProbe(df, k = 3, nProbe = np)
-        .collect().map(_.toSeq).toSet
-      val fu = Vectors.knnJoinMultiProbe(df, k = 3, nProbe = np, unrolled = true)
-        .collect().map(_.toSeq).toSet
-      assert(fe === fu, s"flat mismatch at nProbe=$np")
-      val he = Vectors.knnJoinMultiProbeHier(df, k = 3, nProbe = np, superProbe = 1)
-        .collect().map(_.toSeq).toSet
-      val hu = Vectors.knnJoinMultiProbeHier(df, k = 3, nProbe = np, superProbe = 1,
-        unrolled = true).collect().map(_.toSeq).toSet
-      assert(he === hu, s"hier mismatch at nProbe=$np")
+      val bad = probeMismatches(df, nProbe = np, superProbe = 1)
+      assert(bad.isEmpty, s"nProbe=$np: ${bad.mkString("; ")}")
     }
   }
 

@@ -34,7 +34,7 @@ class HierIndexSpec extends SparkSpec {
   private def flatNearest(v: Array[Double], dim: Int, k: Int, cent: Array[Double]): (Int, Double) = {
     val cn = ProbeKernel.selfDots(cent, dim, k)
     val r = graft.functions.NearestCentroid
-      .compute(UnsafeArrayData.fromPrimitiveArray(v), false, dim, k, cent, cn)
+      .compute(UnsafeArrayData.fromPrimitiveArray(v), false, dim, k, cent, cn, null)
       .asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
     (r.getInt(0), r.getDouble(1))
   }
@@ -167,7 +167,7 @@ class HierIndexSpec extends SparkSpec {
     // below the threshold the flat loop is untouched
     val small = cent.take(32 * dim)
     val gotFlat = ProbeKernel.topProbes(UnsafeArrayData.fromPrimitiveArray(vecs.head),
-      false, dim, 32, labels.take(32), small, ProbeKernel.selfDots(small, dim, 32), 3)
+      false, dim, 32, labels.take(32), small, ProbeKernel.selfDots(small, dim, 32), 3, null)
       .toIntArray().toSeq
     assert(gotFlat.size == 3)
   }

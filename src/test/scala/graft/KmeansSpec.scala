@@ -130,6 +130,24 @@ class KmeansSpec extends SparkSpec {
     }
   }
 
+  test("centroidsOf fails loudly on a state with more clusters than frozen centroids") {
+    import org.apache.spark.sql.functions.{col, lit, typedLit}
+    val cent = Vectors.trainCentroids(planted, 3, 3)
+    // cluster ids 0..3: one row past frozen.length, the bound of the collect
+    val state = spark.range(cent.length + 1L).select(col("id").cast("int").as("cluster"),
+      typedLit(Seq.fill(dim)(0d)).as("sv"), lit(1L).as("n"))
+    val e = intercept[IllegalArgumentException](Vectors.centroidsOf(state, cent))
+    assert(e.getMessage.contains("centroidsOf") && e.getMessage.contains(s"frozen.length = ${cent.length}"),
+      e.getMessage)
+  }
+
+  test("Checks.boundedCollect: rows up to the bound pass, one more fails naming site and bound") {
+    import graft.operators.Checks
+    assert(Checks.boundedCollect(spark.range(3).toDF(), 3, "three ids").length == 3)
+    val e = intercept[IllegalArgumentException](Checks.boundedCollect(spark.range(4).toDF(), 3, "three ids"))
+    assert(e.getMessage.contains("three ids: more than 3 rows"), e.getMessage)
+  }
+
   test("k-means‖ init: deterministic, same output contract as the static init") {
     val a = Vectors.clusterKmeansPar(planted, k = 3, iters = 5).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).sortBy(_._1)

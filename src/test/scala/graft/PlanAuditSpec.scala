@@ -122,8 +122,8 @@ class PlanAuditSpec extends SparkSpec {
 
   test("multi-probe family: probe assignment is ONE expression node, not per-cell literals") {
     // the r7 fused TopProbeLabels/-Hier expressions: plan SIZE must not
-    // scale with the cell count (the unrolled twin had one dim-length
-    // literal struct per cell)
+    // scale with the cell count (the array_sort formulation, now only in
+    // DedupVectorsSpec, has one dim-length literal struct per cell)
     Seq("v_knn_join_mp", "v_knn_join_mph", "v_knn_join_geo").foreach { q =>
       val hits = "top_probe_labels".r.findAllIn(plans(q)).size
       assert(hits >= 1, s"$q lost the fused probe expression")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
 import graft.functions.{DotProduct, VectorFunctions}
+import graft.operators.Vectors
 
 /** Specs for the codegen'd DotProduct expression: bit-for-bit agreement
   * with the interpreted higher-order-function fold it replaced, null/length
@@ -177,5 +178,24 @@ class VectorFunctionsSpec extends SparkSpec {
       bc, nProbe = 2)
       .eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
     assert(degen.toIntArray().toSeq == Seq(3, 7))
+  }
+
+  test("pq_encode ≡ the driver-side encode on the spec corpus (m=8 and m=4)") {
+    // the kernel ranks by |c|² − 2·v·c, the driver by Σ(v − c)²: the same
+    // argmin in exact arithmetic, so the two may only split near-ties
+    // differently — none does on this corpus
+    val valid = emb.filter(Vectors.kmValid)
+    for (m <- Seq(8, 4)) {
+      val cb = Vectors.trainPq(emb, 0L, m = m, codebookK = 16, sampleN = 256).get.cb
+      val rows = valid.select(col("embedding"),
+          VectorFunctions.pqEncode(col("embedding"), 64, m, 16, cb).as("c"))
+        .collect()
+      assert(rows.length == 500)
+      val differ = rows.count { r =>
+        val v = r.getSeq[Float](0).map(_.toDouble).toArray
+        Vectors.pqEncodeLocal(v, cb, 64, m, 16).toSeq != r.getSeq[Int](1)
+      }
+      assert(differ == 0, s"m=$m: $differ of ${rows.length} rows encode differently")
+    }
   }
 }
